@@ -23,8 +23,8 @@ The minhash family is XOR-derived — one md5 per shingle, then
 md5s (16× fewer digests; XOR by a fixed mask is a bijection on the
 60-bit hash space, so each ``min`` is still a uniform minwise sample).
 The md5→60-bit form is bit-portable to any engine (DuckDB oracle
-mirrors it literally). The JVM-expression variants are retained below
-for zero-Python deployments.
+mirrors it literally). The one JVM-expression variant retained is
+:func:`simhash64`, for zero-Python deployments.
 
 Scale notes: the only shuffles are groupBys on hash keys (uniform by
 construction). LSH band explosion multiplies rows by n_bands (≤ 16);
@@ -193,27 +193,6 @@ def exact_dedup(
         .groupBy("text_hash")
         .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_members"))
     )
-
-
-def minhash_signature_from(
-    sh: Column, n_hashes: int = 8, hash_mode: str = "md5"
-) -> Column:
-    """Array of ``n_hashes`` min-hash values over a (pre-bound) shingle
-    array column. Bind the shingles first (see :func:`bind`) — this
-    expression references them ``n_hashes`` times."""
-    sigs = [
-        F.array_min(F.transform(sh, lambda g, s=s: portable_hash64(g, s, hash_mode)))
-        for s in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
-
-def minhash_signature(
-    text: Column, n_hashes: int = 8, shingle_k: int = 2, hash_mode: str = "md5"
-) -> Column:
-    """Inline variant (re-evaluates shingling per hash when collapsed —
-    prefer ``bind`` + :func:`minhash_signature_from` in pipelines)."""
-    return minhash_signature_from(shingles(text, shingle_k), n_hashes, hash_mode)
 
 
 def _spread(df: DataFrame) -> DataFrame:

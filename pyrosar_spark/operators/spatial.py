@@ -718,7 +718,7 @@ def knn_scenes(
     # pole-adjacent footprint would probe phantom rows outside
     # [-90/s, 90/s) and silently lose recall exactly where polar SAR
     # coverage is densest (VERDICT r2 #6). Clamped duplicates collapse
-    # in the dropDuplicates below.
+    # in the array_distinct of the 9 probe cells below.
     la_lo, la_hi = -int(round(90 / s)), int(round(90 / s)) - 1
     # r6 (guide §2.4): build the 9 neighbor cells as ONE array and
     # array_distinct it BEFORE the explode. Every neighbor scene lives

@@ -24,6 +24,15 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Shuffle
     partitions default to 2× cores locally — on a real cluster this
     would be sized to total executor cores; AQE coalesces the rest.
+
+    The generated-code cache (``spark.sql.codegen.cache.maxEntries``,
+    a static conf, so it is set here in the builder) holds 1000 classes
+    instead of Spark's default 100. One ``corpus_dedup`` pass
+    (near_dup_pairs, dup_ngram_spans, strip_boilerplate_chunks,
+    dedup_clusters) needs ~137 distinct classes; repeated in order
+    against a 100-entry LRU, every lookup misses and each pass would
+    recompile all of them with Janino. At 1000 a repeated query
+    compiles nothing. ``extra_conf`` can still override it.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -47,6 +56,7 @@ def get_spark(
         # size this sandbox runs; a real cluster sizes this to
         # total-cores x waves as usual.
         .config("spark.sql.files.maxPartitionBytes", "16777216")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.host", "127.0.0.1")
