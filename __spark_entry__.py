@@ -500,28 +500,17 @@ def _handoff(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
     if path not in _HANDOFF_WRITTEN or not os.path.exists(
         os.path.join(path, "_SUCCESS")
     ):
-        # size-adaptive handoff layout (r6): the source tables are
-        # single-file parquet, so an unrepartitioned handoff reads back
-        # as ONE scan task and every pre-shuffle stage of the scene
-        # queries (lattice explode, SAT refine, haversine) runs
-        # single-threaded (guide §6 — input split parallelism). File
-        # count scales with the SOURCE bytes (~1 MB per file, capped at
-        # session cores): a fixed cores-count layout measured +0.5 s of
-        # pure task-scheduling overhead at sf0.1 (64 scan tasks over
-        # 5k rows), while 1 MB/file recovers full-width scans at the
-        # driver's sf1.0+ sizes. Rows and schema are unchanged, so the
-        # DuckDB oracle reads identical data from the same glob.
-        sc = df.sparkSession.sparkContext
-        src_bytes = 0
-        try:
-            for f in df.inputFiles():
-                p = f.removeprefix("file:")
-                if os.path.exists(p):
-                    src_bytes += os.path.getsize(p)
-        except Exception:
-            pass
-        n_out = max(1, min(sc.defaultParallelism, src_bytes // (1 << 20)))
-        df.repartition(n_out).write.mode("overwrite").parquet(path)
+        # the source tables are single-file parquet, so an
+        # unrepartitioned handoff reads back as ONE scan task and every
+        # pre-shuffle stage of the scene queries (lattice explode, SAT
+        # refine, haversine) runs single-threaded (guide §6 — input
+        # split parallelism). The file count follows the source bytes
+        # (dedup._input_width: ~1 MiB per file, capped at cores; cores
+        # when the size is unknown). Rows and schema are unchanged, so
+        # the DuckDB oracle reads identical data from the same glob.
+        from pyrosar_spark.operators.dedup import _input_width
+
+        df.repartition(_input_width(df)).write.mode("overwrite").parquet(path)
         _HANDOFF_WRITTEN.add(path)
     return df.sparkSession.read.parquet(path)
 

@@ -244,11 +244,6 @@ class FlatRings:
         return (counts % 2).astype(bool)
 
 
-def wkb_batch_intersects(wkbs, aoi_ring: np.ndarray) -> np.ndarray:
-    """Exact intersects of a batch of WKB polygons vs one AOI ring."""
-    return FlatRings(rings_from_wkb_batch(wkbs)).intersects(aoi_ring)
-
-
 # --------------------------------------------------------------------------
 # flat-ring helpers (engine-internal geometry representation:
 # array<double> [lon0, lat0, lon1, lat1, ...], closed CCW canonical ring)
@@ -272,27 +267,6 @@ def flat_batch_intersects(flats, aoi_ring: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 # vectorized batch kernels (the Arrow-UDF hot path)
 # --------------------------------------------------------------------------
-
-
-def rings_from_wkb_batch(wkbs) -> list[np.ndarray]:
-    """Parse many WKB polygons; bulk path when all buffers share one
-    fixed size (the engine's own canonical 5-point rings)."""
-    bufs = [bytes(b) for b in wkbs]
-    if bufs and len({len(b) for b in bufs}) == 1 and bufs[0][:1] == b"\x01":
-        (npts,) = _struct.unpack_from("<I", bufs[0], 9)
-        if len(bufs[0]) == 13 + npts * 16:
-            raw = np.frombuffer(b"".join(bufs), dtype=np.uint8).reshape(len(bufs), -1)
-            flat = raw[:, 13:].copy().view("<f8").reshape(len(bufs), npts, 2)
-            return list(flat)
-    return [wkb_to_ring(b) for b in bufs]
-
-
-def wkb_from_rings_batch(rings: np.ndarray) -> list[bytes]:
-    """Encode a (N, P, 2) ring array into N WKB buffers in one pass."""
-    n, p, _ = rings.shape
-    head = _struct.pack("<BIII", 1, _WKB_POLYGON, 1, p)
-    body = np.ascontiguousarray(rings.astype("<f8")).reshape(n, -1).view(np.uint8)
-    return [head + body[i].tobytes() for i in range(n)]
 
 
 def hull_rings_batch(coords: list) -> list[np.ndarray]:

@@ -182,12 +182,14 @@ def remove_border_noise(
             yield pd.DataFrame(out)
 
     # r6: spread the NARROW (ref, w, h, seed) rows to session
-    # parallelism before the Arrow stage — a single-file chip table
-    # otherwise pins the whole numpy pipeline on one task (the payload
-    # is generated from the seed inside the kernel, so unlike the media
-    # operators there are no raw bytes to shuffle; ~30 B/row moves).
+    # parallelism before the Arrow stage, or a single-file chip table
+    # pins the whole numpy pipeline on one task. The payload is
+    # generated per pixel from the seed inside the kernel, so ~30 B/row
+    # shuffles and input bytes do not measure the work: the target is
+    # cores, not _spread's default of one partition per MiB.
     from pyrosar_spark.operators.dedup import _spread
 
-    return _spread(chips.select("media_ref", "width", "height", "seed")).mapInPandas(
-        run, OUT_SCHEMA
-    )
+    return _spread(
+        chips.select("media_ref", "width", "height", "seed"),
+        chips.sparkSession.sparkContext.defaultParallelism,
+    ).mapInPandas(run, OUT_SCHEMA)

@@ -149,11 +149,13 @@ def erode_chip_masks(chips: DataFrame, iterations: int = 3) -> DataFrame:
                 {"media_ref": refs, "n_valid_before": before, "n_valid_after": after}
             )
 
-    # r6: same narrow-row spread as remove_border_noise — the payload is
-    # seed-derived inside the kernel, so only ~30 B/row shuffles and a
-    # single-file chip table no longer pins the erosion on one task.
+    # r6: same narrow-row spread to cores as remove_border_noise: the
+    # payload is seed-derived inside the kernel, so ~30 B/row input
+    # bytes do not measure the erosion work, and a single-file chip
+    # table would otherwise pin it on one task.
     from pyrosar_spark.operators.dedup import _spread
 
-    return _spread(chips.select("media_ref", "width", "height", "seed")).mapInPandas(
-        run, ERODE_SCHEMA
-    )
+    return _spread(
+        chips.select("media_ref", "width", "height", "seed"),
+        chips.sparkSession.sparkContext.defaultParallelism,
+    ).mapInPandas(run, ERODE_SCHEMA)

@@ -37,11 +37,6 @@ from pyrosar_spark import geom
 CELL_DEG = 1.0
 
 
-def cell_id(lat_idx: Column, lon_idx: Column) -> Column:
-    """Integer cell id for a (floor(lat), floor(lon)) pair."""
-    return (lat_idx.cast("long") + 90) * 360 + (lon_idx.cast("long") + 180)
-
-
 def cover_cells(
     df: DataFrame,
     xmin="xmin",
@@ -589,15 +584,6 @@ def flat_ring_intersects_aoi(ring_col: str, aoi_ring: np.ndarray) -> Column:
     return F.expr(_sat_size_branches_sql(
         f"cast(size({q})/2 as int)", at, aoi_ring, max_pts=5
     ))
-
-
-def flat_ring_points(flat: Column) -> Column:
-    """array<double> flat ring → array<array<double>> points (incl. the
-    closing duplicate — harmless for the hull tests)."""
-    return F.transform(
-        F.sequence(F.lit(1), (F.size(flat) / 2).cast("int")),
-        lambda i: F.array(F.element_at(flat, i * 2 - 1), F.element_at(flat, i * 2)),
-    )
 
 
 def _point_in_flat_ring_sql(px: str, py: str, flat: str) -> str:
