@@ -153,22 +153,6 @@ def ers_pass_lookup(
     )
 
 
-def interval_join(
-    events: DataFrame,
-    intervals: DataFrame,
-    ts_col: str,
-    start_col: str = "start",
-    stop_col: str = "stop",
-    extra_pred: Column | None = None,
-    how: str = "inner",
-) -> DataFrame:
-    """Generic broadcast interval join: event ``t`` in [start, stop]."""
-    pred = (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) <= F.col(stop_col))
-    if extra_pred is not None:
-        pred = pred & extra_pred
-    return events.join(F.broadcast(intervals), pred, how=how)
-
-
 def salted_interval_join(
     events: DataFrame,
     intervals: DataFrame,

@@ -388,15 +388,6 @@ def resize_media(
     )
 
 
-def media_ref_to_path(ref: "F.Column", base_dir: str) -> "F.Column":
-    """``scheme://bucket/key`` → ``{base_dir}/bucket/key`` (the local
-    mount / FUSE view of the object store)."""
-    return F.concat(
-        F.lit(base_dir.rstrip("/") + "/"),
-        F.regexp_replace(ref, r"^[a-z0-9+.-]+://", ""),
-    )
-
-
 def fetch_payloads(
     refs: DataFrame,
     base_dir: str,

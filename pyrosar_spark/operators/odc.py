@@ -23,12 +23,8 @@ deviation: random ids break idempotent re-runs at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _yaml_quote(col: Column) -> Column:
-    return F.concat(F.lit("'"), F.regexp_replace(col, "'", "''"), F.lit("'"))
 
 
 def odc_indexing_docs(

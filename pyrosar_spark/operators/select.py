@@ -16,8 +16,10 @@ Semantic parity points (SURVEY §2.2):
 
 Every non-spatial predicate is a plain Catalyst filter → pushed into
 the parquet/Iceberg scan. The spatial predicate (P8/J1) is a
-bbox-prefilter (JVM) + exact polygon test in one Arrow UDF; the
-many-AOI variant lives in :mod:`pyrosar_spark.operators.spatial`.
+bbox-prefilter (JVM) + exact polygon test: for a convex AOI the
+compiled JVM separating-axis test of :func:`spatial.sat_refine`, for
+any other AOI one Arrow UDF. The many-AOI variant lives in
+:mod:`pyrosar_spark.operators.spatial`.
 """
 
 from __future__ import annotations
@@ -223,8 +225,9 @@ def select(
         )
         from pyrosar_spark.operators.spatial import (
             aoi_ring_is_convex,
-            corners_intersect_aoi_filters,
-            flat_ring_intersects_aoi_filters,
+            corner_points,
+            ring_points,
+            sat_refine,
         )
 
         if aoi_refine not in ("auto", "arrow"):
@@ -233,31 +236,22 @@ def select(
             # JVM SAT path over the RAW geometry column — corners when
             # available (skips the hull entirely), else the ring
             # vertices (hull points; same hull, same answer).
-            # The SAT unrolls to dozens of element_at references; when
-            # the geometry column is itself a computed expression (the
-            # deferred from_json parse), CollapseProject would inline
-            # that parse subtree into EVERY reference — a ~180k-char
-            # plan costing seconds of Catalyst analysis per query on
-            # the driver (measured; the ANN de-literal lesson again).
-            # explode(array(col)) is a one-column Generate barrier:
-            # the parse evaluates once, the SAT references the
-            # generator output attribute. One row in, one row out;
-            # a NULL geometry survives as a one-element [NULL] array.
-            # r6: the SAT is applied as a CONJUNCT LIST (one where per
-            # separating axis for the big k branches) instead of one
-            # monolithic CASE — the single expression failed Janino
-            # compilation and ran interpreted since round 5 (spatial.py
-            # ``_sat_conjunct_sqls`` docstring; measured 7.3 → 3.6 s on
-            # the 2M-doc refine). Identical row set, fuzz-differential
-            # and oracle checked.
-            geo = "corners" if "corners" in df.columns else "ring"
-            df = df.withColumn(geo, F.explode(F.array(F.col(geo))))
-            if geo == "corners":
-                sat_filters = corners_intersect_aoi_filters("corners", ring)
-            else:
-                sat_filters = flat_ring_intersects_aoi_filters("ring", ring)
-            for cond in sat_filters:
+            # The SAT's points and orientation terms are bound once per
+            # row behind inline(array(...)) Generate barriers
+            # (spatial.sat_refine): a Project would be inlined into
+            # every reference (CollapseProject, filter pushdown). That
+            # costs seconds of Catalyst analysis when the geometry is
+            # the deferred from_json parse, and a generated method too
+            # big for Janino, which runs the stage interpreted.
+            cols = df.columns
+            geo = "corners" if "corners" in cols else "ring"
+            points = corner_points(geo) if geo == "corners" else ring_points(geo)
+            binds, conds = sat_refine(points, ring)
+            for bind in binds:
+                df = df.selectExpr("*", f"inline({bind})")
+            for cond in conds:
                 df = df.where(cond)
+            df = df.select(*cols)
         else:
             df = df.where(_aoi_intersects_udf(ring)(ring_col()))
 

@@ -11,7 +11,12 @@ the engine uses the classic two-stage distributed spatial join:
     high-cardinality key; hot cells can be salted (see
     :func:`cover_cells` ``salt`` note).
  2. **refine**: exact polygon-polygon intersect on the candidate pairs
-    inside one Arrow UDF (numpy kernels from :mod:`pyrosar_spark.geom`).
+    as JVM column expressions (:func:`rings_intersect_jvm`; the numpy
+    kernels from :mod:`pyrosar_spark.geom` in one Arrow UDF with
+    ``refine='arrow'``).
+
+A single convex AOI (``select``) is refined by the separating-axis
+test of :func:`sat_refine` instead.
 
 Grid resolution trades replication (rows × cells/bbox) against
 candidate precision; 1° matches SAR scene footprints (~2-4 cells).
@@ -185,34 +190,18 @@ def aoi_frame(spark, aoi_wkts: list[tuple[str, str]]) -> DataFrame:
 # Python refine measured 0.40 in-box 4->16 efficiency on a host that
 # delivers ~17 cores, vs ~0.87 for pure-JVM stages. For a CONVEX AOI the
 # exact footprint-intersects test needs no hull and no Python: the scene
-# footprint is the convex hull of its corner points, and hull-vs-convex
-# intersection decomposes into three pure-arithmetic cases over the raw
-# corners (whole-stage-codegen'd, evaluated only on bbox survivors):
-#   1. some corner strictly/boundary inside the AOI (per-edge sign tests;
-#      valid because the AOI is convex and non-degenerate),
-#   2. some AOI vertex inside the hull = inside SOME triangle of corner
-#      triples (orientation-free sign test; a scene-bbox guard closes the
-#      collinear-triangle-line false positive),
-#   3. some corner-pair segment crosses some AOI edge (hull edges are a
-#      subset of corner-pair segments; a chord crossing still implies
-#      intersection since chords lie inside the hull).
-# Touch counts as intersecting in every case, matching the Arrow kernel.
-
-
-def _orient_col(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
+# footprint is the convex hull of its points, and two convex sets are
+# disjoint iff a STRICT separating line exists through an edge of one of
+# them (separating-axis theorem; see :func:`sat_refine`). Touch counts as
+# intersecting, matching the Arrow kernel.
+#
 # The unrolled geometry predicates below are rendered as SQL TEXT and
-# handed to Catalyst via one ``F.expr`` call, not composed from Column
-# objects. Composing them Column-by-Column costs a py4j round trip per
-# node — measured 2.9 s of DRIVER time to build the ~520-node corners
-# SAT (vs 88 ms to EXECUTE it over 81k rows), re-paid on every query
+# handed to Catalyst as strings, not composed from Column objects.
+# Composing them Column-by-Column costs a py4j round trip per node —
+# measured 2.9 s of DRIVER time to build the ~520-node corners SAT (vs
+# 88 ms to EXECUTE it over 81k rows), re-paid on every query
 # construction. The SQL string renders in microseconds of Python and
-# parses JVM-side in milliseconds; the resulting expression tree (and
-# thus semantics, null logic, and generated code) is identical. The
-# Column-composed builders above/below are kept as an independent
-# rendering for parity tests.
+# parses JVM-side in milliseconds.
 
 
 def _fd(v: float) -> str:
@@ -234,9 +223,10 @@ def _term(v) -> str:
 
 
 def _orient_sql(ax, ay, bx, by, cx, cy) -> str:
-    """SQL text of ``_orient_col``; args are floats (folded in Python)
-    or SQL snippets. When both segment ends are constants the two
-    differences fold to literals driver-side."""
+    """SQL text of the orientation ``(b - a) x (c - a)`` (> 0: c left of
+    a->b); args are floats (folded in Python) or SQL snippets. When both
+    segment ends are constants the two differences fold to literals
+    driver-side."""
     const_ab = isinstance(ax, (int, float)) and isinstance(bx, (int, float))
     bax = _fd(bx - ax) if const_ab else f"({_term(bx)}-{_term(ax)})"
     bay = _fd(by - ay) if const_ab else f"({_term(by)}-{_term(ay)})"
@@ -246,8 +236,8 @@ def _orient_sql(ax, ay, bx, by, cx, cy) -> str:
 
 def aoi_ring_is_convex(ring: np.ndarray) -> bool:
     """Driver-side: is the (closed) AOI ring convex with nonzero area?
-    (Degenerate line/point rings return False — the JVM path then skips
-    its case-1 containment test, which needs a real interior.)"""
+    (Degenerate line/point rings return False, so ``select`` refines
+    them with the Arrow kernel instead of :func:`sat_refine`.)"""
     r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
     if len(r) < 4:  # point / segment rings
         return False
@@ -262,17 +252,41 @@ def aoi_ring_is_convex(ring: np.ndarray) -> bool:
     return bool((cross >= 0).all() or (cross <= 0).all())
 
 
-def _sat_convex_intersects(
-    pt_cols: list[tuple[Column, Column]], aoi_ring: np.ndarray
-) -> Column:
-    """Separating-axis intersects of the convex hull of the given point
-    COLUMNS vs a constant convex AOI — fully UNROLLED flat arithmetic
-    (no higher-order functions: Spark HOF lambdas evaluate interpreted
-    per element, which measured as slow as the Python kernel they were
-    meant to replace; flat comparisons stay inside whole-stage codegen).
+# Point accessors for :func:`sat_refine`: (point count SQL, i -> (x, y)
+# SQL, max points). They use 0-based ``get``, which is NULL past the end
+# (``element_at`` raises under ANSI): the refine binds every point
+# whatever the row's count.
+
+
+def corner_points(col: str):
+    """The catalog ``corners`` column (array<struct<lon,lat>>):
+    canonically exactly 4 points; lower counts kept for robustness,
+    higher ones dropped (the count is also Catalyst analysis cost, so no
+    speculative headroom)."""
+    q = f"`{col}`"
+    return (f"size({q})",
+            lambda i: (f"get({q}, {i}).lon", f"get({q}, {i}).lat"), 4)
+
+
+def ring_points(col: str):
+    """A closed flat-ring column (x0, y0, x1, y1, ...): canonically 2-5
+    points including the closure (degenerate point/segment up to a quad
+    hull + closure)."""
+    q = f"`{col}`"
+    return (f"cast(size({q})/2 as int)",
+            lambda i: (f"get({q}, {2 * i})", f"get({q}, {2 * i + 1})"), 5)
+
+
+def sat_refine(points, aoi_ring: np.ndarray) -> tuple[list[str], list[str]]:
+    """Separating-axis intersects of the convex hull of a row's points
+    (``points``: :func:`corner_points` / :func:`ring_points`) vs a
+    constant convex AOI, as fully UNROLLED flat arithmetic (no
+    higher-order functions: Spark HOF lambdas evaluate interpreted per
+    element, which measured as slow as the Python kernel they were meant
+    to replace).
 
     Two convex sets are disjoint iff a STRICT separating line exists
-    through an edge of one of them. Candidate axes:
+    through an edge of one of them. Candidate axes for k points:
      - each AOI edge (constants; CCW ⇒ interior left): separated iff
        every scene point is STRICTLY right (orient < 0);
      - each scene point-pair line (hull edges are a subset of pairs):
@@ -280,9 +294,31 @@ def _sat_convex_intersects(
        side while every AOI vertex is STRICTLY on the other. Degenerate
        pairs (p == q) orient to 0 for every z, so the strict AOI side
        can never hold — no false separation.
-    Touching yields no strict separation ⇒ touch counts as intersect,
-    matching the Arrow kernel.
-    """
+
+    Returns SQL text ``(binds, conjuncts)``. Apply each bind in order
+    as ``df.selectExpr("*", f"inline({bind})")`` — a Generate barrier,
+    one row in, one row out, whose struct fields become plain columns
+    named ``_sat_*`` — then each conjunct as a ``where``. Binding is
+    what lets the stage compile: rendered inline, every orientation term
+    repeated its point accessors and every conjunct repeated its terms,
+    and the fused Generate+Filter method outgrew Janino's 64 KB limit,
+    which ran the whole stage interpreted. No rule inlines a generator's
+    child into it, so each bind evaluates once per row:
+     1. ``n`` (the point count) and each point's ``x{i}``/``y{i}``;
+     2. ``in``, the true-hit test (*Raster Intervals*, SIGMOD 2023):
+        1 <= n <= max and every point STRICTLY left of every AOI edge,
+        so the footprint certainly intersects. Boundary ties and NULL
+        coordinates read false and take the exact path;
+     3. ``o{j}``: NULL when ``in``, else every distinct orientation
+        term of the k = 1..max SATs, each exactly once (the k-branches
+        share them).
+
+    The conjuncts are the size guard (never OR'ed, so k = 0, k > max
+    and NULL geometry stay dropped; it reads only ``n``, so Catalyst
+    pushes it below binds 2 and 3) and ``in OR <SAT of the row's k>``.
+    ``in`` implies the SAT, so the row set is the SAT's alone."""
+    n_sql, point_at, max_pts = points
+    prefix = "_sat_"
     ring = np.asarray(aoi_ring, dtype=np.float64).reshape(-1, 2)
     if geom.ring_area(ring) < 0:  # normalize to CCW so interior is left
         ring = ring[::-1]
@@ -293,297 +329,64 @@ def _sat_convex_intersects(
         if not (ring[i][0] == ring[i + 1][0] and ring[i][1] == ring[i + 1][1])
     ]
     verts = sorted({(float(x), float(y)) for x, y in ring[:-1]})
+    n = f"`{prefix}n`"
+    pts = [(f"`{prefix}x{i}`", f"`{prefix}y{i}`") for i in range(max_pts)]
+    terms: dict[str, str] = {}  # orientation SQL -> bound column
 
-    def all_of(conds):
-        out = conds[0]
-        for c in conds[1:]:
-            out = out & c
-        return out
-
-    def any_of(conds):
-        out = conds[0]
-        for c in conds[1:]:
-            out = out | c
-        return out
-
-    # axis family 1: AOI edges — all scene points strictly outside
-    sep_aoi = any_of([
-        all_of([
-            _orient_col(F.lit(ax), F.lit(ay), F.lit(bx), F.lit(by), px, py) < 0
-            for (px, py) in pt_cols
-        ])
-        for (ax, ay, bx, by) in edges
-    ])
-
-    # axis family 2: scene point-pair lines
-    pair_seps = []
-    n = len(pt_cols)
-    for i in range(n):
-        for j in range(i + 1, n):
-            (px, py), (qx, qy) = pt_cols[i], pt_cols[j]
-            others = [pt_cols[k] for k in range(n) if k != i and k != j]
-            o_sides = [_orient_col(px, py, qx, qy, zx, zy) for (zx, zy) in others]
-            a_sides = [
-                _orient_col(px, py, qx, qy, F.lit(vx), F.lit(vy))
-                for (vx, vy) in verts
-            ]
-            scene_pos = all_of([s >= 0 for s in o_sides]) if o_sides else F.lit(True)
-            scene_neg = all_of([s <= 0 for s in o_sides]) if o_sides else F.lit(True)
-            aoi_neg = all_of([s < 0 for s in a_sides])
-            aoi_pos = all_of([s > 0 for s in a_sides])
-            pair_seps.append((scene_pos & aoi_neg) | (scene_neg & aoi_pos))
-    sep_pairs = any_of(pair_seps) if pair_seps else F.lit(False)
-
-    return ~(sep_aoi | sep_pairs)
-
-
-def _sat_size_branches(
-    n_col: Column,
-    point_at,
-    aoi_ring: np.ndarray,
-    max_pts: int,
-) -> Column:
-    """Size-guarded CASE WHEN over unrolled SAT variants (k = 1..max).
-
-    ``point_at(i)`` must return SMALL accessor expressions over the raw
-    underlying column (``corners[i].lon`` / ``element_at(ring, 2i-1)``):
-    every orient test embeds copies of these subtrees, so a large
-    accessor (e.g. a ``transform(...)`` normalization) multiplies the
-    expression tree combinatorially and stalls Catalyst ANALYSIS — the
-    first cut of this function did exactly that and planned for minutes.
-    Only the matching branch evaluates per row; NULL / oversized arrays
-    yield NULL (callers' ``where`` drops them, matching the Arrow
-    kernel's False)."""
-    expr = F.lit(None).cast("boolean")
-    for k in range(1, max_pts + 1):
-        expr = F.when(
-            n_col == k,
-            _sat_convex_intersects([point_at(i) for i in range(k)], aoi_ring),
-        ).otherwise(expr)
-    return expr
-
-
-def _sat_convex_intersects_sql(
-    pt_exprs: list[tuple[str, str]], aoi_ring: np.ndarray
-) -> str:
-    """SQL-text rendering of :func:`_sat_convex_intersects` — same
-    axes, same strict/closed comparisons, same null logic (the parsed
-    tree is node-for-node the Column one). ``pt_exprs`` are SQL
-    snippets for the scene points."""
-    ring = np.asarray(aoi_ring, dtype=np.float64).reshape(-1, 2)
-    if geom.ring_area(ring) < 0:
-        ring = ring[::-1]
-    edges = [
-        (float(ring[i][0]), float(ring[i][1]),
-         float(ring[i + 1][0]), float(ring[i + 1][1]))
-        for i in range(len(ring) - 1)
-        if not (ring[i][0] == ring[i + 1][0] and ring[i][1] == ring[i + 1][1])
-    ]
-    verts = sorted({(float(x), float(y)) for x, y in ring[:-1]})
+    def o(*abc):
+        sql = _orient_sql(*abc)
+        return f"`{terms.setdefault(sql, f'{prefix}o{len(terms)}')}`"
 
     def all_of(conds):
         return "(" + " AND ".join(conds) + ")"
 
-    def any_of(conds):
-        return "(" + " OR ".join(conds) + ")"
+    def sat(k):
+        axes = [
+            "(NOT " + all_of([f"{o(ax, ay, bx, by, px, py)} < 0.0D"
+                              for (px, py) in pts[:k]]) + ")"
+            for (ax, ay, bx, by) in edges
+        ]
+        for i in range(k):
+            for j in range(i + 1, k):
+                (px, py), (qx, qy) = pts[i], pts[j]
+                o_sides = [o(px, py, qx, qy, zx, zy)
+                           for m, (zx, zy) in enumerate(pts[:k]) if m not in (i, j)]
+                a_sides = [o(px, py, qx, qy, vx, vy) for (vx, vy) in verts]
+                scene_pos = all_of([f"{s} >= 0.0D" for s in o_sides]) if o_sides else "true"
+                scene_neg = all_of([f"{s} <= 0.0D" for s in o_sides]) if o_sides else "true"
+                aoi_neg = all_of([f"{s} < 0.0D" for s in a_sides])
+                aoi_pos = all_of([f"{s} > 0.0D" for s in a_sides])
+                axes.append(
+                    f"(NOT (({scene_pos} AND {aoi_neg}) OR ({scene_neg} AND {aoi_pos})))"
+                )
+        return all_of(axes)
 
-    sep_aoi = any_of([
-        all_of([
-            f"{_orient_sql(ax, ay, bx, by, px, py)} < 0.0D"
-            for (px, py) in pt_exprs
-        ])
-        for (ax, ay, bx, by) in edges
+    branches = "".join(f" WHEN {k} THEN {sat(k)}" for k in range(1, max_pts + 1))
+    inside = all_of([f"{n} BETWEEN 1 AND {max_pts}"] + [
+        f"({i} >= {n} OR "
+        + all_of([f"{_orient_sql(ax, ay, bx, by, px, py)} > 0.0D"
+                  for (ax, ay, bx, by) in edges])
+        + ")"
+        for i, (px, py) in enumerate(pts)
     ])
 
-    pair_seps = []
-    n = len(pt_exprs)
-    for i in range(n):
-        for j in range(i + 1, n):
-            (px, py), (qx, qy) = pt_exprs[i], pt_exprs[j]
-            others = [pt_exprs[k] for k in range(n) if k != i and k != j]
-            o_sides = [_orient_sql(px, py, qx, qy, zx, zy) for (zx, zy) in others]
-            a_sides = [_orient_sql(px, py, qx, qy, vx, vy) for (vx, vy) in verts]
-            scene_pos = all_of([f"{s} >= 0.0D" for s in o_sides]) if o_sides else "true"
-            scene_neg = all_of([f"{s} <= 0.0D" for s in o_sides]) if o_sides else "true"
-            aoi_neg = all_of([f"{s} < 0.0D" for s in a_sides])
-            aoi_pos = all_of([f"{s} > 0.0D" for s in a_sides])
-            pair_seps.append(
-                f"(({scene_pos} AND {aoi_neg}) OR ({scene_neg} AND {aoi_pos}))"
-            )
-    sep_pairs = any_of(pair_seps) if pair_seps else "false"
+    def bind(fields: dict[str, str]) -> str:
+        return ("array(named_struct("
+                + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + "))")
 
-    return f"(NOT ({sep_aoi} OR {sep_pairs}))"
-
-
-def _sat_size_branches_sql(
-    n_sql: str,
-    point_at,
-    aoi_ring: np.ndarray,
-    max_pts: int,
-) -> str:
-    """SQL-text rendering of :func:`_sat_size_branches`: a CASE over
-    the point count with one unrolled SAT per branch, NULL (dropped)
-    otherwise. Branch conditions are disjoint, so WHEN order does not
-    matter; this matches the Column version's nested ``when`` chain."""
-    branches = "".join(
-        f" WHEN ({n_sql}) = {k} THEN "
-        + _sat_convex_intersects_sql([point_at(i) for i in range(k)], aoi_ring)
-        for k in range(1, max_pts + 1)
-    )
-    return f"(CASE{branches} ELSE CAST(NULL AS BOOLEAN) END)"
-
-
-def _sat_conjunct_sqls(
-    pt_exprs: list[tuple[str, str]], aoi_ring: np.ndarray
-) -> list[str]:
-    """The SAT of :func:`_sat_convex_intersects_sql` decomposed into
-    NOT-separated CONJUNCTS — one per AOI edge axis and one per scene
-    point-pair axis. ANDing all of them is boolean-identical to
-    ``NOT (sep_aoi OR sep_pairs)`` (De Morgan over the axis
-    disjunction), with the same strict/closed comparisons and the same
-    NULL propagation (any NULL conjunct ⇒ the row is dropped either
-    way). The split exists for the CODEGEN, not the algebra: the
-    single ~2.5k-node k=4/k=5 CASE expression fails Janino compilation
-    (measured: 'Failed to compile the generated Java code' on every
-    SAT stage since round 5) and silently falls back to interpreted
-    eval; medium-sized conjuncts compile, and the same 2M-doc refine
-    measured 7.3 s interpreted vs 3.6 s compiled (r6)."""
-    ring = np.asarray(aoi_ring, dtype=np.float64).reshape(-1, 2)
-    if geom.ring_area(ring) < 0:
-        ring = ring[::-1]
-    edges = [
-        (float(ring[i][0]), float(ring[i][1]),
-         float(ring[i + 1][0]), float(ring[i + 1][1]))
-        for i in range(len(ring) - 1)
-        if not (ring[i][0] == ring[i + 1][0] and ring[i][1] == ring[i + 1][1])
+    coords = {f"{prefix}n": n_sql}
+    for i in range(max_pts):
+        coords[f"{prefix}x{i}"], coords[f"{prefix}y{i}"] = point_at(i)
+    no_terms = bind({name: "CAST(NULL AS DOUBLE)" for name in terms.values()})
+    some_terms = bind({name: sql for sql, name in terms.items()})
+    return [
+        bind(coords),
+        bind({f"{prefix}in": f"coalesce({inside}, false)"}),
+        f"IF(`{prefix}in`, {no_terms}, {some_terms})",
+    ], [
+        f"{n} BETWEEN 1 AND {max_pts}",
+        f"`{prefix}in` OR CASE {n}{branches} END",
     ]
-    verts = sorted({(float(x), float(y)) for x, y in ring[:-1]})
-
-    def all_of(conds):
-        return "(" + " AND ".join(conds) + ")"
-
-    out = []
-    for (ax, ay, bx, by) in edges:
-        out.append(
-            "(NOT "
-            + all_of([
-                f"{_orient_sql(ax, ay, bx, by, px, py)} < 0.0D"
-                for (px, py) in pt_exprs
-            ])
-            + ")"
-        )
-    n = len(pt_exprs)
-    for i in range(n):
-        for j in range(i + 1, n):
-            (px, py), (qx, qy) = pt_exprs[i], pt_exprs[j]
-            others = [pt_exprs[k] for k in range(n) if k != i and k != j]
-            o_sides = [_orient_sql(px, py, qx, qy, zx, zy) for (zx, zy) in others]
-            a_sides = [_orient_sql(px, py, qx, qy, vx, vy) for (vx, vy) in verts]
-            scene_pos = all_of([f"{s} >= 0.0D" for s in o_sides]) if o_sides else "true"
-            scene_neg = all_of([f"{s} <= 0.0D" for s in o_sides]) if o_sides else "true"
-            aoi_neg = all_of([f"{s} < 0.0D" for s in a_sides])
-            aoi_pos = all_of([f"{s} > 0.0D" for s in a_sides])
-            out.append(
-                f"(NOT (({scene_pos} AND {aoi_neg}) OR ({scene_neg} AND {aoi_pos})))"
-            )
-    return out
-
-
-def _sat_filter_columns(
-    n_sql: str,
-    point_at,
-    aoi_ring: np.ndarray,
-    max_pts: int,
-    split_from: int = 4,
-) -> list[Column]:
-    """Conjunct-form SAT filter list: rows whose point count k is
-    small (< ``split_from``) are tested by their whole (small) SAT in
-    one catch-all conjunct; large-k branches contribute one conjunct
-    per separating axis, each guarded ``CASE WHEN k = K THEN term ELSE
-    TRUE END`` so it is vacuous for other sizes. A leading size-range
-    conjunct drops k = 0, k > max_pts and NULL geometries exactly like
-    the branch CASE's NULL arm did. ANDing the returned columns equals
-    :func:`_sat_size_branches_sql` row-for-row."""
-    out = [F.expr(f"(({n_sql}) >= 1 AND ({n_sql}) <= {max_pts})")]
-    small = [k for k in range(1, min(split_from, max_pts + 1))]
-    if small:
-        branches = "".join(
-            f" WHEN ({n_sql}) = {k} THEN "
-            + _sat_convex_intersects_sql([point_at(i) for i in range(k)], aoi_ring)
-            for k in small
-        )
-        out.append(F.expr(f"(CASE{branches} ELSE TRUE END)"))
-    for k in range(split_from, max_pts + 1):
-        for term in _sat_conjunct_sqls([point_at(i) for i in range(k)], aoi_ring):
-            out.append(F.expr(f"(CASE WHEN ({n_sql}) = {k} THEN {term} ELSE TRUE END)"))
-    return out
-
-
-def corners_intersect_aoi_filters(
-    corners: str, aoi_ring: np.ndarray
-) -> list[Column]:
-    """Conjunct-form of :func:`corners_intersect_aoi` (apply each
-    returned column as a ``where``): identical row set, but the k=4
-    SAT arrives as ~10 medium conjuncts that survive Janino
-    compilation instead of one expression that does not (r6)."""
-    q = f"`{corners}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i + 1}).lon",
-                f"element_at({q}, {i + 1}).lat")
-
-    return _sat_filter_columns(f"size({q})", at, aoi_ring, max_pts=4)
-
-
-def flat_ring_intersects_aoi_filters(
-    ring_col: str, aoi_ring: np.ndarray
-) -> list[Column]:
-    """Conjunct-form of :func:`flat_ring_intersects_aoi` (same split
-    rationale; k = 4 and 5 branches are split per axis)."""
-    q = f"`{ring_col}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i * 2 + 1})",
-                f"element_at({q}, {i * 2 + 2})")
-
-    return _sat_filter_columns(
-        f"cast(size({q})/2 as int)", at, aoi_ring, max_pts=5
-    )
-
-
-def corners_intersect_aoi(corners: str, aoi_ring: np.ndarray) -> Column:
-    """SAT intersects for the catalog ``corners`` column NAME
-    (array<struct<lon,lat>>, universally 4 entries) vs a constant
-    convex AOI — unrolled flat codegen arithmetic, rendered as ONE SQL
-    string (the Column-composed rendering cost ~2.9 s of py4j driver
-    time per query build; see the module note above)."""
-    q = f"`{corners}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i + 1}).lon",
-                f"element_at({q}, {i + 1}).lat")
-
-    # canonical catalog corners are EXACTLY 4 points; lower counts kept
-    # for robustness, higher ones routed to NULL (dropped) — branch
-    # count is also Catalyst ANALYSIS cost, so no speculative headroom
-    return F.expr(_sat_size_branches_sql(f"size({q})", at, aoi_ring, max_pts=4))
-
-
-def flat_ring_intersects_aoi(ring_col: str, aoi_ring: np.ndarray) -> Column:
-    """SAT intersects for a closed flat-ring column NAME (canonical
-    3-5 points + closure) vs a constant convex AOI — one SQL string,
-    tiny element_at accessors."""
-    q = f"`{ring_col}`"
-
-    def at(i: int):
-        return (f"element_at({q}, {i * 2 + 1})",
-                f"element_at({q}, {i * 2 + 2})")
-
-    # canonical closed rings: 2-5 points (degenerate point/segment up
-    # to quad hull + closure)
-    return F.expr(_sat_size_branches_sql(
-        f"cast(size({q})/2 as int)", at, aoi_ring, max_pts=5
-    ))
 
 
 def _point_in_flat_ring_sql(px: str, py: str, flat: str) -> str:

@@ -27,16 +27,6 @@ SCENES_TABLE = "scenes"
 DUPLICATES_TABLE = "duplicates"
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark.sql("SELECT 1").collect()
-        return "org.apache.iceberg.spark.SparkCatalog" in spark.conf.get(
-            "spark.sql.catalog.spark_catalog", ""
-        )
-    except Exception:
-        return False
-
-
 def write_scenes(scenes: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Partitioned + sorted parquet layout (Iceberg-equivalent)."""
     out = scenes.withColumn("start_day", F.substring("start", 1, 8))
@@ -149,7 +139,3 @@ USING (
 ON d.outname_base = src.outname_base AND d.scene = src.scene
 WHEN NOT MATCHED THEN INSERT (outname_base, scene) VALUES (src.outname_base, src.scene)""",
     ]
-
-
-def write_duplicates(dups: DataFrame, path: str, mode: str = "overwrite") -> None:
-    dups.write.mode(mode).parquet(path)

@@ -55,14 +55,3 @@ def streaming_ingest(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def streaming_session_counts(
-    events: DataFrame, ts_col: str, gap: str = "60 seconds", key_cols: list[str] | None = None
-) -> DataFrame:
-    """Streaming equivalent of ``groupbyTime`` via ``session_window``
-    (chained-gap merge semantics match ``ancillary.py:100-107``)."""
-    keys = key_cols or []
-    return events.groupBy(
-        F.session_window(F.col(ts_col), gap).alias("session"), *keys
-    ).agg(F.count("*").alias("n"))

@@ -5,7 +5,12 @@ from pyrosar_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pyrosar_spark_tests", cpus=8, shuffle_partitions=8, driver_memory="8g")
+    # a whole-stage-codegen compile failure must fail the test, not fall
+    # back to interpreted evaluation silently
+    s = get_spark(
+        "pyrosar_spark_tests", cpus=8, shuffle_partitions=8, driver_memory="8g",
+        extra_conf={"spark.sql.codegen.fallback": "false"},
+    )
     yield s
 
 

@@ -1,13 +1,11 @@
 """Round-6 optimization internals: each test pins the EQUIVALENCE that
 an exchange-removal/restructure relied on, on inputs built to hit the
 new code path's edge (batch-boundary carry, multi-cell pairs,
-multi-block pairs, conjunct-SAT De Morgan split, dead-guard skip)."""
+multi-block pairs, dead-guard skip)."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pyrosar_spark.session import get_spark
 
@@ -90,37 +88,6 @@ def test_simhash_multi_block_pair_reported_once(spark):
     )
     rows = simhash_pairs(df, max_hamming=3, n_blocks=4, hash_mode="md5").collect()
     assert [(r.a, r.b, r.hamming) for r in rows] == [(1, 2, 0)]
-
-
-def test_sat_conjuncts_equal_monolithic(spark):
-    """The per-axis conjunct split of the convex-AOI SAT must keep the
-    exact row set of the monolithic CASE form, including degenerate
-    sizes (1-3 corners) and NULL geometry."""
-    from pyrosar_spark import geom
-    from pyrosar_spark.operators.spatial import (
-        corners_intersect_aoi,
-        corners_intersect_aoi_filters,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for i in range(300):
-        k = int(rng.integers(1, 5))
-        cx, cy = rng.uniform(-5, 5, 2)
-        pts = [(float(cx + rng.uniform(-2, 2)), float(cy + rng.uniform(-2, 2)))
-               for _ in range(k)]
-        rows.append((i, [{"lon": x, "lat": y} for x, y in pts]))
-    rows.append((999, None))
-    df = spark.createDataFrame(
-        rows, "id long, corners array<struct<lon:double,lat:double>>"
-    )
-    ring = geom.wkt_to_ring("POLYGON((-1 -1, 3 -1, 3 3, -1 3, -1 -1))")
-    mono = {r.id for r in df.where(corners_intersect_aoi("corners", ring)).collect()}
-    split = df
-    for c in corners_intersect_aoi_filters("corners", ring):
-        split = split.where(c)
-    assert {r.id for r in split.collect()} == mono
-    assert 0 < len(mono) < 300
 
 
 def test_candidate_pairs_skips_dead_hot_guard(spark):

@@ -115,6 +115,32 @@ def test_deferred_geometry_equivalence(docs):
     assert a == b and len(a) > 0
 
 
+def test_flagship_stage_compiles(spark, docs):
+    """The benchmark's flagship stage (deferred-geometry parse -> select
+    by date, VV and a convex AOI -> HGT tile lattice -> per-tile count)
+    runs whole-stage-codegen compiled: the session has codegen fallback
+    off, so a method Janino cannot compile raises here. The tiles match
+    the Arrow kernel's."""
+    from pyrosar_spark.operators.ingest import docs_to_scenes
+    from pyrosar_spark.operators.tiles import assign_hgt
+
+    assert spark.conf.get("spark.sql.codegen.fallback") == "false"
+    scenes = docs_to_scenes(docs, with_geometry="defer")
+
+    def tile_counts(aoi_refine):
+        sel = select(
+            scenes, mindate="20150101T000000", maxdate="20151231T235959",
+            polarizations=["VV"],
+            aoi_wkt="POLYGON((-180 -60, -60 -60, -60 60, -180 60, -180 -60))",
+            return_value=["doc_id", "xmin", "xmax", "ymin", "ymax"],
+            aoi_refine=aoi_refine,
+        )
+        return {tuple(r) for r in assign_hgt(sel).groupBy("tile_id").count().collect()}
+
+    got = tile_counts("auto")
+    assert got and got == tile_counts("arrow")
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path, scenes):
     """On a stored catalog, select()'s non-spatial predicates and the
     bbox prefilter must reach the parquet scan as PushedFilters, and

@@ -1,43 +1,42 @@
-"""Rendering parity for the SQL-text geometry predicates (round 5).
+"""The SQL-text SAT renderer (``spatial.sat_refine``) against the numpy
+kernel it replaces in ``select``.
 
-The unrolled SAT predicates are shipped as SQL strings handed to
-``F.expr`` (py4j charges per Column node: the ~520-node corners SAT
-cost 2.9 s of driver wall per query BUILD when composed Column-by-
-Column — BENCH/BASELINE.md round-5 follow-up). The Column-composed
-builders are kept precisely so this suite can pin the claim that the
-two renderings are the SAME expression: value-identical under
-``eqNullSafe`` over real catalog corners, real rings, and an edge-case
-battery (NULL array, empty, undersized, oversized, degenerate points).
+Each row's expected answer is the size guard (1 <= point count <= max)
+AND ``geom.flat_batch_intersects`` of the convex hull of its points, over
+real-shaped corners, closed rings and an edge-case battery (NULL array,
+empty, undersized, oversized, degenerate points). The AOIs are a
+lopsided quad, a thin triangle and an axis-aligned rect, so the
+true-hit flag sees rows inside, crossing and outside.
 
 A regression in the SQL renderer (literal suffix, precedence, comment
-lexing — the ``x--60.0D`` trap) shows up here as a non-zero diff count
-without needing the slower scalar-oracle fuzz to hit the broken case.
+lexing — the ``x--60.0D`` trap, ANSI errors from eager point accessors)
+shows up here without needing the slower scalar-oracle fuzz to hit the
+broken case.
 """
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from pyrosar_spark.operators.spatial import (
-    _sat_size_branches,
-    _sat_size_branches_sql,
-    corners_intersect_aoi,
-    flat_ring_intersects_aoi,
-)
+from pyrosar_spark import geom
+from pyrosar_spark.operators.spatial import corner_points, ring_points, sat_refine
 
 # a lopsided convex quad and a thin triangle, both with negative
-# coordinates so the minus-minus comment trap is exercised
+# coordinates so the minus-minus comment trap is exercised, and a rect
+# large enough to hold whole scenes
 AOI_QUAD = np.array(
     [[-61.3, -12.7], [4.25, -9.5], [6.75, 8.125], [-59.875, 3.5],
      [-61.3, -12.7]]
 )
 AOI_TRI = np.array([[10.0, 40.0], [11.5, 40.25], [10.75, 47.0], [10.0, 40.0]])
+AOI_RECT = geom.bbox_ring(-40.0, -5.0, 0.0, 30.0)
 
 
 def _corner_rows():
-    """Corner arrays spanning every CASE branch incl. NULL routing."""
+    """Corner arrays spanning every point count incl. NULL routing."""
     rng = np.random.default_rng(77)
     rows = []
     for _ in range(300):  # random quads around both AOIs
@@ -46,7 +45,7 @@ def _corner_rows():
             [cx + rng.uniform(-8, 8, 4), cy + rng.uniform(-8, 8, 4)]
         )
         rows.append([{"lon": float(x), "lat": float(y)} for x, y in pts])
-    # size 1..3 (undersized branches), 5 (oversized -> NULL), empty, NULL
+    # size 1..3 (undersized), 5 (oversized -> dropped), empty, NULL
     base = [{"lon": -60.0, "lat": -10.0}, {"lon": 5.0, "lat": -10.0},
             {"lon": 5.0, "lat": 5.0}, {"lon": -60.0, "lat": 5.0},
             {"lon": -60.0, "lat": -10.0}]
@@ -56,7 +55,7 @@ def _corner_rows():
     rows.append(None)
     # degenerate: all four points identical (zero-area "hull")
     rows.append([{"lon": 1.0, "lat": 1.0}] * 4)
-    return [(r,) for r in rows]
+    return rows
 
 
 def _ring_rows():
@@ -75,46 +74,52 @@ def _ring_rows():
     rows.append([float(v) for v in (-60.0, -10.0, -60.0, -10.0)])  # point
     rows.append([])
     rows.append(None)
-    # oversized: 6 points + closure -> routed to NULL by both forms
+    # oversized: 6 points + closure -> dropped
     hexa = np.array([[0, 0], [2, 0], [3, 1], [2, 2], [0, 2], [-1, 1], [0, 0]],
                     dtype=np.float64)
     rows.append([float(v) for v in hexa.ravel()])
-    return [(r,) for r in rows]
+    return rows
 
 
-def _assert_zero_diffs(df, col_form, sql_form):
-    diffs = df.where(~col_form.eqNullSafe(sql_form)).count()
-    assert diffs == 0
+GEOMETRIES = {
+    # column type, rows, points accessor, row -> (k, 2) point array
+    "corners": ("array<struct<lon double, lat double>>", _corner_rows,
+                corner_points("g"),
+                lambda r: np.array([[p["lon"], p["lat"]] for p in r]).reshape(-1, 2)),
+    "ring": ("array<double>", _ring_rows, ring_points("g"),
+             lambda r: np.asarray(r, dtype=np.float64).reshape(-1, 2)),
+}
 
 
-@pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI], ids=["quad", "tri"])
-def test_corners_sql_matches_column_rendering(spark, aoi):
-    df = spark.createDataFrame(
-        _corner_rows(), "corners array<struct<lon double, lat double>>"
-    )
-
-    def at(i):
-        p = F.element_at(F.col("corners"), i + 1)
-        return (p["lon"], p["lat"])
-
-    col_form = _sat_size_branches(F.size(F.col("corners")), at, aoi, max_pts=4)
-    _assert_zero_diffs(df, col_form, corners_intersect_aoi("corners", aoi))
+def _expected(pts: np.ndarray | None, max_pts: int, aoi: np.ndarray) -> bool:
+    if pts is None or not 1 <= len(pts) <= max_pts:
+        return False
+    hull = geom.convex_hull_ring(pts)
+    return bool(geom.flat_batch_intersects([hull.ravel()], aoi)[0])
 
 
-@pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI], ids=["quad", "tri"])
-def test_flat_ring_sql_matches_column_rendering(spark, aoi):
-    df = spark.createDataFrame(_ring_rows(), "ring array<double>")
+@pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI, AOI_RECT], ids=["quad", "tri", "rect"])
+@pytest.mark.parametrize("geometry", sorted(GEOMETRIES))
+def test_sat_refine_matches_numpy_kernel(spark, geometry, aoi):
+    col_type, make_rows, points, to_pts = GEOMETRIES[geometry]
+    rows = make_rows()
+    df = spark.createDataFrame(list(enumerate(rows)), f"id long, g {col_type}")
+    binds, conds = sat_refine(points, aoi)
+    for bind in binds:
+        df = df.selectExpr("*", f"inline({bind})")
+    inside = {r.id for r in df.where("_sat_in").collect()}
+    for cond in conds:
+        df = df.where(cond)
+    got = {r.id for r in df.collect()}
 
-    def at(i):
-        return (
-            F.element_at(F.col("ring"), i * 2 + 1),
-            F.element_at(F.col("ring"), i * 2 + 2),
-        )
-
-    col_form = _sat_size_branches(
-        (F.size(F.col("ring")) / 2).cast("int"), at, aoi, max_pts=5
-    )
-    _assert_zero_diffs(df, col_form, flat_ring_intersects_aoi("ring", aoi))
+    max_pts = points[2]
+    want = {i for i, r in enumerate(rows)
+            if _expected(None if r is None else to_pts(r), max_pts, aoi)}
+    assert got == want, f"got^want={sorted(got ^ want)}"
+    assert inside <= want
+    assert 0 < len(want) < len(rows)
+    if aoi is AOI_RECT:  # true hits and exact-path hits both occur
+        assert inside and want - inside
 
 
 def test_non_finite_aoi_coordinate_rejected_at_render_time():
@@ -122,7 +127,7 @@ def test_non_finite_aoi_coordinate_rejected_at_render_time():
     the renderer must refuse non-finite coordinates up front."""
     bad = np.array([[0.0, 0.0], [1.0, 0.0], [np.inf, 1.0], [0.0, 0.0]])
     with pytest.raises(ValueError, match="non-finite"):
-        flat_ring_intersects_aoi("ring", bad)
+        sat_refine(ring_points("ring"), bad)
 
 
 def test_sql_text_has_no_comment_or_decimal_traps():
@@ -130,14 +135,8 @@ def test_sql_text_has_no_comment_or_decimal_traps():
     renderer exists to avoid: a double literal without the D suffix
     (silently parses as DECIMAL and poisons the arithmetic) and a
     bare ``--`` (lexes as a line comment, truncating the predicate)."""
-    import re
-
-    def at(i):
-        return (f"element_at(`ring`, {i * 2 + 1})",
-                f"element_at(`ring`, {i * 2 + 2})")
-
-    txt = _sat_size_branches_sql("cast(size(`ring`)/2 as int)", at,
-                                 AOI_QUAD, max_pts=5)
+    binds, conds = sat_refine(ring_points("ring"), AOI_QUAD)
+    txt = "\n".join(binds + conds)
     assert "--" not in txt
     # every float literal carries the D suffix
     bare = [
