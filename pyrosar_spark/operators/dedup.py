@@ -631,7 +631,6 @@ def simhash_pairs(
     n_blocks: int = 4,
     hash_mode: str = "xxhash64",
     allow_partial_recall: bool = False,
-    kernel: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs by SimHash with block-permutation candidate
     generation: split the 64-bit hash into ``n_blocks`` equal blocks;
@@ -646,9 +645,9 @@ def simhash_pairs(
     ``hash_mode='md5'`` selects the engine-portable token hash so the
     whole operator is reproducible in SQL oracles.
 
-    ``kernel``: ``'arrow'`` = the numpy batch sign-sum (md5 mode only,
-    byte-identical output), ``'hof'`` = the JVM higher-order form,
-    ``'auto'`` = arrow whenever the md5 hash makes it available.
+    The md5 mode hashes with the numpy batch sign-sum
+    (:func:`simhash64_udf`); ``xxhash64`` has no Arrow kernel and uses
+    the JVM higher-order form (:func:`simhash64`).
     """
     if max_hamming > n_blocks - 1 and not allow_partial_recall:
         raise ValueError(
@@ -656,10 +655,7 @@ def simhash_pairs(
             f"n_blocks-1={n_blocks - 1}; raise n_blocks or pass "
             "allow_partial_recall=True to accept missed pairs"
         )
-    use_arrow = kernel == "arrow" or (kernel == "auto" and hash_mode == "md5")
-    if use_arrow and hash_mode != "md5":
-        raise ValueError("kernel='arrow' implements the md5-portable hash only")
-    if use_arrow:
+    if hash_mode == "md5":
         # spread before the Python stage by input bytes, same
         # no-shrink policy as shingle_frame
         sh = (

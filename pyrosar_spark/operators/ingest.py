@@ -28,7 +28,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from pyrosar_spark import geom
-from pyrosar_spark.datagen import META_JSON_SCHEMA
 from pyrosar_spark.functions.naming import outname_base_col
 
 POL_FLAGS = ("hh", "vv", "hv", "vh")
@@ -55,8 +54,8 @@ def footprint_ring_udf(coords: pd.Series) -> pd.Series:
     (every real SAR footprint) is fully vectorized numpy
     (:func:`pyrosar_spark.geom.hull_rings_batch`); ~3 µs/row amortized —
     measured ~100× faster than expressing the same hull with Catalyst
-    higher-order array functions (interpreted, allocation-heavy; see
-    :func:`jvm_hull_ring`)."""
+    higher-order array functions (interpreted, allocation-heavy; round 5,
+    ``BENCH/BASELINE.md``)."""
     rings = geom.hull_rings_batch(list(coords))
     return pd.Series([None if r is None else list(r.reshape(-1)) for r in rings])
 
@@ -90,67 +89,6 @@ def ring_to_wkb_udf(ring: pd.Series) -> pd.Series:
     return pd.Series(
         [None if r is None else geom.ring_to_wkb(geom.flat_to_ring(r)) for r in ring]
     )
-
-
-def jvm_hull_ring(df: DataFrame, coords_col: str = "_coords") -> DataFrame:
-    """Canonical CCW hull ring built entirely from JVM array expressions.
-
-    For strictly convex corner sets (every SAR footprint): angular sort
-    of the points around their centroid gives the CCW order; the ring
-    is rotated to start at the (min lat, min lon) vertex and closed —
-    byte-identical to the exact hull. ``_convex=false`` rows (collinear
-    / duplicate / interior points) must be re-done by the exact Arrow
-    fallback. Adds ``ring`` (flat array<double>) and ``_convex``.
-
-    Status: RETAINED AS A MEASURED-SLOWER ALTERNATIVE, not used by
-    ``docs_to_scenes``. Even with the single-element ``transform(array
-    (x), v -> ...)`` let-binding idiom below (which prevents the
-    exponential re-expansion a chained ``withColumn`` formulation
-    suffers), Catalyst evaluates higher-order array functions
-    interpreted and allocation-heavy: measured ~100× slower per row
-    than the vectorized Arrow kernel in
-    :func:`footprint_ring_udf`. Kept for zero-Python deployments and
-    as documentation of the trade-off.
-    """
-    coords = F.col(coords_col)
-    # sorted CCW points, computed once per row
-    sorted_pts = (
-        "transform(array_sort(transform({c}, p -> struct("
-        "atan2(p[1] - aggregate({c}, 0d, (a, q) -> a + q[1]) / size({c}),"
-        " p[0] - aggregate({c}, 0d, (a, q) -> a + q[0]) / size({c})) as theta,"
-        " p as pt))), s -> s.pt)"
-    ).format(c=coords_col)
-    # bind pts once; inside, bind the rotated ring once; emit struct(ring, convex)
-    cross = (
-        "( (element_at(rot, pmod(i, size(rot)) + 1)[0] - element_at(rot, i)[0])"
-        "  * (element_at(rot, pmod(i + 1, size(rot)) + 1)[1] - element_at(rot, i)[1])"
-        "- (element_at(rot, pmod(i, size(rot)) + 1)[1] - element_at(rot, i)[1])"
-        "  * (element_at(rot, pmod(i + 1, size(rot)) + 1)[0] - element_at(rot, i)[0]) )"
-    )
-    expr = f"""
-    element_at(transform(array({sorted_pts}), pts ->
-      element_at(transform(array(
-          array_position(transform(pts, p -> array(p[1], p[0])),
-                         array_min(transform(pts, p -> array(p[1], p[0]))))
-        ), idx ->
-        element_at(transform(array(
-            concat(slice(pts, cast(idx as int), size(pts) - cast(idx as int) + 1),
-                   slice(pts, 1, cast(idx as int) - 1))
-          ), rot ->
-          struct(
-            flatten(concat(rot, slice(rot, 1, 1))) as ring,
-            size(rot) >= 3 AND
-              forall(transform(sequence(1, size(rot)), i -> {cross}), c -> c > 0)
-              as convex
-          )
-        ), 1)
-      ), 1)
-    ), 1)
-    """
-    out = df.withColumn("_hull", F.expr(expr))
-    return out.withColumn("ring", F.col("_hull.ring")).withColumn(
-        "_convex", F.col("_hull.convex")
-    ).drop("_hull")
 
 
 def scene_meta_text(spans: Column) -> Column:
@@ -200,7 +138,6 @@ def docs_to_scenes(
     with_geometry: bool = True,
     meta_keys: list[str] | None = None,
     columns: list[str] | None = None,
-    parser: str = "auto",
 ) -> DataFrame:
     """Parse the ``scene_meta`` span of each document into a catalog row
     with the reference ``data``-table schema (``archive.py:374-394``):
@@ -231,37 +168,7 @@ def docs_to_scenes(
     row). A query that only filters dates + bbox parses 4 of the 17
     metadata fields instead of allocating all of them.
 
-    ``parser`` selects the JSON extraction kernel (all JVM-side):
-
-     - ``'from_json'`` (the ``'auto'`` default): pruned-schema struct
-       parse behind the Generate barrier — the measured winner.
-     - ``'json_tuple'``: one streaming Jackson pass extracting the
-       needed top-level fields as text (naturally a Generate barrier),
-       scalars ``try_cast``, array fields re-parsed with ``from_json``
-       on their tiny sub-texts behind a second barrier.
-     - ``'get_json_object'``: one streaming path-probe per field, bound
-       once behind ``explode(array(struct(..)))``.
-
-    All three produce identical rows (CI:
-    ``tests/test_ingest.py::test_parser_kernels_produce_identical_rows``,
-    plus the 8M-doc hash check in ``scripts/bench_parse.py``): malformed
-    JSON → NULL sensor → dropped; JSON null and missing keys → NULL;
-    numeric casts are PERMISSIVE (``try_cast`` mirrors ``from_json``'s
-    null-on-mismatch). One pinned boundary: a QUOTED numeric in an int
-    field ('"17"') is NULL under ``from_json`` (strict JSON typing) but
-    cast under the text-extraction kernels, which strip quotes before
-    the cast (``test_parser_kernels_quoted_numeric_boundary``).
-
-    Round-4 A/B (quiet window, 8M docs, local[16], min-of-5, the
-    round-3 VERDICT's named ``from_json`` scaling term): flagship
-    9-column shape — from_json 8.18s, json_tuple 13.71s,
-    get_json_object 23.61s; full 17-field catalog — 10.71 / 15.11 /
-    40.97s. The round-3 idea that a path-probe parse would be lighter
-    does NOT survive contact with the array fields: ``json_tuple``'s
-    Generate breaks whole-stage codegen and ``get_json_object`` re-lexes
-    the whole payload once per field, while the pruned ``from_json``
-    lexes once and only allocates the 5 needed fields. The incumbent
-    stays; the alternates are retained as the documented A/B.
+    Parse kernel: pruned ``from_json`` (round-4 A/B in ``BENCH/BASELINE.md``).
     """
     # PERFORMANCE-CRITICAL SHAPE: Catalyst's CollapseProject inlines a
     # projected expression into every downstream reference — a naive
@@ -281,10 +188,6 @@ def docs_to_scenes(
     # sensor always parses: it is the validity sentinel for "document
     # has a parseable scene_meta span" (identify_many drop semantics)
     needed = {"sensor"} | {f for c in want for f in _COLUMN_FIELDS[c]}
-    if parser == "auto":
-        parser = "from_json"
-    if parser not in ("json_tuple", "from_json", "get_json_object"):
-        raise ValueError(f"unknown parser: {parser!r}")
 
     txt = scene_meta_text(F.col("spans"))
     passthrough = ["_json_txt"] if meta_keys else []
@@ -295,76 +198,16 @@ def docs_to_scenes(
             "_json_txt", F.expr("substring(_meta_text, instr(_meta_text, '|') + 1)")
         )
     )
-    types = dict(_META_FIELD_TYPES)
-    ordered = [n for n, t in _META_FIELD_TYPES if n in needed]
-    if parser == "from_json":
-        schema = ", ".join(f"{n} {types[n]}" for n in ordered)
-        parsed = (
-            pre.select(
-                "doc_id",
-                *passthrough,
-                F.explode(F.array(F.from_json(F.col("_json_txt"), schema))).alias("m"),
-            )
-            .where(F.col("m").isNotNull() & F.col("m.sensor").isNotNull())
+    schema = ", ".join(f"{n} {t}" for n, t in _META_FIELD_TYPES if n in needed)
+    parsed = (
+        pre.select(
+            "doc_id",
+            *passthrough,
+            F.explode(F.array(F.from_json(F.col("_json_txt"), schema))).alias("m"),
         )
-        field = lambda n: F.col(f"m.{n}")  # noqa: E731
-    else:
-        arr_fields = [n for n in ordered if types[n].startswith("array")]
-        if parser == "json_tuple":
-            jt = F.json_tuple(F.col("_json_txt"), *ordered).alias(
-                *[f"_jt_{n}" for n in ordered]
-            )
-            step = pre.select("doc_id", *passthrough, jt).where(
-                F.col("_jt_sensor").isNotNull()
-            )
-        else:
-            # one get_json_object per field (streaming Jackson with
-            # early exit, no object tree), all bound once behind the
-            # explode(array(struct(..))) Generate barrier
-            ext = F.struct(
-                *[
-                    F.get_json_object(F.col("_json_txt"), f"$.{n}").alias(f"_jt_{n}")
-                    for n in ordered
-                ]
-            )
-            step = (
-                pre.select(
-                    "doc_id", *passthrough, F.explode(F.array(ext)).alias("_e")
-                )
-                .select("doc_id", *passthrough, "_e.*")
-                .where(F.col("_jt_sensor").isNotNull())
-            )
-        scalar_cols = [
-            (
-                F.col(f"_jt_{n}")
-                if types[n] == "string"
-                else F.col(f"_jt_{n}").try_cast(types[n])
-            ).alias(f"_f_{n}")
-            for n in ordered
-            if n not in arr_fields
-        ]
-        if arr_fields:
-            # the array sub-parses are referenced many times downstream
-            # (pol flags, corners, bbox) — bind them once behind a
-            # Generate barrier, same CollapseProject defense as the
-            # from_json struct
-            arr_struct = F.struct(
-                *[
-                    F.from_json(F.col(f"_jt_{n}"), types[n]).alias(n)
-                    for n in arr_fields
-                ]
-            )
-            parsed = step.select(
-                "doc_id", *passthrough, *scalar_cols,
-                F.explode(F.array(arr_struct)).alias("_arr"),
-            )
-            arr_set = set(arr_fields)
-            field = lambda n: (  # noqa: E731
-                F.col(f"_arr.{n}") if n in arr_set else F.col(f"_f_{n}")
-            )
-        else:
-            parsed = step.select("doc_id", *passthrough, *scalar_cols)
-            field = lambda n: F.col(f"_f_{n}")  # noqa: E731
+        .where(F.col("m").isNotNull() & F.col("m.sensor").isNotNull())
+    )
+    field = lambda n: F.col(f"m.{n}")  # noqa: E731
     lons = F.transform(field("coordinates"), lambda c: F.element_at(c, 1))
     lats = F.transform(field("coordinates"), lambda c: F.element_at(c, 2))
     exprs: dict[str, Column] = {"doc_id": F.col("doc_id")}

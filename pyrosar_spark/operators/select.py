@@ -70,7 +70,6 @@ def select(
     polarizations: list[str] | None = None,
     processed_names: DataFrame | None = None,
     return_value=None,
-    aoi_refine: str = "auto",
     **kwargs,
 ) -> DataFrame:
     """Build the reference's conjunctive SELECT as a DataFrame.
@@ -80,14 +79,12 @@ def select(
     ``outname_base`` is contained in any filename are anti-filtered
     (``archive.py:1092-1095``).
 
-    ``aoi_refine`` picks the exact-intersects kernel after the bbox
-    prefilter: ``'auto'`` (default) evaluates CONVEX AOIs with pure JVM
-    column expressions over the raw corner points — no hull UDF, no
-    Python workers (an ArrowEvalPython stage demands ~2× the
-    parallelism level in cores, the worst in-box scaling term measured:
-    BENCH/BASELINE.md round 5) — and falls back to the Arrow kernel for
-    concave/degenerate AOIs; ``'arrow'`` forces the Arrow kernel
-    (A/B + fallback-parity testing).
+    The AOI's shape picks the exact-intersects kernel after the bbox
+    prefilter: a CONVEX AOI is evaluated with pure JVM column
+    expressions over the raw corner points — no hull UDF, no Python
+    workers (an ArrowEvalPython stage demands ~2× the parallelism level
+    in cores, the worst in-box scaling term measured: BENCH/BASELINE.md
+    round 5); a concave or degenerate AOI takes the Arrow kernel.
     """
     valid_cols = set(scenes.columns)
     df = scenes
@@ -188,9 +185,10 @@ def select(
             df = df.where(F.col(pol.lower()) == 1)
 
     # P8/J1 spatial: bbox prefilter (JVM, prunable) + exact refine
-    # (Arrow). On a deferred-geometry catalog (no ring column) the ring
-    # is derived from corners HERE — after every JVM filter — so the
-    # Python stage only sees bbox survivors.
+    # (JVM SAT; Arrow for a non-convex AOI). On a deferred-geometry
+    # catalog (no ring column) the ring is derived from corners HERE —
+    # after every JVM filter — so the Python stage only sees bbox
+    # survivors.
     def ring_col() -> Column:
         if "ring" in df.columns:
             return F.col("ring")
@@ -230,9 +228,7 @@ def select(
             sat_refine,
         )
 
-        if aoi_refine not in ("auto", "arrow"):
-            raise ValueError(f"unknown aoi_refine: {aoi_refine!r}")
-        if aoi_refine == "auto" and aoi_ring_is_convex(ring):
+        if aoi_ring_is_convex(ring):
             # JVM SAT path over the RAW geometry column — corners when
             # available (skips the hull entirely), else the ring
             # vertices (hull points; same hull, same answer).

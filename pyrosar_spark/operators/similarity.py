@@ -126,27 +126,6 @@ def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
     return [float(x) for x in v]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-pattern bucket id for one vector under the given planes —
-    the LITERAL form: n_bits × dim scalar literals in the expression
-    tree. Retained for A/B (scripts/plan_size_ann.py) and tiny configs;
-    production paths use :func:`lsh_bucket_col` over a broadcast planes
-    column (VERDICT r3 #3: at n_bits=32+ the literal tree dominates
-    analysis time and plan size)."""
-    bits = []
-    for i, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(
-            F.when(dot(vec, arr) >= 0, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out.bitwiseXOR(b)
-    return out
-
-
 def with_const(df: DataFrame, name: str, value, dtype: str) -> DataFrame:
     """Attach a large constant (planes matrix, centroid table) as a
     broadcast ONE-ROW column instead of an expression-tree literal
@@ -160,9 +139,11 @@ def with_const(df: DataFrame, name: str, value, dtype: str) -> DataFrame:
 
 def lsh_bucket_col(vec: Column, planes: Column) -> Column:
     """Sign-pattern bucket id from a planes COLUMN
-    (``array<array<double>>``, plane i → bit i). Same math as
-    :func:`lsh_bucket`: Horner accumulation over the reversed plane
-    list gives Σ bit_i·2^i exactly (integer ops, no float pow)."""
+    (``array<array<double>>``, plane i → bit i) — a column, not an
+    expression-tree literal (VERDICT r3 #3: at n_bits=32+ a literal tree
+    dominates analysis time and plan size). Horner accumulation over the
+    reversed plane list gives Σ bit_i·2^i exactly (integer ops, no float
+    pow)."""
     zero = F.lit(0).cast("long")
     one = F.lit(1).cast("long")
     return F.aggregate(

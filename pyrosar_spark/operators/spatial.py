@@ -11,9 +11,7 @@ the engine uses the classic two-stage distributed spatial join:
     high-cardinality key; hot cells can be salted (see
     :func:`cover_cells` ``salt`` note).
  2. **refine**: exact polygon-polygon intersect on the candidate pairs
-    as JVM column expressions (:func:`rings_intersect_jvm`; the numpy
-    kernels from :mod:`pyrosar_spark.geom` in one Arrow UDF with
-    ``refine='arrow'``).
+    as JVM column expressions (:func:`rings_intersect_jvm`).
 
 A single convex AOI (``select``) is refined by the separating-axis
 test of :func:`sat_refine` instead.
@@ -31,10 +29,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from pyrosar_spark import geom
@@ -70,30 +66,6 @@ def cover_cells(
     )
 
 
-@F.pandas_udf(T.BooleanType())
-def _pairs_intersect(left_ring: pd.Series, right_ring: pd.Series) -> pd.Series:
-    """Exact intersects for aligned flat-ring pairs (Arrow batch).
-
-    Groups the batch by distinct right geometry so each AOI ring is
-    tested against its candidates in one vectorized call.
-    """
-    out = np.zeros(len(left_ring), dtype=bool)
-    rkeys = right_ring.map(
-        lambda r: None if r is None else np.asarray(r, dtype=np.float64).tobytes()
-    )
-    frame = pd.DataFrame({"l": left_ring, "r": rkeys})
-    for rkey, grp in frame.groupby("r", sort=False):
-        if rkey is None:
-            continue
-        ring = np.frombuffer(rkey, dtype=np.float64).reshape(-1, 2)
-        mask = grp["l"].notna()
-        idx = grp.index[mask]
-        if len(idx):
-            res = geom.flat_batch_intersects(list(grp.loc[idx, "l"]), ring)
-            out[frame.index.get_indexer(idx)] = res
-    return pd.Series(out)
-
-
 def spatial_join(
     scenes: DataFrame,
     aois: DataFrame,
@@ -101,7 +73,6 @@ def spatial_join(
     broadcast_aoi: bool = True,
     scene_keys: list[str] | None = None,
     aoi_keys: list[str] | None = None,
-    refine: str = "jvm",
 ) -> DataFrame:
     """Scene × AOI polygon-intersect join (J1 at many-AOI scale).
 
@@ -109,18 +80,14 @@ def spatial_join(
     ``aoi_id``, bbox cols (``a_xmin``...) and ``a_ring``.
     Returns scene keys × ``aoi_id`` candidate-refined pairs.
 
-    ``refine='jvm'`` (default, round 5) evaluates the exact intersect as
-    whole-stage-codegen column expressions (:func:`rings_intersect_jvm`
-    — arbitrary simple polygons, touch-inclusive); ``'arrow'`` keeps the
-    numpy batch kernel (A/B + differential testing). The JVM path frees
-    the per-task Python workers whose ~2×-level core demand was the
-    worst in-box scaling term measured (BENCH/BASELINE.md round 5).
+    The exact intersect is JVM column expressions
+    (:func:`rings_intersect_jvm` — arbitrary simple polygons,
+    touch-inclusive), so the refine runs no Python worker (round 5,
+    BENCH/BASELINE.md).
     """
     scene_keys = scene_keys or ["doc_id"]
     if "a_ring" not in aois.columns:
         raise ValueError("aois must carry a_ring + a_xmin/a_xmax/a_ymin/a_ymax")
-    if refine not in ("jvm", "arrow"):
-        raise ValueError(f"unknown refine: {refine!r}")
     a = cover_cells(aois, "a_xmin", "a_xmax", "a_ymin", "a_ymax", cell_deg, out="cell")
     s = cover_cells(scenes, cell_deg=cell_deg, out="cell")
     if broadcast_aoi:
@@ -151,13 +118,9 @@ def spatial_join(
     )
     keep = scene_keys + ["ring"] + (aoi_keys or ["aoi_id"]) + ["a_ring"]
     cand = cand.where(F.col("cell") == canon).select(*keep)
-    if refine == "jvm":
-        refined = cand.where(
-            F.col("ring").isNotNull()
-            & rings_intersect_jvm("ring", "a_ring")
-        )
-    else:
-        refined = cand.where(_pairs_intersect(F.col("ring"), F.col("a_ring")))
+    refined = cand.where(
+        F.col("ring").isNotNull() & rings_intersect_jvm("ring", "a_ring")
+    )
     return refined.drop("ring", "a_ring")
 
 
@@ -184,7 +147,7 @@ def aoi_frame(spark, aoi_wkts: list[tuple[str, str]]) -> DataFrame:
 
 # -- JVM convex-AOI refine ---------------------------------------------------
 #
-# Round-5 scaling finding (BENCH/BASELINE.md, scripts/cpu_capacity_probe.py):
+# Round-5 scaling finding (BENCH/BASELINE.md):
 # an ArrowEvalPython stage runs a Python worker NEXT TO each JVM task
 # thread, so its core demand is ~2x the parallelism level — the flagship's
 # Python refine measured 0.40 in-box 4->16 efficiency on a host that

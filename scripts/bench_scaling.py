@@ -2,9 +2,9 @@
 rule's N → 4N executor efficiency): identical flagship job + identical
 input at each local[N] level (default sweep 2/4/8/16 worker cores on
 this VM's 16 physical cores), reporting throughput per level,
-per-core throughput, and every N→4N efficiency pair — see
-BENCH/BASELINE.md for which pair is the faithful scale-OUT proxy and
-why (single-socket DRAM-bandwidth envelope; scripts/bw_probe.py).
+per-core throughput, and every N→4N efficiency pair. The report is
+written to BENCH/SCALING.md; BENCH/BASELINE.md explains which pair is
+the faithful scale-OUT proxy and why.
 
 Job under test, one JVM per level, plan built ONCE then re-executed
 per rep: interleaved-docs parquet → pruned span parse (only the
@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import subprocess
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -157,25 +156,19 @@ def main() -> None:
     w_lines = "\n".join(
         f"- {lo} → {hi} cores: {eff(lo, hi, best_w):.3f}" for lo, hi in pairs
     )
-    md = f"""# BENCH/BASELINE — measured numbers
+    md = f"""# BENCH/SCALING — N → 4N scaling of the flagship job
 
-Flagship job (the BASELINE.json metric — spatial-join +
-tile-assignment throughput over the interleaved-document table), per
-rep: documents parquet scan → span parse (Generate-barriered
-``from_json``) → AOI+date+polarization select (bbox prefilter + exact
-polygon refine on DEFERRED geometry: the Arrow hull runs only on bbox
-survivors) → HGT tile-lattice assignment → tile counts. One fused
-job; plan built once per JVM and re-executed per rep (a long-running
-cluster amortizes Catalyst planning — measured 6.5 s cold on this
-tree). Input: deterministic synthetic table, seed=42,
-{N_DOCS:,} documents.
+Written by `scripts/bench_scaling.py`. Flagship job per rep: documents
+parquet scan → span parse (Generate-barriered ``from_json``) →
+AOI+date+polarization select (bbox prefilter + exact polygon refine on
+DEFERRED geometry) → HGT tile-lattice assignment → tile counts. One
+fused job; plan built once per JVM and re-executed per rep. Input:
+deterministic synthetic table, seed=42, {N_DOCS:,} documents.
 
-Protocol (two-cluster-size rule, sandbox proxy): identical job +
-identical input at each local[N] level, one JVM per level, first 2
-reps excluded (JIT warm-up + page-cache fill), MINIMUM of the
-remaining reps (noise-robust — this VM exhibits exogenous
-multi-second stalls; identical back-to-back reps have measured 2.4×
-apart).
+Protocol: identical job + identical input at each local[N] level, one
+JVM per level, first 2 reps excluded (JIT warm-up + page-cache fill),
+MINIMUM of the remaining reps. See BENCH/BASELINE.md for which pair is
+the faithful scale-OUT proxy on a single socket.
 
 | parallelism | best pipeline sec | docs/sec | docs/sec/core |
 |---|---|---|---|
@@ -185,117 +178,13 @@ N → 4N scaling efficiency (speedup / 4, target ≥ 0.8):
 
 {pair_lines}
 
-**Which pair is the honest scale-OUT proxy?** The north rule scales
-executors (separate machines: each brings its own DRAM controllers,
-GC threads and disks). This sandbox can only scale CORES inside one
-socket, so the top level pays in-box costs a real 4N-executor cluster
-does not: JVM service threads (GC, netty, shuffle) and Python UDF
-workers compete with the 16 task threads for the 16 physical cores.
-Round 3 measured and removed the largest such term — G1's concurrent
-marking threads (switching to throughput ParallelGC cut the local[16]
-minimum ~11% and improved local[4] too, applied uniformly) — and
-re-probed the DRAM envelope (`scripts/bw_probe.py`): per-worker
-streaming throughput is ~flat to 16 workers in a quiet window
-(rel 0.94-0.95), so the remaining 4→16 shortfall is service-thread /
-SMT contention plus this VM's exogenous load phases, not code. The
-**2 → 8 pair keeps both levels at or under half the physical cores**
-(service threads have slack) and is therefore the faithful
-executor-scaling proxy; 4 → 16 is reported alongside as the in-box
-scale-up number with those single-socket artifacts included.
-
-**4 → 16 decomposition (round 3, measured; round-4 follow-up below).**
-Candidate terms measured one at a time in quiet windows: *GC* — G1 →
-ParallelGC moved local[16] 22.6 → 20.1 s, adopted, term gone. *Python
-UDF workers* — a JVM-only variant (no Arrow polygon refine) is NOT
-faster at local[16], so worker contention is not binding. *DRAM
-streaming* — `bw_probe.py` per-worker throughput flat to 16 workers.
-Remainder attributed to the allocation-heavy Jackson `from_json` parse
-sharing one socket's L3/allocation path, plus exogenous VM storms.
-
-**Round-4 follow-up — the named `from_json` term was attacked, and the
-incumbent won.** `scripts/bench_parse.py` A/Bs the catalog parse
-kernel on the flagship shape (8M docs, local[16], min-of-5, quiet
-window, hash-verified identical rows):
-
-| kernel | flagship 9-col | full 17-field |
-|---|---|---|
-| pruned `from_json` (incumbent) | **8.18 s** | **10.71 s** |
-| `json_tuple` one-pass + array sub-parse | 13.71 s | 15.11 s |
-| `get_json_object` per-field | 23.61 s | 40.97 s |
-
-The path-probe alternatives lose because `json_tuple`'s Generate
-breaks whole-stage codegen and `get_json_object` re-lexes the whole
-payload once per field, while the pruned `from_json` lexes once and
-allocates only the needed fields. Both alternates remain selectable
-(`docs_to_scenes(parser=...)`) as the documented A/B. Conclusion: the
-4→16 in-box residual is not removable by a better parse kernel; it is
-the single-socket artifact the 2→8 pair deliberately avoids.
-
-## Kernel A/B: Arrow simhash vs interpreted HOF
-
-`scripts/bench_simhash.py`, sf0.1 documents (5,000 docs), local[16],
-min of 3 reps after warm-up, identical md5-portable output verified
-byte-equal by test + oracle. Round 4 re-measured after batch-level
-vectorization (one `np.unique` digest pass per Arrow batch + chunked
-`np.add.reduceat` segment sign-sums, memory-bounded ~32 MB):
-
-```
-{{"n_docs": 5000, "arrow_sec": 0.467, "hof_sec": 43.835, "speedup": 93.95}}
-```
-
-(round 3: arrow 0.552 s / 81×.) The 64-wide interpreted
-`aggregate`/`zip_with` HOF form costs ~9 ms/doc; the numpy batch
-kernel ~0.09 ms/doc. `simhash_pairs` auto-selects the Arrow kernel
-whenever the md5 hash family is in use; NULL text propagates NULL in
-both kernels (round 4).
-
-## ANN constant plumbing: broadcast row vs expression literals (round 4)
-
-`scripts/plan_size_ann.py`, production-ish configs, exact value parity
-asserted over every row:
-
-| config | literal tree | broadcast row |
-|---|---|---|
-| LSH 32 bits × 4 tables × 64 dim — analysis | 7.92 s | **0.32 s** |
-| LSH — analyzed-plan chars | 1,068,352 | **7,116** |
-| IVF 256 cells × 64 dim — analysis | 18.61 s | **0.18 s** |
-| IVF — analyzed-plan chars | 1,081,895 | **7,220** |
-
-Hyperplanes/centroids ride one broadcast LocalRelation row
-(`similarity.with_const`); bucket bits via Horner aggregation over the
-reversed plane list — same math, O(1) plan size in the index config.
-
 ## Ingest/checkpoint stage (measured separately)
 
-Catalog materialization (span parse → scene-catalog parquet write,
-256 output files) N → 4N efficiency:
+Catalog materialization (span parse → scene-catalog parquet write)
+N → 4N efficiency. The write is bound by the one local disk, which
+scales with nodes, not cores:
 
 {w_lines}
-
-The write stage is bound by this VM's ONE shared disk (sequential
-flush bandwidth), which no core count can scale — on a real cluster
-the commit fans out over executor-local disks / object-store shards
-and scales with nodes. It is reported separately from the compute
-metric rather than hidden inside it; round-1 measured the combined
-job and its 0.605-0.633 "inefficiency" was exactly this disk term
-(Amdahl fit: ~13 s/rep non-scaling component ≈ the measured write
-time).
-
-Scaling engineering that got here (see git history for measurements):
-- Generate barriers around ``from_json`` — Catalyst's CollapseProject
-  was inlining the Jackson parse into ~20 downstream column
-  references (GC-bound anti-scaling, 8→32 efficiency 0.07).
-- Deferred geometry (round 2): the convex-hull Arrow UDF moved off the
-  unfiltered stream — select() derives rings from corner points after
-  its JVM prefilters, so Python workers stop competing with JVM task
-  threads for physical cores at high levels.
-- select() projects the tile-stage columns directly — the former
-  doc-id semi-join built a driver-side broadcast of the hit set
-  (serial seconds per rep; removed round 2).
-- 32 MB scan splits (128 MB bins gave 22 tasks = 1.4 waves at 16
-  cores, straggler-bound) and plans built once per JVM.
-- Geometry kernels vectorized per Arrow batch; JVM higher-order-
-  function hull measured ~100× slower and rejected.
 
 Raw per-rep seconds:
 
@@ -304,7 +193,7 @@ Raw per-rep seconds:
 ```
 """
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
+    with open(os.path.join(REPO, "BENCH", "SCALING.md"), "w") as f:
         f.write(md)
     print(md.split("```")[0])
 

@@ -123,65 +123,76 @@ def test_meta_map_custom_fields(spark):
 
 
 def test_parser_kernels_produce_identical_rows(spark, docs):
-    """ADVICE r4: the json_tuple / get_json_object alternate kernels were
-    only parity-checked in scripts/bench_parse.py (not CI) — a regression
-    in escape handling or a try_cast edge would ship silently. Run
-    docs_to_scenes under all three parser values on the generated corpus
-    PLUS adversarial payloads and assert row-identical output."""
+    """The one span parse (pruned ``from_json``) over the generated corpus
+    plus adversarial payloads. The parse is row-local, so the corpus rows
+    are identical with and without the edge docs beside them, and each
+    edge doc gives its expected row: malformed JSON, a JSON null sensor
+    and a doc without a scene_meta span are dropped; missing keys and a
+    non-numeric int read NULL; escapes and a '|' inside a value survive;
+    array fields give exact flags, corners and bbox."""
     from pyrosar_spark.datagen import DOC_SCHEMA
 
     edge = [
-        # malformed JSON → dropped by every kernel
         ("e_bad", [("scene_meta", "SC|{broken", "", 0)]),
-        # JSON null sensor → dropped (sensor is the validity sentinel)
         ("e_null", [("scene_meta", 'SC|{"sensor": null}', "", 0)]),
-        # missing keys → NULL columns
         ("e_sparse", [("scene_meta", 'SC|{"sensor":"S1A"}', "", 0)]),
-        # non-numeric int field → permissive NULL, row kept
         ("e_badint", [("scene_meta", 'SC|{"sensor":"S1A","samples":"12x"}', "", 0)]),
         # escaped quote, escaped backslash and a '|' INSIDE a value (the
         # span-prefix delimiter must not confuse the payload slice)
         ("e_esc", [("scene_meta",
                     'SC|{"sensor":"S1A","orbit":"A\\"B\\\\|C","samples":17}',
                     "", 0)]),
-        # arrays: polarizations + 3-corner coordinates
         ("e_arr", [("scene_meta",
                     'SC|{"sensor":"PSR2","polarizations":["HH","HV"],'
                     '"coordinates":[[1.0,2.0],[3.0,4.0],[1.5,3.5]],'
                     '"start":"20200101T000000"}', "", 0)]),
-        # no scene_meta span at all → dropped
         ("e_nometa", [("text", "filler only", "", 0)]),
     ]
     corpus = docs.unionByName(spark.createDataFrame(edge, DOC_SCHEMA))
-    outs = {}
-    for p in ("from_json", "json_tuple", "get_json_object"):
-        outs[p] = sorted(
-            map(tuple, ingest.docs_to_scenes(corpus, with_geometry=False, parser=p).collect())
-        )
-    kept = {r[0] for r in outs["from_json"]}
-    assert "e_sparse" in kept and "e_esc" in kept and "e_arr" in kept
-    assert {"e_bad", "e_null", "e_nometa"}.isdisjoint(kept)
-    assert outs["from_json"] == outs["json_tuple"]
-    assert outs["from_json"] == outs["get_json_object"]
+    rows = {
+        r.doc_id: r
+        for r in ingest.docs_to_scenes(corpus, with_geometry=False).collect()
+    }
+    edge_ids = {d for d, _ in edge}
+    alone = sorted(
+        map(tuple, ingest.docs_to_scenes(docs, with_geometry=False).collect())
+    )
+    assert sorted(tuple(r) for d, r in rows.items() if d not in edge_ids) == alone
+    assert {d for d in rows if d in edge_ids} == {
+        "e_sparse", "e_badint", "e_esc", "e_arr"
+    }
+    sparse = rows["e_sparse"].asDict()
+    assert sparse["sensor"] == "S1A"
+    assert all(
+        v is None for k, v in sparse.items()
+        if k not in ("doc_id", "sensor", "outname_base")
+    )
+    assert rows["e_badint"].samples is None
+    assert rows["e_esc"].orbit == 'A"B\\|C'
+    assert rows["e_esc"].samples == 17
+    arr = rows["e_arr"]
+    assert (arr.hh, arr.vv, arr.hv, arr.vh) == (1, 0, 1, 0)
+    assert (arr.xmin, arr.xmax, arr.ymin, arr.ymax) == (1.0, 3.0, 2.0, 4.0)
+    assert [(c.lon, c.lat) for c in arr.corners] == [(1.0, 2.0), (3.0, 4.0), (1.5, 3.5)]
+    assert arr.start == "20200101T000000"
 
 
 def test_parser_kernels_quoted_numeric_boundary(spark):
-    """Pinned KNOWN divergence (found by the CI parity test above): a
-    QUOTED numeric in an int field ('"17"') parses to NULL under
-    from_json (strict JSON typing) but to 17 under the text-extraction
-    kernels — json_tuple/get_json_object strip quotes during extraction,
-    so quoted and unquoted numerics are indistinguishable before the
-    try_cast. The canonical kernel is from_json; this test pins the
-    boundary so a behavior change in either direction is visible."""
+    """Strict JSON typing of the span parse: a QUOTED numeric in an int
+    field ('"17"') reads NULL, while the same value unquoted reads 17.
+    Pinned so a change in either direction is visible."""
     from pyrosar_spark.datagen import DOC_SCHEMA
 
     docs = spark.createDataFrame(
-        [("q1", [("scene_meta", 'SC|{"sensor":"S1A","samples":"17"}', "", 0)])],
+        [
+            ("q1", [("scene_meta", 'SC|{"sensor":"S1A","samples":"17"}', "", 0)]),
+            ("u1", [("scene_meta", 'SC|{"sensor":"S1A","samples":17}', "", 0)]),
+        ],
         DOC_SCHEMA,
     )
     vals = {
-        p: ingest.docs_to_scenes(docs, with_geometry=False, parser=p)
-        .select("samples").first()[0]
-        for p in ("from_json", "json_tuple", "get_json_object")
+        r.doc_id: r.samples
+        for r in ingest.docs_to_scenes(docs, with_geometry=False)
+        .select("doc_id", "samples").collect()
     }
-    assert vals == {"from_json": None, "json_tuple": 17, "get_json_object": 17}
+    assert vals == {"q1": None, "u1": 17}

@@ -120,25 +120,27 @@ def test_flagship_stage_compiles(spark, docs):
     by date, VV and a convex AOI -> HGT tile lattice -> per-tile count)
     runs whole-stage-codegen compiled: the session has codegen fallback
     off, so a method Janino cannot compile raises here. The tiles match
-    the Arrow kernel's."""
+    those of the scenes the numpy kernel keeps over the hull rings."""
+    from pyrosar_spark import geom
     from pyrosar_spark.operators.ingest import docs_to_scenes
     from pyrosar_spark.operators.tiles import assign_hgt
 
     assert spark.conf.get("spark.sql.codegen.fallback") == "false"
-    scenes = docs_to_scenes(docs, with_geometry="defer")
+    aoi = "POLYGON((-180 -60, -60 -60, -60 60, -180 60, -180 -60))"
+    bbox = ["doc_id", "xmin", "xmax", "ymin", "ymax"]
+    when = dict(mindate="20150101T000000", maxdate="20151231T235959",
+                polarizations=["VV"])
 
-    def tile_counts(aoi_refine):
-        sel = select(
-            scenes, mindate="20150101T000000", maxdate="20151231T235959",
-            polarizations=["VV"],
-            aoi_wkt="POLYGON((-180 -60, -60 -60, -60 60, -180 60, -180 -60))",
-            return_value=["doc_id", "xmin", "xmax", "ymin", "ymax"],
-            aoi_refine=aoi_refine,
-        )
+    def tile_counts(sel):
         return {tuple(r) for r in assign_hgt(sel).groupBy("tile_id").count().collect()}
 
-    got = tile_counts("auto")
-    assert got and got == tile_counts("arrow")
+    sel = select(docs_to_scenes(docs, with_geometry="defer"), aoi_wkt=aoi,
+                 return_value=bbox, **when)
+    rows = select(docs_to_scenes(docs), return_value=bbox + ["ring"], **when).collect()
+    keep = geom.flat_batch_intersects([r.ring for r in rows], geom.wkt_to_ring(aoi))
+    ref = spark.createDataFrame([r[:5] for r, k in zip(rows, keep) if k], sel.schema)
+    got = tile_counts(sel)
+    assert got and got == tile_counts(ref)
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path, scenes):

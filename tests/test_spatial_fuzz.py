@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pyrosar_spark import geom
 from pyrosar_spark.operators.select import select
@@ -189,25 +188,20 @@ def fuzz_world(spark):
     return scenes, cases, sdf, expected
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("refine", ["jvm", "arrow"])
-def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world, refine):
-    """Both refine kernels (the round-5 JVM codegen path and the Arrow
-    numpy kernel) against the oracle on identical cases, incl. the
-    concave star AOIs — so this doubles as a JVM-vs-Arrow differential."""
+def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world):
+    """The JVM refine (:func:`rings_intersect_jvm`) against the scalar
+    oracle, incl. the concave star AOIs."""
     scenes, cases, sdf, expected = fuzz_world
     adf = aoi_frame(spark, cases)
     got = {
         (r["doc_id"], r["aoi_id"])
-        for r in spatial_join(sdf, adf, refine=refine)
+        for r in spatial_join(sdf, adf)
         .select("doc_id", "aoi_id").collect()
     }
     missing = expected - got
     extra = got - expected
     assert not missing and not extra, (
-        f"spatial_join[{refine}] disagrees with oracle: "
+        "spatial_join disagrees with oracle: "
         f"missing={sorted(missing)[:10]} extra={sorted(extra)[:10]}"
     )
     # sanity: the adversarial cases produce hits (the fuzz isn't vacuous)
@@ -217,29 +211,19 @@ def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world, refine):
 
 
 def test_select_aoi_fuzz_vs_scalar_oracle(spark, fuzz_world):
-    """Both refine kernels against the oracle on identical cases: the
-    round-5 JVM convex-AOI path (aoi_refine='auto' — sign/segment tests
-    over raw points, no Python workers) AND the Arrow kernel it
-    replaced — so this doubles as a JVM-vs-Arrow differential."""
+    """``select`` against the oracle: convex AOIs take the JVM SAT over
+    raw points, the concave star and degenerate AOIs the Arrow kernel."""
     scenes, cases, sdf, expected = fuzz_world
     # P8 path: one select() per AOI — run the targeted cases + a sample
     # of the random ones (each select is a separate Spark action)
     chosen = [c for c in cases if not c[0].startswith("rand")] + cases[:8]
-    for i, (aid, wkt) in enumerate(chosen):
-        # every case through the default (JVM-for-convex) path; every
-        # third ALSO through the forced-Arrow kernel (full Arrow
-        # coverage already exists in the spatial_join[arrow] fuzz — a
-        # per-case double select here only buys planning time)
-        modes = ("auto", "arrow") if i % 3 == 0 else ("auto",)
-        for mode in modes:
-            got = {
-                r["doc_id"]
-                for r in select(
-                    sdf, aoi_wkt=wkt, return_value=["doc_id"], aoi_refine=mode
-                ).collect()
-            }
-            want = {s for (s, a) in expected if a == aid}
-            assert got == want, f"select(aoi={aid}, {mode}): got^want={got ^ want}"
+    for aid, wkt in chosen:
+        got = {
+            r["doc_id"]
+            for r in select(sdf, aoi_wkt=wkt, return_value=["doc_id"]).collect()
+        }
+        want = {s for (s, a) in expected if a == aid}
+        assert got == want, f"select(aoi={aid}): got^want={got ^ want}"
 
 
 def test_jvm_convex_refine_is_python_free(spark, fuzz_world):
