@@ -42,7 +42,9 @@ from pyrosar_spark.operators.dedup import (
 def _chunks(tk: Column, chunk_tokens: int) -> Column:
     """Non-overlapping ``chunk_tokens``-token chunks of a token array,
     each rendered back to a space-joined string; the last chunk is the
-    natural remainder. Pure array expression — no Generate."""
+    natural remainder. Pure array expression — no Generate. ``tk`` is
+    read inside the ``transform`` lambda, so pass a bound column: an
+    unbound token expression would re-tokenize once per chunk."""
     n_chunks = F.ceil(F.size(tk) / F.lit(chunk_tokens)).cast("int")
     # Spark's sequence(1, 0) is DESCENDING [1, 0], not empty — an empty
     # token array must short-circuit to an empty chunk list
@@ -74,8 +76,9 @@ def strip_boilerplate_chunks(
 
     Plan shape (scale-first, the same skeleton as
     :func:`~pyrosar_spark.operators.dedup.dup_ngram_spans`):
-      1. one projection tokenizes (Generate-barriered) and chunks —
-         rows explode by ~|tokens|/chunk_tokens carrying
+      1. one projection tokenizes and one chunks the bound tokens
+         (each Generate-barriered, so every document is tokenized
+         once) — rows explode by ~|tokens|/chunk_tokens carrying
          (id, chunk_idx, chunk, hash);
       2. chunk multiplicity = groupBy(hash) over a two-column distinct
          pre-aggregation (both partial-aggregatable: a viral chunk
@@ -96,7 +99,8 @@ def strip_boilerplate_chunks(
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
-    d = bind(d, "_ck", _chunks(_norm_tokens(F.col(text_col)), chunk_tokens))
+    d = bind(d, "_tk", _norm_tokens(F.col(text_col)))
+    d = bind(d, "_ck", _chunks(F.col("_tk"), chunk_tokens))
     pos = d.select(
         "_id",
         F.size("_ck").alias("_n"),
@@ -109,9 +113,10 @@ def strip_boilerplate_chunks(
     )
     # r6: ``pos`` feeds BOTH the multiplicity aggregation and the anti
     # join — without materialization the tokenize+chunk+hash subtree
-    # (the operator's dominant cost) runs twice, plus a second _spread
-    # Exchange. localCheckpoint computes it once per invocation (same
-    # fix as dup_ngram_spans); nothing survives the query.
+    # runs twice, plus a second _spread Exchange. localCheckpoint
+    # computes it once per invocation (same fix as dup_ngram_spans);
+    # nothing survives the query. (A lazy persist here measured slower:
+    # both concurrent AQE stages computed the frame.)
     pos = pos.withColumn("_h", h).localCheckpoint()
     boiler = (
         pos.select("_h", "_id")

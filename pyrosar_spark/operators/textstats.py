@@ -10,6 +10,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyrosar_spark.operators.dedup import (
+    _norm_tokens,
+    bind,
+    portable_hash64,
+    token_shingles,
+)
+
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"],
     "de": ["der", "die", "das", "und", "ist", "ein", "nicht", "mit", "auf", "zu"],
@@ -100,7 +107,6 @@ def fingerprint64(text: Column, window: int = 8, hash_mode: str = "xxhash64") ->
     :func:`pyrosar_spark.operators.dedup.portable_hash64` so DuckDB
     oracles can reproduce the value bit-for-bit.
     """
-    from pyrosar_spark.operators.dedup import portable_hash64
 
     def h(gram: Column) -> Column:
         if hash_mode == "xxhash64":
@@ -162,22 +168,22 @@ def contamination(
     post-join). ``hash_mode='md5'`` is the engine-portable form for
     SQL oracles.
     """
-    from pyrosar_spark.operators.dedup import (
-        _norm_tokens,
-        bind,
-        portable_hash64,
-        shingles,
+    # tokens bound first: the shingle lambda reads the bound array
+    # instead of re-tokenizing the eval text once per gram
+    ev_tk = bind(
+        eval_docs.select(F.col(eval_id_col).alias("_eid"), F.col(text_col)),
+        "_tk",
+        _norm_tokens(F.col(text_col)),
     )
-
-    def gram_hashes(text: Column) -> Column:
-        return F.transform(
-            shingles(text, n), lambda g: portable_hash64(g, 0, hash_mode)
-        )
-
     ev = F.broadcast(
-        eval_docs.select(
-            F.col(eval_id_col).alias("_eid"),
-            F.explode(gram_hashes(F.col(text_col))).alias("_h"),
+        ev_tk.select(
+            "_eid",
+            F.explode(
+                F.transform(
+                    token_shingles(F.col("_tk"), n),
+                    lambda g: portable_hash64(g, 0, hash_mode),
+                )
+            ).alias("_h"),
         ).distinct()
     )
     # r6: the training side lifts gram hashes via the exploded-POSITION
@@ -216,13 +222,6 @@ def contamination(
     )
 
 
-def _tokens_norm(text: Column) -> Column:
-    """Normalized tokens shared by the repetition / tf-idf operators
-    (and their SQL oracles): lower-case, split on non-alphanumeric
-    runs, empties dropped."""
-    return F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda t: t != "")
-
-
 def repetition_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -242,13 +241,13 @@ def repetition_stats(
     barriers (``explode(array(..))``, one row in/one row out — the
     select.py SAT lesson): higher-order functions are CodegenFallback
     with no common-subexpression elimination, so without the barriers
-    the full lower+split+filter tokenization re-evaluates once per
-    reference and once per lambda element — O(n_tokens²·|text|) per
-    row. With them, tokenize once, build grams once (``zip_with`` over
-    two slices, no per-index ``element_at``), then every metric reads
-    the bound arrays. The top-gram multiplicity is a run-length scan
-    over the sorted gram array (``aggregate`` with a (prev, run, best)
-    struct accumulator), O(g log g) per document vs the oracle's
+    the full tokenization re-evaluates once per reference and once per
+    lambda element — O(n_tokens²·|text|) per row. With them, tokenize
+    once, build grams once (``zip_with`` over two slices, no per-index
+    ``element_at``), then every metric reads the bound arrays. The
+    top-gram multiplicity is a run-length scan over the sorted gram
+    array (``aggregate`` with a (prev, run, best) struct accumulator),
+    O(g log g) per document vs the oracle's
     independent O(g²) count-per-distinct-gram formulation, so the two
     sides share no algorithm shape.
 
@@ -259,7 +258,7 @@ def repetition_stats(
     # barrier 1: tokenize once
     bound = df.select(
         F.col(id_col),
-        F.explode(F.array(_tokens_norm(F.col(text_col)))).alias("_tk"),
+        F.explode(F.array(_norm_tokens(F.col(text_col)))).alias("_tk"),
     )
     toks = F.col("_tk")
     # guard the <2-token case: slice with length 0 errors under ANSI;
@@ -349,7 +348,7 @@ def tfidf_top_terms(
     """
     bound = df.select(
         F.col(id_col),
-        F.explode(F.array(_tokens_norm(F.col(text_col)))).alias("_tk"),
+        F.explode(F.array(_norm_tokens(F.col(text_col)))).alias("_tk"),
     )
     base = bound.select(
         F.col(id_col), F.size("_tk").alias("_n"), F.explode("_tk").alias("term")

@@ -164,3 +164,54 @@ def test_simhash_wide_radius_sound_config(docs_df):
     # the near-dup pair (1,2) differs by one word -> small hamming;
     # the sound wide config must recover it
     assert (1, 2) in got
+
+
+def test_norm_tokens_matches_split_filter(spark):
+    """The compiled tokenizer gives the same tokens as the split+filter
+    form it replaced, NULL included."""
+    from pyrosar_spark.operators.dedup import _norm_tokens
+
+    texts = [
+        None, "", "   ", "-!- ,;", "  lead and trail  ", "--x--", "a1 b22 333",
+        "tab\tsep\nnew\r\nline", "MiXeD CaSe WoRdS", "Ünïcödé İx", "naïve café-42",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    old = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != "")
+    rows = df.select(
+        "i", _norm_tokens(F.col("text")).alias("new"), old.alias("old")
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["new"] == r["old"], (texts[r["i"]], r["new"], r["old"])
+    by_i = {r["i"]: r["new"] for r in rows}
+    assert by_i[0] is None and by_i[1] == [] and by_i[3] == []
+    assert by_i[7] == ["tab", "sep", "new", "line"]
+
+
+def test_near_dup_pairs_cache_lifecycle(spark):
+    """near_dup_pairs leaves its shingle frame and its pairs persisted;
+    the next call and release_shingle_cache() each unpersist both."""
+    from pyspark import StorageLevel
+
+    from pyrosar_spark.operators import dedup as D
+
+    def cached(df):
+        return df.storageLevel != StorageLevel.NONE
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    first = D.near_dup_pairs(docs, n_hashes=8, n_bands=4, threshold=0.5)
+    held = list(D._LIVE_SHINGLE_CACHE)
+    assert len(held) == 2 and any(f is first for f in held)
+    assert all(cached(f) for f in held)
+    assert {(r.a, r.b) for r in first.collect()} >= {(1, 4)}
+    # a different input, so the new frames do not share the old plans
+    second = D.near_dup_pairs(
+        docs.where("doc_id < 5"), n_hashes=8, n_bands=4, threshold=0.5
+    )
+    assert not any(cached(f) for f in held)
+    held = list(D._LIVE_SHINGLE_CACHE)
+    assert len(held) == 2 and any(f is second for f in held)
+    assert all(cached(f) for f in held)
+    D.release_shingle_cache()
+    assert D._LIVE_SHINGLE_CACHE == []
+    assert not any(cached(f) for f in held)

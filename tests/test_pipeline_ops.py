@@ -1,6 +1,8 @@
 """Training-pipeline extensions added round 4: benchmark
 decontamination and dedup cluster assignment."""
 
+import uuid
+
 import pytest
 
 from pyrosar_spark.operators.dedup import dedup_clusters
@@ -71,31 +73,49 @@ def test_dedup_clusters_converges_and_is_stable(spark):
     assert again == got
 
 
-def test_dedup_clusters_one_job_per_round(spark):
-    """VERDICT r4 #6: the convergence probe must ride the propagation
-    aggregation, not run as a second join+count job. With AQE off each
-    action is exactly one Spark job, so the job count is deterministic:
-    2 eager checkpoints (edges, labels) + 1 per round + 1 final collect.
-    A star graph converges in 2 rounds -> exactly 5 jobs (the old
-    two-pass probe produced 7)."""
-    pairs = spark.createDataFrame([(1, i) for i in range(2, 7)], "a long, b long")
+def _cluster_jobs(spark, pairs):
+    """(labels, jobs) of one dedup_clusters run with AQE off, where each
+    action is exactly one Spark job, so the count is deterministic."""
     sc = spark.sparkContext
+    group = f"cc_jobcount_{uuid.uuid4().hex}"
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup("cc_jobcount", "dedup_clusters job audit")
+    sc.setJobGroup(group, "dedup_clusters job audit")
     try:
         got = {r["v"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()}
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_one_job_per_round(spark):
+    """VERDICT r4 #6: the convergence probe must ride the propagation
+    aggregation, not run as a second join+count job. Jobs: 2 eager
+    checkpoints (edges, first-hop labels) + 1 per round + 1 final
+    collect. The first-hop seed already labels a star with its center,
+    so it converges in 1 round -> exactly 4 jobs (identity labels took
+    2 rounds and 5 jobs; the old two-pass probe produced 7)."""
+    pairs = spark.createDataFrame([(1, i) for i in range(2, 7)], "a long, b long")
+    got, jobs = _cluster_jobs(spark, pairs)
     assert got == {i: 1 for i in range(1, 7)}
-    jobs = sc.statusTracker().getJobIdsForGroup("cc_jobcount")
-    assert len(jobs) == 5, f"expected 5 jobs (2 ckpt + 2 rounds + collect), got {len(jobs)}"
+    assert jobs == 4, f"expected 4 jobs (2 ckpt + 1 round + collect), got {jobs}"
+
+
+def test_dedup_clusters_path_jobs(spark):
+    """A 4-node path 1-2-3-4: the seed gives 1,1,2,3; round 1 gives
+    1,1,1,2; round 2 gives 1,1,1,1; round 3 changes nothing -> 2 ckpt +
+    3 rounds + collect = exactly 6 jobs."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a long, b long")
+    got, jobs = _cluster_jobs(spark, pairs)
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+    assert jobs == 6, f"expected 6 jobs (2 ckpt + 3 rounds + collect), got {jobs}"
 
 
 def test_dedup_clusters_raises_on_non_convergence(spark):
-    # a 6-node chain needs ~6 propagation rounds; with max_iter=2 the
-    # operator must raise, not silently return split clusters
+    # a 6-node chain needs 5 propagation rounds after the seeded first
+    # hop; with max_iter=2 the operator must raise, not silently return
+    # split clusters
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "a long, b long"
     )

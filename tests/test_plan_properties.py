@@ -128,6 +128,50 @@ def test_identify_spans_single_scan(spark, tmp_path):
     assert p.count("FileScan") == 1
 
 
+def test_symmetric_edges_single_scan(spark, tmp_path):
+    """dedup_clusters' edge list reads its pairs once: the union of two
+    selects it replaced evaluated the whole pairs plan (LSH + verify
+    under near_dup_pairs) twice."""
+    from pyrosar_spark.operators.dedup import _symmetric_edges
+
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame([(1, 2), (2, 3)], "a long, b long").write.parquet(path)
+    p = plan(_symmetric_edges(spark.read.parquet(path)))
+    assert p.count("FileScan") == 1, p
+
+
+@pytest.mark.parametrize("op", ["strip_boilerplate_chunks", "dup_ngram_spans"])
+def test_text_is_tokenized_once_per_document(spark, op):
+    """Exactly ONE tokenize in the executed plans (checkpoint jobs
+    included), and never inside a lambda: a token expression inside the
+    chunk or gram lambda re-tokenizes each document once per element.
+    AQE is off so each plan description lists every node once."""
+    from test_width import _sql_plans
+
+    from pyrosar_spark.operators.corpus import strip_boilerplate_chunks
+    from pyrosar_spark.operators.dedup import dup_ngram_spans
+
+    build = {
+        "strip_boilerplate_chunks": strip_boilerplate_chunks,
+        "dup_ngram_spans": dup_ngram_spans,
+    }[op]
+    docs = spark.createDataFrame(
+        [(i, f"Alpha beta {i % 3} gamma, delta eps zeta eta {i % 5}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plans = _sql_plans(spark, lambda: build(docs).collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    n = sum(p.count("regexp_extract_all") for p in plans)
+    assert n == 1, f"expected 1 tokenize, got {n}:\n" + "\n".join(plans)
+    for p in plans:
+        for line in p.splitlines():
+            assert "regexp_extract_all" not in line.partition("lambdafunction(")[2], line
+
+
 def test_contamination_broadcasts_eval_and_never_shuffles_corpus(spark):
     """VERDICT r4 #5: the eval side must be a broadcast join build side
     and the corpus gram stream must reach the join WITHOUT an Exchange.
