@@ -341,7 +341,7 @@ def q_fingerprints(spark, sf):
 
     d = _t(spark, sf, "documents")
     return d.select(
-        "doc_id", fingerprint64(F.col("text"), 8, hash_mode="md5").alias("fingerprint")
+        "doc_id", fingerprint64(F.col("text"), 8).alias("fingerprint")
     ).orderBy("doc_id")
 
 
@@ -593,12 +593,12 @@ def q_scene_sessions(spark, sf):
 
 def q_simhash_pairs(spark, sf):
     # max_hamming=3 keeps the 4-block pigeonhole recall guarantee exact
-    # (r1 ran 16, a silent recall shortfall); md5 mode is SQL-portable
+    # (r1 ran 16, a silent recall shortfall); the md5 hash is SQL-portable
     from pyrosar_spark.operators.dedup import simhash_pairs
 
     d = _t(spark, sf, "documents")
     return simhash_pairs(
-        d, "text", "doc_id", max_hamming=3, n_blocks=4, hash_mode="md5"
+        d, "text", "doc_id", max_hamming=3, n_blocks=4
     ).orderBy("a", "b")
 
 
@@ -1308,7 +1308,7 @@ def q_contamination(spark, sf):
     d = _t(spark, sf, "documents")
     ev = (
         d.orderBy(
-            portable_hash64(F.col("doc_id").cast("string"), 0, "md5").asc(),
+            portable_hash64(F.col("doc_id").cast("string"), 0).asc(),
             F.col("doc_id").asc(),
         )
         .limit(5)
@@ -1318,7 +1318,7 @@ def q_contamination(spark, sf):
         )
     )
     return (
-        contamination(d, ev, n=13, hash_mode="md5")
+        contamination(d, ev, n=13)
         .select(
             "doc_id",
             "n_hits",
@@ -1336,14 +1336,37 @@ def q_pack_bins(spark, sf):
     from pyrosar_spark.operators.packing import bin_stats, pack_documents
 
     d = _t(spark, sf, "documents")
-    packed = pack_documents(d, budget=512, n_shards=2, hash_mode="md5")
+    packed = pack_documents(d, budget=512, n_shards=2)
     return bin_stats(packed).orderBy("source", "shard", "bin_id")
+
+
+def _stream_session(spark):
+    """A private session for one streaming drain: the caller's runtime
+    confs, but the stream's own shuffle width, so a drain never changes
+    a conf of the caller's session.
+
+    Stateful streaming pins one state-store instance per shuffle
+    partition per micro-batch — at the batch width (2× cores) a
+    4-trigger drain pays 4×64 state checkpoint tasks of near-empty
+    state — so the stream runs at the delivered cores
+    (``defaultParallelism``). The state partition count is captured in
+    the fresh checkpoint at the first batch. The memory-sink table is
+    registered in this session: read it back with ``session.table``."""
+    s = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            s.conf.set(k, v)
+    s.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
+    return s
 
 
 def _run_stream_to_memory(df_stream, name_prefix: str, min_batches: int | None = None):
     """Execute a streaming aggregation to a complete-mode memory sink
     with Trigger.AvailableNow (drain everything, then stop) and return
-    the result table — a genuinely incremental Structured Streaming
+    the finished query, whose memory-sink table ``q.name`` lives in the
+    stream's session — a genuinely incremental Structured Streaming
     execution whose FINAL output is deterministic, hence ORACLE-able
     against batch SQL (round 4: upgrades streaming coverage from
     golden-only to oracle-exact).
@@ -1352,44 +1375,23 @@ def _run_stream_to_memory(df_stream, name_prefix: str, min_batches: int | None =
     executed at least that many micro-batches — the proof that the
     oracle-matched output came from state MERGED ACROSS micro-batches,
     not a single-batch pass that never exercises the merge path."""
-    import os
     import tempfile
     import uuid
 
-    # r6: stateful streaming pins one state-store instance per shuffle
-    # partition per micro-batch — at the session's batch width (2×
-    # cores) a 4-trigger drain pays 4×64 state checkpoint tasks of
-    # near-empty state. Size the STREAM's shuffle width to the
-    # delivered cores instead (env-overridable for real clusters:
-    # $SPARK_GRAFT_STREAM_SHUFFLE); the conf is restored after the
-    # drain so batch queries keep the session default. The state
-    # partition count is captured in the fresh checkpoint at first
-    # batch, so per-query scoping is safe.
-    spark = df_stream.sparkSession
-    stream_parts = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-    try:
-        q = (
-            df_stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{name}_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # a timed-out drain must FAIL, not silently hand back a partial
-        # complete-mode table (round-4 review)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(f"streaming drain {name} did not finish in 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        df_stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"{name}_ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    # a timed-out drain must FAIL, not silently hand back a partial
+    # complete-mode table (round-4 review)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"streaming drain {name} did not finish in 600s")
     if min_batches is not None:
         n = len(_stream_batch_ids(q))
         if n < min_batches:
@@ -1397,7 +1399,7 @@ def _run_stream_to_memory(df_stream, name_prefix: str, min_batches: int | None =
                 f"streaming drain {name} ran {n} micro-batches; "
                 f">={min_batches} required to prove cross-batch state merge"
             )
-    return name
+    return q
 
 
 def _stream_batch_ids(q) -> set:
@@ -1441,8 +1443,9 @@ def q_stream_sessions(spark, sf):
         )
     sch = spark.read.parquet(src).schema
     ep = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
+    ss = _stream_session(spark)
     sessions = (
-        spark.readStream.schema(sch)
+        ss.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
         .groupBy(F.session_window(F.col("ts"), "1800 seconds").alias("session"),
@@ -1458,8 +1461,8 @@ def q_stream_sessions(spark, sf):
                 ep("session.end").alias("session_end_us"),
                 "n_events", "sum_value")
     )
-    name = _run_stream_to_memory(sessions, "stream_sessions", min_batches=3)
-    return spark.table(name).orderBy("user_id", "session_start_us")
+    q = _run_stream_to_memory(sessions, "stream_sessions", min_batches=3)
+    return ss.table(q.name).orderBy("user_id", "session_start_us")
 
 
 def q_stream_ingest_keys(spark, sf):
@@ -1478,15 +1481,16 @@ def q_stream_ingest_keys(spark, sf):
     docs_path = f"{_oracle_dir(sf)}/docs.parquet"
     _handoff(docs_from_corpus(spark, sf), "docs", sf)
     sch = spark.read.parquet(docs_path).schema
-    stream = spark.readStream.schema(sch).parquet(docs_path)
+    ss = _stream_session(spark)
+    stream = ss.readStream.schema(sch).parquet(docs_path)
     keys = (
         docs_to_scenes(stream, with_geometry=False,
                        columns=["product", "outname_base"])
         .groupBy("product", "outname_base")
         .agg(F.count("*").alias("n"))
     )
-    name = _run_stream_to_memory(keys, "stream_ingest_keys")
-    return spark.table(name).orderBy("product", "outname_base")
+    q = _run_stream_to_memory(keys, "stream_ingest_keys")
+    return ss.table(q.name).orderBy("product", "outname_base")
 
 
 def q_span_roundtrip(spark, sf):
@@ -1556,7 +1560,7 @@ def q_dup_ngram_spans(spark, sf):
     from pyrosar_spark.operators.dedup import dup_ngram_spans
 
     d = _t(spark, sf, "documents")
-    return dup_ngram_spans(d, n=6, min_docs=2, hash_mode="md5").orderBy(
+    return dup_ngram_spans(d, n=6, min_docs=2).orderBy(
         "doc_id", "span_start"
     )
 
@@ -1595,7 +1599,6 @@ def q_mix_budget_sample(spark, sf):
         d,
         budgets={"src0": 600, "src1": 300, "src2": 150, "src3": 50},
         by="source",
-        hash_mode="md5",
     )
     return kept.select(
         "doc_id", "source", "tokens", "cum_tokens"
@@ -1618,7 +1621,7 @@ def q_cross_dup_pairs(spark, sf):
     d = _t(spark, sf, "documents")
     ev = (
         d.orderBy(
-            portable_hash64(F.col("doc_id").cast("string"), 0, "md5").asc(),
+            portable_hash64(F.col("doc_id").cast("string"), 0).asc(),
             F.col("doc_id").asc(),
         )
         .limit(5)
@@ -1642,7 +1645,7 @@ def q_boilerplate_strip(spark, sf):
 
     d = _t(spark, sf, "documents")
     return strip_boilerplate_chunks(
-        d, chunk_tokens=4, min_docs=2, hash_mode="md5"
+        d, chunk_tokens=4, min_docs=2
     )
 
 
@@ -1670,7 +1673,6 @@ def q_stratified_sample(spark, sf):
         d,
         {"src0": 0.5, "src1": 0.25, "src2": 1.0, "src3": 0.125},
         by="source",
-        hash_mode="md5",
         seed=7,
     )
     return kept.select("doc_id", "source", "lang").orderBy("doc_id")

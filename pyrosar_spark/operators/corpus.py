@@ -21,8 +21,8 @@ already holds; these drop *text* the corpus already holds):
 
 Exactness discipline (same as :mod:`sampling`): every emitted number
 is either a BIGINT or a ``round(int / int, 6)`` of a deterministic
-IEEE division, so a SQL oracle reproduces values bit-for-bit;
-``hash_mode='md5'`` selects the engine-portable hash
+IEEE division, so a SQL oracle reproduces values bit-for-bit; chunks
+hash with the engine-portable md5-60 form
 (:func:`pyrosar_spark.operators.dedup.portable_hash64`).
 """
 
@@ -68,7 +68,8 @@ def strip_boilerplate_chunks(
     id_col: str = "doc_id",
     chunk_tokens: int = 8,
     min_docs: int = 2,
-    hash_mode: str = "xxhash64",
+    # accepts only "md5"; kept because perfbench/workloads.py passes it
+    hash_mode: str = "md5",
 ) -> DataFrame:
     """C4-style boilerplate removal: delete every chunk whose text
     occurs in ``min_docs`` or more DISTINCT documents, and re-emit each
@@ -98,6 +99,8 @@ def strip_boilerplate_chunks(
         raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
+    if hash_mode != "md5":
+        raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
     d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
     d = bind(d, "_tk", _norm_tokens(F.col(text_col)))
     d = bind(d, "_ck", _chunks(F.col("_tk"), chunk_tokens))
@@ -106,11 +109,7 @@ def strip_boilerplate_chunks(
         F.size("_ck").alias("_n"),
         F.posexplode("_ck").alias("_ci", "_chunk"),
     )
-    h = (
-        F.xxhash64(F.col("_chunk"), F.lit(0))
-        if hash_mode == "xxhash64"
-        else portable_hash64(F.col("_chunk"), 0, "md5")
-    )
+    h = portable_hash64(F.col("_chunk"), 0)
     # r6: ``pos`` feeds BOTH the multiplicity aggregation and the anti
     # join — without materialization the tokenize+chunk+hash subtree
     # runs twice, plus a second _spread Exchange. localCheckpoint

@@ -22,9 +22,11 @@ The minhash family is XOR-derived — one md5 per shingle, then
 ``n_hashes`` XOR masks — instead of ``n_hashes`` independent salted
 md5s (16× fewer digests; XOR by a fixed mask is a bijection on the
 60-bit hash space, so each ``min`` is still a uniform minwise sample).
-The md5→60-bit form is bit-portable to any engine (DuckDB oracle
+The md5→60-bit form (:func:`portable_hash64`) is the one text hash of
+every operator here and bit-portable to any engine (DuckDB oracle
 mirrors it literally). The one JVM-expression variant retained is
-:func:`simhash64`, for zero-Python deployments.
+:func:`simhash64`, the reference the SimHash kernel is tested against;
+:func:`simhash_pairs` always hashes with the kernel.
 
 Scale notes: the only shuffles are groupBys on hash keys (uniform by
 construction). LSH band explosion multiplies rows by n_bands (≤ 16);
@@ -160,15 +162,13 @@ def _norm_tokens(text: Column) -> Column:
     return F.regexp_extract_all(F.lower(text), F.lit(TOKEN), 0)
 
 
-def portable_hash64(col: Column, seed: int, mode: str = "md5") -> Column:
-    """64-bit-ish hash reproducible in any engine with md5().
+def portable_hash64(col: Column, seed: int) -> Column:
+    """64-bit-ish hash reproducible in any engine with md5() — the one
+    text hash of the engine (md5-60).
 
     ``conv(substr(md5(x || '#seed'), 1, 15), 16, 10)`` — 60 bits, fits
-    a signed bigint; identical in Spark and DuckDB. ``mode='xxhash64'``
-    is the fast JVM-native path (not cross-engine portable).
+    a signed bigint; identical in Spark and DuckDB.
     """
-    if mode == "xxhash64":
-        return F.xxhash64(col, F.lit(seed))
     salted = F.concat(col, F.lit(f"#{seed}"))
     return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
 
@@ -417,48 +417,13 @@ def dropped_bucket_stats(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    shingle_k: int = 2,
-    hash_mode: str = "md5",
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash-LSH.
-
-    rows-per-band = n_hashes / n_bands. Pairs are (a < b), deduped
-    across bands. ``max_bucket`` caps pathological buckets (viral
-    near-identical clusters); over-cap buckets are filtered before the
-    list aggregation (memory-bounded) — count them with
-    :func:`dropped_bucket_stats`. ``hash_mode`` is kept for API compat;
-    the Arrow path always uses the md5-portable XOR family.
-    """
-    del hash_mode
-    sh = shingle_frame(df, text_col, id_col, n_hashes, shingle_k)
-    return _candidate_pairs(_lsh_bands(sh, n_hashes, n_bands), max_bucket)
-
-
 def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 2,
-    threshold: float = 0.0,
-    sh_frame: DataFrame | None = None,
+    pairs: DataFrame, sh_frame: DataFrame, threshold: float = 0.0
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (verify stage).
-
-    Pass ``sh_frame`` (from :func:`shingle_frame`) to reuse the shingle
-    computation from the candidate stage instead of re-deriving it."""
-    sh = (
-        sh_frame.select("_id", "_sh")
-        if sh_frame is not None
-        else shingle_frame(df, text_col, id_col, 1, shingle_k).select("_id", "_sh")
-    )
+    """Exact shingle-set Jaccard for candidate pairs (verify stage),
+    read from the shingle frame (:func:`shingle_frame`) the candidate
+    stage already computed."""
+    sh = sh_frame.select("_id", "_sh")
     out = (
         pairs.join(
             sh.withColumnRenamed("_id", "a").withColumnRenamed("_sh", "sh_a"), on="a"
@@ -512,9 +477,7 @@ def near_dup_pairs(
     sh.count()  # materialize before double-reference
     _LIVE_SHINGLE_CACHE.append(sh)
     cand = _candidate_pairs(_lsh_bands(sh, n_hashes, n_bands), max_bucket)
-    pairs = jaccard_pairs(
-        df, cand, text_col, id_col, shingle_k, threshold, sh_frame=sh
-    ).persist()
+    pairs = jaccard_pairs(cand, sh, threshold).persist()
     _LIVE_SHINGLE_CACHE.append(pairs)
     return pairs
 
@@ -544,7 +507,7 @@ def simhash64_udf():
     path — VERDICT r2 #3): hash each token occurrence with the same
     ``md5(token || '#0')`` 60-bit form as :func:`portable_hash64`, then
     a vectorized sign-sum over the bit matrix. Byte-identical to
-    ``simhash64(text, 'md5')`` (bits 60..63 are never set — every
+    ``simhash64(text)`` (bits 60..63 are never set — every
     md5-60 hash has them zero, so their counters are -n_tokens),
     INCLUDING NULL text → NULL hash (the HOF form propagates NULL;
     ADVICE r3 — a 0 here would collide every NULL-text doc into one
@@ -595,10 +558,11 @@ def simhash64_udf():
     return run
 
 
-def simhash64(text: Column, hash_mode: str = "xxhash64") -> Column:
-    """64-bit SimHash of the token multiset (JVM higher-order form —
-    zero-Python deployments; prefer :func:`simhash64_udf` in hot paths,
-    the interpreted 64-wide ``aggregate`` is ~100× slower per token).
+def simhash64(text: Column) -> Column:
+    """64-bit SimHash of the token multiset (JVM higher-order form) —
+    the reference :func:`simhash64_udf` is tested against; operators
+    hash with the kernel, since the interpreted 64-wide ``aggregate``
+    is ~100× slower per token.
 
     Per bit b: sign of Σ_tokens (bit_b(hash(token)) ? +1 : -1). Built
     from higher-order array ops — JVM-side, no UDF: accumulate the 64
@@ -611,7 +575,7 @@ def simhash64(text: Column, hash_mode: str = "xxhash64") -> Column:
     candidate equi-join).
     """
     toks = _norm_tokens(text)
-    hashes = F.transform(toks, lambda t: portable_hash64(t, 0, hash_mode))
+    hashes = F.transform(toks, lambda t: portable_hash64(t, 0))
     zero = F.array_repeat(F.lit(0).cast("long"), 64)
     # bit positions are Python ints (shiftright needs a literal count)
     counters = F.aggregate(
@@ -653,7 +617,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     n_blocks: int = 4,
-    hash_mode: str = "xxhash64",
     allow_partial_recall: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash with block-permutation candidate
@@ -666,12 +629,10 @@ def simhash_pairs(
     misses pairs that do not coincidentally share a block, so it is
     rejected unless ``allow_partial_recall=True`` is passed explicitly
     (and then the shortfall is the caller's documented trade).
-    ``hash_mode='md5'`` selects the engine-portable token hash so the
-    whole operator is reproducible in SQL oracles.
 
-    The md5 mode hashes with the numpy batch sign-sum
-    (:func:`simhash64_udf`); ``xxhash64`` has no Arrow kernel and uses
-    the JVM higher-order form (:func:`simhash64`).
+    Tokens hash with the engine-portable md5-60 form, through the numpy
+    batch sign-sum (:func:`simhash64_udf`), so the whole operator is
+    reproducible in SQL oracles.
     """
     if max_hamming > n_blocks - 1 and not allow_partial_recall:
         raise ValueError(
@@ -679,20 +640,14 @@ def simhash_pairs(
             f"n_blocks-1={n_blocks - 1}; raise n_blocks or pass "
             "allow_partial_recall=True to accept missed pairs"
         )
-    if hash_mode == "md5":
-        # spread before the Python stage by input bytes, same
-        # no-shrink policy as shingle_frame
-        sh = (
-            _spread(df)
-            .select(F.col(id_col).alias("_id"), F.col(text_col))
-            .withColumn("_sh", simhash64_udf()(F.col(text_col)))
-            .select("_id", "_sh")
-        )
-    else:
-        sh = df.select(
-            F.col(id_col).alias("_id"),
-            simhash64(F.col(text_col), hash_mode).alias("_sh"),
-        )
+    # spread before the Python stage by input bytes, same no-shrink
+    # policy as shingle_frame
+    sh = (
+        _spread(df)
+        .select(F.col(id_col).alias("_id"), F.col(text_col))
+        .withColumn("_sh", simhash64_udf()(F.col(text_col)))
+        .select("_id", "_sh")
+    )
     width = 64 // n_blocks
     blocks = sh.select(
         "_id",
@@ -975,7 +930,8 @@ def dup_ngram_spans(
     id_col: str = "doc_id",
     n: int = 8,
     min_docs: int = 2,
-    hash_mode: str = "xxhash64",
+    # accepts only "md5"; kept because perfbench/workloads.py passes it
+    hash_mode: str = "md5",
 ) -> DataFrame:
     """Substring-level duplicate detection: token spans whose every
     n-gram also occurs in ≥ ``min_docs - 1`` OTHER documents — the
@@ -1004,21 +960,19 @@ def dup_ngram_spans(
 
     Output: (id_col, span_start, span_end, n_grams) — token-indexed
     [start, end] inclusive, 1-based, ordered by (id, span_start).
-    ``hash_mode='md5'`` selects the engine-portable hash
-    (:func:`portable_hash64`) so a SQL oracle reproduces spans exactly.
+    Grams hash with the engine-portable :func:`portable_hash64`, so a
+    SQL oracle reproduces spans exactly.
     """
     from pyspark.sql.window import Window as W
 
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
+    if hash_mode != "md5":
+        raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
     d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
     d = bind(d, "_tk", _norm_tokens(F.col(text_col)))
     gram = F.array_join(F.slice(F.col("_tk"), F.col("pos"), n), " ")
-    h = (
-        F.xxhash64(gram, F.lit(0))
-        if hash_mode == "xxhash64"
-        else portable_hash64(gram, 0, "md5")
-    )
+    h = portable_hash64(gram, 0)
     grams = (
         d.select(
             "_id",

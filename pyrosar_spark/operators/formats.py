@@ -463,16 +463,6 @@ _CORE_TYPES = {
 }
 
 
-def _core(df: DataFrame) -> DataFrame:
-    cols = []
-    for c in CORE_COLUMNS:
-        if c in df.columns:
-            cols.append(F.col(c).cast(_CORE_TYPES.get(c, "string")).alias(c))
-        else:
-            cols.append(F.lit(None).cast(_CORE_TYPES.get(c, "string")).alias(c))
-    return df.select(*cols)
-
-
 def _packed(df: DataFrame, parse_fn, name: str, present: Column) -> DataFrame:
     """Run one dialect parser over its (mostly-NULL) text column and
     pack its outputs into a single nullable struct with the shared CORE
@@ -556,8 +546,8 @@ def identify_spans(docs: DataFrame) -> DataFrame:
         )},
         # fixed-order known-pol normalization (matches the catalog's
         # denormalized flag order); a document with NO polarizations
-        # field must yield [] like the union form's flag rebuild, not
-        # the NULL array_intersect propagates (ADVICE r4)
+        # field must yield [], not the NULL array_intersect propagates
+        # (ADVICE r4)
         "polarizations": F.coalesce(
             F.array_intersect(
                 F.array(*[F.lit(p) for p in ("HH", "VV", "HV", "VH")]),
@@ -601,78 +591,3 @@ def identify_spans(docs: DataFrame) -> DataFrame:
         ),
     )
     return out.where(F.col("_m").isNotNull()).select("doc_id", "_m.*")
-
-
-def identify_spans_union(docs: DataFrame) -> DataFrame:
-    """The round-3 multi-branch form (one filtered scan + parse per
-    dialect, results unioned): retained for A/B against the single-pass
-    funnel above. Emits one row PER MATCHING DIALECT for a document
-    carrying several metadata spans, where the single-pass form (like
-    the reference cascade) emits only the highest-priority one."""
-    from pyrosar_spark.operators.ingest import docs_to_scenes
-    from pyrosar_spark.operators.xmlmeta import xml_docs_to_scenes
-
-    parts: list[DataFrame] = []
-
-    json_docs = docs.where(
-        F.exists(F.col("spans"), lambda s: s.kind == F.lit("scene_meta"))
-    )
-    js = docs_to_scenes(json_docs)
-    # the JSON catalog denormalizes pol flags + corner structs — map
-    # them back to the shared identify columns
-    js = js.withColumn(
-        "polarizations",
-        F.filter(
-            F.array(
-                *[
-                    F.when(F.col(p) == 1, F.lit(p.upper()))
-                    for p in ("hh", "vv", "hv", "vh")
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    ).withColumn(
-        "coordinates",
-        F.transform(F.col("corners"), lambda c: F.array(c.lon, c.lat)),
-    )
-    parts.append(_core(js))
-
-    safe_docs = docs.where(
-        F.exists(F.col("spans"), lambda s: s.kind == F.lit("scene_meta_xml"))
-    )
-    parts.append(_core(xml_docs_to_scenes(safe_docs)))
-
-    def lifted(kind: str, *extra: str) -> DataFrame:
-        sel = docs.where(
-            F.exists(F.col("spans"), lambda s: s.kind == F.lit(kind))
-        ).select(
-            "doc_id",
-            _span_text(kind).alias("_x"),
-            *[_span_text(k).alias(a) for k, a in extra],
-        )
-        return sel
-
-    dimap = lifted("scene_meta_dimap")
-    parts.append(_core(parse_dimap(dimap, "_x")))
-
-    # a TSX span is the TDM master when a TDM span is also present —
-    # only standalone TSX documents route through parse_tsx
-    tsx = lifted("scene_meta_tsx").join(
-        docs.where(
-            F.exists(F.col("spans"), lambda s: s.kind == F.lit("scene_meta_tdm"))
-        ).select("doc_id"),
-        on="doc_id",
-        how="left_anti",
-    )
-    parts.append(_core(parse_tsx(tsx, "_x")))
-
-    tdm = lifted("scene_meta_tdm", ("scene_meta_tsx", "_master"))
-    parts.append(_core(parse_tdm(tdm, "_x", "_master")))
-
-    psr = lifted("scene_meta_psr", ("scene_meta_psr_facter", "_facter"))
-    parts.append(_core(parse_psr_text(psr, "_x", "_facter")))
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

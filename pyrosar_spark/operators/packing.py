@@ -14,9 +14,9 @@ window cumulative sum — no per-group iteration, exact SQL oracle.
 
 Scale notes: a window over ``partitionBy(key)`` alone concentrates a
 10^12-doc source into one task; ``n_shards`` salts the stream
-(``pmod(xxhash64(id), n_shards)``) so each shard packs independently —
-deterministic, parallel, and bins never cross shards. Shuffle: exactly
-one, on (key, shard).
+(``pmod(portable_hash64(id), n_shards)``, the engine-portable md5-60
+hash) so each shard packs independently — deterministic, parallel, and
+bins never cross shards. Shuffle: exactly one, on (key, shard).
 """
 
 from __future__ import annotations
@@ -39,7 +39,6 @@ def pack_documents(
     id_col: str = "doc_id",
     key_cols: tuple[str, ...] = ("source",),
     n_shards: int | None = None,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Assign each document a ``(shard, bin_id, bin_offset)`` under a
     token ``budget`` per bin.
@@ -47,9 +46,8 @@ def pack_documents(
     ``token_col``: a column/expression with the document's token count
     (defaults to the whitespace tokenizer); ``bin_offset`` is where the
     document's first token lands inside its bin — the loader-side
-    placement cursor. ``hash_mode='md5'`` selects the engine-portable
-    shard hash (reproducible in SQL oracles); the default ``xxhash64``
-    is the fast JVM-native path.
+    placement cursor. The shard hash is the engine-portable md5-60
+    form, so SQL oracles reproduce the sharding.
 
     ``n_shards=None`` (the default) derives the shard count from
     ``defaultParallelism`` so the per-key window never concentrates the
@@ -79,7 +77,7 @@ def pack_documents(
         else (F.col(token_col) if isinstance(token_col, str) else token_col)
     ).cast("long")
     shard = F.pmod(
-        portable_hash64(F.col(id_col).cast("string"), 0, hash_mode),
+        portable_hash64(F.col(id_col).cast("string"), 0),
         F.lit(n_shards),
     ).cast("int")
     out = df.select(

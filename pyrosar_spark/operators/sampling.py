@@ -90,42 +90,35 @@ def sample_token_budget(
     by: str = "source",
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
     seed: int = 1,
 ) -> DataFrame:
     """Deterministic per-group document sample up to a token budget.
 
-    Rows are ordered by a 64-bit hash of ``id_col`` (uniform, stable —
-    the sample is independent of storage order and reproducible across
-    runs), then taken while the running whitespace-token sum has not
-    yet reached the group's budget; the first document CROSSING the
-    budget is still included, so a group with enough data always yields
-    ≥ budget tokens. ``budgets`` is one int for every group or a
-    ``{group: budget}`` dict (missing groups are dropped) — dict
-    budgets join as a broadcast dim, never a shuffle.
+    Rows are ordered by the engine-portable md5-60 hash of ``id_col``
+    (uniform, stable — the sample is independent of storage order and
+    reproducible across runs and engines), then taken while the running
+    whitespace-token sum has not yet reached the group's budget; the
+    first document CROSSING the budget is still included, so a group
+    with enough data always yields ≥ budget tokens. ``budgets`` is one
+    int for every group or a ``{group: budget}`` dict (missing groups
+    are dropped) — dict budgets join as a broadcast dim, never a
+    shuffle.
 
     One sort shuffle per group (the cumulative window). At 10^12 docs
     prefer rough pre-culling by hash threshold — keep
     ``h < max_h * (budget / est_group_tokens) * safety`` with a plain
     filter, THEN run this exact pass on the survivors: the window then
-    sorts only ~budget worth of rows. ``hash_mode='md5'`` selects the
-    engine-portable hash so SQL oracles reproduce the sample exactly.
+    sorts only ~budget worth of rows.
 
     Output: (id_col, by, tokens, cum_tokens) for kept rows.
     """
     from pyrosar_spark.operators.textstats import token_count_ws
 
-    idc = F.col(id_col).cast("string")
-    h = (
-        F.xxhash64(idc, F.lit(seed))
-        if hash_mode == "xxhash64"
-        else portable_hash64(idc, seed, "md5")
-    )
     d = df.select(
         F.col(id_col),
         F.col(by),
         token_count_ws(F.col(text_col)).cast("long").alias("tokens"),
-        h.alias("_h"),
+        portable_hash64(F.col(id_col).cast("string"), seed).alias("_h"),
     )
     if isinstance(budgets, dict):
         spark = df.sparkSession
@@ -158,10 +151,9 @@ def sample_stratified(
     fractions: float | dict[str, float],
     by: str = "source",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
     seed: int = 1,
 ) -> DataFrame:
-    """Deterministic stratified sample: keep a row iff the 64-bit hash
+    """Deterministic stratified sample: keep a row iff the md5-60 hash
     of its id lands under the group's fraction — the mixture-weighting
     primitive ("keep 10% of web, 100% of code") that, unlike
     ``DataFrame.sample``, is reproducible across runs, partitionings,
@@ -176,8 +168,8 @@ def sample_stratified(
 
     ZERO shuffles: the whole operator is a scan-filter, and at 10^12
     documents that is the point — stratified sampling must not cost a
-    corpus pass more than the scan itself. ``hash_mode='md5'`` selects
-    the engine-portable hash. Output: the input columns, filtered.
+    corpus pass more than the scan itself. Output: the input columns,
+    filtered.
     """
 
     def _ppm(frac: float) -> int:
@@ -185,12 +177,7 @@ def sample_stratified(
             raise ValueError(f"fraction must be in [0, 1], got {frac}")
         return int(round(frac * 1_000_000))
 
-    idc = F.col(id_col).cast("string")
-    h = (
-        F.xxhash64(idc, F.lit(seed))
-        if hash_mode == "xxhash64"
-        else portable_hash64(idc, seed, "md5")
-    )
+    h = portable_hash64(F.col(id_col).cast("string"), seed)
     d = df.withColumn("_h", F.pmod(h, F.lit(1_000_000)))
     if isinstance(fractions, dict):
         fdf = df.sparkSession.createDataFrame(

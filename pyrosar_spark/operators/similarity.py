@@ -377,7 +377,7 @@ def ivf_topk(
             F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("item_vec")
         )
         .orderBy(
-            portable_hash64(F.col("item_id").cast("string"), 0, "md5").asc(),
+            portable_hash64(F.col("item_id").cast("string"), 0).asc(),
             F.col("item_id").asc(),
         )
         .limit(n_cells)

@@ -99,46 +99,21 @@ def quality_score(text: Column) -> Column:
     return F.round(F.greatest(F.least(score, F.lit(1.0)), F.lit(0.0)), 6)
 
 
-def fingerprint64(text: Column, window: int = 8, hash_mode: str = "xxhash64") -> Column:
+def fingerprint64(text: Column, window: int = 8) -> Column:
     """Rolling-hash document fingerprint: min of the window-gram hashes
     (a 1-hash winnowing sketch) — stable under small appends.
 
-    ``hash_mode='md5'`` uses the engine-portable hash from
-    :func:`pyrosar_spark.operators.dedup.portable_hash64` so DuckDB
+    Grams hash with the engine-portable
+    :func:`pyrosar_spark.operators.dedup.portable_hash64`, so DuckDB
     oracles can reproduce the value bit-for-bit.
     """
-
-    def h(gram: Column) -> Column:
-        if hash_mode == "xxhash64":
-            return F.xxhash64(gram)
-        return portable_hash64(gram, 0, "md5")
-
     grams = F.transform(
         F.sequence(
             F.lit(1), F.greatest(F.length(text) - (window - 1), F.lit(1))
         ),
-        lambda i: h(F.substring(text, i, window)),
+        lambda i: portable_hash64(F.substring(text, i, window), 0),
     )
     return F.array_min(grams)
-
-
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """All per-doc stats in one projection (single pass)."""
-    t = F.col(text_col)
-    cs = char_stats(t)
-    return df.withColumns(
-        {
-            "tokens_ws": token_count_ws(t),
-            "tokens_bpe": token_count_bpe(t),
-            "letter_ratio": cs["letter_ratio"],
-            "digit_ratio": cs["digit_ratio"],
-            "punct_ratio": cs["punct_ratio"],
-            "stopword_ratio_en": stopword_ratio(t, "en"),
-            "lang_guess": lang_id(t),
-            "quality": quality_score(t),
-            "fingerprint": fingerprint64(t),
-        }
-    )
 
 
 def contamination(
@@ -148,7 +123,6 @@ def contamination(
     text_col: str = "text",
     id_col: str = "doc_id",
     eval_id_col: str = "eval_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Benchmark decontamination (training-pipeline op): flag training
     documents sharing any exact ``n``-token gram with an evaluation
@@ -165,8 +139,8 @@ def contamination(
     caught an earlier corpus-wide pre-join distinct — trillions of
     rows shuffled at design scale for nothing; ``shingles`` is already
     distinct within a document, and cross-collision dedup now happens
-    post-join). ``hash_mode='md5'`` is the engine-portable form for
-    SQL oracles.
+    post-join). Grams hash with the engine-portable md5-60 form, so
+    SQL oracles reproduce the hits exactly.
     """
     # tokens bound first: the shingle lambda reads the bound array
     # instead of re-tokenizing the eval text once per gram
@@ -181,7 +155,7 @@ def contamination(
             F.explode(
                 F.transform(
                     token_shingles(F.col("_tk"), n),
-                    lambda g: portable_hash64(g, 0, hash_mode),
+                    lambda g: portable_hash64(g, 0),
                 )
             ).alias("_h"),
         ).distinct()
@@ -210,7 +184,7 @@ def contamination(
             ).otherwise(F.array().cast("array<int>"))
         ).alias("pos"),
         "_tk",
-    ).select(F.col(id_col), portable_hash64(gram, 0, hash_mode).alias("_h"))
+    ).select(F.col(id_col), portable_hash64(gram, 0).alias("_h"))
     return (
         tr.join(ev, on="_h")
         .dropDuplicates([id_col, "_h", "_eid"])

@@ -129,13 +129,13 @@ def test_stratified_sample_scalar_fraction_and_column_order(spark):
 
 
 def test_stratified_sample_md5_mode_matches_reference(spark):
-    # portable mode replays through the documented md5 recipe
+    # the sample replays through the documented md5 recipe
     import hashlib
 
     d = _docs(spark, [(i, "t", "s") for i in range(50)])
     got = {
         r["doc_id"]
-        for r in sample_stratified(d, 0.3, hash_mode="md5", seed=7).collect()
+        for r in sample_stratified(d, 0.3, seed=7).collect()
     }
     want = {
         i

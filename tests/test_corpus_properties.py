@@ -108,7 +108,7 @@ def test_strip_boilerplate_matches_reference(spark, corpus, chunk_tokens, min_do
     got = {
         r["doc_id"]: (r["clean_text"], r["n_kept"], r["n_dropped"])
         for r in strip_boilerplate_chunks(
-            df, chunk_tokens=chunk_tokens, min_docs=min_docs, hash_mode="md5"
+            df, chunk_tokens=chunk_tokens, min_docs=min_docs
         ).collect()
     }
     assert got == _ref_strip(rows, chunk_tokens, min_docs)

@@ -5,8 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.dedup import (
     exact_dedup,
-    jaccard_pairs,
-    minhash_lsh_pairs,
+    near_dup_pairs,
     shingles,
     simhash64,
     simhash_pairs,
@@ -16,7 +15,6 @@ from pyrosar_spark.operators.textstats import (
     fingerprint64,
     lang_id,
     quality_score,
-    text_profile,
     token_count_ws,
 )
 
@@ -50,8 +48,7 @@ def test_shingles_short_text(spark):
 
 
 def test_minhash_finds_near_dups(docs_df):
-    pairs = minhash_lsh_pairs(docs_df, n_hashes=8, n_bands=4)
-    verified = jaccard_pairs(docs_df, pairs, threshold=0.5)
+    verified = near_dup_pairs(docs_df, n_hashes=8, n_bands=4, threshold=0.5)
     got = {(r.a, r.b) for r in verified.collect()}
     assert (1, 4) in got  # exact dup always collides
     assert (1, 2) in got or (2, 4) in got  # near-dup found
@@ -115,8 +112,15 @@ def test_lsh_and_ivf_recall(spark):
     assert 1 in [r.item_id for r in ivf.collect()]
 
 
-def test_text_profile_and_lang(docs_df):
-    prof = text_profile(docs_df).collect()
+def test_text_stats_and_lang(docs_df):
+    t = F.col("text")
+    prof = docs_df.select(
+        "doc_id",
+        token_count_ws(t).alias("tokens_ws"),
+        lang_id(t).alias("lang_guess"),
+        quality_score(t).alias("quality"),
+        fingerprint64(t).alias("fingerprint"),
+    ).collect()
     by_id = {r.doc_id: r for r in prof}
     assert by_id[1].tokens_ws == 9
     assert by_id[1].lang_guess == "en"
@@ -126,10 +130,18 @@ def test_text_profile_and_lang(docs_df):
 
 
 def test_fingerprint_modes(spark):
-    df = spark.createDataFrame([("hello world doc",)], "text string")
-    a = df.select(fingerprint64(F.col("text"), 8, "md5").alias("f")).first().f
-    b = df.select(fingerprint64(F.col("text"), 8, "xxhash64").alias("f")).first().f
-    assert isinstance(a, int) and isinstance(b, int) and a != b
+    # the min over every 8-char window of the md5-60 hash, replayed in
+    # Python through the documented recipe
+    import hashlib
+
+    text = "hello world doc"
+    df = spark.createDataFrame([(text,)], "text string")
+    a = df.select(fingerprint64(F.col("text"), 8).alias("f")).first().f
+    want = min(
+        int(hashlib.md5(f"{text[i:i + 8]}#0".encode()).hexdigest()[:15], 16)
+        for i in range(len(text) - 7)
+    )
+    assert isinstance(a, int) and a == want
 
 
 def test_cosine_dup_pairs_planted(spark):

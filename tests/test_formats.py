@@ -303,16 +303,50 @@ def test_identify_spans_mixed_corpus(spark):
         assert r["outname_base"] is not None
 
 
-def test_identify_spans_single_pass_matches_union(spark):
-    """Round 4: the single-pass coalesce funnel must agree with the
-    multi-branch union on single-dialect documents, and implement the
-    reference cascade's FIRST-match-wins on multi-dialect ones (the
-    union emits one row per matching dialect)."""
+GOLDEN_S1_ROW = (
+    "golden_s1", "S1A", "IW", "GRD", "A", "20150222T170750",
+    "20150222T170815", 4739, 117, 43, 159, 25368, 16685, ["VV", "VH"],
+    [[12.0268, 50.688881], [11.653832, 52.183979], [8.017178, 51.788181],
+     [8.505644, 50.295261]],
+    8.017178, 12.0268, 50.295261, 52.183979, "S1A__IW___A_20150222T170750",
+)
+
+PSR_COORDS = [[-62.1629744, -10.6783401], [-62.9005207, -10.8278276],
+              [-62.1629744, -11.2738201], [-62.6585706, -11.4233051]]
+
+# one row per document with a recognized dialect, in CORE_COLUMNS order
+IDENTIFY_ROWS = sorted([
+    ("dimap_doc", "S1A", "IW", "GRD", "A", "20150222T170750",
+     "20150222T170815", 4739, 117, 43, 24003, 25368, 16685, ["VH", "VV"],
+     [[8.505644, 50.295261], [8.017178, 51.788181], [11.653832, 52.183979],
+      [12.0268, 50.688881]],
+     8.017178, 12.0268, 50.295261, 52.183979, "S1A__IW___A_20150222T170750"),
+    ("golden_psr2", "PSR2", "FBD", "1.5", "A", "20140909T043342",
+     "20140909T043352", 1783, 111, 17, 3050, 12870, 13160, ["HH", "HV"],
+     PSR_COORDS, -62.9005207, -62.1629744, -11.4233051, -10.6783401,
+     "PSR2_FBD__A_20140909T043342"),
+    GOLDEN_S1_ROW,
+    ("psr_doc", "PSR2", "FBD", "1.5", "A", "20140909", "20140909", 3423, 111,
+     17, None, 12870, 13160, None, PSR_COORDS, -62.9005207, -62.1629744,
+     -11.4233051, -10.6783401, "PSR2_FBD__A_20140909"),
+    ("tdm_doc", "TDM1", "SM", "CoSSC", "A", "20140909T043342",
+     "20140909T043352", 15420, 71, 91, 123456, 12870, 13160, ["HH", "VV"],
+     [[11.2, 47.1], [12.4, 47.9]], 11.2, 12.4, 47.1, 47.9,
+     "TDM1_SM___A_20140909T043342"),
+    ("tsx_doc", "TSX1", "SM", "SSC", "A", "20140909T043342",
+     "20140909T043352", 15420, 71, 91, 123456, 12870, 13160, ["HH", "VV"],
+     [[-110.0, -10.6], [-62.75, -11.4]], -110.0, -62.75, -11.4, -10.6,
+     "TSX1_SM___A_20140909T043342"),
+])
+
+
+def test_identify_spans_expected_rows(spark):
+    """The single-pass coalesce funnel emits exactly one row per
+    document with a recognized dialect (pinned field by field), and
+    implements the reference cascade's FIRST-match-wins on a
+    multi-dialect document."""
     from pyrosar_spark.datagen import golden_documents
-    from pyrosar_spark.operators.formats import (
-        identify_spans,
-        identify_spans_union,
-    )
+    from pyrosar_spark.operators.formats import CORE_COLUMNS, identify_spans
 
     def doc(doc_id, spans):
         return (doc_id, [(k, t, "", i) for i, (k, t) in enumerate(spans)])
@@ -330,12 +364,12 @@ def test_identify_spans_single_pass_matches_union(spark):
     docs = spark.createDataFrame(rows, schema).unionByName(
         golden_documents(spark)
     )
-    sp = sorted(map(tuple, identify_spans(docs).collect()))
-    un = sorted(map(tuple, identify_spans_union(docs).collect()))
-    assert sp == un  # single-dialect corpus: identical rows either way
+    out = identify_spans(docs)
+    assert out.columns == CORE_COLUMNS
+    assert sorted(map(tuple, out.collect())) == IDENTIFY_ROWS
 
-    # a document carrying TWO recognized dialects: cascade picks the
-    # higher-priority JSON parse once; the union double-emits
+    # a document carrying TWO recognized dialects: the cascade emits the
+    # higher-priority JSON parse, once
     json_span = (
         golden_documents(spark)
         .where(F.col("doc_id") == "golden_s1")
@@ -348,23 +382,20 @@ def test_identify_spans_single_pass_matches_union(spark):
           [("scene_meta", json_span.text, "", 0),
            ("scene_meta_dimap", DIMAP_S1, "", 1)])], schema
     )
-    got_sp = identify_spans(multi).collect()
-    got_un = identify_spans_union(multi).collect()
-    assert len(got_sp) == 1 and got_sp[0]["sensor"] == "S1A"
-    assert got_sp[0]["outname_base"] == "S1A__IW___A_20150222T170750"  # JSON won
-    assert len(got_un) == 2  # the union's documented double-emit
+    got = [tuple(r) for r in identify_spans(multi).collect()]
+    assert got == [("multi_doc",) + GOLDEN_S1_ROW[1:]]  # JSON won
 
     # ADVICE r4 regression: a JSON doc MISSING the polarizations field
-    # must yield [] in BOTH forms (array_intersect propagated NULL in
-    # the single-pass form where the union's flag rebuild gave [])
+    # must yield [] (array_intersect would propagate NULL)
     nopol = spark.createDataFrame(
         [("nopol_doc",
           [("scene_meta",
             'SC|{"sensor":"S1A","acquisition_mode":"IW","orbit":"A",'
             '"start":"20200101T000000"}', "", 0)])], schema
     )
-    sp_row = identify_spans(nopol).collect()
-    un_row = identify_spans_union(nopol).collect()
-    assert len(sp_row) == 1 and len(un_row) == 1
-    assert sp_row[0]["polarizations"] == []
-    assert un_row[0]["polarizations"] == []
+    got = [tuple(r) for r in identify_spans(nopol).collect()]
+    assert got == [
+        ("nopol_doc", "S1A", "IW", None, "A", "20200101T000000", None, None,
+         None, None, None, None, None, [], None, None, None, None, None,
+         "S1A__IW___A_20200101T000000"),
+    ]

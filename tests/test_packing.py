@@ -17,7 +17,7 @@ def test_pack_cumulative_fill(spark):
 def test_pack_keys_and_shards_are_independent_streams(spark):
     rows = [(i, "s1" if i % 2 else "s2", "tok " * (i + 1)) for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    packed = pack_documents(df, budget=8, n_shards=3, hash_mode="md5")
+    packed = pack_documents(df, budget=8, n_shards=3)
     # per (source, shard): stream positions restart at 0 and are the
     # running sum of the preceding docs in doc_id order
     for (src, shard), grp in _group(packed.collect()):
@@ -58,7 +58,7 @@ def test_pack_default_shards_derived_from_parallelism(spark, caplog):
         packed = pack_documents(df, budget=5)
         n_distinct = packed.select("shard").distinct().count()
     dp = spark.sparkContext.defaultParallelism
-    # 512 xxhash64 draws over >=32 buckets: every bucket hit is not
+    # 512 md5-60 draws over >=32 buckets: every bucket hit is not
     # guaranteed, but the shard domain must be the derived parallelism
     assert packed.agg({"shard": "max"}).first()[0] <= dp - 1
     assert n_distinct > 1, "default packing must not serialize into one stream"

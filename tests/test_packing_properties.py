@@ -78,7 +78,6 @@ def test_pack_documents_matches_reference(spark, corpus, budget, n_shards):
         budget=budget,
         token_col=F.col("tokens"),
         n_shards=n_shards,
-        hash_mode="md5",
     ).collect()
 
     ref = _reference(rows, budget, n_shards)

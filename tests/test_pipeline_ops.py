@@ -40,7 +40,7 @@ def test_contamination_md5_mode_and_multi_eval(spark):
         [(10, a), (20, b)], "eval_id long, text string"
     )
     got = {r["doc_id"]: r for r in
-           contamination(docs, ev, n=13, hash_mode="md5").collect()}
+           contamination(docs, ev, n=13).collect()}
     assert set(got) == {1}
     assert got[1]["eval_ids"] == [10, 20]
 

@@ -90,7 +90,7 @@ def test_no_cartesian_products_in_hot_paths(spark, catalog_parquet):
     )
     hot = {
         "near_dup": near_dup_pairs(docs),
-        "simhash": simhash_pairs(docs, hash_mode="md5"),
+        "simhash": simhash_pairs(docs),
         "cos_dup": cosine_dup_pairs(emb, dim=8),
         "knn": knn_scenes(
             catalog_parquet.select("doc_id", "xmin", "xmax", "ymin", "ymax"), k=3

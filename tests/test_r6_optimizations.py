@@ -86,7 +86,7 @@ def test_simhash_multi_block_pair_reported_once(spark):
          (3, "totally different words here")],
         "doc_id long, text string",
     )
-    rows = simhash_pairs(df, max_hamming=3, n_blocks=4, hash_mode="md5").collect()
+    rows = simhash_pairs(df, max_hamming=3, n_blocks=4).collect()
     assert [(r.a, r.b, r.hamming) for r in rows] == [(1, 2, 0)]
 
 
@@ -109,11 +109,34 @@ def test_candidate_pairs_skips_dead_hot_guard(spark):
     assert sorted(map(tuple, unbounded.collect())) == sorted(map(tuple, capped.collect()))
 
 
-def test_stream_drain_restores_shuffle_partitions(spark):
-    """The streaming drain narrows the stream's shuffle width and must
-    restore the session value afterwards."""
+def test_stream_drain_restores_shuffle_partitions(spark, monkeypatch, request):
+    """The streaming drain leaves the caller's shuffle width alone: the
+    stream's width is set on a private session, so the caller's session
+    sees no set of the key and keeps its value, and the drained
+    stream's state operators ran at defaultParallelism partitions, not
+    at the caller's width."""
     import __spark_entry__ as entry
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    key = "spark.sql.shuffle.partitions"
+    dp = spark.sparkContext.defaultParallelism
+    real_set, real_run = spark.conf.set, entry._run_stream_to_memory
+    request.addfinalizer(lambda p=spark.conf.get(key): real_set(key, p))
+    real_set(key, str(dp + 3))  # a caller width the stream must not use
+    sets, drained = [], []
+
+    def recording_set(k, v):
+        sets.append(k)
+        real_set(k, v)
+
+    def recording_run(*args, **kwargs):
+        drained.append(real_run(*args, **kwargs))
+        return drained[-1]
+
+    monkeypatch.setattr(spark.conf, "set", recording_set)
+    monkeypatch.setattr(entry, "_run_stream_to_memory", recording_run)
     entry.q_stream_ingest_keys(spark, "/root/testdata/sf0.001").count()
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert key not in sets
+    assert spark.conf.get(key) == str(dp + 3)
+    (q,) = drained
+    ops = q.lastProgress["stateOperators"]
+    assert ops and {op["numShufflePartitions"] for op in ops} == {dp}

@@ -115,7 +115,7 @@ def test_simhash_arrow_matches_hof(spark):
     df = spark.createDataFrame(texts, "doc_id string, text string")
     both = df.select(
         "doc_id",
-        simhash64(F.col("text"), "md5").alias("hof"),
+        simhash64(F.col("text")).alias("hof"),
         simhash64_udf()(F.col("text")).alias("arrow"),
     ).collect()
     for r in both:
@@ -132,12 +132,10 @@ def test_simhash_pairs_null_text_not_paired(spark):
     rows = [("n1", None), ("n2", None), ("n3", None),
             ("t1", "real content here"), ("t2", "real content here")]
     d = spark.createDataFrame(rows, "doc_id string, text string")
-    # md5 hashes with the Arrow kernel, xxhash64 with the HOF form
-    for hash_mode in ("md5", "xxhash64"):
-        got = {(r["a"], r["b"]) for r in simhash_pairs(
-            d, max_hamming=3, n_blocks=4, hash_mode=hash_mode
-        ).collect()}
-        assert got == {("t1", "t2")}, hash_mode
+    got = {(r["a"], r["b"]) for r in simhash_pairs(
+        d, max_hamming=3, n_blocks=4
+    ).collect()}
+    assert got == {("t1", "t2")}
 
 
 # -- VERDICT r2 #2: viral embedding bucket is dropped + counted, not exploded -

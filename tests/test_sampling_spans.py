@@ -112,13 +112,6 @@ def test_dup_ngram_spans_min_docs_three(spark):
     assert got == [(1, 1, 3, 1), (2, 1, 3, 1), (3, 1, 3, 1)]
 
 
-def test_dup_ngram_spans_hash_modes_agree(spark, doctable):
-    d = doctable.limit(80)
-    a = [tuple(r) for r in dup_ngram_spans(d, n=6, hash_mode="md5").collect()]
-    b = [tuple(r) for r in dup_ngram_spans(d, n=6, hash_mode="xxhash64").collect()]
-    assert a == b and len(a) > 0
-
-
 def test_dup_ngram_spans_no_cartesian(spark):
     texts = {1: "a b c d", 2: "a b c e"}
     p = _plan(dup_ngram_spans(_spans_df(spark, texts), n=3))
@@ -248,7 +241,7 @@ def _token_rows(docs_pdf):
 
 def test_sample_token_budget_exact_membership(spark, doctable):
     budgets = {"src0": 500, "src1": 120, "src2": 1}
-    kept = sample_token_budget(doctable, budgets, hash_mode="md5").collect()
+    kept = sample_token_budget(doctable, budgets).collect()
     ref = _ref_budget_sample(_token_rows(doctable.collect()), budgets)
     assert {r["doc_id"]: (r["source"], r["tokens"], r["cum_tokens"]) for r in kept} == ref
     # unlisted sources are dropped entirely
@@ -261,21 +254,21 @@ def test_sample_token_budget_exact_membership(spark, doctable):
 
 def test_sample_token_budget_order_independent(spark, doctable):
     budgets = {"src3": 300, "src4": 300}
-    a = sample_token_budget(doctable, budgets, hash_mode="md5").collect()
+    a = sample_token_budget(doctable, budgets).collect()
     shuffled = doctable.orderBy(F.rand(7)).repartition(5)
-    b = sample_token_budget(shuffled, budgets, hash_mode="md5").collect()
+    b = sample_token_budget(shuffled, budgets).collect()
     key = lambda rows: sorted((r["doc_id"], r["cum_tokens"]) for r in rows)
     assert key(a) == key(b) and len(a) > 0
 
 
 def test_sample_token_budget_int_budget_and_plan(spark, doctable):
-    kept = sample_token_budget(doctable, 200, hash_mode="xxhash64")
+    kept = sample_token_budget(doctable, 200)
     rows = kept.collect()
     srcs = {r["source"] for r in rows}
     assert len(srcs) == 20  # a scalar budget applies to every group
     for r in rows:
         assert r["cum_tokens"] - r["tokens"] < 200
-    p = _plan(sample_token_budget(doctable, {"src0": 100}, hash_mode="md5"))
+    p = _plan(sample_token_budget(doctable, {"src0": 100}))
     assert "BroadcastHashJoin" in p, "dict budgets must join as a broadcast dim"
     assert "CartesianProduct" not in p
 
@@ -289,7 +282,7 @@ def test_dup_ngram_spans_exchange_budget(spark, doctable):
     exchange for the per-doc island window and at most one range
     exchange for the final ordering: 3 + ≤1. More would mean a
     distinct/count phase stopped being partial-aggregatable."""
-    q = dup_ngram_spans(doctable, n=6, min_docs=2, hash_mode="xxhash64")
+    q = dup_ngram_spans(doctable, n=6, min_docs=2)
     p = _plan(q)
     assert p.count("Exchange hashpartitioning") == 3, p
     assert p.count("Exchange rangepartitioning") <= 1
