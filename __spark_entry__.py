@@ -1567,13 +1567,13 @@ def q_dup_ngram_spans(spark, sf):
 
 def q_quality_topfrac(spark, sf):
     """Quality-quantile cull: best 25% of documents per language by
-    the composite quality score (exact rank-window mode, integer
+    the composite quality score (rank window, integer
     rank*100 <= cnt*pct comparison — no float boundary); aggregated
     per language so the oracle stays small."""
     from pyrosar_spark.operators.sampling import quality_filter
 
     d = _t(spark, sf, "documents")
-    kept = quality_filter(d, pct=25, by="lang", mode="exact")
+    kept = quality_filter(d, pct=25, by="lang")
     return (
         kept.groupBy("lang")
         .agg(

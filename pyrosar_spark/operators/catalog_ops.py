@@ -169,7 +169,7 @@ def val_convert(col: Column) -> Column:
     )
 
 
-def parse_kv_records(col: Column, coord_scale_keys: list[str] | None = None) -> Column:
+def parse_kv_records(col: Column) -> Column:
     """ESA MPH/SPH-style ``KEY=value`` record decode
     (``drivers.py:1660-1676``) into a map column; coordinate keys are
     scaled ×1e-6 downstream (F9 semantics) by the caller."""

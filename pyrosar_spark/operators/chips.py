@@ -7,8 +7,10 @@ Reference semantics (``pyroSAR/auxdata.py:531-604`` VRT mosaic +
    fixed 1°×1° tile canvases, source pixel grid preserved;
  - 'point' rasters are shifted by half a pixel relative to 'area'
    (``auxdata.py:1312-1319``);
- - extent expansion to tile multiples when not cropping
-   (``auxdata.py:1304-1310`` — same floor/ceil as ``intrange``);
+ - extent expansion to tile multiples (``auxdata.py:1304-1310``, R3)
+   is not a mosaic step: it is the floor/ceil of
+   ``tiles.intrange_bounds``, and the mosaic always writes the full
+   1°×1° tile canvas;
  - zero chips over a tile → a dummy 1-value canvas (ocean case,
    ``auxdata.py:634-661, 1321-1336``).
 
@@ -80,7 +82,6 @@ def assign_chip_tiles(chips: DataFrame) -> DataFrame:
 def mosaic_tiles(
     chips_with_tiles: DataFrame,
     px_per_degree: int = 20,
-    crop: bool = True,
 ) -> DataFrame:
     """Per-tile mosaic: paste every overlapping chip into the tile
     canvas (numpy, one applyInPandas group per tile).

@@ -699,57 +699,38 @@ def simhash_pairs(
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iter: int = 20, algorithm: str = "minlabel"
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over near-duplicate pairs: every document →
     its cluster root (the minimum id in the component) — the step that
     turns pairwise dedup output into keep/drop decisions (keep the
     root, drop the rest).
 
-    ``algorithm="minlabel"`` (default): iterative min-label propagation
-    (Pregel-lite — the standard shape absent a graph library). The
-    symmetric edge list is built in one pass over ``pairs``
-    (:func:`_symmetric_edges`), so a lazy ``pairs`` plan — or the
-    cache :func:`near_dup_pairs` leaves — is read once. Labels start
-    from the first hop (each vertex's min over itself and its
-    neighbors, one aggregation over the edges) rather than from the
+    Iterative min-label propagation (Pregel-lite — the standard shape
+    absent a graph library). The symmetric edge list is built in one
+    pass over ``pairs`` (:func:`_symmetric_edges`), so a lazy ``pairs``
+    plan — or the cache :func:`near_dup_pairs` leaves — is read once.
+    Labels start from the first hop (each vertex's min over itself and
+    its neighbors, one aggregation over the edges) rather than from the
     identity. Each round is ONE pass over the edge list (an edge×label
     equi-join + a min-aggregation — three Exchange nodes, pinned in
     tests/test_plan_properties.py) and ONE job (VERDICT r4 #6): the
-    convergence signal is folded into the propagation aggregation
-    itself — old labels are tagged into the union, the min-aggregation
-    emits both the new label and the old one, and a single action
-    materializes the round's lazy ``localCheckpoint`` while summing the
-    per-vertex changed flags. Labels converge in O(graph diameter)
-    rounds, and near-dup components are shallow (diameter ≈ 2-3), so
-    1-3 rounds at any scale (a star converges in its first round); the
-    driver only reads the per-round convergence COUNT, never the data.
-    ``max_iter`` counts the rounds after the seeded first hop.
-
-    ``algorithm="star"``: alternating large-star/small-star (the
-    published MapReduce connected-components scheme — Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC 2014), which
-    converges in O(log d) rounds instead of O(d): each round rewires
-    every node's strictly-larger neighbors (large-star) and then its
-    smaller neighborhood (small-star) directly to the local minimum, so
-    path-shaped components contract geometrically. Use it when
-    components may be DEEP — e.g. transitive near-dup chains — where
-    min-label would need (and bill) one full edge-list pass per
-    diameter step; a 50-deep chain raises under minlabel's default
-    budget but finishes in ~5 star rounds (tests/test_dedup_star.py).
-    Same contract, same output, same non-convergence raise.
+    convergence signal is folded into the propagation aggregation itself
+    — old labels are tagged into the union, the min-aggregation emits
+    both the new label and the old one, and a single action materializes
+    the round's lazy ``localCheckpoint`` while summing the per-vertex
+    changed flags. Labels converge in O(graph diameter) rounds, and
+    near-dup components are shallow (diameter ≈ 2-3), so 1-3 rounds at
+    any scale (a star converges in its first round); the driver only
+    reads the per-round convergence COUNT, never the data. ``max_iter``
+    counts the rounds after the seeded first hop; a component of
+    diameter d converges within ``max_iter >= d``, so a deep transitive
+    chain gets its answer by raising ``max_iter``.
 
     Returns (v, cluster_id) for every vertex appearing in ``pairs``.
     Raises if the graph has not converged within ``max_iter`` rounds:
     silently returning partially-propagated labels would split one
     duplicate cluster into several downstream.
     """
-    if algorithm == "star":
-        labels, _ = _star_components(pairs, max_iter)
-        return labels
-    if algorithm != "minlabel":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     edges = _symmetric_edges(pairs).localCheckpoint()
     # seed with the first hop: each vertex's min over itself and its
     # neighbors, i.e. what the first round from identity labels yields
@@ -790,115 +771,6 @@ def _symmetric_edges(pairs: DataFrame) -> DataFrame:
             )
         )
     ).distinct()
-
-
-def _star_components(pairs: DataFrame, max_iter: int):
-    """Alternating large-star/small-star to a min-rooted star forest.
-
-    Edges are kept oriented (child > parent) throughout. Convergence is
-    an EXACT structural test, not a fixed-point checksum: the edge set
-    is a min-rooted star forest iff (a) no node is both a child and a
-    parent and (b) no child carries two distinct parents — both checked
-    in one aggregation over one role-tagged union (a state where a
-    child still has two parents is NOT converged even though test (a)
-    alone passes; see tests/test_dedup_star.py for the regression
-    shape). Such a forest is a fixed point of both phases and its
-    parents are exactly the component minima, so labels read straight
-    off the edges. Returns (labels, rounds_used).
-    """
-    # vertices that appear ONLY in self-pairs (a == b) vanish from the
-    # edge list below; they are their own roots and are unioned back in
-    # at the end so both algorithms return every vertex in ``pairs``
-    selfies = (
-        pairs.where(F.col("a") == F.col("b"))
-        .select(F.col("a").alias("v"))
-        .distinct()
-    )
-    e = (
-        pairs.select(
-            F.greatest("a", "b").alias("child"), F.least("a", "b").alias("parent")
-        )
-        .where(F.col("child") != F.col("parent"))
-        .distinct()
-        .localCheckpoint()
-    )
-    parent_t = e.schema["parent"].dataType
-    for rnd in range(1, max_iter + 1):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        roles = e.select(
-            F.col("child").alias("node"), F.lit(1).alias("c"), F.col("parent")
-        ).unionByName(
-            e.select(
-                F.col("parent").alias("node"),
-                F.lit(0).alias("c"),
-                F.lit(None).cast(parent_t).alias("parent"),
-            )
-        )
-        violations = (
-            roles.groupBy("node")
-            .agg(
-                F.max("c").alias("mx"),
-                F.min("c").alias("mn"),
-                F.count_distinct("parent").alias("np"),
-            )
-            .where(((F.col("mx") == 1) & (F.col("mn") == 0)) | (F.col("np") > 1))
-            .limit(1)
-            .count()
-        )
-        if violations == 0:
-            children = e.select(
-                F.col("child").alias("v"), F.col("parent").alias("cluster_id")
-            )
-            roots = (
-                e.select(F.col("parent").alias("v"))
-                .distinct()
-                .withColumn("cluster_id", F.col("v"))
-            )
-            # selfies may also appear in real edges with a smaller
-            # component min; min-per-vertex resolves both (the root of
-            # v's component is always <= v) at the same shuffle cost as
-            # the distinct it replaces
-            labels = (
-                children.unionByName(roots)
-                .unionByName(selfies.withColumn("cluster_id", F.col("v")))
-                .groupBy("v")
-                .agg(F.min("cluster_id").alias("cluster_id"))
-            )
-            return labels, rnd
-    raise RuntimeError(
-        f"dedup_clusters(star) did not converge in {max_iter} rounds; "
-        f"raise max_iter"
-    )
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star: every node's strictly-LARGER neighbors re-point to
-    the minimum of its closed neighborhood. One groupBy + one equi-join
-    over the doubled edge list; output stays (child > parent)."""
-    und = e.select(F.col("child").alias("u"), F.col("parent").alias("n")).unionByName(
-        e.select(F.col("parent").alias("u"), F.col("child").alias("n"))
-    )
-    mins = und.groupBy("u").agg(F.least(F.min("n"), F.first("u")).alias("m"))
-    return (
-        und.join(mins, "u")
-        .where(F.col("n") > F.col("u"))
-        .select(F.col("n").alias("child"), F.col("m").alias("parent"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star: every node's SMALLER neighborhood (plus itself)
-    re-points to its minimum smaller neighbor. Input/output oriented
-    (child > parent); self-loops filtered."""
-    mins = e.groupBy("child").agg(F.min("parent").alias("m"))
-    rewired = (
-        e.join(mins, "child")
-        .where(F.col("parent") != F.col("m"))
-        .select(F.col("parent").alias("child"), F.col("m").alias("parent"))
-    )
-    selfed = mins.select(F.col("child"), F.col("m").alias("parent"))
-    return rewired.unionByName(selfed).distinct()
 
 
 def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:

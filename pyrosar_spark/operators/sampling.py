@@ -12,12 +12,9 @@ scoring (reference analog: the catalog-side `select` narrowing at
    web, 5B of code, ..."), hash-ordered so the sample is reproducible
    and order-independent.
 
-Both ship an EXACT mode (window-ranked, oracle-reproducible in any SQL
-engine) and a THRESHOLD scale mode that replaces the corpus-wide
-window sort with a tiny aggregate + broadcast join — the shape you run
-at 10^12 documents, where even one rank-window per group is a full
-sort of the corpus. Exact mode integer-compares ``rn * 100 <= cnt *
-pct`` so no float boundary can disagree between engines.
+Both are exact: window-ranked, oracle-reproducible in any SQL engine.
+:func:`quality_filter` integer-compares ``rn * 100 <= cnt * pct`` so
+no float boundary can disagree between engines.
 """
 
 from __future__ import annotations
@@ -35,22 +32,14 @@ def quality_filter(
     by: str = "lang",
     score_col: Column | None = None,
     id_col: str = "doc_id",
-    mode: str = "exact",
 ) -> DataFrame:
     """Keep the best ``pct`` percent of rows per ``by`` group.
 
-    ``mode='exact'``: one rank window per group (sort shuffle) —
-    deterministic tiebreak on ``id_col``, kept iff
-    ``rn * 100 <= group_count * pct`` (pure integer math; a float
-    ``ceil(frac * cnt)`` can round differently across engines).
-    ``mode='threshold'``: approximate scale path — per-group
-    ``percentile_approx`` threshold (partial-aggregatable, rows never
-    sort), broadcast back, filter. At design scale the exact window is
-    a corpus-wide sort per group; the threshold plan touches each row
-    twice with no sort. Output: input columns + ``score``.
+    One rank window per group (sort shuffle) — deterministic tiebreak
+    on ``id_col``, kept iff ``rn * 100 <= group_count * pct`` (pure
+    integer math; a float ``ceil(frac * cnt)`` can round differently
+    across engines). Output: input columns + ``score``.
     """
-    if mode not in ("exact", "threshold"):
-        raise ValueError(f"unknown mode {mode!r}")
     if not 0 < pct <= 100:
         raise ValueError(f"pct must be in (0, 100], got {pct}")
     if score_col is None:
@@ -58,20 +47,6 @@ def quality_filter(
 
         score_col = quality_score(F.col("text"))
     scored = df.withColumn("score", score_col)
-    if mode == "threshold":
-        thr = (
-            scored.groupBy(by)
-            .agg(
-                F.percentile_approx(
-                    "score", 1.0 - pct / 100.0, 10_000
-                ).alias("_thr")
-            )
-        )
-        return (
-            scored.join(F.broadcast(thr), by)
-            .where(F.col("score") >= F.col("_thr"))
-            .drop("_thr")
-        )
     w = W.partitionBy(by).orderBy(F.col("score").desc(), F.col(id_col))
     return (
         scored.select(

@@ -66,33 +66,25 @@ def cover_cells(
     )
 
 
-def spatial_join(
-    scenes: DataFrame,
-    aois: DataFrame,
-    cell_deg: float = CELL_DEG,
-    broadcast_aoi: bool = True,
-    scene_keys: list[str] | None = None,
-    aoi_keys: list[str] | None = None,
-) -> DataFrame:
+def spatial_join(scenes: DataFrame, aois: DataFrame) -> DataFrame:
     """Scene × AOI polygon-intersect join (J1 at many-AOI scale).
 
-    ``scenes`` needs bbox cols + the flat ``ring`` column; ``aois`` needs
-    ``aoi_id``, bbox cols (``a_xmin``...) and ``a_ring``.
-    Returns scene keys × ``aoi_id`` candidate-refined pairs.
+    ``scenes`` needs ``doc_id``, bbox cols + the flat ``ring`` column;
+    ``aois`` needs ``aoi_id``, bbox cols (``a_xmin``...) and ``a_ring``.
+    Returns the intersecting (``doc_id``, ``aoi_id``) pairs. Both sides
+    are covered by ``CELL_DEG`` grid cells and the AOI cover is
+    broadcast: the AOI side is the small one.
 
     The exact intersect is JVM column expressions
     (:func:`rings_intersect_jvm` — arbitrary simple polygons,
     touch-inclusive), so the refine runs no Python worker (round 5,
     BENCH/BASELINE.md).
     """
-    scene_keys = scene_keys or ["doc_id"]
     if "a_ring" not in aois.columns:
         raise ValueError("aois must carry a_ring + a_xmin/a_xmax/a_ymin/a_ymax")
-    a = cover_cells(aois, "a_xmin", "a_xmax", "a_ymin", "a_ymax", cell_deg, out="cell")
-    s = cover_cells(scenes, cell_deg=cell_deg, out="cell")
-    if broadcast_aoi:
-        a = F.broadcast(a)
-    cand = s.join(a, on="cell", how="inner")
+    a = cover_cells(aois, "a_xmin", "a_xmax", "a_ymin", "a_ymax", out="cell")
+    s = cover_cells(scenes, out="cell")
+    cand = s.join(F.broadcast(a), on="cell", how="inner")
     # report-once dedup (r6, guide §2.4): a bbox pair shares several
     # cells, but exactly ONE of them is the canonical common cell —
     # the cell of the covers' min common corner, (max(floor(ymin/s),
@@ -103,7 +95,7 @@ def spatial_join(
     # one candidate row per pair MAP-SIDE, replacing the
     # dropDuplicates whose SortAggregate sorted every candidate row
     # (with its fat ring arrays) through a full Exchange.
-    sd = float(cell_deg)
+    sd = CELL_DEG
     n_lon = int(round(360.0 / sd))
     canon = (
         F.greatest(
@@ -116,8 +108,9 @@ def spatial_join(
         ).cast("long")
         + int(round(180 / sd))
     )
-    keep = scene_keys + ["ring"] + (aoi_keys or ["aoi_id"]) + ["a_ring"]
-    cand = cand.where(F.col("cell") == canon).select(*keep)
+    cand = cand.where(F.col("cell") == canon).select(
+        "doc_id", "ring", "aoi_id", "a_ring"
+    )
     refined = cand.where(
         F.col("ring").isNotNull() & rings_intersect_jvm("ring", "a_ring")
     )

@@ -1,16 +1,14 @@
-"""dedup_clusters(algorithm="star"): alternating large-star/small-star.
+"""dedup_clusters on graph shapes: min-label propagation against an
+independent union-find.
 
-The published scheme (Kiveris et al., SoCC 2014) converges in O(log d)
-rounds where min-label propagation needs O(d) — the case that matters
-is DEEP components (transitive near-dup chains). Tests pin:
- - label-for-label equality with the minlabel path on random graphs
-   across densities (the oracle for the new code path);
- - the capability gain itself: a 60-deep chain raises under minlabel's
-   default round budget but finishes in a handful of star rounds;
- - the convergence test's exactness: a child holding two distinct
-   parents is NOT converged even though no node is both child and
-   parent (the state test (a) alone would wrongly accept);
- - the non-convergence raise.
+Tests pin:
+ - label-for-label equality with a classic union-find on random graphs
+   across densities and on hypothesis-generated multigraphs;
+ - deep components: a chain deeper than the default round budget raises
+   and says to raise ``max_iter``; with ``max_iter`` at its diameter it
+   converges to one root;
+ - duplicate pairs, self-pairs, the empty graph, and a hub that is not
+   the component min.
 """
 
 from __future__ import annotations
@@ -18,13 +16,10 @@ from __future__ import annotations
 import random
 
 import pytest
-from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pyrosar_spark.operators.dedup import (
-    _star_components,
-    dedup_clusters,
-)
+from pyrosar_spark.operators.dedup import dedup_clusters
 
 
 def _pairs_df(spark, pairs):
@@ -35,80 +30,6 @@ def _pairs_df(spark, pairs):
 
 def _labels(df) -> dict:
     return {r["v"]: r["cluster_id"] for r in df.collect()}
-
-
-def test_star_matches_minlabel_on_random_graphs(spark):
-    rng = random.Random(42)
-    for trial, (n, m) in enumerate([(30, 15), (40, 60), (25, 120)]):
-        pairs = {
-            tuple(sorted((f"d{rng.randrange(n):03d}", f"d{rng.randrange(n):03d}")))
-            for _ in range(m)
-        }
-        pairs = [(a, b) for a, b in pairs if a != b]
-        df = _pairs_df(spark, pairs)
-        star = _labels(dedup_clusters(df, algorithm="star"))
-        minl = _labels(dedup_clusters(df, max_iter=50, algorithm="minlabel"))
-        assert star == minl, f"trial {trial}: star != minlabel"
-
-
-def test_deep_chain_is_logarithmic_where_minlabel_exhausts(spark):
-    chain = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(60)]
-    df = _pairs_df(spark, chain)
-
-    # minlabel: O(diameter) rounds — the default 20-round budget raises
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(df, algorithm="minlabel")
-
-    # star: converges comfortably inside the same budget, in few rounds
-    labels, rounds = _star_components(df, max_iter=20)
-    assert rounds <= 8, f"expected O(log d) rounds, used {rounds}"
-    got = _labels(labels)
-    assert set(got) == {f"c{i:03d}" for i in range(61)}
-    assert set(got.values()) == {"c000"}
-
-
-def test_two_node_and_duplicate_pairs(spark):
-    df = _pairs_df(spark, [("x2", "x1"), ("x1", "x2"), ("x9", "x8")])
-    got = _labels(dedup_clusters(df, algorithm="star"))
-    assert got == {"x1": "x1", "x2": "x1", "x8": "x8", "x9": "x8"}
-
-
-def test_self_pairs_and_empty_graph(spark):
-    # self-pairs (a == b) vanish from the oriented edge list; isolated
-    # self-pair vertices must still come back as their own roots, and a
-    # self-pair on a vertex with real edges must not shadow the
-    # component min — both algorithms, same answer
-    df = _pairs_df(spark, [("s1", "s1"), ("x2", "x1"), ("x2", "x2")])
-    want = {"s1": "s1", "x1": "x1", "x2": "x1"}
-    assert _labels(dedup_clusters(df, algorithm="star")) == want
-    assert _labels(dedup_clusters(df, algorithm="minlabel")) == want
-
-    # empty graph: SUM over zero rows is NULL in Spark — minlabel must
-    # read it as converged (zero changes), not loop to the raise
-    empty = _pairs_df(spark, [])
-    assert _labels(dedup_clusters(empty, algorithm="minlabel")) == {}
-    assert _labels(dedup_clusters(empty, algorithm="star")) == {}
-
-
-def test_multi_parent_state_is_not_declared_converged(spark):
-    # a star graph whose hub is NOT the component min: 5 is connected to
-    # 1,2,3 — after phase mixes, children can transiently carry several
-    # parents; the structural test must keep iterating until each child
-    # has exactly one parent and the root is the min
-    df = _pairs_df(spark, [("n5", "n1"), ("n5", "n2"), ("n5", "n3")])
-    got = _labels(dedup_clusters(df, algorithm="star"))
-    assert got == {"n1": "n1", "n2": "n1", "n3": "n1", "n5": "n1"}
-
-
-def test_nonconvergence_raises(spark):
-    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(40)]
-    with pytest.raises(RuntimeError, match="star"):
-        dedup_clusters(_pairs_df(spark, chain), max_iter=1, algorithm="star")
-
-
-def test_unknown_algorithm_rejected(spark):
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        dedup_clusters(_pairs_df(spark, [("a", "b")]), algorithm="bogus")
 
 
 def _union_find_labels(pairs) -> dict:
@@ -129,6 +50,60 @@ def _union_find_labels(pairs) -> dict:
     return {v: find(v) for v in parent}
 
 
+def test_minlabel_matches_union_find_on_random_graphs(spark):
+    rng = random.Random(42)
+    for trial, (n, m) in enumerate([(30, 15), (40, 60), (25, 120)]):
+        pairs = {
+            tuple(sorted((f"d{rng.randrange(n):03d}", f"d{rng.randrange(n):03d}")))
+            for _ in range(m)
+        }
+        pairs = [(a, b) for a, b in pairs if a != b]
+        got = _labels(dedup_clusters(_pairs_df(spark, pairs), max_iter=50))
+        assert got == _union_find_labels(pairs), f"trial {trial}"
+
+
+def test_nonconvergence_raises(spark):
+    # a 25-deep chain has diameter 25 > the default 20-round budget
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(25)]
+    with pytest.raises(RuntimeError, match="raise max_iter"):
+        dedup_clusters(_pairs_df(spark, chain))
+
+
+def test_deep_chain_converges_with_max_iter_at_diameter(spark):
+    chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(25)]
+    got = _labels(dedup_clusters(_pairs_df(spark, chain), max_iter=25))
+    assert set(got) == {f"c{i:02d}" for i in range(26)}
+    assert set(got.values()) == {"c00"}
+
+
+def test_two_node_and_duplicate_pairs(spark):
+    df = _pairs_df(spark, [("x2", "x1"), ("x1", "x2"), ("x9", "x8")])
+    got = _labels(dedup_clusters(df))
+    assert got == {"x1": "x1", "x2": "x1", "x8": "x8", "x9": "x8"}
+
+
+def test_self_pairs_and_empty_graph(spark):
+    # an isolated self-pair vertex comes back as its own root, and a
+    # self-pair on a vertex with real edges does not shadow the
+    # component min
+    df = _pairs_df(spark, [("s1", "s1"), ("x2", "x1"), ("x2", "x2")])
+    want = {"s1": "s1", "x1": "x1", "x2": "x1"}
+    assert _labels(dedup_clusters(df)) == want
+
+    # empty graph: SUM over zero rows is NULL in Spark — it must read
+    # as converged (zero changes), not loop to the raise
+    assert _labels(dedup_clusters(_pairs_df(spark, []))) == {}
+
+
+def test_multi_parent_state_is_not_declared_converged(spark):
+    # a star graph whose hub is NOT the component min: n5 is connected
+    # to n1, n2, n3. The seeded first hop labels n5 -> n1 but leaves
+    # n2, n3 on themselves; that state must not read as converged
+    df = _pairs_df(spark, [("n5", "n1"), ("n5", "n2"), ("n5", "n3")])
+    got = _labels(dedup_clusters(df))
+    assert got == {"n1": "n1", "n2": "n1", "n3": "n1", "n5": "n1"}
+
+
 @given(
     edges=st.lists(
         st.tuples(
@@ -144,8 +119,9 @@ def _union_find_labels(pairs) -> dict:
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_star_matches_union_find(spark, edges):
-    pairs = [(f"v{a:02d}", f"v{b:02d}") for a, b in edges if a != b]
-    assume(pairs)
-    got = _labels(dedup_clusters(_pairs_df(spark, pairs), algorithm="star"))
+def test_minlabel_matches_union_find(spark, edges):
+    # self-pairs (a == b) stay in: each is its own root unless joined.
+    # 50 edges span at most 50 hops, so max_iter=50 always suffices
+    pairs = [(f"v{a:02d}", f"v{b:02d}") for a, b in edges]
+    got = _labels(dedup_clusters(_pairs_df(spark, pairs), max_iter=50))
     assert got == _union_find_labels(pairs)
