@@ -85,15 +85,6 @@ SPAN_SCHEMA = "array<struct<kind:string,text:string,media_ref:string,offset:int>
 
 DOC_SCHEMA = f"doc_id string, spans {SPAN_SCHEMA}"
 
-# schema of the JSON payload inside a scene_meta span
-META_JSON_SCHEMA = (
-    "sensor string, acquisition_mode string, product string, orbit string, "
-    "start string, stop string, orbitNumber_abs int, orbitNumber_rel int, "
-    "cycleNumber int, frameNumber int, samples int, lines int, "
-    "polarizations array<string>, coordinates array<array<double>>, "
-    "projection string, spacing array<double>, scene string"
-)
-
 
 def _u(seed: int, tag: str) -> F.Column:
     """Deterministic uniform [0,1) derived from the row id."""

@@ -27,8 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-TYPE_RANK = {"POE": 0, "RES": 1}
-
 
 def osv_match(
     scenes: DataFrame,

@@ -32,8 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.dedup import (
-    _norm_tokens,
-    _spread,
+    _common_hashes,
+    _tokens,
     bind,
     portable_hash64,
 )
@@ -101,9 +101,7 @@ def strip_boilerplate_chunks(
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     if hash_mode != "md5":
         raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
-    d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
-    d = bind(d, "_tk", _norm_tokens(F.col(text_col)))
-    d = bind(d, "_ck", _chunks(F.col("_tk"), chunk_tokens))
+    d = bind(_tokens(df, text_col, id_col), "_ck", _chunks(F.col("_tk"), chunk_tokens))
     pos = d.select(
         "_id",
         F.size("_ck").alias("_n"),
@@ -117,15 +115,7 @@ def strip_boilerplate_chunks(
     # nothing survives the query. (A lazy persist here measured slower:
     # both concurrent AQE stages computed the frame.)
     pos = pos.withColumn("_h", h).localCheckpoint()
-    boiler = (
-        pos.select("_h", "_id")
-        .distinct()
-        .groupBy("_h")
-        .agg(F.count("*").alias("_docs"))
-        .where(F.col("_docs") >= min_docs)
-        .select("_h")
-    )
-    kept = pos.join(boiler, "_h", "left_anti")
+    kept = pos.join(_common_hashes(pos, min_docs), "_h", "left_anti")
     return (
         kept.groupBy("_id", "_n")
         .agg(
@@ -177,12 +167,11 @@ def token_commonness(
     """
     if rare_max_count < 1:
         raise ValueError(f"rare_max_count must be >= 1, got {rare_max_count}")
-    d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
     # r6: ``toks`` feeds both the vocabulary aggregation and the score
     # join — localCheckpoint pins the tokenize+explode to one
     # evaluation (same double-compute fix as dup_ngram_spans).
     toks = (
-        bind(d, "_tk", _norm_tokens(F.col(text_col)))
+        _tokens(df, text_col, id_col)
         .select("_id", F.explode("_tk").alias("_t"))
         .localCheckpoint()
     )

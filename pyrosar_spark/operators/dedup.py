@@ -55,8 +55,6 @@ from pyspark.sql import types as T
 TOKEN = "[a-z0-9]+"
 _TOKEN_RE = re.compile(TOKEN)
 
-_MASK60 = (1 << 60) - 1
-
 
 def minhash_masks(n_hashes: int) -> list[int]:
     """Deterministic 60-bit XOR masks for the derived minhash family —
@@ -87,7 +85,7 @@ def shingle_minhash_udf(n_hashes: int = 16, shingle_k: int = 2):
 
     One md5 per distinct shingle (bit-portable 60-bit form), signature
     via XOR masks + min. Shingles preserve first-occurrence order and
-    match :func:`shingles` / the DuckDB ``list_distinct`` oracle.
+    match the DuckDB ``list_distinct`` oracle.
     """
     masks = np.array(minhash_masks(n_hashes), dtype=np.int64)
 
@@ -171,30 +169,6 @@ def portable_hash64(col: Column, seed: int) -> Column:
     """
     salted = F.concat(col, F.lit(f"#{seed}"))
     return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
-
-
-def shingles(text: Column, k: int = 2) -> Column:
-    """Distinct k-token shingles of normalized text (JVM higher-order).
-    The token expression lands inside the lambda, so each shingle
-    re-tokenizes ``text``; over a frame, bind the tokens first and use
-    :func:`token_shingles`."""
-    return token_shingles(_norm_tokens(text), k)
-
-
-def token_shingles(toks: Column, k: int = 2) -> Column:
-    """Distinct k-token shingles of a token array (a bound column, so
-    the lambda reads it instead of re-deriving it)."""
-    n = F.size(toks)
-    # NB: Spark's sequence(1, 0) yields a DESCENDING [1, 0] — guard the
-    # short-text case explicitly instead of relying on an empty range.
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(toks, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
 
 
 def exact_dedup(
@@ -303,6 +277,51 @@ def _spread(df: DataFrame, target: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(_id, text_col, _tk): the frame spread by input bytes
+    (:func:`_spread`), then its normalized tokens bound once per row
+    (:func:`bind`) — the common prefix of the corpus text operators."""
+    d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
+    return bind(d, "_tk", _norm_tokens(F.col(text_col)))
+
+
+def _gram_hashes(d: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id_col, pos, _h): one row per ``n``-token gram of the bound token
+    column ``_tk``, at its 1-based start position, with the gram's md5-60
+    hash (:func:`portable_hash64`). Positions explode (one Generate)
+    instead of a per-gram ``transform`` lambda, so the frame compiles.
+
+    Spark's ``sequence(1, 0)`` is the DESCENDING ``[1, 0]``, not empty:
+    text shorter than ``n`` tokens (and NULL text) is guarded to no
+    positions explicitly."""
+    gram = F.array_join(F.slice(F.col("_tk"), F.col("pos"), n), " ")
+    return d.select(
+        id_col,
+        "_tk",
+        F.explode(
+            F.when(
+                F.size("_tk") >= n,
+                F.sequence(F.lit(1), F.size("_tk") - (n - 1)),
+            ).otherwise(F.array().cast("array<int>"))
+        ).alias("pos"),
+    ).select(id_col, "pos", portable_hash64(gram, 0).alias("_h"))
+
+
+def _common_hashes(hashes: DataFrame, min_docs: int) -> DataFrame:
+    """(_h): the hashes of an (_id, _h) frame present in at least
+    ``min_docs`` distinct documents. A two-column distinct, then a
+    count by hash: both partial-aggregatable, so a viral hash
+    contributes one row per document, never a list."""
+    return (
+        hashes.select("_h", "_id")
+        .distinct()
+        .groupBy("_h")
+        .agg(F.count("*").alias("_nd"))
+        .where(F.col("_nd") >= min_docs)
+        .select("_h")
+    )
+
+
 def shingle_frame(
     df: DataFrame,
     text_col: str = "text",
@@ -356,30 +375,50 @@ def _lsh_bands(sh_frame: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
+# a key holds at most one row per document: a cap this large can never
+# be exceeded (callers pass 1 << 40 for "no cap")
+_UNBOUNDED_CAP = 1 << 39
+
+
+def _over_cap(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """(keys..., _n): the keys of ``df`` holding more than ``cap`` rows,
+    with their row count — the one hot-key aggregation of the dedup
+    family. A count, so map-side partial: bytes per key, never a list.
+
+    A cap of None or of at least 2^39 is unbounded and the frame is
+    empty: its filter is the constant false, which Catalyst folds to an
+    empty relation, so the aggregation leaves the plan — and with it the
+    anti-join of :func:`_drop_over_cap`."""
+    counts = df.groupBy(*keys).agg(F.count("*").alias("_n"))
+    if cap is None or cap >= _UNBOUNDED_CAP:
+        return counts.where(F.lit(False))
+    return counts.where(F.col("_n") > cap)
+
+
+def _drop_over_cap(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """``df`` without the rows of its over-cap keys (:func:`_over_cap`):
+    the tiny hot-key set is broadcast and anti-joined BEFORE any list is
+    collected or pair join runs, so neither ever sees a viral key
+    (ADVICE r1: cap aggregation memory, not just the join). Columns keep
+    ``df``'s order."""
+    hot = F.broadcast(_over_cap(df, keys, cap).select(*keys))
+    return df.join(hot, on=keys, how="left_anti").select(*df.columns)
+
+
+def _dropped_stats(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """One row: the number of over-cap keys (``n_dropped_buckets``) and
+    their total membership (``n_dropped_members``) — what
+    :func:`_drop_over_cap` removes."""
+    return _over_cap(df, keys, cap).agg(
+        F.count("*").alias("n_dropped_buckets"),
+        F.coalesce(F.sum("_n"), F.lit(0)).alias("n_dropped_members"),
+    )
+
+
 def _candidate_pairs(bands: DataFrame, max_bucket: int) -> DataFrame:
-    # hot-bucket guard BEFORE any list materialization: the count agg is
-    # map-side partial (bytes per key), the over-cap key set is tiny and
-    # broadcast anti-joined, then collect_list only ever sees bounded
-    # buckets (ADVICE r1: cap aggregation memory, not just the join).
-    # r6: when the cap is effectively unbounded (callers pass 1<<40 to
-    # get uncapped semantics), no bucket can ever exceed it — a bucket
-    # holds at most one row per document and 2^39 documents would
-    # overflow the cap check itself long before this path matters — so
-    # the guard's extra aggregation pass + broadcast anti-join are dead
-    # plan weight and are skipped. Semantics are identical; any real
-    # production cap (≤ 2^39) keeps the full guard.
-    if max_bucket >= (1 << 39):
-        clean = bands
-    else:
-        hot = (
-            bands.groupBy("band", "key")
-            .agg(F.count("*").alias("n"))
-            .where(F.col("n") > max_bucket)
-            .select("band", "key")
-        )
-        clean = bands.join(F.broadcast(hot), on=["band", "key"], how="left_anti")
     buckets = (
-        clean.groupBy("band", "key")
+        _drop_over_cap(bands, ["band", "key"], max_bucket)
+        .groupBy("band", "key")
         .agg(F.collect_list("_id").alias("ids"))
         .where(F.size("ids") >= 2)
     )
@@ -405,16 +444,12 @@ def dropped_bucket_stats(
     alongside :func:`near_dup_pairs` when the cap is active so drops
     are recorded, not silent."""
     sh = shingle_frame(df, text_col, id_col, n_hashes, shingle_k)
-    bands = _lsh_bands(sh, n_hashes, n_bands)
-    return (
-        bands.groupBy("band", "key")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bucket)
-        .agg(
-            F.count("*").alias("n_dropped_buckets"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n_dropped_members"),
-        )
-    )
+    return _dropped_stats(_lsh_bands(sh, n_hashes, n_bands), ["band", "key"], max_bucket)
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact set Jaccard of two shingle arrays, rounded to 6 places."""
+    return F.round(F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 6)
 
 
 def jaccard_pairs(
@@ -424,23 +459,28 @@ def jaccard_pairs(
     read from the shingle frame (:func:`shingle_frame`) the candidate
     stage already computed."""
     sh = sh_frame.select("_id", "_sh")
-    out = (
+    return (
         pairs.join(
             sh.withColumnRenamed("_id", "a").withColumnRenamed("_sh", "sh_a"), on="a"
         )
         .join(sh.withColumnRenamed("_id", "b").withColumnRenamed("_sh", "sh_b"), on="b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
     )
-    return out
+
+
+def _live_shingles(
+    df: DataFrame, text_col: str, id_col: str, n_hashes: int, shingle_k: int
+) -> DataFrame:
+    """:func:`shingle_frame`, persisted, materialized and registered for
+    :func:`release_shingle_cache`. Materialized before it fans out: a
+    cached frame referenced twice inside one action would race its own
+    cache fill."""
+    sh = shingle_frame(df, text_col, id_col, n_hashes, shingle_k).persist()
+    sh.count()
+    _LIVE_SHINGLE_CACHE.append(sh)
+    return sh
 
 
 def near_dup_pairs(
@@ -473,9 +513,7 @@ def near_dup_pairs(
     the returned pairs have been consumed.
     """
     release_shingle_cache()
-    sh = shingle_frame(df, text_col, id_col, n_hashes, shingle_k).persist()
-    sh.count()  # materialize before double-reference
-    _LIVE_SHINGLE_CACHE.append(sh)
+    sh = _live_shingles(df, text_col, id_col, n_hashes, shingle_k)
     cand = _candidate_pairs(_lsh_bands(sh, n_hashes, n_bands), max_bucket)
     pairs = jaccard_pairs(cand, sh, threshold).persist()
     _LIVE_SHINGLE_CACHE.append(pairs)
@@ -841,22 +879,8 @@ def dup_ngram_spans(
         raise ValueError(f"n must be >= 1, got {n}")
     if hash_mode != "md5":
         raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
-    d = _spread(df).select(F.col(id_col).alias("_id"), F.col(text_col))
-    d = bind(d, "_tk", _norm_tokens(F.col(text_col)))
-    gram = F.array_join(F.slice(F.col("_tk"), F.col("pos"), n), " ")
-    h = portable_hash64(gram, 0)
     grams = (
-        d.select(
-            "_id",
-            "_tk",
-            F.explode(
-                F.when(
-                    F.size("_tk") >= n,
-                    F.sequence(F.lit(1), F.size("_tk") - (n - 1)),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("pos"),
-        )
-        .select("_id", "pos", h.alias("_h"))
+        _gram_hashes(_tokens(df, text_col, id_col), "_id", n)
         # r6: the gram frame feeds BOTH the multiplicity aggregation and
         # the position join-back — without materialization the plan
         # re-runs the whole tokenize+slice+hash subtree (the operator's
@@ -868,14 +892,7 @@ def dup_ngram_spans(
         # computes from the parquet inputs.
         .localCheckpoint()
     )
-    dup_hashes = (
-        grams.select("_h", "_id")
-        .distinct()
-        .groupBy("_h")
-        .agg(F.count("*").alias("_nd"))
-        .where(F.col("_nd") >= min_docs)
-        .select("_h")
-    )
+    dup_hashes = _common_hashes(grams, min_docs)
     pos = grams.join(dup_hashes, "_h").select("_id", "pos")
     w = W.partitionBy("_id").orderBy("pos")
     brk = (
@@ -942,12 +959,8 @@ def cross_near_dup_pairs(
     are not comparable.
     """
     release_shingle_cache()
-    sh_c = shingle_frame(corpus, text_col, id_col, n_hashes, shingle_k).persist()
-    sh_c.count()  # materialize before double-reference
-    _LIVE_SHINGLE_CACHE.append(sh_c)
-    sh_r = shingle_frame(refs, text_col, id_col, n_hashes, shingle_k).persist()
-    sh_r.count()
-    _LIVE_SHINGLE_CACHE.append(sh_r)
+    sh_c = _live_shingles(corpus, text_col, id_col, n_hashes, shingle_k)
+    sh_r = _live_shingles(refs, text_col, id_col, n_hashes, shingle_k)
     bands_c = _lsh_bands(sh_c, n_hashes, n_bands)
     bands_r = (
         _lsh_bands(sh_r, n_hashes, n_bands).withColumnRenamed("_id", "_rid")
@@ -957,27 +970,13 @@ def cross_near_dup_pairs(
         .select(F.col("_id").alias("_a"), F.col("_rid").alias("_b"))
         .distinct()
     )
-    if max_per_ref is not None:
-        hot = (
-            cand.groupBy("_b")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > max_per_ref)
-            .select("_b")
-        )
-        cand = cand.join(F.broadcast(hot), "_b", "left_anti")
+    cand = _drop_over_cap(cand, ["_b"], max_per_ref)
     shc = sh_c.select(F.col("_id").alias("_a"), F.col("_sh").alias("sh_a"))
     shr = sh_r.select(F.col("_id").alias("_b"), F.col("_sh").alias("sh_b"))
     return (
         cand.join(shc, "_a")
         .join(F.broadcast(shr), "_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= threshold)
         .select(
             F.col("_a").alias(id_col),

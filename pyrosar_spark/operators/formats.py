@@ -519,7 +519,7 @@ def identify_spans(docs: DataFrame) -> DataFrame:
     # fields; one from_json behind a Generate barrier). Field names and
     # types come from the SAME table ingest.docs_to_scenes parses from
     # (round-4 review: a hand-copied schema string would silently drift
-    # if META_JSON_SCHEMA changes).
+    # if _META_FIELD_TYPES changes).
     from pyrosar_spark.operators.ingest import _META_FIELD_TYPES
 
     json_needed = {

@@ -103,7 +103,8 @@ def scene_meta_text(spans: Column) -> Column:
     return F.try_element_at(metas, F.lit(1)).text
 
 
-# meta-JSON field types in canonical order (must mirror META_JSON_SCHEMA)
+# meta-JSON field types in canonical order: the one schema of the scene_meta
+# span's JSON payload
 _META_FIELD_TYPES = [
     ("sensor", "string"), ("acquisition_mode", "string"), ("product", "string"),
     ("orbit", "string"), ("start", "string"), ("stop", "string"),

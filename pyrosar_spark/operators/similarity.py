@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from pyrosar_spark.operators.dedup import _drop_over_cap, _dropped_stats, portable_hash64
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -171,32 +173,14 @@ def lsh_topk(
     the bucket id is the Iceberg clustering key, so a probe reads only
     matching files (partition pruning instead of a full scan).
     """
-    planes3 = _planes3(n_bits, n_tables, dim, seed)
-
-    def bucketed(df: DataFrame, vec: str, bkts_out: str) -> DataFrame:
-        out = with_const(df, "_planes", planes3, _PLANES3_T)
-        return out.withColumn(
-            bkts_out,
-            F.transform(F.col("_planes"), lambda tp: lsh_bucket_col(F.col(vec), tp)),
-        ).select(
-            *df.columns, bkts_out,
-            F.posexplode(F.col(bkts_out)).alias("_table", "_bucket"),
-        )
-
-    it_b = bucketed(
-        items.select(
-            F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("item_vec")
-        ),
-        "item_vec",
-        "_ib",
+    it_b = _bucketed_tables(items, id_col, vec_col, n_bits, n_tables, dim, seed).select(
+        F.col("_id").alias("item_id"), F.col("_vec").alias("item_vec"),
+        F.col("_bkts").alias("_ib"), "_table", "_bucket",
     )
-    q_b = bucketed(
-        queries.select(
-            F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("q_vec")
-        ),
-        "q_vec",
-        "_qb",
-    ).withColumnRenamed("_qb", "_qb_all")
+    q_b = _bucketed_tables(queries, id_col, vec_col, n_bits, n_tables, dim, seed).select(
+        F.col("_id").alias("q_id"), F.col("_vec").alias("q_vec"),
+        F.col("_bkts").alias("_qb_all"), "_table", "_bucket",
+    )
     # report-once dedup (r6, guide §2.4): a (query, item) pair colliding
     # in several tables matched once per table; both sides' full bucket
     # arrays ride the joined row, so the FIRST colliding table index is
@@ -208,7 +192,6 @@ def lsh_topk(
     # dropDuplicates: its max_bucket anti-join can remove exactly the
     # first-colliding row while the pair legitimately survives via a
     # later table.)
-    q_b_exploded = F.broadcast(q_b)
     first_shared = (
         F.array_position(
             F.zip_with("_ib", "_qb_all", lambda a, b: a == b), F.lit(True)
@@ -216,7 +199,7 @@ def lsh_topk(
         - 1
     )
     cands = (
-        it_b.join(q_b_exploded, on=["_table", "_bucket"])
+        it_b.join(F.broadcast(q_b), on=["_table", "_bucket"])
         .where(F.col("item_id") != F.col("q_id"))
         .where(F.col("_table") == first_shared)
         .drop("_table", "_bucket", "_ib", "_qb_all")
@@ -246,11 +229,15 @@ def _planes3(n_bits: int, n_tables: int, dim: int, seed: int) -> list:
 
 
 def _bucketed_tables(
-    it: DataFrame, n_bits: int, n_tables: int, dim: int, seed: int
+    df: DataFrame, id_col: str, vec_col: str,
+    n_bits: int, n_tables: int, dim: int, seed: int,
 ) -> DataFrame:
-    """(_id, _vec, _table, _bucket) — every item in its bucket per LSH
-    table, one frame; planes ride a broadcast one-row column
-    (:func:`with_const`), buckets computed in a single projection."""
+    """(_id, _vec, _bkts, _table, _bucket) — every vector (cast to
+    double) in its bucket per LSH table, one row per table. ``_bkts``
+    holds the row's buckets of all tables, for a first-shared-table
+    rule. The planes ride a broadcast one-row column
+    (:func:`with_const`); the buckets are computed in one projection."""
+    it = df.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_vec"))
     out = with_const(it, "_planes", _planes3(n_bits, n_tables, dim, seed), _PLANES3_T)
     return (
         out.withColumn(
@@ -262,6 +249,7 @@ def _bucketed_tables(
         .select(
             "_id",
             "_vec",
+            "_bkts",
             F.posexplode(F.col("_bkts")).alias("_table", "_bucket"),
         )
     )
@@ -292,20 +280,15 @@ def cosine_dup_pairs(
     ONE bucket and would make the within-bucket self-join O(n²) in a
     single shuffle partition. Over-cap buckets are detected with a
     cheap count aggregation and anti-joined out BEFORE the self-join —
-    same policy as the MinHash path (dedup.py); count the drops with
-    :func:`dropped_embedding_bucket_stats`.
+    the same guard as the MinHash path (``dedup._drop_over_cap``), which
+    leaves the plan when ``max_bucket`` is unbounded (``1 << 40``);
+    count the drops with :func:`dropped_embedding_bucket_stats`.
     """
-    it = items.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_vec")
+    clean = _drop_over_cap(
+        _bucketed_tables(items, id_col, vec_col, n_bits, n_tables, dim, seed),
+        ["_table", "_bucket"],
+        max_bucket,
     )
-    b = _bucketed_tables(it, n_bits, n_tables, dim, seed)
-    hot = (
-        b.groupBy("_table", "_bucket")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bucket)
-        .select("_table", "_bucket")
-    )
-    clean = b.join(F.broadcast(hot), on=["_table", "_bucket"], how="left_anti")
     left = clean.select(F.col("_id").alias("a"), F.col("_vec").alias("va"),
                         "_table", "_bucket")
     right = clean.select(F.col("_id").alias("b"), F.col("_vec").alias("vb"),
@@ -335,19 +318,12 @@ def dropped_embedding_bucket_stats(
 ) -> DataFrame:
     """Observability for the ``max_bucket`` recall trade on the
     embedding path: one row with the over-cap bucket count and their
-    total membership (mirror of ``dedup.dropped_bucket_stats``)."""
-    it = items.select(
-        F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_vec")
-    )
-    return (
-        _bucketed_tables(it, n_bits, n_tables, dim, seed)
-        .groupBy("_table", "_bucket")
-        .agg(F.count("*").alias("n"))
-        .where(F.col("n") > max_bucket)
-        .agg(
-            F.count("*").alias("n_dropped_buckets"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n_dropped_members"),
-        )
+    total membership, the same statistic as
+    ``dedup.dropped_bucket_stats`` (``dedup._dropped_stats``)."""
+    return _dropped_stats(
+        _bucketed_tables(items, id_col, vec_col, n_bits, n_tables, dim, seed),
+        ["_table", "_bucket"],
+        max_bucket,
     )
 
 
@@ -369,8 +345,6 @@ def ivf_topk(
     The ``n_cells``-row collect is driver-side but O(n_cells); at scale
     the cell id doubles as the Iceberg clustering key so probes prune
     partitions instead of scanning."""
-    from pyrosar_spark.operators.dedup import portable_hash64
-
     cents = [
         (int(r["item_id"]), [float(x) for x in r["item_vec"]])
         for r in items.select(

@@ -11,10 +11,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.dedup import (
+    _gram_hashes,
     _norm_tokens,
     bind,
     portable_hash64,
-    token_shingles,
 )
 
 STOPWORDS = {
@@ -129,62 +129,32 @@ def contamination(
     set, with the hit count and the offending eval ids.
 
     Shape for 100 TB: the eval side is tiny (benchmarks are kB-MB) —
-    its distinct gram hashes are BROADCAST; the training side explodes
-    its per-doc-distinct gram hashes (JVM higher-order shingles — the
-    Arrow kernel in :mod:`dedup` is the swap-in if n-gram volume ever
-    makes this the bottleneck) and inner-joins the broadcast set
+    its distinct (eval id, gram hash) pairs are BROADCAST; the training
+    side explodes its gram hashes and inner-joins the broadcast set
     BEFORE any wide operator, so non-contaminated documents never
     survive the join and the only shuffles in the plan are over the
     tiny surviving (doc_id, hash, eval_id) rows (a round-4 review
     caught an earlier corpus-wide pre-join distinct — trillions of
-    rows shuffled at design scale for nothing; ``shingles`` is already
-    distinct within a document, and cross-collision dedup now happens
-    post-join). Grams hash with the engine-portable md5-60 form, so
-    SQL oracles reproduce the hits exactly.
+    rows shuffled at design scale for nothing; a gram repeated inside
+    one document is deduplicated post-join instead). Both sides lift
+    their grams with the one gram-hash table
+    (:func:`~pyrosar_spark.operators.dedup._gram_hashes`: tokens bound
+    once, then one exploded position per gram — no per-gram lambda),
+    hashed with the engine-portable md5-60 form, so SQL oracles
+    reproduce the hits exactly.
     """
-    # tokens bound first: the shingle lambda reads the bound array
-    # instead of re-tokenizing the eval text once per gram
     ev_tk = bind(
         eval_docs.select(F.col(eval_id_col).alias("_eid"), F.col(text_col)),
         "_tk",
         _norm_tokens(F.col(text_col)),
     )
-    ev = F.broadcast(
-        ev_tk.select(
-            "_eid",
-            F.explode(
-                F.transform(
-                    token_shingles(F.col("_tk"), n),
-                    lambda g: portable_hash64(g, 0),
-                )
-            ).alias("_h"),
-        ).distinct()
-    )
-    # r6: the training side lifts gram hashes via the exploded-POSITION
-    # form (one Generate-barriered tokenize, then slice+array_join+hash
-    # per exploded position) instead of building each doc's distinct
-    # shingle array with interpreted higher-order lambdas — measured
-    # ~7× cheaper per gram on the dup_ngram_spans path. Per-doc
-    # duplicate grams that the old array_distinct removed pre-join are
-    # removed by the existing post-join dropDuplicates instead (the
-    # broadcast-join probe is cheaper than the distinct it skips), so
-    # the (doc, hash, eval) triple set — and every output row — is
-    # unchanged.
+    ev = F.broadcast(_gram_hashes(ev_tk, "_eid", n).select("_eid", "_h").distinct())
     tk = bind(
         docs.select(F.col(id_col), F.col(text_col)),
         "_tk",
         _norm_tokens(F.col(text_col)),
     )
-    gram = F.array_join(F.slice(F.col("_tk"), F.col("pos"), n), " ")
-    tr = tk.select(
-        F.col(id_col),
-        F.explode(
-            F.when(
-                F.size("_tk") >= n, F.sequence(F.lit(1), F.size("_tk") - (n - 1))
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("pos"),
-        "_tk",
-    ).select(F.col(id_col), portable_hash64(gram, 0).alias("_h"))
+    tr = _gram_hashes(tk, id_col, n)
     return (
         tr.join(ev, on="_h")
         .dropDuplicates([id_col, "_h", "_eid"])

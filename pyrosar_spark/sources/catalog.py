@@ -23,9 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SCENES_TABLE = "scenes"
-DUPLICATES_TABLE = "duplicates"
-
 
 def write_scenes(scenes: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Partitioned + sorted parquet layout (Iceberg-equivalent)."""

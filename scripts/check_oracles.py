@@ -4,13 +4,19 @@ oracle (row count + sorted-column value comparison)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# check the tree this script lives in, from any working directory: this
+# process imports from it first, and the Python workers get it on PYTHONPATH
+ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from pyrosar_spark.session import get_spark  # noqa: E402

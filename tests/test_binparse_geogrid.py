@@ -2,7 +2,12 @@
 
 from pyspark.sql import functions as F
 
-from pyrosar_spark.operators.binparse import FieldSpec, extract_be_ints, extract_fields
+from pyrosar_spark.operators.binparse import (
+    ERS_DSS_FIELDS,
+    FieldSpec,
+    extract_be_ints,
+    extract_fields,
+)
 from pyrosar_spark.operators.geogrid import geolocation_grid, incidence_stats
 
 
@@ -17,14 +22,9 @@ def _record() -> bytes:
 
 def test_extract_ascii_fields(spark):
     df = spark.createDataFrame([(bytearray(_record()),)], "rec binary")
-    specs = [
-        FieldSpec("orbit_number", 444, 8, "int"),
-        FieldSpec("incidence", 484, 8, "float"),
-        FieldSpec("start_time", 1814, 24, "str"),
-    ]
-    row = extract_fields(df, "rec", specs).first()
+    row = extract_fields(df, "rec", ERS_DSS_FIELDS).first()
     assert row.orbit_number == 12345
-    assert row.incidence == 23.17
+    assert row.incidence_center == 23.17
     assert row.start_time == "19960401T120000.000"
 
 

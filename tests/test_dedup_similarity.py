@@ -4,9 +4,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.dedup import (
+    _gram_hashes,
+    _md5_60,
+    _norm_tokens,
+    bind,
     exact_dedup,
     near_dup_pairs,
-    shingles,
     simhash64,
     simhash_pairs,
 )
@@ -40,11 +43,14 @@ def test_exact_dedup(docs_df):
 
 
 def test_shingles_short_text(spark):
-    df = spark.createDataFrame([("one",), ("",), ("a b c",)], "text string")
-    out = df.select(shingles(F.col("text"), 2).alias("sh")).collect()
-    assert out[0].sh == []
-    assert out[1].sh == []
-    assert sorted(out[2].sh) == ["a b", "b c"]
+    """The gram-hash table gives no grams for text shorter than n tokens
+    (Spark's sequence(1, 0) is [1, 0], not empty), nor for NULL text."""
+    df = spark.createDataFrame(
+        [(1, "one"), (2, ""), (3, "a b c"), (4, None)], "id long, text string"
+    )
+    tk = bind(df, "_tk", _norm_tokens(F.col("text")))
+    out = sorted(map(tuple, _gram_hashes(tk, "id", 2).collect()))
+    assert out == [(3, 1, _md5_60("a b#0")), (3, 2, _md5_60("b c#0"))]
 
 
 def test_minhash_finds_near_dups(docs_df):

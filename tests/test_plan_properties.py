@@ -194,6 +194,8 @@ def test_contamination_broadcasts_eval_and_never_shuffles_corpus(spark):
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
     n_ex = p.count("Exchange hashpartitioning")
     assert n_ex == 3, f"expected 3 hash exchanges, got {n_ex}:\n{p}"
+    # both sides lift grams as exploded positions, no per-gram lambda
+    assert "lambdafunction(" not in p, p
 
 
 def test_pack_documents_single_shuffle_on_key_and_shard(spark):

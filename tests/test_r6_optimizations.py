@@ -91,10 +91,21 @@ def test_simhash_multi_block_pair_reported_once(spark):
 
 
 def test_candidate_pairs_skips_dead_hot_guard(spark):
-    """max_bucket >= 2^39 can never trigger — the plan must not carry
-    the hot-bucket anti-join; a real cap must keep it. Pair sets agree
-    when no bucket is actually hot."""
-    from pyrosar_spark.operators.dedup import _candidate_pairs, _lsh_bands, shingle_frame
+    """A cap of None or >= 2^39 can never trigger — the plan must not
+    carry the hot-key anti-join; a real cap must keep it. Output agrees
+    when no key is actually hot. The one guard (dedup._drop_over_cap)
+    serves the LSH bands, the embedding buckets and the per-ref cap."""
+    from pyrosar_spark.operators.dedup import (
+        _candidate_pairs,
+        _lsh_bands,
+        cross_near_dup_pairs,
+        release_shingle_cache,
+        shingle_frame,
+    )
+    from pyrosar_spark.operators.similarity import cosine_dup_pairs
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     df = spark.createDataFrame(
         [(i, f"some shared text plus token{i}") for i in range(8)],
@@ -102,11 +113,29 @@ def test_candidate_pairs_skips_dead_hot_guard(spark):
     )
     sh = shingle_frame(df, "text", "doc_id", 8, 2)
     bands = _lsh_bands(sh, 8, 4)
-    unbounded = _candidate_pairs(bands, 1 << 40)
-    capped = _candidate_pairs(bands, 1000)
-    assert "LeftAnti" not in unbounded._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in capped._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, unbounded.collect())) == sorted(map(tuple, capped.collect()))
+    emb = spark.createDataFrame(
+        [(i, [1.0, 0.5 * i, 0.0, -1.0]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    refs = df.where("doc_id < 2")
+    builds = [  # (build(cap), its unbounded cap)
+        (lambda cap: _candidate_pairs(bands, cap), 1 << 40),
+        (
+            lambda cap: cosine_dup_pairs(emb, threshold=0.5, n_bits=2, dim=4, max_bucket=cap),
+            1 << 40,
+        ),
+        (lambda cap: cross_near_dup_pairs(df, refs, n_hashes=8, max_per_ref=cap), None),
+    ]
+    for build, unbounded in builds:
+        got = {}
+        for cap in (unbounded, 1000):
+            # read before the next build: cross_near_dup_pairs releases
+            # the shingle cache of the call before it
+            q = build(cap)
+            assert ("LeftAnti" in executed(q)) == (cap == 1000), cap
+            got[cap] = sorted(map(tuple, q.collect()))
+        assert got[unbounded] and got[unbounded] == got[1000]
+    release_shingle_cache()
 
 
 def test_stream_drain_restores_shuffle_partitions(spark, monkeypatch, request):
