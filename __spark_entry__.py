@@ -478,15 +478,14 @@ def _oracle_dir(sf_dir: str) -> str:
 
 
 # handoff paths already written BY THIS PROCESS. Every handoff name
-# maps to exactly one deterministic frame definition per sf (scenes,
-# osv, chips_bn, chips_tiles, geo_ads, docs, inc_rasters — the two
-# chips call sites select identical columns), so rewriting within a
-# process produces byte-identical files and only burns a full
-# parse+write job per QUERY CONSTRUCTION — ~1.5 s at sf0.001, paid
-# ~20× per contract run and on every bench rep. The first write per
-# process still overwrites, so a stale handoff left by an older code
-# version on disk can never leak in (the r4 multi-scale pinning
-# lesson: keys include the sf dir, never shared across scales).
+# maps to exactly one deterministic frame definition per sf (the
+# ``_HANDOFFS`` table below), so rewriting within a process produces
+# byte-identical files and only burns a full parse+write job per QUERY
+# CONSTRUCTION — ~1.5 s at sf0.001, paid ~20× per contract run and on
+# every bench rep. The first write per process still overwrites, so a
+# stale handoff left by an older code version on disk can never leak in
+# (the r4 multi-scale pinning lesson: keys include the sf dir, never
+# shared across scales).
 _HANDOFF_WRITTEN: set = set()
 
 
@@ -519,24 +518,67 @@ def _oracle_scan(name: str) -> str:
     return f"read_parquet('{_ORACLE_ROOT}/{_ORACLE_SF}/{name}.parquet/*.parquet')"
 
 
-def _scenes_handoff(spark, sf) -> DataFrame:
+def _scenes_frame(spark, sf) -> DataFrame:
     from pyrosar_spark.datagen import docs_from_corpus
     from pyrosar_spark.functions.temporal import seconds_col
     from pyrosar_spark.operators.ingest import docs_to_scenes
 
-    scenes = docs_to_scenes(docs_from_corpus(spark, sf)).select(
+    return docs_to_scenes(docs_from_corpus(spark, sf)).select(
         "doc_id", "sensor", "orbitNumber_rel", "outname_base", "start",
         "lines", "samples", "xmin", "xmax", "ymin", "ymax", "ring",
         seconds_col("start").alias("tsec"),
     )
-    return _handoff(scenes, "scenes", sf)
+
+
+def _chips_frame(spark, sf) -> DataFrame:
+    from pyrosar_spark.datagen import docs_from_corpus
+    from pyrosar_spark.operators.chips import synthetic_chips
+
+    return synthetic_chips(docs_from_corpus(spark, sf))
+
+
+def _chips_tiles_frame(spark, sf) -> DataFrame:
+    from pyrosar_spark.operators.chips import assign_chip_tiles
+
+    return assign_chip_tiles(_chips_frame(spark, sf)).select(
+        "media_ref", "tile_lat", "tile_lon", "tile_id", "ulx", "uly",
+        "xres", "yres", "width", "height", "area_or_point", "seed",
+    )
+
+
+def _datagen():
+    from pyrosar_spark import datagen
+
+    return datagen
+
+
+# The one definition of every oracle handoff frame: name -> function
+# (spark, sf) -> DataFrame. The queries (through :func:`_handoff_of`)
+# and :func:`_ensure_handoffs` both build from this table, so the
+# oracle always reads the frame the query wrote.
+_HANDOFFS: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "scenes": _scenes_frame,
+    "osv": lambda spark, sf: _datagen().generate_osv(spark, 2000, seed=42),
+    "chips_bn": lambda spark, sf: _chips_frame(spark, sf).select(
+        "media_ref", "width", "height", "seed"
+    ),
+    "chips_tiles": _chips_tiles_frame,
+    "geo_ads": lambda spark, sf: _datagen().generate_geo_ads(spark, sf),
+    "docs": lambda spark, sf: _datagen().docs_from_corpus(spark, sf),
+    "inc_rasters": lambda spark, sf: _datagen().generate_incidence_rasters(spark, sf),
+}
+
+
+def _handoff_of(spark, name: str, sf) -> DataFrame:
+    """The read-back of handoff ``name`` (built by ``_HANDOFFS[name]``)."""
+    return _handoff(_HANDOFFS[name](spark, sf), name, sf)
 
 
 def q_scene_select_tiles(spark, sf):
     from pyrosar_spark.operators.select import select
     from pyrosar_spark.operators.tiles import assign_hgt
 
-    scenes = _scenes_handoff(spark, sf)
+    scenes = _handoff_of(spark, "scenes", sf)
     sel = select(
         scenes, aoi_wkt=FLAGSHIP_AOI,
         return_value=["doc_id", "xmin", "xmax", "ymin", "ymax"],
@@ -547,7 +589,7 @@ def q_scene_select_tiles(spark, sf):
 def q_scene_spatial_join(spark, sf):
     from pyrosar_spark.operators.spatial import aoi_frame, spatial_join
 
-    scenes = _scenes_handoff(spark, sf)
+    scenes = _handoff_of(spark, "scenes", sf)
     aois = aoi_frame(
         spark,
         [
@@ -562,7 +604,7 @@ def q_scene_spatial_join(spark, sf):
 def q_scene_knn(spark, sf):
     from pyrosar_spark.operators.spatial import knn_scenes
 
-    scenes = _scenes_handoff(spark, sf)
+    scenes = _handoff_of(spark, "scenes", sf)
     out = knn_scenes(scenes, k=3)
     return out.select(
         "q_id", "n_id", F.round("dist_km", 6).alias("dist_km"), "rank"
@@ -570,18 +612,17 @@ def q_scene_knn(spark, sf):
 
 
 def q_scene_osv_asof(spark, sf):
-    from pyrosar_spark.datagen import generate_osv
     from pyrosar_spark.operators.asof import osv_match
 
-    scenes = _scenes_handoff(spark, sf)
-    osv = _handoff(generate_osv(spark, 2000, seed=42), "osv", sf)
+    scenes = _handoff_of(spark, "scenes", sf)
+    osv = _handoff_of(spark, "osv", sf)
     return osv_match(scenes, osv, ["POE", "RES"]).orderBy("doc_id")
 
 
 def q_scene_sessions(spark, sf):
     from pyrosar_spark.operators.session_group import groupby_time_collect
 
-    scenes = _scenes_handoff(spark, sf)
+    scenes = _handoff_of(spark, "scenes", sf)
     return (
         groupby_time_collect(
             scenes, "outname_base", "tsec", 3600.0, key_cols=["orbitNumber_rel"]
@@ -613,7 +654,7 @@ def q_ann_lsh(spark, sf):
 def q_geolocation_grid(spark, sf):
     from pyrosar_spark.operators.geogrid import geolocation_grid
 
-    scenes = _scenes_handoff(spark, sf)
+    scenes = _handoff_of(spark, "scenes", sf)
     grid = geolocation_grid(scenes, 2, 11)
     # order-independent exact aggregates: int sums of line/pixel, min/max
     # incidence, micro-degree integer sums of the interpolated lon/lat
@@ -636,17 +677,9 @@ def q_geolocation_grid(spark, sf):
 
 
 def q_border_noise(spark, sf):
-    from pyrosar_spark.datagen import docs_from_corpus
     from pyrosar_spark.operators.bordernoise import remove_border_noise
-    from pyrosar_spark.operators.chips import synthetic_chips
 
-    chips = _handoff(
-        synthetic_chips(docs_from_corpus(spark, sf)).select(
-            "media_ref", "width", "height", "seed"
-        ),
-        "chips_bn",
-        sf,
-    )
+    chips = _handoff_of(spark, "chips_bn", sf)
     # portable payload → the threshold mask is reproducible in SQL;
     # the VW border simplification stays golden-tested in tests/
     return remove_border_noise(chips, payload="portable").select(
@@ -655,17 +688,9 @@ def q_border_noise(spark, sf):
 
 
 def q_chip_mosaic(spark, sf):
-    from pyrosar_spark.datagen import docs_from_corpus
-    from pyrosar_spark.operators.chips import assign_chip_tiles, mosaic_tiles, synthetic_chips
+    from pyrosar_spark.operators.chips import mosaic_tiles
 
-    chips = _handoff(
-        assign_chip_tiles(synthetic_chips(docs_from_corpus(spark, sf))).select(
-            "media_ref", "tile_lat", "tile_lon", "tile_id", "ulx", "uly",
-            "xres", "yres", "width", "height", "area_or_point", "seed",
-        ),
-        "chips_tiles",
-        sf,
-    )
+    chips = _handoff_of(spark, "chips_tiles", sf)
     return mosaic_tiles(chips, px_per_degree=10).select(
         "tile_id", "n_chips", "n_valid_px"
     ).orderBy("tile_id")
@@ -820,10 +845,9 @@ def q_geogrid_parse(spark, sf):
     unpack → 22 tie-point rows per record. The engine reads ONLY the
     record bytes; the oracle reads the independently-stored expected
     columns from the same handoff."""
-    from pyrosar_spark.datagen import generate_geo_ads
     from pyrosar_spark.operators.geogrid import tie_points_from_records
 
-    recs = _handoff(generate_geo_ads(spark, sf), "geo_ads", sf)
+    recs = _handoff_of(spark, "geo_ads", sf)
     pts = tie_points_from_records(recs.select("doc_id", "rec"))
     return pts.select(
         "doc_id", "grp", "idx", "line_num", "num_lines",
@@ -928,7 +952,6 @@ def q_dimap_incidence(spark, sf):
     (rotating ENVI dtypes f4/i2/f8/u2, both byte orders, junk header
     offsets). Engine decodes only (hdr, payload); the oracle
     aggregates the independently-stored expected pixels."""
-    from pyrosar_spark.datagen import generate_incidence_rasters
     from pyrosar_spark.operators.envi import fill_incidence_from_rasters
     from pyrosar_spark.operators.formats import parse_dimap
 
@@ -964,7 +987,7 @@ def q_dimap_incidence(spark, sf):
     parsed = parse_dimap(d.select("doc_id", xml.alias("xml")), "xml").select(
         "doc_id", "incidence"
     )
-    rasters = _handoff(generate_incidence_rasters(spark, sf), "inc_rasters", sf)
+    rasters = _handoff_of(spark, "inc_rasters", sf)
     return (
         fill_incidence_from_rasters(parsed, rasters)
         .select(
@@ -1475,12 +1498,10 @@ def q_stream_ingest_keys(spark, sf):
     span, json_extract of the payload, rpad outname_base — so the
     streaming parse is checked against a first-principles SQL parse,
     not a Spark-side handoff of its own output."""
-    from pyrosar_spark.datagen import docs_from_corpus
     from pyrosar_spark.operators.ingest import docs_to_scenes
 
     docs_path = f"{_oracle_dir(sf)}/docs.parquet"
-    _handoff(docs_from_corpus(spark, sf), "docs", sf)
-    sch = spark.read.parquet(docs_path).schema
+    sch = _handoff_of(spark, "docs", sf).schema
     ss = _stream_session(spark)
     stream = ss.readStream.schema(sch).parquet(docs_path)
     keys = (
@@ -1502,10 +1523,9 @@ def q_span_roundtrip(spark, sf):
     performs), then reassembled and digested; the oracle digests the
     STORED arrays directly in DuckDB. Per-doc digest equality ==
     byte-identity of membership AND order."""
-    from pyrosar_spark.datagen import docs_from_corpus
     from pyrosar_spark.operators.spans import roundtrip_digest
 
-    docs = _handoff(docs_from_corpus(spark, sf), "docs", sf)
+    docs = _handoff_of(spark, "docs", sf)
     return (
         roundtrip_digest(docs)
         .select(
@@ -1814,38 +1834,16 @@ def _ensure_handoffs(sf_dir: str = "/root/testdata/sf0.01") -> None:
     (over)written them and this is a no-op."""
     import os
 
-    needed = ["scenes", "osv", "chips_bn", "chips_tiles", "geo_ads", "docs",
-              "inc_rasters"]
     if all(
         os.path.exists(f"{_oracle_dir(sf_dir)}/{n}.parquet/_SUCCESS")
-        for n in needed
+        for n in _HANDOFFS
     ):
         return
     from pyrosar_spark.session import get_spark
 
     spark = get_spark("oracle_handoff")
-    _scenes_handoff(spark, sf_dir)
-    from pyrosar_spark.datagen import docs_from_corpus, generate_osv
-    from pyrosar_spark.operators.chips import assign_chip_tiles, synthetic_chips
-
-    _handoff(generate_osv(spark, 2000, seed=42), "osv", sf_dir)
-    chips = synthetic_chips(docs_from_corpus(spark, sf_dir))
-    _handoff(chips.select("media_ref", "width", "height", "seed"), "chips_bn", sf_dir)
-    _handoff(
-        assign_chip_tiles(chips).select(
-            "media_ref", "tile_lat", "tile_lon", "tile_id", "ulx", "uly",
-            "xres", "yres", "width", "height", "area_or_point", "seed",
-        ),
-        "chips_tiles",
-        sf_dir,
-    )
-    from pyrosar_spark.datagen import generate_geo_ads
-
-    _handoff(generate_geo_ads(spark, sf_dir), "geo_ads", sf_dir)
-    _handoff(docs_from_corpus(spark, sf_dir), "docs", sf_dir)
-    from pyrosar_spark.datagen import generate_incidence_rasters
-
-    _handoff(generate_incidence_rasters(spark, sf_dir), "inc_rasters", sf_dir)
+    for name in _HANDOFFS:
+        _handoff_of(spark, name, sf_dir)
 
 
 def _mask_sql_list(n_hashes: int) -> str:

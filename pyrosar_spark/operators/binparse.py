@@ -6,11 +6,12 @@ records — e.g. the ERS dataset summary record start time at
 records (``drivers.py:1195-1435``); ESA scenes mix key=value headers
 with packed binary geolocation grids (``drivers.py:1622-1804``).
 
-Spark shape: ASCII-encoded fields (the dominant CEOS case — numbers
-are space-padded text) are pure JVM ``substring(binary)`` + decode +
-try_cast. True packed integers (big-endian) go through one Arrow UDF
-that unpacks the whole batch with numpy ``frombuffer`` — never
-per-row ``struct.unpack``.
+Spark shape: every fixed-offset field is a pure JVM expression.
+ASCII-encoded fields (the dominant CEOS case — numbers are space-padded
+text) are ``substring(binary)`` + decode + try_cast; packed big-endian
+integers are ``substring`` + ``hex`` + ``conv`` base 16 → 10. The ESA
+geolocation grid records, whose fields are packed floats and nested
+tie-point blocks, go through one Arrow UDF (:func:`geo_ads_udf`).
 """
 
 from __future__ import annotations
@@ -57,37 +58,17 @@ def extract_fields(df: DataFrame, bin_col: str, specs: list[FieldSpec]) -> DataF
                 .try_cast("double")
                 .alias(s.name)
             )
+        elif s.kind == "be_int":
+            # unsigned big-endian word; NULL for a NULL record or one
+            # shorter than offset + length
+            word = F.conv(F.hex(F.substring(F.col(bin_col), s.offset + 1, s.length)), 16, 10)
+            cols.append(
+                F.when(F.length(bin_col) >= s.offset + s.length, word.try_cast("bigint"))
+                .alias(s.name)
+            )
         else:
-            raise ValueError(f"use extract_be_ints for packed field {s.name}")
+            raise ValueError(f"unknown kind {s.kind!r} for field {s.name}")
     return df.select("*", *cols)
-
-
-def be_int_udf(offset: int, length: int):
-    """Big-endian packed integer at a fixed offset, batch-unpacked."""
-
-    @F.pandas_udf(T.LongType())
-    def unpack(b: pd.Series) -> pd.Series:
-        vals = np.empty(len(b), dtype=np.int64)
-        for i, buf in enumerate(b):
-            if buf is None or len(buf) < offset + length:
-                vals[i] = 0
-            else:
-                vals[i] = int.from_bytes(bytes(buf[offset : offset + length]), "big")
-        return pd.Series(vals)
-
-    return unpack
-
-
-def _unpack_be_ints(df: DataFrame, bin_col: str, specs: list[FieldSpec]) -> DataFrame:
-    out = df
-    for s in specs:
-        out = out.withColumn(s.name, be_int_udf(s.offset, s.length)(F.col(bin_col)))
-    return out
-
-
-def extract_be_ints(df: DataFrame, bin_col: str, specs: list[FieldSpec]) -> DataFrame:
-    """Big-endian int fields (packed CEOS prefix words)."""
-    return _unpack_be_ints(df, bin_col, specs)
 
 
 # the ERS/ASAR dataset-summary fields exercised by the reference's

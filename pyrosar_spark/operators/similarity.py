@@ -71,6 +71,24 @@ def suggest_n_bits(n_items: int, candidate_budget: int = 200) -> int:
     return max(1, min(32, ratio.bit_length() - 1 or 1))
 
 
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The one cosine top-k tail: (``q_id``, ``item_id``,
+    ``cosine_sim``, ``rank``) from candidate pairs carrying ``q_vec``
+    and ``item_vec``. Scores round to 6 places; ranks order by score
+    descending, then item id, so ties break deterministically."""
+    scored = pairs.select(
+        "q_id",
+        "item_id",
+        F.round(cosine(F.col("item_vec"), F.col("q_vec")), 6).alias("cosine_sim"),
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("cosine_sim").desc(), F.col("item_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "item_id", "cosine_sim", "rank")
+    )
+
+
 def cosine_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -104,17 +122,7 @@ def cosine_topk(
     pairs = it.crossJoin(q)
     if exclude_self:
         pairs = pairs.where(F.col("item_id") != F.col("q_id"))
-    scored = pairs.select(
-        "q_id",
-        "item_id",
-        F.round(cosine(F.col("item_vec"), F.col("q_vec")), 6).alias("cosine_sim"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine_sim").desc(), F.col("item_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "item_id", "cosine_sim", "rank")
-    )
+    return _topk(pairs, k)
 
 
 def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:
@@ -204,17 +212,7 @@ def lsh_topk(
         .where(F.col("_table") == first_shared)
         .drop("_table", "_bucket", "_ib", "_qb_all")
     )
-    scored = cands.select(
-        "q_id",
-        "item_id",
-        F.round(cosine(F.col("item_vec"), F.col("q_vec")), 6).alias("cosine_sim"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine_sim").desc(), F.col("item_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "item_id", "cosine_sim", "rank")
-    )
+    return _topk(cands, k)
 
 
 _PLANES3_T = "array<array<array<double>>>"
@@ -399,14 +397,4 @@ def ivf_topk(
     # centroid), so a (query, item) pair can meet at most once; the
     # former dropDuplicates was a provable no-op costing a full
     # Exchange + two aggregates over the candidate table.
-    scored = cands.select(
-        "q_id",
-        "item_id",
-        F.round(cosine(F.col("item_vec"), F.col("q_vec")), 6).alias("cosine_sim"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine_sim").desc(), F.col("item_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "item_id", "cosine_sim", "rank")
-    )
+    return _topk(cands, k)

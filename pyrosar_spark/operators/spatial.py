@@ -38,6 +38,27 @@ from pyrosar_spark import geom
 CELL_DEG = 1.0
 
 
+def _grid_index(v: Column, s: float, half: float) -> Column:
+    """The clamped grid index of coordinate ``v`` at ``s``-degree cells:
+    ``floor(v / s)`` clamped to ``[-half/s, half/s - 1]`` (``half`` 90
+    for rows, 180 for columns), so lon 180 falls in the last column and
+    lat 90 in the top row instead of a phantom cell past the edge. A
+    NULL coordinate stays NULL (``least``/``greatest`` would skip it and
+    turn it into an edge index)."""
+    lo, hi = -int(round(half / s)), int(round(half / s)) - 1
+    i = F.floor(v / s).cast("long")
+    return F.when(i < lo, lo).when(i > hi, hi).otherwise(i)
+
+
+def _cell_id(row: Column, col: Column, s: float) -> Column:
+    """The one grid-cell id: row-major over the ``180/s`` x ``360/s``
+    grid, ``(row + 90/s) * (360/s) + pmod(col + 180/s, 360/s)``. The
+    ``pmod`` wraps kNN's unclamped neighbor columns across the date
+    line and is the identity on clamped columns."""
+    n_lon = int(round(360.0 / s))
+    return (row + int(round(90 / s))) * n_lon + F.pmod(col + int(round(180 / s)), F.lit(n_lon))
+
+
 def cover_cells(
     df: DataFrame,
     xmin="xmin",
@@ -47,7 +68,11 @@ def cover_cells(
     cell_deg: float = CELL_DEG,
     out: str = "cell",
 ) -> DataFrame:
-    """Explode each row into the grid cells covering its bbox.
+    """Explode each row into the grid cells covering its bbox: the
+    clamped row and column index ranges (:func:`_grid_index`) of the
+    bbox, each cell named by :func:`_cell_id`. Every cell has exactly
+    one id, also at lon ±180 and lat ±90. A NULL bbox coordinate covers
+    no cell, so the row drops.
 
     JVM-only (``sequence`` + ``explode``). For extreme single-cell skew
     the join key can be salted afterwards:
@@ -55,13 +80,12 @@ def cover_cells(
     on the smaller side.
     """
     s = float(cell_deg)
-    lat_seq = F.sequence(F.floor(F.col(ymin) / s).cast("long"), F.floor(F.col(ymax) / s).cast("long"))
-    lon_seq = F.sequence(F.floor(F.col(xmin) / s).cast("long"), F.floor(F.col(xmax) / s).cast("long"))
-    n_lon = int(round(360.0 / s))
+    lat_seq = F.sequence(_grid_index(F.col(ymin), s, 90), _grid_index(F.col(ymax), s, 90))
+    lon_seq = F.sequence(_grid_index(F.col(xmin), s, 180), _grid_index(F.col(xmax), s, 180))
     return (
         df.withColumn("_la", F.explode(lat_seq))
         .withColumn("_lo", F.explode(lon_seq))
-        .withColumn(out, (F.col("_la") + int(round(90 / s))) * n_lon + F.col("_lo") + int(round(180 / s)))
+        .withColumn(out, _cell_id(F.col("_la"), F.col("_lo"), s))
         .drop("_la", "_lo")
     )
 
@@ -71,9 +95,11 @@ def spatial_join(scenes: DataFrame, aois: DataFrame) -> DataFrame:
 
     ``scenes`` needs ``doc_id``, bbox cols + the flat ``ring`` column;
     ``aois`` needs ``aoi_id``, bbox cols (``a_xmin``...) and ``a_ring``.
-    Returns the intersecting (``doc_id``, ``aoi_id``) pairs. Both sides
-    are covered by ``CELL_DEG`` grid cells and the AOI cover is
-    broadcast: the AOI side is the small one.
+    Returns the intersecting (``doc_id``, ``aoi_id``) pairs, each once,
+    also for bboxes reaching lon ±180 or lat ±90. Both sides are
+    covered by ``CELL_DEG`` grid cells (:func:`cover_cells`) and the AOI
+    cover is broadcast: the AOI side is the small one. A scene with a
+    NULL bbox coordinate covers no cell and joins nothing.
 
     The exact intersect is JVM column expressions
     (:func:`rings_intersect_jvm` — arbitrary simple polygons,
@@ -85,28 +111,22 @@ def spatial_join(scenes: DataFrame, aois: DataFrame) -> DataFrame:
     a = cover_cells(aois, "a_xmin", "a_xmax", "a_ymin", "a_ymax", out="cell")
     s = cover_cells(scenes, out="cell")
     cand = s.join(F.broadcast(a), on="cell", how="inner")
-    # report-once dedup (r6, guide §2.4): a bbox pair shares several
-    # cells, but exactly ONE of them is the canonical common cell —
-    # the cell of the covers' min common corner, (max(floor(ymin/s),
-    # floor(a_ymin/s)), max(floor(xmin/s), floor(a_xmin/s))) — which
-    # both sides generated whenever any common cell exists (floor is
-    # monotone, so max(floor x, floor y) = floor(max(x, y)) lies inside
-    # both cover ranges). Keeping only that cell's match yields exactly
-    # one candidate row per pair MAP-SIDE, replacing the
-    # dropDuplicates whose SortAggregate sorted every candidate row
+    # report-once dedup (r6; the reference-point method of Dittrich &
+    # Seeger, ICDE 2000): a bbox pair shares several cells, but exactly
+    # ONE of them is the canonical common cell — the cell of (greatest
+    # clamped row, greatest clamped column) of the two bboxes. Both
+    # covers are the clamped index ranges of their bbox, and clamped
+    # floor is monotone, so the greatest lower index lies inside both
+    # ranges whenever any common cell exists; and every cell has exactly
+    # one id, so the pair matches there exactly once. Keeping only that
+    # cell's match yields one candidate row per pair MAP-SIDE, replacing
+    # the dropDuplicates whose SortAggregate sorted every candidate row
     # (with its fat ring arrays) through a full Exchange.
     sd = CELL_DEG
-    n_lon = int(round(360.0 / sd))
-    canon = (
-        F.greatest(
-            F.floor(F.col("ymin") / sd), F.floor(F.col("a_ymin") / sd)
-        ).cast("long")
-        + int(round(90 / sd))
-    ) * n_lon + (
-        F.greatest(
-            F.floor(F.col("xmin") / sd), F.floor(F.col("a_xmin") / sd)
-        ).cast("long")
-        + int(round(180 / sd))
+    canon = _cell_id(
+        F.greatest(_grid_index(F.col("ymin"), sd, 90), _grid_index(F.col("a_ymin"), sd, 90)),
+        F.greatest(_grid_index(F.col("xmin"), sd, 180), _grid_index(F.col("a_xmin"), sd, 180)),
+        sd,
     )
     cand = cand.where(F.col("cell") == canon).select(
         "doc_id", "ring", "aoi_id", "a_ring"
@@ -447,7 +467,6 @@ def knn_scenes(
     prefilter; widen ``cell_deg`` for sparser catalogs).
     """
     s = float(cell_deg)
-    n_lon = int(round(360.0 / s))
     cent = scenes.select(
         F.col(id_col),
         ((F.col("xmin") + F.col("xmax")) / 2).alias("cx"),
@@ -476,15 +495,10 @@ def knn_scenes(
     cells9 = F.array_distinct(
         F.array(
             *[
-                (
-                    F.greatest(
-                        F.least(F.col("_la") + dy, F.lit(la_hi)), F.lit(la_lo)
-                    )
-                    + int(round(90 / s))
-                )
-                * n_lon
-                + F.pmod(
-                    F.col("_lo") + dx + int(round(180 / s)), F.lit(n_lon)
+                _cell_id(
+                    F.greatest(F.least(F.col("_la") + dy, F.lit(la_hi)), F.lit(la_lo)),
+                    F.col("_lo") + dx,
+                    s,
                 )
                 for dy in (-1, 0, 1)
                 for dx in (-1, 0, 1)
@@ -496,11 +510,11 @@ def knn_scenes(
         .select(F.col(id_col).alias("q_id"), F.col("cx").alias("q_cx"),
                 F.col("cy").alias("q_cy"), "_cell")
     )
-    index = home.withColumn(
-        "_cell", (F.col("_la") + int(round(90 / s))) * n_lon
-        + F.pmod(F.col("_lo") + int(round(180 / s)), F.lit(n_lon))
-    ).select(F.col(id_col).alias("n_id"), F.col("cx").alias("n_cx"),
-             F.col("cy").alias("n_cy"), "_cell")
+    # index side: the home cell, row unclamped (the frozen scene_knn
+    # oracle SQL encodes this formula and the probe row's clamp above)
+    index = home.withColumn("_cell", _cell_id(F.col("_la"), F.col("_lo"), s)).select(
+        F.col(id_col).alias("n_id"), F.col("cx").alias("n_cx"), F.col("cy").alias("n_cy"), "_cell"
+    )
     cand = (
         probe.join(index, on="_cell")
         .where(F.col("q_id") != F.col("n_id"))

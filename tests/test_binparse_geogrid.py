@@ -1,11 +1,11 @@
 """CEOS fixed-offset binary extraction (F8) + geolocation grids (F17/A9)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.binparse import (
     ERS_DSS_FIELDS,
     FieldSpec,
-    extract_be_ints,
     extract_fields,
 )
 from pyrosar_spark.operators.geogrid import geolocation_grid, incidence_stats
@@ -29,9 +29,19 @@ def test_extract_ascii_fields(spark):
 
 
 def test_extract_be_int(spark):
-    df = spark.createDataFrame([(bytearray(_record()),)], "rec binary")
-    row = extract_be_ints(df, "rec", [FieldSpec("rec_len", 0, 4, "be_int")]).first()
-    assert row.rec_len == 77
+    """Packed big-endian words are a JVM expression of extract_fields:
+    NULL for a NULL record or one shorter than offset + length."""
+    df = spark.createDataFrame(
+        [(0, bytearray(_record())), (1, bytearray(b"\x00\x01\x02")), (2, None)],
+        "i int, rec binary",
+    )
+    specs = [FieldSpec("rec_len", 0, 4, "be_int"), FieldSpec("w", 1, 2, "be_int")]
+    out = extract_fields(df, "rec", specs)
+    assert "Python" not in out._jdf.queryExecution().executedPlan().toString()
+    rows = {r.i: (r.rec_len, r.w) for r in out.collect()}
+    assert rows == {0: (77, 0), 1: (None, 258), 2: (None, None)}
+    with pytest.raises(ValueError, match="unknown kind"):
+        extract_fields(df, "rec", [FieldSpec("x", 0, 4, "le_int")])
 
 
 def test_geolocation_grid(scenes):

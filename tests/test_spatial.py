@@ -12,12 +12,14 @@ DISJOINT = "POLYGON((170 80, 171 80, 171 81, 170 81, 170 80))"
 
 def test_spatial_join_matches_select(spark, scenes):
     """The scalable many-AOI join must agree with the single-AOI select
-    refine on every AOI."""
+    refine on every AOI, each pair reported once."""
     aois = aoi_frame(
         spark, [("a_s1", S1_OVERLAP), ("a_psr2", PSR2_OVERLAP), ("a_none", DISJOINT)]
     )
     out = spatial_join(scenes, aois)
-    got = {(r.aoi_id, r.doc_id) for r in out.select("aoi_id", "doc_id").collect()}
+    rows = [(r.aoi_id, r.doc_id) for r in out.select("aoi_id", "doc_id").collect()]
+    assert len(rows) == len(set(rows)), "spatial_join reported a pair twice"
+    got = set(rows)
     for aoi_id, wkt in [("a_s1", S1_OVERLAP), ("a_psr2", PSR2_OVERLAP), ("a_none", DISJOINT)]:
         expected = {
             (aoi_id, r.doc_id)

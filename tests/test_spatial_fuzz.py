@@ -19,6 +19,8 @@ containment both ways.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 
@@ -111,6 +113,10 @@ def _concave_ring(rng, cx, cy, rmax):
     return np.vstack([pts, pts[:1]])
 
 
+def _box_row(doc_id, x0, y0, x1, y1):
+    return (doc_id, x0, x1, y0, y1, [float(v) for v in geom.bbox_ring(x0, y0, x1, y1).reshape(-1)])
+
+
 def _scene_rows(rng, n):
     rows = []
     for i in range(n):
@@ -124,7 +130,26 @@ def _scene_rows(rng, n):
             float(ring[:, 1].min()), float(ring[:, 1].max()),
             [float(v) for v in ring.reshape(-1)],
         ))
+    # grid edges: a full-longitude strip (its lon 180 column once aliased
+    # onto the next row's lon -180 cell), a scene in the lon -180 column
+    # with a kNN neighbor across the date line, and scenes touching each
+    # pole with a neighbor one row off it
+    rows.append(_box_row("full_lon", -180.0, 9.5, 180.0, 10.5))
+    rows.append(_box_row("dateline_w", -180.0, -10.4, -179.5, -9.8))
+    rows.append(_box_row("dateline_e", 179.6, -10.4, 180.0, -9.8))
+    rows.append(_box_row("pole_n", 10.0, 89.2, 11.0, 90.0))
+    rows.append(_box_row("pole_n2", 10.5, 88.4, 11.5, 89.0))
+    rows.append(_box_row("pole_s", -20.0, -90.0, -19.0, -89.3))
+    rows.append(_box_row("pole_s2", -20.5, -89.0, -19.5, -88.5))
+    # a NULL bbox coordinate covers no grid cell: the scene joins nothing
+    # even though its ring lies inside every AOI that contains (0, 0)
+    null_bbox = _box_row("null_bbox", -0.5, -0.5, 0.5, 0.5)
+    rows.append((null_bbox[0], None) + null_bbox[2:])
     return rows
+
+
+def _joinable(scene) -> bool:
+    return None not in scene[1:5]
 
 
 SCENE_SCHEMA = ("doc_id string, xmin double, xmax double, "
@@ -170,6 +195,8 @@ def _aoi_cases(rng, scenes):
         np.array([[cx, cy - 2], [cx, cy + 2], [cx, cy - 2]]))))
     cases.append(("deg_point", geom.ring_to_wkt(
         np.array([[cx, cy], [cx, cy], [cx, cy]]))))
+    # the whole globe: its cover reaches lon 180 and lat 90
+    cases.append(("globe", geom.ring_to_wkt(geom.bbox_ring(-180.0, -90.0, 180.0, 90.0))))
     return cases
 
 
@@ -183,21 +210,26 @@ def fuzz_world(spark):
         (s[0], aid)
         for aid, wkt in cases
         for s in scenes
-        if _oracle_intersects(np.asarray(s[5]), geom.wkt_to_ring(wkt))
+        if _joinable(s) and _oracle_intersects(np.asarray(s[5]), geom.wkt_to_ring(wkt))
     }
     return scenes, cases, sdf, expected
 
 
 def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world):
     """The JVM refine (:func:`rings_intersect_jvm`) against the scalar
-    oracle, incl. the concave star AOIs."""
+    oracle, incl. the concave star AOIs, compared as a multiset: each
+    intersecting pair exactly once, also at the grid edges (lon ±180,
+    lat ±90) against the whole-globe AOI."""
     scenes, cases, sdf, expected = fuzz_world
     adf = aoi_frame(spark, cases)
-    got = {
+    rows = Counter(
         (r["doc_id"], r["aoi_id"])
         for r in spatial_join(sdf, adf)
         .select("doc_id", "aoi_id").collect()
-    }
+    )
+    dup = sorted(p for p, n in rows.items() if n > 1)
+    assert not dup, f"spatial_join reported pairs more than once: {dup[:10]}"
+    got = set(rows)
     missing = expected - got
     extra = got - expected
     assert not missing and not extra, (
@@ -206,7 +238,10 @@ def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world):
     )
     # sanity: the adversarial cases produce hits (the fuzz isn't vacuous)
     hit_aois = {a for _, a in got}
-    assert {"tiny_inside", "huge_around", "shared_edge"} <= hit_aois
+    assert {"tiny_inside", "huge_around", "shared_edge", "globe"} <= hit_aois
+    edge = {"full_lon", "dateline_w", "pole_n", "pole_s"}
+    assert {(s, "globe") for s in edge} <= got
+    assert not any(s == "null_bbox" for s, _ in got)
     assert any(a.startswith("conc") for a in hit_aois), "no concave AOI hits"
 
 
@@ -245,3 +280,58 @@ def test_jvm_convex_refine_is_python_free(spark, fuzz_world):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ArrowEvalPython" in p2
+
+
+def _knn_inline(scenes, k=3, s=1.0):
+    """``knn_scenes`` with its cell ids written out inline, the formula
+    the ``scene_knn`` oracle SQL encodes: unclamped index row, probe row
+    clamped to [-90/s, 90/s - 1], both columns wrapped with ``pmod``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window as W
+
+    from pyrosar_spark.operators.spatial import haversine_km
+
+    n_lon = int(round(360.0 / s))
+    home = scenes.select(
+        "doc_id",
+        ((F.col("xmin") + F.col("xmax")) / 2).alias("cx"),
+        ((F.col("ymin") + F.col("ymax")) / 2).alias("cy"),
+    ).select(
+        "doc_id", "cx", "cy",
+        F.floor(F.col("cy") / s).cast("long").alias("_la"),
+        F.floor(F.col("cx") / s).cast("long").alias("_lo"),
+    )
+    la_lo, la_hi = -int(round(90 / s)), int(round(90 / s)) - 1
+    cells9 = F.array_distinct(F.array(*[
+        (F.greatest(F.least(F.col("_la") + dy, F.lit(la_hi)), F.lit(la_lo)) + int(round(90 / s)))
+        * n_lon + F.pmod(F.col("_lo") + dx + int(round(180 / s)), F.lit(n_lon))
+        for dy in (-1, 0, 1) for dx in (-1, 0, 1)
+    ]))
+    probe = home.withColumn("_cell", F.explode(cells9)).select(
+        F.col("doc_id").alias("q_id"), F.col("cx").alias("q_cx"), F.col("cy").alias("q_cy"), "_cell")
+    index = home.withColumn(
+        "_cell", (F.col("_la") + int(round(90 / s))) * n_lon
+        + F.pmod(F.col("_lo") + int(round(180 / s)), F.lit(n_lon))
+    ).select(F.col("doc_id").alias("n_id"), F.col("cx").alias("n_cx"), F.col("cy").alias("n_cy"), "_cell")
+    cand = (
+        probe.join(index, on="_cell").where(F.col("q_id") != F.col("n_id"))
+        .withColumn("dist_km", haversine_km(F.col("q_cy"), F.col("q_cx"), F.col("n_cy"), F.col("n_cx")))
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("dist_km").asc(), F.col("n_id").asc())
+    return (cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+            .select("q_id", "n_id", "dist_km", "rank"))
+
+
+def test_knn_matches_inline_cell_formula(fuzz_world):
+    """``knn_scenes`` builds its cells with the shared ``_cell_id``; its
+    rows (distances bit for bit) must equal the inline formula's on the
+    fuzz world, date-line, polar and NULL-bbox scenes included."""
+    from pyrosar_spark.operators.spatial import knn_scenes
+
+    scenes, cases, sdf, expected = fuzz_world
+    got = sorted(map(tuple, knn_scenes(sdf, k=3).collect()))
+    want = sorted(map(tuple, _knn_inline(sdf, k=3).collect()))
+    assert got == want
+    pairs = {(q, n) for q, n, *_ in got}
+    assert {("dateline_w", "dateline_e"), ("pole_n", "pole_n2"), ("pole_s", "pole_s2")} <= pairs
+    assert not any("null_bbox" in p for p in pairs)
