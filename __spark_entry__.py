@@ -231,12 +231,12 @@ def q_asof_purchase_view(spark, sf):
 
 
 def q_interval_overlap(spark, sf):
+    from pyrosar_spark.operators.asof import overlap_filter
+
     o = _t(spark, sf, "orders").withColumn(
         "o_end", F.expr("o_orderdate + INTERVAL 30 DAYS")
     )
-    hit = o.where(
-        (F.col("o_orderdate") < "1996-07-01") & (F.col("o_end") > "1996-06-01")
-    )
+    hit = overlap_filter(o, "o_orderdate", "o_end", "1996-06-01", "1996-07-01")
     return hit.groupBy("o_orderstatus").agg(F.count("*").alias("n")).orderBy("o_orderstatus")
 
 
@@ -1489,8 +1489,9 @@ def q_stream_sessions(spark, sf):
 
 
 def q_stream_ingest_keys(spark, sf):
-    """Streaming ingest (SURVEY §2.11 ``streaming.incremental``): the
-    interleaved-document corpus replayed through the file-stream
+    """Streaming ingest (SURVEY §2.11; with :func:`q_stream_sessions` one
+    of the two oracled streaming queries, each building its own stream
+    here): the interleaved-document corpus replayed through the file-stream
     source, ``docs_to_scenes`` span parse ON THE STREAM (pruned to the
     outname fields), catalog-key counts in a stateful complete-mode
     aggregation. The oracle re-derives the keys from the SAME handoff

@@ -223,8 +223,9 @@ def main() -> None:
         "scene_spatial_join",
         "scene_knn",
     ]
-    # SPARK_GRAFT_QUERIES: comma list to restrict ("none" = flagship only,
-    # used by scripts/bench_scaling.py to cut measurement noise)
+    # SPARK_GRAFT_QUERIES: comma list to restrict the headline queries
+    # ("none" = flagship only, which cuts measurement noise when only the
+    # flagship is compared)
     q_filter = os.environ.get("SPARK_GRAFT_QUERIES")
     if q_filter is not None:
         wanted = {q.strip() for q in q_filter.split(",") if q.strip()}

@@ -1,7 +1,6 @@
 from pyrosar_spark.functions.temporal import (  # noqa: F401
     parse_date_col,
     seconds_col,
-    is_valid_stamp,
 )
 from pyrosar_spark.functions.naming import (  # noqa: F401
     outname_base_col,

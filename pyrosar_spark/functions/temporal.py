@@ -54,14 +54,3 @@ def seconds_col(col: Column | str) -> Column:
     ts = F.to_timestamp(stamp, STAMP_FMT)
     epoch1900 = F.to_timestamp(F.lit("1900-01-01 00:00:00"))
     return (F.unix_timestamp(ts) - F.unix_timestamp(epoch1900)).cast("double")
-
-
-def is_valid_stamp(col: Column | str) -> Column:
-    """Does the value contain a ``YYYYmmddTHHMMSS`` stamp?
-
-    ``Archive.select`` *ignores with a warning* malformed mindate /
-    maxdate arguments instead of erroring (``archive.py:1032-1051``);
-    reproducing that is required for row-count parity.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.rlike("[0-9]{8}T[0-9]{6}")

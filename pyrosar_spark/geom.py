@@ -85,17 +85,6 @@ def ring_to_wkb(ring: np.ndarray) -> bytes:
     return head + ring.astype("<f8").tobytes()
 
 
-def wkb_to_ring(buf: bytes) -> np.ndarray:
-    if buf[0] != 1:
-        raise ValueError("only little-endian WKB supported")
-    gtype, nrings = _struct.unpack_from("<II", buf, 1)
-    if gtype != _WKB_POLYGON or nrings < 1:
-        raise ValueError(f"not a polygon WKB (type={gtype})")
-    (npts,) = _struct.unpack_from("<I", buf, 9)
-    arr = np.frombuffer(buf, dtype="<f8", count=npts * 2, offset=13)
-    return arr.reshape(-1, 2).copy()
-
-
 def _fmt(v: float) -> str:
     """Shortest decimal text (``12.0268`` not ``12.026800``)."""
     s = f"{v:.10f}".rstrip("0").rstrip(".")
@@ -111,14 +100,6 @@ def wkt_to_ring(wkt: str) -> np.ndarray:
     inner = wkt[wkt.index("((") + 2 : wkt.rindex("))")]
     pts = [tuple(map(float, p.split())) for p in inner.split(",")]
     return np.asarray(pts, dtype=np.float64)
-
-
-def bbox_ring(xmin: float, ymin: float, xmax: float, ymax: float) -> np.ndarray:
-    """Axis-aligned box as a closed CCW ring starting at (xmin, ymin)."""
-    return np.array(
-        [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax], [xmin, ymin]],
-        dtype=np.float64,
-    )
 
 
 # --------------------------------------------------------------------------

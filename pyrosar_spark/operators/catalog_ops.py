@@ -5,7 +5,6 @@ Small operators that complete the reference's ``Archive`` API surface:
 
  - ``select_duplicates`` (``pyroSAR/archive.py:1115-1168``)
  - ``find_datasets`` metadata filtering (``pyroSAR/ancillary.py:282-329``)
- - ``import_csv`` re-ingest (``archive.py:809-837``)
  - ``move`` path update (``archive.py:839-900``)
  - ``cleanup`` vanished-file removal (``archive.py:652-659, 490-511``)
  - ``export_laundered`` column-rename projection (``archive.py:668-715``,
@@ -71,12 +70,6 @@ def find_datasets(names: DataFrame, name_col: str = "filename", **kwargs) -> Dat
         else:
             df = df.where(F.col(f"_m.{key}") == val)
     return df.select(name_col)
-
-
-def import_csv(spark, path: str) -> DataFrame:
-    """CSV re-ingest source (``archive.py:809-837``): header row, dialect
-    sniffing delegated to Spark's csv reader; feeds ``insert_scenes``."""
-    return spark.read.option("header", True).option("inferSchema", True).csv(path)
 
 
 def move_scenes(data: DataFrame, mapping: DataFrame) -> DataFrame:

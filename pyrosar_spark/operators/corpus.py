@@ -9,9 +9,8 @@ already holds; these drop *text* the corpus already holds):
    boilerplate removal ("drop any line that occurs in >= N documents",
    Raffel et al. 2020 §2.2), expressed over fixed-size token chunks
    because the document model is a single token stream. The corpus
-   detectors in :mod:`textstats` (repetition_stats,
-   line_repetition_stats) and :mod:`dedup` (dup_ngram_spans) only
-   REPORT duplication; this operator is the cleaning step that
+   detectors in :mod:`textstats` (repetition_stats) and :mod:`dedup`
+   (dup_ngram_spans) only REPORT duplication; this operator is the cleaning step that
    removes it and re-emits the text;
  - :func:`token_commonness` — corpus unigram frequencies joined back
    per document (rare-token fraction + mean token frequency), the

@@ -24,9 +24,9 @@ md5s (16× fewer digests; XOR by a fixed mask is a bijection on the
 60-bit hash space, so each ``min`` is still a uniform minwise sample).
 The md5→60-bit form (:func:`portable_hash64`) is the one text hash of
 every operator here and bit-portable to any engine (DuckDB oracle
-mirrors it literally). The one JVM-expression variant retained is
-:func:`simhash64`, the reference the SimHash kernel is tested against;
-:func:`simhash_pairs` always hashes with the kernel.
+mirrors it literally). :func:`simhash_pairs` hashes with the SimHash
+kernel; the tests compare that kernel against a higher-order-function
+reference of their own.
 
 Scale notes: the only shuffles are groupBys on hash keys (uniform by
 construction). LSH band explosion multiplies rows by n_bands (≤ 16);
@@ -544,12 +544,11 @@ def simhash64_udf():
     """Arrow batch kernel for the md5-portable SimHash (the production
     path — VERDICT r2 #3): hash each token occurrence with the same
     ``md5(token || '#0')`` 60-bit form as :func:`portable_hash64`, then
-    a vectorized sign-sum over the bit matrix. Byte-identical to
-    ``simhash64(text)`` (bits 60..63 are never set — every
-    md5-60 hash has them zero, so their counters are -n_tokens),
-    INCLUDING NULL text → NULL hash (the HOF form propagates NULL;
-    ADVICE r3 — a 0 here would collide every NULL-text doc into one
-    hamming-0 near-dup cluster).
+    a vectorized sign-sum over the bit matrix. Byte-identical to the
+    tests' higher-order-function SimHash (bits 60..63 are never set —
+    every md5-60 hash has them zero, so their counters are -n_tokens),
+    INCLUDING NULL text → NULL hash (ADVICE r3 — a 0 here would collide
+    every NULL-text doc into one hamming-0 near-dup cluster).
 
     Batch-level vectorization (VERDICT r3 #7): one ``np.unique`` over
     the whole batch's token stream → one md5 digest per DISTINCT token
@@ -594,55 +593,6 @@ def simhash64_udf():
         return pd.Series(out).astype("Int64").mask(null_mask)
 
     return run
-
-
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash of the token multiset (JVM higher-order form) —
-    the reference :func:`simhash64_udf` is tested against; operators
-    hash with the kernel, since the interpreted 64-wide ``aggregate``
-    is ~100× slower per token.
-
-    Per bit b: sign of Σ_tokens (bit_b(hash(token)) ? +1 : -1). Built
-    from higher-order array ops — JVM-side, no UDF: accumulate the 64
-    per-bit counters with ``aggregate`` over the token array.
-
-    NULL text → NULL (ADVICE r3: the pre-fix form silently collapsed
-    the NULL counters to hash 0 via ``when(NULL > 0).otherwise(0)``,
-    colliding every NULL-text doc into one hamming-0 cluster; both
-    kernels now propagate NULL, and NULL block values drop out of the
-    candidate equi-join).
-    """
-    toks = _norm_tokens(text)
-    hashes = F.transform(toks, lambda t: portable_hash64(t, 0))
-    zero = F.array_repeat(F.lit(0).cast("long"), 64)
-    # bit positions are Python ints (shiftright needs a literal count)
-    counters = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1)
-                    .otherwise(-1)
-                    .cast("long")
-                    for b in range(64)
-                ]
-            ),
-            lambda a, x: a + x,
-        ),
-    )
-    bits = F.array(
-        *[
-            F.when(
-                F.element_at(counters, b + 1) > 0,
-                F.lit(1 << b if b < 63 else -(1 << 63)).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-            for b in range(64)
-        ]
-    )
-    agg = F.aggregate(bits, F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x))
-    return F.when(text.isNotNull(), agg)
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -4,18 +4,18 @@ Media arrive as opaque ``binary`` payloads referenced by ``media_ref``
 span entries (the role the ``scene`` path plays in the reference —
 rasters are never held in the catalog, ``pyroSAR/drivers.py:429-477``).
 The Spark-side plumbing — schema, Arrow batching, partitioning — is
-real and tested; the actual codec work is stubbed behind
-``decoder=`` because no image/audio libraries ship in this
-environment:
+real and tested; the codecs are injected through ``decoder=`` and
+``resizer=`` (the tests plug in real 24-bpp BMP codecs), and the
+defaults are deterministic stubs because no image/audio libraries ship
+in this environment:
 
  - :func:`decode_metadata` — ``mapInPandas`` over (id, payload)
    batches returning typed metadata (width/height/n_bytes). The
    default ``fake_decoder`` derives dimensions deterministically from
    the payload hash (so tests and SQL oracles can verify the exact
    pipeline), a real deployment passes e.g. a PIL/libvips decoder.
- - :func:`resolve_media_refs` — explode chip spans to one row per
-   ``media_ref`` and attach a deterministic synthetic payload
-   (stand-in for the object-store fetch).
+ - :func:`fetch_payloads` — executor-side reads of each ``media_ref``
+   against a mounted store root.
  - :func:`extract_features` — REAL (not stubbed) content features: an
    L1-normalized byte histogram folded to ``n_buckets``, one
    vectorized ``np.bincount`` per Arrow batch. The output
@@ -27,10 +27,8 @@ environment:
    batch of k payloads yields >>k rows) — the codec probe is stubbed
    (:func:`fake_probe`), the batch-shape plumbing is real.
  - :func:`resize_media` — aspect-preserving resize capped at
-   ``max_side``. :func:`fake_resizer` derives dims from the payload
-   hash (SQL-oracle path); :func:`bmp_resizer` is a REAL numpy
-   nearest-neighbor kernel over uncompressed 24-bpp BMP payloads,
-   proving the ``resizer=`` boundary carries an actual pixel codec.
+   ``max_side`` (:func:`_fit`). :func:`fake_resizer` derives dims from
+   the payload hash (SQL-oracle path).
 """
 
 from __future__ import annotations
@@ -56,22 +54,6 @@ def fake_decoder(payload: bytes) -> tuple[int, int, int]:
     height = 1 + (h % 262144) // 512
     channels = 1 + (h % 3)
     return width, height, channels
-
-
-def bmp_decoder(payload: bytes) -> tuple[int, int, int]:
-    """Real byte-level decoder for Windows BMP payloads (pure struct —
-    no image libraries needed): validates the ``BM`` magic and reads
-    width / height / bits-per-pixel from the BITMAPINFOHEADER. Proves
-    the ``decoder=`` boundary works with an actual codec, not just the
-    deterministic fake (negative height = top-down BMP, still valid).
-    """
-    import struct as _struct
-
-    if payload[:2] != b"BM" or len(payload) < 30:
-        raise ValueError("not a BMP payload")
-    width, height = _struct.unpack_from("<ii", payload, 18)
-    (bpp,) = _struct.unpack_from("<H", payload, 28)
-    return int(width), abs(int(height)), max(bpp // 8, 1)
 
 
 def decode_metadata(
@@ -100,17 +82,6 @@ def decode_metadata(
             )
 
     return media.select(id_col, ref_col, payload_col).mapInPandas(run, DECODE_SCHEMA)
-
-
-def resolve_media_refs(docs: DataFrame) -> DataFrame:
-    """One row per chip span with a deterministic synthetic payload
-    (stands in for the object-store fetch keyed by media_ref)."""
-    chips = docs.select(
-        "doc_id",
-        F.explode(F.filter(F.col("spans"), lambda s: s.kind == F.lit("chip"))).alias("s"),
-    ).select("doc_id", F.col("s.media_ref").alias("media_ref"))
-    payload = F.encode(F.concat(F.lit("payload:"), F.col("media_ref")), "utf-8")
-    return chips.withColumn("payload", payload)
 
 
 FEATURES_SCHEMA = (
@@ -298,47 +269,6 @@ def fake_resizer(payload: bytes, max_side: int) -> tuple[int, int, int, int, byt
     ow, oh = _fit(w, h, max_side)
     token = f"resized:{ow}x{oh}:{hashlib.md5(payload).hexdigest()}".encode()
     return w, h, ow, oh, token
-
-
-def bmp_resizer(payload: bytes, max_side: int) -> tuple[int, int, int, int, bytes]:
-    """REAL nearest-neighbor resize for uncompressed 24-bpp BMP
-    payloads (numpy fancy-indexing, no image libraries): parses the
-    BITMAPINFOHEADER, resamples rows/columns in storage order (works
-    for bottom-up and top-down alike — the height SIGN is preserved),
-    and re-emits a valid BMP with 4-byte-aligned rows."""
-    import struct as _struct
-
-    if payload[:2] != b"BM" or len(payload) < 54:
-        raise ValueError("not a BMP payload")
-    (data_off,) = _struct.unpack_from("<I", payload, 10)
-    w, h_signed = _struct.unpack_from("<ii", payload, 18)
-    (bpp,) = _struct.unpack_from("<H", payload, 28)
-    if bpp != 24:
-        raise ValueError(f"bmp_resizer supports 24-bpp only, got {bpp}")
-    if w <= 0 or h_signed == 0:
-        # diagnostic instead of an opaque numpy index/shape error deep
-        # in the Arrow worker
-        raise ValueError(f"invalid BMP dimensions {w}x{h_signed}")
-    h = abs(h_signed)
-    row = (w * 3 + 3) & ~3
-    px = (
-        np.frombuffer(payload, dtype=np.uint8, count=row * h, offset=data_off)
-        .reshape(h, row)[:, : w * 3]
-        .reshape(h, w, 3)
-    )
-    ow, oh = _fit(w, h, max_side)
-    yi = np.arange(oh, dtype=np.int64) * h // oh
-    xi = np.arange(ow, dtype=np.int64) * w // ow
-    out = px[yi][:, xi]
-    orow = (ow * 3 + 3) & ~3
-    body = np.zeros((oh, orow), dtype=np.uint8)
-    body[:, : ow * 3] = out.reshape(oh, ow * 3)
-    size = 54 + orow * oh
-    header = _struct.pack("<2sIHHI", b"BM", size, 0, 0, 54) + _struct.pack(
-        "<IiiHHIIiiII",
-        40, ow, oh if h_signed > 0 else -oh, 1, 24, 0, orow * oh, 2835, 2835, 0, 0,
-    )
-    return w, h, ow, oh, header + body.tobytes()
 
 
 def resize_media(

@@ -10,10 +10,10 @@
    polarization / timing attributes are copied from the inSAR master
    (``drivers.py:2485-2516``): a self-join of the catalog on the
    master id.
- - :func:`erode_mask` — data-boundary edge erosion
+ - :func:`erode_chip_masks` — data-boundary edge erosion
    (``pyroSAR/snap/auxil.py:1457-1589`` uses scipy binary_erosion);
-   re-implemented as pure-numpy shift-AND (no scipy here), chip-level
-   in ``mapInPandas``.
+   :func:`binary_erode` re-implements it as pure-numpy shift-AND (no
+   scipy here), chip-level in ``mapInPandas``.
 """
 
 from __future__ import annotations

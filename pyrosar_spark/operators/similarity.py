@@ -48,29 +48,6 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def suggest_n_bits(n_items: int, candidate_budget: int = 200) -> int:
-    """Hyperplane-count sizing rule, automated from the measured recall
-    sweep (scripts/ann_recall.py): recall collapses when ``2**n_bits``
-    far exceeds ``n_items / candidate_budget`` because the average
-    bucket holds fewer rows than the refine wants to see — at 500
-    driver embeddings, b2T4 measured recall@10 = 0.82 while b8T4
-    (256 buckets over 500 rows) starved to 0.04. Pick ``n_bits`` so
-    the expected bucket population per table ≈ ``candidate_budget``:
-    ``n_bits = floor(log2(n_items / candidate_budget))``, clamped to
-    [1, 32] (a 64-bit bucket id is the Iceberg clustering key; 32 bits
-    already gives 4.3e9 buckets — enough for 10^12 rows at any sane
-    budget).
-    """
-    if n_items <= 0:
-        raise ValueError(f"n_items must be positive, got {n_items}")
-    if candidate_budget <= 0:
-        raise ValueError(
-            f"candidate_budget must be positive, got {candidate_budget}"
-        )
-    ratio = max(n_items // candidate_budget, 1)
-    return max(1, min(32, ratio.bit_length() - 1 or 1))
-
-
 def _topk(pairs: DataFrame, k: int) -> DataFrame:
     """The one cosine top-k tail: (``q_id``, ``item_id``,
     ``cosine_sim``, ``rank``) from candidate pairs carrying ``q_vec``
@@ -97,9 +74,9 @@ def cosine_topk(
     vec_col: str = "embedding",
     q_id_col: str = "vec_id",
     q_vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (brute force).
+    """Exact top-k cosine neighbors per query (brute force), excluding
+    each query itself (pairs with ``item_id == q_id`` are dropped).
 
     The query side is broadcast (queries ≪ items); the cross product
     never shuffles the item side. Deterministic tie-break on item id.
@@ -119,10 +96,7 @@ def cosine_topk(
     it = items.select(
         F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("item_vec")
     )
-    pairs = it.crossJoin(q)
-    if exclude_self:
-        pairs = pairs.where(F.col("item_id") != F.col("q_id"))
-    return _topk(pairs, k)
+    return _topk(it.crossJoin(q).where(F.col("item_id") != F.col("q_id")), k)
 
 
 def _hyperplane(dim: int, bit: int, seed: int) -> list[float]:

@@ -321,55 +321,3 @@ def tfidf_top_terms(
         .filter(F.col("rank") <= k)
         .select(id_col, "rank", "term", "tfidf")
     )
-
-
-def line_repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Gopher's line/paragraph duplication signals (Rae et al. 2021
-    §A1.1) — the complement of :func:`repetition_stats` for corpora
-    with layout: fraction of duplicate lines / paragraphs (count and
-    character mass). In-row higher-order functions, zero shuffle, same
-    scale shape as the n-gram variant. (The driver's synthetic corpus
-    has no newlines, so this ships with unit goldens rather than a
-    contract oracle — on real web text these four numbers are the
-    boilerplate detector.)"""
-    # line = \r?\n-separated; paragraph = separated by a blank-line run
-    # (one-or-more newlines with only horizontal whitespace between) —
-    # plain "\n\n" would split "p\n\n\np" into ("p", "\np") and the
-    # stray newline would defeat the dedup on real CRLF/blank-run text
-    out = {}
-    # chained Generate barriers (one generator per Project) bind each
-    # unit array so split+trim run once, not once per metric reference
-    # (HOFs have no CSE)
-    carry = [F.col(id_col)]
-    for name, sep_re in (("line", r"\r?\n"), ("para", r"\r?\n[ \t]*(\r?\n[ \t]*)+")):
-        units_expr = F.filter(
-            F.transform(F.split(F.col(text_col), sep_re),
-                        lambda u: F.trim(u)),
-            lambda u: u != "",
-        )
-        df = df.select(
-            *carry, F.col(text_col),
-            F.explode(F.array(units_expr)).alias(f"_u_{name}"),
-        )
-        carry.append(F.col(f"_u_{name}"))
-    for name in ("line", "para"):
-        units = F.col(f"_u_{name}")
-        n = F.size(units)
-        n_dist = F.size(F.array_distinct(units))
-        chars = F.aggregate(
-            units, F.lit(0), lambda acc, u: acc + F.length(u)
-        )
-        # character mass of the duplicate occurrences: total chars minus
-        # chars of one representative per distinct unit
-        dist_chars = F.aggregate(
-            F.array_distinct(units), F.lit(0), lambda acc, u: acc + F.length(u)
-        )
-        out[f"dup_{name}_frac"] = F.round(
-            F.when(n > 0, (n - n_dist) / n).otherwise(F.lit(0.0)), 6
-        )
-        out[f"dup_{name}_char_frac"] = F.round(
-            F.when(chars > 0, (chars - dist_chars) / chars).otherwise(F.lit(0.0)), 6
-        )
-    return df.select(F.col(id_col), *[v.alias(k) for k, v in out.items()])

@@ -94,7 +94,7 @@ def dem_tile_name(dem_type: str, lat: Column, lon: Column) -> Column:
     """Tile/remote-file name for one lattice cell, per
     ``auxdata.py:1396-1484``. ``lat``/``lon`` are the cell's integer
     origin (for SRTM 3Sec: the 1-based grid indices, see
-    :func:`srtm3_indices`)."""
+    :func:`srtm3_index_seqs`)."""
     if dem_type in ("SRTM 1Sec HGT",):
         return F.concat(
             hemi_id(lat, "N", "S", 2), hemi_id(lon, "E", "W", 3), F.lit(".SRTMGL1.hgt.zip")

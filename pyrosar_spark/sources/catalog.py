@@ -1,21 +1,23 @@
 """Catalog storage: parquet now, Iceberg when a catalog is configured.
 
 The scene catalog mirrors the reference's ``data`` + ``duplicates``
-SpatiaLite tables (``pyroSAR/archive.py:374-418``). At 10^12 rows the
-layout is the performance-critical choice:
+SpatiaLite tables (``pyroSAR/archive.py:374-418``). The parquet layout
+:func:`write_scenes` writes:
 
- - partition scenes by ``days(start)`` (date predicates P4/P5 prune
-   files) and bucket by ``orbitNumber_rel`` (the skewed track key —
-   bucketing both co-locates track joins and spreads hot tracks);
- - sorted-within-file by (xmin, ymin) so Iceberg/parquet min-max
-   column stats prune spatially for bbox prefilters;
- - ``MERGE INTO`` (Iceberg) gives the transactional insert/dedup the
-   reference gets from its single SQLite transaction
-   (``archive.py:585-594``).
+ - one directory per acquisition day (``partitionBy("start_day")``,
+   ``start_day`` = the first 8 characters of ``start``), after a hash
+   repartition on (``start_day``, ``orbitNumber_rel``) that spreads a
+   hot track over several files of its day;
+ - each file sorted by (xmin, ymin), so parquet min/max column stats
+   can skip row groups for the bbox prefilters;
+ - no bucketing by ``orbitNumber_rel``. The date predicates P4/P5
+   reach the scan as pushed filters on ``start`` only; they do not
+   become ``start_day`` partition filters, so no directory is pruned
+   (``tests/test_catalog_ops.py::test_stored_catalog_pruning``).
 
-This module keeps those decisions in one place; parquet writes encode
-the same layout (directory partitioning + sort) so the local sandbox
-exercises identical pruning behavior.
+``MERGE INTO`` (Iceberg) gives the transactional insert/dedup the
+reference gets from its single SQLite transaction
+(``archive.py:585-594``); :func:`insert_scenes_merge_sql` emits it.
 """
 
 from __future__ import annotations
@@ -25,7 +27,8 @@ from pyspark.sql import functions as F
 
 
 def write_scenes(scenes: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Partitioned + sorted parquet layout (Iceberg-equivalent)."""
+    """Day-partitioned, (xmin, ymin)-sorted parquet layout (see the
+    module docstring)."""
     out = scenes.withColumn("start_day", F.substring("start", 1, 8))
     (
         out.repartition(F.col("start_day"), F.col("orbitNumber_rel"))

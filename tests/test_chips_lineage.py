@@ -85,20 +85,6 @@ def test_checkpoint_resume(spark, tmp_path):
     )
 
 
-def test_streaming_ingest(spark, docs, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    docs.limit(50).write.parquet(src)
-    from pyrosar_spark.streaming.incremental import read_document_stream, streaming_ingest
-
-    q = streaming_ingest(read_document_stream(spark, src), out, ckpt)
-    q.awaitTermination(120)
-    scenes = spark.read.parquet(out)
-    assert scenes.count() > 0
-    assert scenes.groupBy("product", "outname_base").count().where("count > 1").count() == 0
-
-
 def test_odc_yaml_emit(scenes):
     """F20 (datacube_util.py:610-663, 697-717): per-dataset indexing
     YML columnar emit + ingestion YML tile_size/template."""

@@ -10,7 +10,6 @@ from pyrosar_spark.operators.dedup import (
     bind,
     exact_dedup,
     near_dup_pairs,
-    simhash64,
     simhash_pairs,
 )
 from pyrosar_spark.operators.similarity import cosine_topk, ivf_topk, lsh_topk
@@ -20,6 +19,7 @@ from pyrosar_spark.operators.textstats import (
     quality_score,
     token_count_ws,
 )
+from tests.testlib import simhash64
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),

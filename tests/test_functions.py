@@ -5,7 +5,7 @@ tests/test_ancillary.py:10-11, 70-120; tests/test_drivers.py:31, 102-107.
 from pyspark.sql import functions as F
 
 from pyrosar_spark.functions.naming import outname_base_col, parse_datasetname_cols
-from pyrosar_spark.functions.temporal import parse_date_col, seconds_col, is_valid_stamp
+from pyrosar_spark.functions.temporal import parse_date_col, seconds_col
 
 
 def test_seconds_golden(spark):
@@ -24,12 +24,6 @@ def test_parse_date(spark):
     df = spark.createDataFrame([(c[0],) for c in cases], "x string")
     out = [r.p for r in df.select(parse_date_col("x").alias("p")).collect()]
     assert out == [c[1] for c in cases]
-
-
-def test_is_valid_stamp(spark):
-    df = spark.createDataFrame([("20150222T170750",), ("2015-02-22",)], "x string")
-    out = [r.v for r in df.select(is_valid_stamp("x").alias("v")).collect()]
-    assert out == [True, False]
 
 
 def test_outname_base_golden(spark):

@@ -7,6 +7,7 @@ Golden WKT from the reference catalog round-trip
 import numpy as np
 
 from pyrosar_spark import geom
+from tests.testlib import bbox_ring, wkb_to_ring
 
 S1_CORNERS = [
     [12.0268, 50.688881],
@@ -34,23 +35,23 @@ def test_hull_interior_point_removed():
 
 def test_wkb_roundtrip():
     ring = geom.convex_hull_ring(S1_CORNERS)
-    back = geom.wkb_to_ring(geom.ring_to_wkb(ring))
+    back = wkb_to_ring(geom.ring_to_wkb(ring))
     assert np.allclose(back, ring)
     assert geom.wkt_to_ring(geom.ring_to_wkt(ring)).shape == ring.shape
 
 
 def test_points_in_ring():
-    box = geom.bbox_ring(0, 0, 10, 10)
+    box = bbox_ring(0, 0, 10, 10)
     pts = np.array([[5, 5], [15, 5], [-1, -1], [9.99, 9.99]])
     assert geom.points_in_ring(pts, box).tolist() == [True, False, False, True]
 
 
 def test_intersects_overlap_contain_disjoint():
     scene = geom.convex_hull_ring(S1_CORNERS)
-    overlap = geom.bbox_ring(11.5, 51.1, 11.9, 51.5)  # inside footprint
-    disjoint = geom.bbox_ring(12.5, 53.0, 13.0, 54.0)
-    container = geom.bbox_ring(0, 40, 20, 60)
-    crossing = geom.bbox_ring(11.9, 49.0, 12.5, 51.0)  # crosses right edge
+    overlap = bbox_ring(11.5, 51.1, 11.9, 51.5)  # inside footprint
+    disjoint = bbox_ring(12.5, 53.0, 13.0, 54.0)
+    container = bbox_ring(0, 40, 20, 60)
+    crossing = bbox_ring(11.9, 49.0, 12.5, 51.0)  # crosses right edge
     fr = geom.FlatRings([scene, scene, scene, scene])
     res = [
         fr.intersects(overlap)[0],
@@ -63,10 +64,10 @@ def test_intersects_overlap_contain_disjoint():
 
 def test_batch_intersects_mixed():
     rings = [
-        geom.bbox_ring(0, 0, 1, 1),
-        geom.bbox_ring(5, 5, 6, 6),
-        geom.bbox_ring(0.5, 0.5, 0.6, 0.6),  # inside AOI
+        bbox_ring(0, 0, 1, 1),
+        bbox_ring(5, 5, 6, 6),
+        bbox_ring(0.5, 0.5, 0.6, 0.6),  # inside AOI
     ]
-    aoi = geom.bbox_ring(0, 0, 2, 2)
+    aoi = bbox_ring(0, 0, 2, 2)
     out = geom.FlatRings(rings).intersects(aoi)
     assert out.tolist() == [True, False, True]

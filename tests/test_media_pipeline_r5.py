@@ -11,14 +11,13 @@ import numpy as np
 import pytest
 
 from pyrosar_spark.operators.media import (
-    bmp_decoder,
-    bmp_resizer,
     extract_features,
     fake_probe,
     fake_resizer,
     resize_media,
     sample_frames,
 )
+from tests.testlib import bmp_decoder, bmp_resizer
 
 
 def _media_df(spark, rows):

@@ -5,8 +5,9 @@ import struct
 
 from pyspark.sql import functions as F
 
-from pyrosar_spark.operators.media import bmp_decoder, decode_metadata
+from pyrosar_spark.operators.media import decode_metadata
 from pyrosar_spark.operators.xmlmeta import xml_docs_to_scenes
+from tests.testlib import bmp_decoder
 
 
 def _bmp_bytes(width: int, height: int, bpp: int = 24) -> bytes:
@@ -96,7 +97,7 @@ def test_safe_manifest_parse_golden(spark):
 def test_fetch_payloads_from_store(spark, tmp_path):
     """S3 closure: media_refs resolved against a mounted store root and
     read executor-side; missing refs -> NULL payload (or error mode)."""
-    from pyrosar_spark.operators.media import bmp_decoder, decode_metadata, fetch_payloads
+    from pyrosar_spark.operators.media import decode_metadata, fetch_payloads
 
     store = tmp_path / "store" / "chips"
     store.mkdir(parents=True)

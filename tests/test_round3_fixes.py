@@ -100,7 +100,8 @@ def test_fetch_payloads_escape_refused(spark, tmp_path):
 
 
 def test_simhash_arrow_matches_hof(spark):
-    from pyrosar_spark.operators.dedup import simhash64, simhash64_udf
+    from pyrosar_spark.operators.dedup import simhash64_udf
+    from tests.testlib import simhash64
 
     texts = [
         ("a", "the quick brown fox jumps over the lazy dog"),

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.select import select
 from tests.test_geom import S1_GOLDEN_WKT
+from tests.testlib import wkb_to_ring
 
 S1_BBOX_WKT = "POLYGON((8.017178 50.295261, 12.0268 50.295261, 12.0268 52.183979, 8.017178 52.183979, 8.017178 50.295261))"
 DISJOINT_WKT = "POLYGON((12.5 53, 13 53, 13 54, 12.5 54, 12.5 53))"
@@ -67,7 +68,7 @@ def test_select_returns_geometry(golden_scenes):
     assert row.geometry_wkt == S1_GOLDEN_WKT
     from pyrosar_spark import geom
 
-    assert geom.ring_to_wkt(geom.wkb_to_ring(bytes(row.geometry_wkb))) == S1_GOLDEN_WKT
+    assert geom.ring_to_wkt(wkb_to_ring(bytes(row.geometry_wkb))) == S1_GOLDEN_WKT
 
 
 def test_select_invalid_return_raises(golden_scenes):

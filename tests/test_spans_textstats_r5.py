@@ -164,33 +164,6 @@ def test_tfidf_broadcast_plan(spark):
     )
 
 
-def test_line_repetition_golden(spark):
-    from pyrosar_spark.operators.textstats import line_repetition_stats
-
-    rows = [
-        (0, "aaa\nbbb\naaa\nccc"),          # 4 lines, 1 dup ("aaa")
-        (1, "para one\n\npara one\n\nx"),    # paras: dup "para one"
-        (2, "no newlines at all"),
-        (3, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in line_repetition_stats(df).collect()}
-    assert got[0]["dup_line_frac"] == 0.25
-    # dup char mass: one extra "aaa" (3 chars) of 12 total
-    assert got[0]["dup_line_char_frac"] == 0.25
-    assert got[1]["dup_para_frac"] == round(1 / 3, 6)
-    assert got[2]["dup_line_frac"] == 0.0 and got[2]["dup_para_frac"] == 0.0
-    assert got[3]["dup_line_frac"] == 0.0 and got[3]["dup_line_char_frac"] == 0.0
-
-
-def test_line_repetition_no_shuffle(spark):
-    from pyrosar_spark.operators.textstats import line_repetition_stats
-
-    df = spark.createDataFrame([(0, "a\nb")], "doc_id long, text string")
-    plan = line_repetition_stats(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-
 # ---------------------------------------------------------------------------
 # review-pass regressions (round-5 self-review)
 # ---------------------------------------------------------------------------
@@ -222,24 +195,6 @@ def test_repetition_null_text_propagates(spark):
     assert got[0]["dup_2gram_frac"] is None
     assert got[0]["top_2gram_count"] is None
     assert got[1]["n_tokens"] == 4  # sanity: non-null rows unaffected
-
-
-def test_line_repetition_crlf_and_blank_runs(spark):
-    """CRLF endings and blank-line runs with stray whitespace must not
-    defeat the dedup (the review found '\\n\\n' splitting leaves a
-    leading newline glued to the next paragraph)."""
-    from pyrosar_spark.operators.textstats import line_repetition_stats
-
-    rows = [
-        (0, "a\r\na"),                   # CRLF lines, duplicate
-        (1, "p\n\n\np"),                 # blank run: 2 identical paras
-        (2, "p\n \t\n p \n\npX"),        # whitespace inside the run
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r.asDict() for r in line_repetition_stats(df).collect()}
-    assert got[0]["dup_line_frac"] == 0.5
-    assert got[1]["dup_para_frac"] == 0.5
-    assert got[2]["dup_para_frac"] == round(1 / 3, 6)  # "p","p","pX"
 
 
 def test_tfidf_lazy_no_eager_job(spark):

@@ -27,6 +27,7 @@ import pytest
 from pyrosar_spark import geom
 from pyrosar_spark.operators.select import select
 from pyrosar_spark.operators.spatial import aoi_frame, spatial_join
+from tests.testlib import bbox_ring
 
 # ---------------------------------------------------------------- oracle
 
@@ -114,7 +115,7 @@ def _concave_ring(rng, cx, cy, rmax):
 
 
 def _box_row(doc_id, x0, y0, x1, y1):
-    return (doc_id, x0, x1, y0, y1, [float(v) for v in geom.bbox_ring(x0, y0, x1, y1).reshape(-1)])
+    return (doc_id, x0, x1, y0, y1, [float(v) for v in bbox_ring(x0, y0, x1, y1).reshape(-1)])
 
 
 def _scene_rows(rng, n):
@@ -178,10 +179,10 @@ def _aoi_cases(rng, scenes):
     s0 = np.asarray(scenes[0][5]).reshape(-1, 2)
     cx, cy = s0[:-1, 0].mean(), s0[:-1, 1].mean()
     cases.append(("tiny_inside",
-                  geom.ring_to_wkt(geom.bbox_ring(cx - 1e-3, cy - 1e-3,
+                  geom.ring_to_wkt(bbox_ring(cx - 1e-3, cy - 1e-3,
                                                   cx + 1e-3, cy + 1e-3))))
     cases.append(("huge_around",
-                  geom.ring_to_wkt(geom.bbox_ring(s0[:, 0].min() - 5,
+                  geom.ring_to_wkt(bbox_ring(s0[:, 0].min() - 5,
                                                   s0[:, 1].min() - 5,
                                                   s0[:, 0].max() + 5,
                                                   s0[:, 1].max() + 5))))
@@ -189,14 +190,14 @@ def _aoi_cases(rng, scenes):
     # right edge (touch, zero overlap area)
     xmax, ymin, ymax2 = scenes[1][2], scenes[1][3], scenes[1][4]
     cases.append(("shared_edge",
-                  geom.ring_to_wkt(geom.bbox_ring(xmax, ymin, xmax + 2.0, ymax2))))
+                  geom.ring_to_wkt(bbox_ring(xmax, ymin, xmax + 2.0, ymax2))))
     # degenerate boxes: zero width (a vertical segment) and zero area
     cases.append(("deg_line", geom.ring_to_wkt(
         np.array([[cx, cy - 2], [cx, cy + 2], [cx, cy - 2]]))))
     cases.append(("deg_point", geom.ring_to_wkt(
         np.array([[cx, cy], [cx, cy], [cx, cy]]))))
     # the whole globe: its cover reaches lon 180 and lat 90
-    cases.append(("globe", geom.ring_to_wkt(geom.bbox_ring(-180.0, -90.0, 180.0, 90.0))))
+    cases.append(("globe", geom.ring_to_wkt(bbox_ring(-180.0, -90.0, 180.0, 90.0))))
     return cases
 
 
@@ -267,7 +268,7 @@ def test_jvm_convex_refine_is_python_free(spark, fuzz_world):
     BatchEvalPython), and the corners-based flagship shape skips the
     hull UDF too."""
     scenes, cases, sdf, expected = fuzz_world
-    wkt = geom.ring_to_wkt(geom.bbox_ring(-20.0, -20.0, 20.0, 20.0))
+    wkt = geom.ring_to_wkt(bbox_ring(-20.0, -20.0, 20.0, 20.0))
     p = (
         select(sdf, aoi_wkt=wkt, return_value=["doc_id"])
         ._jdf.queryExecution().executedPlan().toString()

@@ -23,6 +23,7 @@ import pytest
 
 from pyrosar_spark import geom
 from pyrosar_spark.operators.spatial import corner_points, ring_points, sat_refine
+from tests.testlib import bbox_ring
 
 # a lopsided convex quad and a thin triangle, both with negative
 # coordinates so the minus-minus comment trap is exercised, and a rect
@@ -32,7 +33,7 @@ AOI_QUAD = np.array(
      [-61.3, -12.7]]
 )
 AOI_TRI = np.array([[10.0, 40.0], [11.5, 40.25], [10.75, 47.0], [10.0, 40.0]])
-AOI_RECT = geom.bbox_ring(-40.0, -5.0, 0.0, 30.0)
+AOI_RECT = bbox_ring(-40.0, -5.0, 0.0, 30.0)
 
 
 def _corner_rows():
