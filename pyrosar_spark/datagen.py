@@ -228,7 +228,7 @@ def generate_documents(
     return docs
 
 
-def docs_from_corpus(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
+def docs_from_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lift the driver's plain ``documents.parquet`` corpus into the
     interleaved-span input shape: one scene_meta span (synthesized
     deterministically from the doc id), the corpus text as the text
@@ -237,7 +237,7 @@ def docs_from_corpus(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFr
         F.col("doc_id").cast("long").alias("id"), "text"
     )
     return generate_documents(
-        spark, -1, seed=seed, include_golden=False, text_source=corpus
+        spark, -1, seed=42, include_golden=False, text_source=corpus
     )
 
 

@@ -28,17 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 
-def osv_match(
-    scenes: DataFrame,
-    osv: DataFrame,
-    osvtype: str | list[str] = "POE",
-    ts_col: str = "start",
-    sensor_col: str = "sensor",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Best orbit file per scene (left join; NULL when no match).
+def osv_match(scenes: DataFrame, osv: DataFrame, osvtype: str | list[str] = "POE") -> DataFrame:
+    """Best orbit file per scene (left join; NULL when no match): one
+    whose interval covers the scene's ``start`` for its ``sensor``.
 
-    Output: scene key + ``osv_filename``/``osv_type``/``osv_publish``.
+    Output: ``doc_id`` + ``osv_filename``/``osv_type``/``osv_publish``.
     """
     types = [osvtype] if isinstance(osvtype, str) else list(osvtype)
     o = osv.where(F.col("type").isin(types)).select(
@@ -49,7 +43,7 @@ def osv_match(
         F.col("stop").alias("_osv_stop"),
         F.col("filename").alias("osv_filename"),
     )
-    s = scenes.select(key_col, F.col(ts_col).alias("_t"), F.col(sensor_col).alias("_sensor"))
+    s = scenes.select("doc_id", F.col("start").alias("_t"), F.col("sensor").alias("_sensor"))
     cand = s.join(
         F.broadcast(o),
         (F.col("_t") >= F.col("_osv_start"))
@@ -58,7 +52,7 @@ def osv_match(
         how="left",
     )
     type_rank = F.when(F.col("osv_type") == "POE", 0).otherwise(1)
-    w = W.partitionBy(key_col).orderBy(
+    w = W.partitionBy("doc_id").orderBy(
         F.col("osv_type").isNull().cast("int"),
         type_rank,
         F.col("osv_publish").desc(),
@@ -67,7 +61,7 @@ def osv_match(
     return (
         cand.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
-        .select(key_col, "osv_filename", "osv_type", "osv_publish")
+        .select("doc_id", "osv_filename", "osv_type", "osv_publish")
     )
 
 
@@ -94,13 +88,7 @@ def overlap_filter(
     return df.where((F.col(start_col) < window_stop) & (F.col(stop_col) > window_start))
 
 
-def ers_pass_lookup(
-    scenes: DataFrame,
-    passdb: DataFrame,
-    ts_col: str = "start",
-    sensor_col: str = "sensor",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def ers_pass_lookup(scenes: DataFrame, passdb: DataFrame) -> DataFrame:
     """ERS pass-database lookup with the ERS1→ERS2 fallback cascade
     (J4, reference ``ERS/auxil.py:118-123``): each scene takes the pass
     (phase/cycle) whose interval covers its timestamp for its OWN
@@ -111,7 +99,7 @@ def ers_pass_lookup(
     side never shuffles.
 
     ``passdb`` columns: ``sensor, phase, cycle, start, stop``.
-    Output: scene key + ``phase``/``cycle``/``pass_sensor`` (NULL when
+    Output: ``doc_id`` + ``phase``/``cycle``/``pass_sensor`` (NULL when
     neither table covers the scene).
     """
     p = F.broadcast(
@@ -124,7 +112,7 @@ def ers_pass_lookup(
         )
     )
     s = scenes.select(
-        key_col, F.col(ts_col).alias("_t"), F.col(sensor_col).alias("_sensor")
+        "doc_id", F.col("start").alias("_t"), F.col("sensor").alias("_sensor")
     )
     cand = s.join(
         p,
@@ -136,7 +124,7 @@ def ers_pass_lookup(
         ),
         how="left",
     )
-    w = W.partitionBy(key_col).orderBy(
+    w = W.partitionBy("doc_id").orderBy(
         F.col("_p_sensor").isNull().cast("int"),
         # own-sensor pass wins; the ERS2 fallback ranks second
         (F.col("_p_sensor") != F.col("_sensor")).cast("int"),
@@ -147,7 +135,7 @@ def ers_pass_lookup(
     return (
         cand.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
-        .select(key_col, "phase", "cycle", F.col("_p_sensor").alias("pass_sensor"))
+        .select("doc_id", "phase", "cycle", F.col("_p_sensor").alias("pass_sensor"))
     )
 
 

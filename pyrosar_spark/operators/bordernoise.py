@@ -4,7 +4,7 @@ Reference semantics (``pyroSAR/S1/auxil.py:695-855``):
  - per block of image rows: bilinear interpolation of the annotated
    noise LUT to pixel resolution (``np.interp`` along rows then
    columns, ``S1/auxil.py:782-800``);
- - denoise: ``dn² − noise·scale``, clip at 0;
+ - denoise: ``dn² − noise·scale``, clip at 0 (scale 1 here);
  - threshold mask of the low-power border region;
  - the jagged mask border is simplified with the Visvalingam-Whyatt
    algorithm (``S1/polysimplify.py:40-464``, wrapped by
@@ -26,6 +26,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# remove_border_noise's fixed settings
+LUT_POINTS = 6
+POWER_THRESHOLD = 0.5
+BORDER_POINTS = 8
 
 OUT_SCHEMA = (
     "media_ref string, width int, height int, first_valid_col int, "
@@ -81,12 +86,12 @@ def _interp_lut(lut: np.ndarray, height: int, width: int) -> np.ndarray:
 
 
 def denoise_chip(
-    dn: np.ndarray, lut: np.ndarray, scale: float = 1.0, threshold: float = 0.5
+    dn: np.ndarray, lut: np.ndarray, threshold: float = 0.5
 ) -> tuple[np.ndarray, np.ndarray]:
-    """``dn² − noise·scale`` (clipped at 0) + border mask below the
-    power threshold."""
+    """``dn² − noise`` (clipped at 0) + border mask below the power
+    threshold."""
     noise = _interp_lut(lut, *dn.shape)
-    power = np.clip(dn.astype(np.float64) ** 2 - noise * scale, 0.0, None)
+    power = np.clip(dn.astype(np.float64) ** 2 - noise, 0.0, None)
     mask = power < threshold
     return power, mask
 
@@ -125,14 +130,7 @@ def portable_payload(
     return dn, noise
 
 
-def remove_border_noise(
-    chips: DataFrame,
-    lut_points: int = 6,
-    scale: float = 1.0,
-    threshold: float = 0.5,
-    simplify_to: int = 8,
-    payload: str = "rng",
-) -> DataFrame:
+def remove_border_noise(chips: DataFrame, payload: str = "rng") -> DataFrame:
     """Arrow-batched border-noise removal over synthetic chips.
 
     Chips carry (media_ref, width, height, seed); the dn payload and
@@ -159,17 +157,17 @@ def remove_border_noise(
                 h, w = int(row.height), int(row.width)
                 if payload == "portable":
                     dn, noise = portable_payload(int(row.seed), h, w)
-                    power = dn * dn - noise * scale
-                    mask = power < threshold
+                    power = dn * dn - noise
+                    mask = power < POWER_THRESHOLD
                 else:
                     rng = np.random.default_rng(int(row.seed))
                     dn = rng.uniform(0.5, 2.0, size=(h, w))
                     border_w = max(w // 4, 1)
                     dn[:, :border_w] *= 0.1  # low-power border band
-                    lut = rng.uniform(0.001, 0.01, size=(lut_points, lut_points))
-                    _, mask = denoise_chip(dn, lut, scale, threshold)
+                    lut = rng.uniform(0.001, 0.01, size=(LUT_POINTS, LUT_POINTS))
+                    _, mask = denoise_chip(dn, lut, POWER_THRESHOLD)
                 border = border_from_mask(mask)
-                simplified = vw_simplify(border, simplify_to)
+                simplified = vw_simplify(border, BORDER_POINTS)
                 out["media_ref"].append(row.media_ref)
                 out["width"].append(w)
                 out["height"].append(h)

@@ -48,12 +48,12 @@ def select_duplicates(
     return df.select("outname_base", "scene")
 
 
-def find_datasets(names: DataFrame, name_col: str = "filename", **kwargs) -> DataFrame:
-    """Filter pyroSAR product names by parsed metadata
-    (``ancillary.py:282-329``): tuple → membership; ``start``/``stop``
+def find_datasets(names: DataFrame, **kwargs) -> DataFrame:
+    """Filter pyroSAR product names (the ``filename`` column) by parsed
+    metadata (``ancillary.py:282-329``): tuple → membership; ``start``/``stop``
     → range on the start stamp; list equality for ``proc_steps``;
     exact match otherwise."""
-    df = names.withColumn("_m", parse_datasetname_cols(F.col(name_col))).where(
+    df = names.withColumn("_m", parse_datasetname_cols(F.col("filename"))).where(
         F.col("_m").isNotNull()
     )
     for key, val in kwargs.items():
@@ -69,7 +69,7 @@ def find_datasets(names: DataFrame, name_col: str = "filename", **kwargs) -> Dat
             )
         else:
             df = df.where(F.col(f"_m.{key}") == val)
-    return df.select(name_col)
+    return df.select("filename")
 
 
 def move_scenes(data: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -84,21 +84,21 @@ def move_scenes(data: DataFrame, mapping: DataFrame) -> DataFrame:
     )
 
 
-def cleanup_missing(data: DataFrame, live_refs: DataFrame, ref_col: str = "scene") -> DataFrame:
+def cleanup_missing(data: DataFrame, live_refs: DataFrame) -> DataFrame:
     """Remove rows whose backing file vanished (``archive.py:652-659``):
-    semi-join against the live manifest instead of per-row stat calls."""
+    semi-join on ``scene`` against the live manifest instead of per-row
+    stat calls."""
     return data.join(
-        live_refs.select(F.col(ref_col).alias("_live")).distinct(),
-        data[ref_col] == F.col("_live"),
+        live_refs.select(F.col("scene").alias("_live")).distinct(),
+        data["scene"] == F.col("_live"),
         how="left_semi",
     )
 
 
-def export_laundered(data: DataFrame, table_cols: list[str] | None = None) -> DataFrame:
+def export_laundered(data: DataFrame) -> DataFrame:
     """Projection with shapefile-safe laundered names
     (``archive.py:668-715``)."""
-    cols = table_cols or data.columns
-    return data.select(*[F.col(c).alias(LAUNDER_MAP.get(c, c)) for c in cols])
+    return data.select(*[F.col(c).alias(LAUNDER_MAP.get(c, c)) for c in data.columns])
 
 
 def median_of_array(col: Column) -> Column:

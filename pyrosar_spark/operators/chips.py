@@ -37,11 +37,9 @@ MOSAIC_SCHEMA = (
 )
 
 
-def synthetic_chips(
-    docs: DataFrame, width: int = 32, height: int = 32, res: float = 0.05
-) -> DataFrame:
+def synthetic_chips(docs: DataFrame) -> DataFrame:
     """Deterministic chip table derived from chip spans: each media_ref
-    gets a placement derived from its hash and an int16 payload
+    gets a 32x32 grid at 0.05° placed by its hash and an int16 payload
     ``f(seed, media_ref)`` (FIXTURES.md §8)."""
     chips = docs.select(
         "doc_id",
@@ -54,10 +52,10 @@ def synthetic_chips(
         {
             "ulx": F.round(lon, 3),
             "uly": F.round(lat, 3),
-            "xres": F.lit(res),
-            "yres": F.lit(res),
-            "width": F.lit(width),
-            "height": F.lit(height),
+            "xres": F.lit(0.05),
+            "yres": F.lit(0.05),
+            "width": F.lit(32),
+            "height": F.lit(32),
             "nodata": F.lit(-32768.0),
             "area_or_point": F.when(F.pmod(h, F.lit(5)) == 0, "point").otherwise("area"),
             "seed": F.pmod(h, F.lit(32767)).cast("int"),

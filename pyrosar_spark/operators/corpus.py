@@ -63,16 +63,15 @@ def _chunks(tk: Column, chunk_tokens: int) -> Column:
 
 def strip_boilerplate_chunks(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_tokens: int = 8,
     min_docs: int = 2,
     # accepts only "md5"; kept because perfbench/workloads.py passes it
     hash_mode: str = "md5",
 ) -> DataFrame:
-    """C4-style boilerplate removal: delete every chunk whose text
-    occurs in ``min_docs`` or more DISTINCT documents, and re-emit each
-    surviving document with the remaining chunks re-joined in order.
+    """C4-style boilerplate removal: delete every chunk of ``text``
+    that occurs in ``min_docs`` or more DISTINCT documents, and re-emit
+    each surviving ``doc_id`` with the remaining chunks re-joined in
+    order.
 
     Plan shape (scale-first, the same skeleton as
     :func:`~pyrosar_spark.operators.dedup.dup_ngram_spans`):
@@ -92,7 +91,7 @@ def strip_boilerplate_chunks(
     Documents whose every chunk is boilerplate drop out entirely —
     the C4 behavior (an emptied document is not training data).
 
-    Output: (id_col, clean_text, n_kept, n_dropped), ordered by id.
+    Output: (doc_id, clean_text, n_kept, n_dropped), ordered by doc_id.
     """
     if chunk_tokens < 1:
         raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
@@ -100,7 +99,7 @@ def strip_boilerplate_chunks(
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     if hash_mode != "md5":
         raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
-    d = bind(_tokens(df, text_col, id_col), "_ck", _chunks(F.col("_tk"), chunk_tokens))
+    d = bind(_tokens(df, "text", "doc_id"), "_ck", _chunks(F.col("_tk"), chunk_tokens))
     pos = d.select(
         "_id",
         F.size("_ck").alias("_n"),
@@ -128,22 +127,16 @@ def strip_boilerplate_chunks(
             F.count("*").alias("n_kept"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "clean_text",
             "n_kept",
             (F.col("_n") - F.col("n_kept")).cast("bigint").alias("n_dropped"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def token_commonness(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    rare_max_count: int = 2,
-    broadcast_vocab: bool = True,
-) -> DataFrame:
+def token_commonness(df: DataFrame, rare_max_count: int = 2) -> DataFrame:
     """Corpus-informed token-commonness scoring: build the corpus
     unigram frequency table, then score each document by how common
     its tokens are — the integer-exact stand-in for unigram log-prob
@@ -153,16 +146,15 @@ def token_commonness(
     Plan shape: one explode + partial-aggregatable groupBy(token)
     builds the vocabulary (output is vocab-sized, tiny next to the
     corpus); the corpus then joins the vocabulary, NOT the reverse —
-    with ``broadcast_vocab=True`` (default) the vocab is broadcast so
-    corpus tokens NEVER shuffle, which also sidesteps the classic
-    stopword skew ("the" is a hot key a shuffle join would hash to one
-    task). Pass ``broadcast_vocab=False`` only when the vocabulary
-    genuinely exceeds executor memory (≳10^8 distinct tokens) and rely
-    on AQE skew-join splitting instead.
+    the vocab is broadcast so corpus tokens NEVER shuffle, which also
+    sidesteps the classic stopword skew ("the" is a hot key a shuffle
+    join would hash to one task). A vocabulary beyond executor memory
+    (≳10^8 distinct tokens) does not fit this plan.
 
-    Output per document: (id_col, n_tokens, n_rare [corpus count <=
-    ``rare_max_count``], rare_frac, mean_token_freq) — counts BIGINT,
-    fractions ``round(int/int, 6)``. Ordered by id.
+    Input: ``doc_id``, ``text``. Output per document: (doc_id,
+    n_tokens, n_rare [corpus count <= ``rare_max_count``], rare_frac,
+    mean_token_freq) — counts BIGINT, fractions ``round(int/int, 6)``.
+    Ordered by doc_id.
     """
     if rare_max_count < 1:
         raise ValueError(f"rare_max_count must be >= 1, got {rare_max_count}")
@@ -170,13 +162,11 @@ def token_commonness(
     # join — localCheckpoint pins the tokenize+explode to one
     # evaluation (same double-compute fix as dup_ngram_spans).
     toks = (
-        _tokens(df, text_col, id_col)
+        _tokens(df, "text", "doc_id")
         .select("_id", F.explode("_tk").alias("_t"))
         .localCheckpoint()
     )
-    vocab = toks.groupBy("_t").agg(F.count("*").alias("_cnt"))
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
+    vocab = F.broadcast(toks.groupBy("_t").agg(F.count("*").alias("_cnt")))
     n_tok = F.count("*").cast("bigint")
     n_rare = F.sum(
         F.when(F.col("_cnt") <= rare_max_count, 1).otherwise(0)
@@ -190,7 +180,7 @@ def token_commonness(
             F.sum("_cnt").cast("bigint").alias("_sum_freq"),
         )
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_tokens",
             "n_rare",
             F.round(F.col("n_rare") / F.col("n_tokens"), 6).alias("rare_frac"),
@@ -198,5 +188,5 @@ def token_commonness(
                 "mean_token_freq"
             ),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )

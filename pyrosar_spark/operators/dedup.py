@@ -432,18 +432,16 @@ def _candidate_pairs(bands: DataFrame, max_bucket: int) -> DataFrame:
 
 def dropped_bucket_stats(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     n_bands: int = 4,
-    shingle_k: int = 2,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Observability for the ``max_bucket`` recall trade: one row with
-    the number of over-cap buckets and their total membership. Run it
-    alongside :func:`near_dup_pairs` when the cap is active so drops
-    are recorded, not silent."""
-    sh = shingle_frame(df, text_col, id_col, n_hashes, shingle_k)
+    the number of over-cap buckets and their total membership (2-token
+    shingles of ``text``, keyed by ``doc_id``). Run it alongside
+    :func:`near_dup_pairs` when the cap is active so drops are
+    recorded, not silent."""
+    sh = shingle_frame(df, "text", "doc_id", n_hashes, 2)
     return _dropped_stats(_lsh_bands(sh, n_hashes, n_bands), ["band", "key"], max_bucket)
 
 
@@ -605,7 +603,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     n_blocks: int = 4,
-    allow_partial_recall: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash with block-permutation candidate
     generation: split the 64-bit hash into ``n_blocks`` equal blocks;
@@ -613,20 +610,18 @@ def simhash_pairs(
     (pigeonhole) → equi-join per block, then exact hamming verify.
 
     The pigeonhole recall guarantee only holds for
-    ``max_hamming <= n_blocks - 1`` — a larger threshold silently
-    misses pairs that do not coincidentally share a block, so it is
-    rejected unless ``allow_partial_recall=True`` is passed explicitly
-    (and then the shortfall is the caller's documented trade).
+    ``max_hamming <= n_blocks - 1`` — a larger threshold would silently
+    miss pairs that do not coincidentally share a block, so it raises
+    ``ValueError``.
 
     Tokens hash with the engine-portable md5-60 form, through the numpy
     batch sign-sum (:func:`simhash64_udf`), so the whole operator is
     reproducible in SQL oracles.
     """
-    if max_hamming > n_blocks - 1 and not allow_partial_recall:
+    if max_hamming > n_blocks - 1:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
-            f"n_blocks-1={n_blocks - 1}; raise n_blocks or pass "
-            "allow_partial_recall=True to accept missed pairs"
+            f"n_blocks-1={n_blocks - 1}; raise n_blocks"
         )
     # spread before the Python stage by input bytes, same no-shrink
     # policy as shingle_frame
@@ -786,8 +781,6 @@ def _cc_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
 
 def dup_ngram_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     min_docs: int = 2,
     # accepts only "md5"; kept because perfbench/workloads.py passes it
@@ -818,8 +811,9 @@ def dup_ngram_spans(
          gap-and-islands window (break when the gap exceeds n, i.e. the
          covered token ranges neither overlap nor touch).
 
-    Output: (id_col, span_start, span_end, n_grams) — token-indexed
-    [start, end] inclusive, 1-based, ordered by (id, span_start).
+    Input: ``doc_id``, ``text``. Output: (doc_id, span_start, span_end,
+    n_grams) — token-indexed [start, end] inclusive, 1-based, ordered by
+    (doc_id, span_start).
     Grams hash with the engine-portable :func:`portable_hash64`, so a
     SQL oracle reproduces spans exactly.
     """
@@ -830,7 +824,7 @@ def dup_ngram_spans(
     if hash_mode != "md5":
         raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
     grams = (
-        _gram_hashes(_tokens(df, text_col, id_col), "_id", n)
+        _gram_hashes(_tokens(df, "text", "doc_id"), "_id", n)
         # r6: the gram frame feeds BOTH the multiplicity aggregation and
         # the position join-back — without materialization the plan
         # re-runs the whole tokenize+slice+hash subtree (the operator's
@@ -865,17 +859,15 @@ def dup_ngram_spans(
             F.count("*").alias("n_grams"),
         )
         .select(
-            F.col("_id").alias(id_col), "span_start", "span_end", "n_grams"
+            F.col("_id").alias("doc_id"), "span_start", "span_end", "n_grams"
         )
-        .orderBy(id_col, "span_start")
+        .orderBy("doc_id", "span_start")
     )
 
 
 def cross_near_dup_pairs(
     corpus: DataFrame,
     refs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     n_bands: int = 4,
     shingle_k: int = 2,
@@ -904,13 +896,13 @@ def cross_near_dup_pairs(
     (same observable-drop pattern as ``max_bucket`` in
     :func:`near_dup_pairs`).
 
-    Both id namespaces are reported as given: output
-    (id_col, ref_id, jaccard) with no a<b ordering — cross-corpus ids
-    are not comparable.
+    Both sides carry ``doc_id`` and ``text``; both id namespaces are
+    reported as given: output (doc_id, ref_id, jaccard) with no a<b
+    ordering — cross-corpus ids are not comparable.
     """
     release_shingle_cache()
-    sh_c = _live_shingles(corpus, text_col, id_col, n_hashes, shingle_k)
-    sh_r = _live_shingles(refs, text_col, id_col, n_hashes, shingle_k)
+    sh_c = _live_shingles(corpus, "text", "doc_id", n_hashes, shingle_k)
+    sh_r = _live_shingles(refs, "text", "doc_id", n_hashes, shingle_k)
     bands_c = _lsh_bands(sh_c, n_hashes, n_bands)
     bands_r = (
         _lsh_bands(sh_r, n_hashes, n_bands).withColumnRenamed("_id", "_rid")
@@ -929,7 +921,7 @@ def cross_near_dup_pairs(
         .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= threshold)
         .select(
-            F.col("_a").alias(id_col),
+            F.col("_a").alias("doc_id"),
             F.col("_b").alias("ref_id"),
             "jaccard",
         )

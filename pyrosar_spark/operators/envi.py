@@ -79,13 +79,9 @@ def decode_envi(hdr_text: str, payload: bytes) -> np.ndarray:
     return arr.astype(np.float64)
 
 
-def raster_mean_nonzero(
-    rasters: DataFrame,
-    id_col: str = "doc_id",
-    hdr_col: str = "hdr",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """(doc_id, r_mean): mean of the non-zero pixels, exactly the
+def raster_mean_nonzero(rasters: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id_col, r_mean) from ``hdr``/``payload`` ENVI rasters: mean of
+    the non-zero pixels, exactly the
     reference's ``np.mean(arr[arr != 0])`` (drivers.py:916) — NULL
     when every pixel is zero (the reference would warn-and-NaN;
     NULL is the relational spelling)."""
@@ -93,7 +89,7 @@ def raster_mean_nonzero(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             means = []
-            for hdr, payload in zip(pdf[hdr_col], pdf[payload_col]):
+            for hdr, payload in zip(pdf["hdr"], pdf["payload"]):
                 arr = decode_envi(str(hdr), bytes(payload))
                 nz = arr[arr != 0]
                 means.append(float(nz.mean()) if nz.size else None)
@@ -101,7 +97,7 @@ def raster_mean_nonzero(
                 {id_col: pdf[id_col], "r_mean": pd.array(means, dtype="float64")}
             )
 
-    return rasters.select(id_col, hdr_col, payload_col).mapInPandas(
+    return rasters.select(id_col, "hdr", "payload").mapInPandas(
         run, f"{id_col} {dict(rasters.dtypes)[id_col]}, r_mean double"
     )
 
@@ -110,7 +106,6 @@ def fill_incidence_from_rasters(
     parsed: DataFrame,
     rasters: DataFrame,
     id_col: str = "doc_id",
-    incidence_col: str = "incidence",
 ) -> DataFrame:
     """Complete the DIMAP incidence cascade (drivers.py:897-918): rows
     whose metadata stages produced NULL get the mean-of-nonzero of
@@ -119,15 +114,15 @@ def fill_incidence_from_rasters(
     Only the NULL rows join the raster table and only their payloads
     are decoded — filter → join → Arrow kernel → union, so the decode
     cost scales with the fallback population, not the catalog."""
-    need = parsed.filter(F.col(incidence_col).isNull())
-    have = parsed.filter(F.col(incidence_col).isNotNull())
+    need = parsed.filter(F.col("incidence").isNull())
+    have = parsed.filter(F.col("incidence").isNotNull())
     means = raster_mean_nonzero(
         rasters.join(need.select(id_col), on=id_col, how="leftsemi"),
         id_col=id_col,
     )
     filled = (
-        need.drop(incidence_col)
+        need.drop("incidence")
         .join(means, on=id_col, how="left")
-        .withColumnRenamed("r_mean", incidence_col)
+        .withColumnRenamed("r_mean", "incidence")
     )
     return have.unionByName(filled)

@@ -48,28 +48,22 @@ SCENE_COLUMNS = [
 
 
 @F.pandas_udf(T.ArrayType(T.DoubleType()))
-def footprint_ring_udf(coords: pd.Series) -> pd.Series:
-    """Convex hull → canonical flat CCW ring (mirrors
-    ``drivers.py:316-331``). THE geometry hot path: the 4-corner case
-    (every real SAR footprint) is fully vectorized numpy
-    (:func:`pyrosar_spark.geom.hull_rings_batch`); ~3 µs/row amortized —
-    measured ~100× faster than expressing the same hull with Catalyst
-    higher-order array functions (interpreted, allocation-heavy; round 5,
-    ``BENCH/BASELINE.md``)."""
-    rings = geom.hull_rings_batch(list(coords))
-    return pd.Series([None if r is None else list(r.reshape(-1)) for r in rings])
-
-
-@F.pandas_udf(T.ArrayType(T.DoubleType()))
 def ring_from_corners_udf(corners: pd.Series) -> pd.Series:
-    """Hull ring from the ``corners`` struct column — the DEFERRED
-    geometry path: when the catalog is built with
-    ``with_geometry='defer'``, consumers compute the ring only for rows
-    that survived their cheap JVM prefilters (bbox, dates, flags), so
-    the Python stage sees the selectivity-reduced stream instead of
-    every row. At 4→16-core scaling this is the difference between the
-    Arrow workers riding free cores and oversubscribing them (measured
-    round 2)."""
+    """Convex hull of the ``corners`` struct column → canonical flat CCW
+    ring (mirrors ``drivers.py:316-331``). THE geometry hot path: the
+    4-corner case (every real SAR footprint) is fully vectorized numpy
+    (:func:`pyrosar_spark.geom.hull_rings_batch`) — measured ~100×
+    faster than expressing the same hull with Catalyst higher-order
+    array functions (interpreted, allocation-heavy; round 5,
+    ``BENCH/BASELINE.md``).
+
+    :func:`docs_to_scenes` runs it on every row with
+    ``with_geometry=True``; on a ``with_geometry='defer'`` catalog,
+    consumers run it only on rows that survived their cheap JVM
+    prefilters (bbox, dates, flags), so the Python stage sees the
+    selectivity-reduced stream instead of every row. At 4→16-core
+    scaling this is the difference between the Arrow workers riding
+    free cores and oversubscribing them (measured round 2)."""
     coords = [
         None if c is None else [[p["lon"], p["lat"]] for p in c] for c in corners
     ]
@@ -224,12 +218,13 @@ def docs_to_scenes(
         exprs[p] = (
             F.array_contains(field("polarizations"), p.upper()).cast("int").alias(p)
         )
-    exprs["corners"] = F.transform(
+    corners = F.transform(
         field("coordinates"),
         lambda c: F.struct(
             F.element_at(c, 1).alias("lon"), F.element_at(c, 2).alias("lat")
         ),
-    ).alias("corners")
+    )
+    exprs["corners"] = corners.alias("corners")
     exprs["xmin"] = F.array_min(lons).alias("xmin")
     exprs["xmax"] = F.array_max(lons).alias("xmax")
     exprs["ymin"] = F.array_min(lats).alias("ymin")
@@ -247,9 +242,7 @@ def docs_to_scenes(
             ).alias("meta", metadata={"meta_keys": list(meta_keys)})
         ]
     geom_cols = (
-        [field("coordinates").alias("_coords")]
-        if with_geometry is True and "ring" in want
-        else []
+        [corners.alias("_corners")] if with_geometry is True and "ring" in want else []
     )
     out = parsed.select(
         *[exprs[c] for c in want if c != "ring"], *meta_cols, *geom_cols
@@ -259,19 +252,18 @@ def docs_to_scenes(
         return out.select(*[c for c in cols if c != "ring"])
     if not with_geometry:
         return out.withColumn("ring", F.lit(None).cast("array<double>")).select(*cols)
-    return out.withColumn("ring", footprint_ring_udf(F.col("_coords"))).select(*cols)
+    return out.withColumn("ring", ring_from_corners_udf(F.col("_corners"))).select(*cols)
 
 
 def insert_scenes(
     new_scenes: DataFrame,
     existing: DataFrame | None = None,
     existing_duplicates: DataFrame | None = None,
-    seq_col: str = "doc_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Route scenes into (data, duplicates) — ``archive.py:563-577``.
 
     First registration of ``(product, outname_base)`` (by the stable
-    ingest sequence ``seq_col``) goes to data; same-key, different
+    ingest sequence ``doc_id``) goes to data; same-key, different
     ``scene`` arrivals go to duplicates; exact re-registrations (same
     PK *and* same scene path) are skipped. A scene whose basename is
     already in either table is skipped too (``filter_scenelist``,
@@ -287,7 +279,7 @@ def insert_scenes(
         candidates = candidates.join(
             existing_duplicates.select("scene").distinct(), on="scene", how="left_anti"
         )
-    rank_w = W.partitionBy(*key).orderBy(F.col(seq_col))
+    rank_w = W.partitionBy(*key).orderBy(F.col("doc_id"))
     ranked = candidates.withColumn("_rk", F.row_number().over(rank_w))
     fresh = ranked.where(F.col("_rk") == 1).drop("_rk")
     dups_batch = ranked.where(F.col("_rk") > 1).drop("_rk")
@@ -314,11 +306,9 @@ def is_registered(data: DataFrame, duplicates: DataFrame, scene: str) -> bool:
     return duplicates.where(F.col("scene").contains(base)).limit(1).count() > 0
 
 
-def filter_scenelist(
-    data: DataFrame, duplicates: DataFrame, scenes: DataFrame, scene_col: str = "scene"
-) -> DataFrame:
-    """Drop scenes whose basename is already registered in either table
-    (``archive.py:717-745``) — anti-join on basename."""
+def filter_scenelist(data: DataFrame, duplicates: DataFrame, scenes: DataFrame) -> DataFrame:
+    """Drop scenes whose ``scene`` basename is already registered in
+    either table (``archive.py:717-745``) — anti-join on basename."""
     base = lambda c: F.element_at(F.split(c, "/"), -1)  # noqa: E731
     registered = (
         data.select(base(F.col("scene")).alias("_b"))
@@ -326,7 +316,7 @@ def filter_scenelist(
         .distinct()
     )
     return scenes.join(
-        registered, base(F.col(scene_col)) == F.col("_b"), how="left_anti"
+        registered, base(F.col("scene")) == F.col("_b"), how="left_anti"
     )
 
 

@@ -59,29 +59,26 @@ def fake_decoder(payload: bytes) -> tuple[int, int, int]:
 def decode_metadata(
     media: DataFrame,
     decoder: Callable[[bytes], tuple[int, int, int]] = fake_decoder,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Arrow-batched metadata extraction over binary media payloads."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             dims = np.array(
-                [decoder(bytes(p)) for p in pdf[payload_col]], dtype=np.int64
+                [decoder(bytes(p)) for p in pdf["payload"]], dtype=np.int64
             ).reshape(-1, 3)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype(str),
-                    "media_ref": pdf[ref_col].astype(str),
-                    "n_bytes": pdf[payload_col].map(len).astype("int32"),
+                    "doc_id": pdf["doc_id"].astype(str),
+                    "media_ref": pdf["media_ref"].astype(str),
+                    "n_bytes": pdf["payload"].map(len).astype("int32"),
                     "width": dims[:, 0].astype("int32"),
                     "height": dims[:, 1].astype("int32"),
                     "channels": dims[:, 2].astype("int32"),
                 }
             )
 
-    return media.select(id_col, ref_col, payload_col).mapInPandas(run, DECODE_SCHEMA)
+    return media.select("doc_id", "media_ref", "payload").mapInPandas(run, DECODE_SCHEMA)
 
 
 FEATURES_SCHEMA = (
@@ -92,9 +89,6 @@ FEATURES_SCHEMA = (
 def extract_features(
     media: DataFrame,
     n_buckets: int = 16,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    payload_col: str = "payload",
     chunk_bytes: int = 16 << 20,
 ) -> DataFrame:
     """L1-normalized byte-histogram features over binary payloads —
@@ -128,7 +122,7 @@ def extract_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             isnull = payloads.isna().to_numpy()
             lengths = np.array(
                 [0 if (v is None or v is pd.NA) else len(v) for v in payloads],
@@ -158,8 +152,8 @@ def extract_features(
             ]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype(str),
-                    "media_ref": pdf[ref_col].astype(str),
+                    "doc_id": pdf["doc_id"].astype(str),
+                    "media_ref": pdf["media_ref"].astype(str),
                     "n_bytes": pd.array(
                         [None if isnull[i] else int(lengths[i]) for i in range(n)],
                         dtype="Int32",
@@ -168,7 +162,7 @@ def extract_features(
                 }
             )
 
-    return media.select(id_col, ref_col, payload_col).mapInPandas(
+    return media.select("doc_id", "media_ref", "payload").mapInPandas(
         run, FEATURES_SCHEMA
     )
 
@@ -192,9 +186,6 @@ def sample_frames(
     media: DataFrame,
     stride: int,
     probe: Callable[[bytes], tuple[int, int]] = fake_probe,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Every ``stride``-th frame of each video payload as its own row:
     frame_idx ∈ {0, stride, 2·stride, …} < n_frames, with the exact
@@ -216,12 +207,12 @@ def sample_frames(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            keep = pdf[pdf[payload_col].notna()]
+            keep = pdf[pdf["payload"].notna()]
             k = len(keep)
             if k == 0:
                 continue
             probes = np.array(
-                [probe(bytes(v)) for v in keep[payload_col]], dtype=np.int64
+                [probe(bytes(v)) for v in keep["payload"]], dtype=np.int64
             ).reshape(-1, 2)
             n_frames, fps = probes[:, 0], probes[:, 1]
             counts = (np.maximum(n_frames, 0) + stride - 1) // stride
@@ -231,8 +222,8 @@ def sample_frames(
             frame_idx = (np.arange(total) - offsets[rep]) * stride
             yield pd.DataFrame(
                 {
-                    "doc_id": keep[id_col].astype(str).to_numpy()[rep],
-                    "media_ref": keep[ref_col].astype(str).to_numpy()[rep],
+                    "doc_id": keep["doc_id"].astype(str).to_numpy()[rep],
+                    "media_ref": keep["media_ref"].astype(str).to_numpy()[rep],
                     "n_frames": n_frames[rep].astype("int32"),
                     "fps": fps[rep].astype("int32"),
                     "frame_idx": frame_idx.astype("int32"),
@@ -240,7 +231,7 @@ def sample_frames(
                 }
             )
 
-    return media.select(id_col, ref_col, payload_col).mapInPandas(
+    return media.select("doc_id", "media_ref", "payload").mapInPandas(
         run, FRAMES_SCHEMA
     )
 
@@ -275,9 +266,6 @@ def resize_media(
     media: DataFrame,
     max_side: int,
     resizer: Callable[[bytes, int], tuple[int, int, int, int, bytes]] = fake_resizer,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Aspect-preserving resize of every media payload to fit in a
     ``max_side``-square — the standard normalize step before feature
@@ -292,7 +280,7 @@ def resize_media(
         for pdf in batches:
             dims = []
             payloads = []
-            for v in pdf[payload_col]:
+            for v in pdf["payload"]:
                 if v is None or v is pd.NA:
                     dims.append((None, None, None, None))
                     payloads.append(None)
@@ -303,8 +291,8 @@ def resize_media(
             cols = list(zip(*dims)) if dims else [[], [], [], []]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype(str),
-                    "media_ref": pdf[ref_col].astype(str),
+                    "doc_id": pdf["doc_id"].astype(str),
+                    "media_ref": pdf["media_ref"].astype(str),
                     "width": pd.array(cols[0], dtype="Int32"),
                     "height": pd.array(cols[1], dtype="Int32"),
                     "out_width": pd.array(cols[2], dtype="Int32"),
@@ -313,7 +301,7 @@ def resize_media(
                 }
             )
 
-    return media.select(id_col, ref_col, payload_col).mapInPandas(
+    return media.select("doc_id", "media_ref", "payload").mapInPandas(
         run, RESIZE_SCHEMA
     )
 
@@ -321,7 +309,6 @@ def resize_media(
 def fetch_payloads(
     refs: DataFrame,
     base_dir: str,
-    ref_col: str = "media_ref",
     on_missing: str = "null",
 ) -> DataFrame:
     """REAL object-store fetch for media refs (S3 closure): resolve each
@@ -346,7 +333,7 @@ def fetch_payloads(
         real_root = os.path.realpath(root) + os.sep
         for pdf in batches:
             payloads = []
-            for ref in pdf[ref_col]:
+            for ref in pdf["media_ref"]:
                 # catalog-controlled refs must stay inside the store
                 # root: an absolute ref would make os.path.join discard
                 # the root and '..' segments would escape it (ADVICE r2)

@@ -26,25 +26,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the product both YMLs describe
+PLATFORM = "SENTINEL_1A"
+INSTRUMENT = "SAR"
+PRODUCT_TYPE = "gamma0"
+CRS = "EPSG:4326"
+
 
 def odc_indexing_docs(
     scenes: DataFrame,
     measurements: dict[str, str],
-    platform: str = "SENTINEL_1A",
-    instrument: str = "SAR",
-    fmt: str = "GeoTIFF",
-    product_type: str = "gamma0",
-    crs: str = "EPSG:4326",
-    id_col: str = "outname_base",
     passthrough: list[str] | None = None,
 ) -> DataFrame:
     """One ODC indexing YML text per catalog row (columnar emit).
 
-    ``measurements`` maps band name → column holding the band file
-    path. Extent corners come from the catalog bbox (ul/ur/ll/lr as in
-    ``Dataset.extent``); from_dt/to_dt from start/stop stamps.
+    Each row is identified by its ``outname_base``; ``measurements``
+    maps band name → column holding the band file path. Extent corners
+    come from the catalog bbox (ul/ur/ll/lr as in ``Dataset.extent``);
+    from_dt/to_dt from start/stop stamps.
     """
-    ident = F.col(id_col)
+    ident = F.col("outname_base")
     det_id = F.md5(ident)
     band_lines = []
     for name, path_col in sorted(measurements.items()):
@@ -57,15 +58,15 @@ def odc_indexing_docs(
     yml = F.concat(
         F.lit("id: "), det_id, F.lit("\n"),
         F.lit("image:\n  bands:\n"), *band_lines,
-        F.lit(f"platform:\n  code: {platform}\n"),
-        F.lit(f"instrument:\n  name: {instrument}\n"),
-        F.lit(f"format:\n  name: {fmt}\n"),
+        F.lit(f"platform:\n  code: {PLATFORM}\n"),
+        F.lit(f"instrument:\n  name: {INSTRUMENT}\n"),
+        F.lit("format:\n  name: GeoTIFF\n"),
         F.lit("grid_spatial:\n  projection:\n    geo_ref_points:\n"),
         F.lit("    ul:\n"), corner("xmin", "ymax"),
         F.lit("    ur:\n"), corner("xmax", "ymax"),
         F.lit("    ll:\n"), corner("xmin", "ymin"),
         F.lit("    lr:\n"), corner("xmax", "ymin"),
-        F.lit(f"    spatial_reference: {crs}\n"),
+        F.lit(f"    spatial_reference: {CRS}\n"),
         F.lit("extent:\n  coord:\n"),
         F.lit("    ul:\n"), corner("xmin", "ymax"),
         F.lit("    ur:\n"), corner("xmax", "ymax"),
@@ -73,7 +74,7 @@ def odc_indexing_docs(
         F.lit("    lr:\n"), corner("xmax", "ymin"),
         F.lit("  from_dt: "), F.col("start"), F.lit("\n"),
         F.lit("  to_dt: "), F.col("stop"), F.lit("\n"),
-        F.lit(f"product_type: {product_type}\n"),
+        F.lit(f"product_type: {PRODUCT_TYPE}\n"),
         F.lit("lineage:\n  source_datasets: {}\n"),
     )
     return scenes.select(
@@ -87,10 +88,6 @@ def odc_indexing_docs(
 def odc_ingestion_yaml(
     product_name: str,
     output_type: str,
-    platform: str = "SENTINEL_1A",
-    instrument: str = "SAR",
-    product_type: str = "gamma0",
-    crs: str = "EPSG:4326",
     resolution: tuple[float, float] = (20.0, -20.0),
     chunking: dict | None = None,
     ingest_location: str = "/data/ingest",
@@ -104,9 +101,9 @@ def odc_ingestion_yaml(
     chunking = chunking or {"x": 512, "y": 512, "time": 1}
     tile_x = resolution[0] * chunking["x"]
     tile_y = resolution[1] * chunking["y"]
-    epsg = crs.replace("EPSG:", "")
+    epsg = CRS.replace("EPSG:", "")
     template = (
-        f"{output_type}/{platform}_{instrument}_{product_type}_{epsg}_"
+        f"{output_type}/{PLATFORM}_{INSTRUMENT}_{PRODUCT_TYPE}_{epsg}_"
         "{tile_index[0]}_{tile_index[1]}_{start_time}.nc"
     )
     lines = [
@@ -115,12 +112,12 @@ def odc_ingestion_yaml(
         f"location: {ingest_location}",
         f"file_path_template: {template}",
         "global_attributes:",
-        f"  instrument: {instrument}",
-        f"  platform: {platform}",
+        f"  instrument: {INSTRUMENT}",
+        f"  platform: {PLATFORM}",
         "  institution: ESA",
         "storage:",
         "  driver: NetCDF CF",
-        f"  crs: {crs}",
+        f"  crs: {CRS}",
         "  resolution:",
         f"    x: {resolution[0]}",
         f"    y: {resolution[1]}",

@@ -36,8 +36,6 @@ def pack_documents(
     df: DataFrame,
     budget: int = 2048,
     token_col: Column | str | None = None,
-    id_col: str = "doc_id",
-    key_cols: tuple[str, ...] = ("source",),
     n_shards: int | None = None,
 ) -> DataFrame:
     """Assign each document a ``(shard, bin_id, bin_offset)`` under a
@@ -77,20 +75,20 @@ def pack_documents(
         else (F.col(token_col) if isinstance(token_col, str) else token_col)
     ).cast("long")
     shard = F.pmod(
-        portable_hash64(F.col(id_col).cast("string"), 0),
+        portable_hash64(F.col("doc_id").cast("string"), 0),
         F.lit(n_shards),
     ).cast("int")
     out = df.select(
-        *key_cols, F.col(id_col), shard.alias("shard"), tokens.alias("tokens")
+        "source", F.col("doc_id"), shard.alias("shard"), tokens.alias("tokens")
     )
     w = (
-        W.partitionBy(*key_cols, "shard")
-        .orderBy(F.col(id_col))
+        W.partitionBy("source", "shard")
+        .orderBy(F.col("doc_id"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     cum = F.sum("tokens").over(w)
     staged = out.select(
-        *key_cols, id_col, "shard", "tokens",
+        "source", "doc_id", "shard", "tokens",
         (cum - F.col("tokens")).alias("stream_pos"),
     )
     # `div` = exact 64-bit integer division: floor(double/double) can
@@ -98,8 +96,8 @@ def pack_documents(
     # non-power-of-two budgets (round-4 review) — the module targets
     # 10^12-doc streams where that is reachable
     return staged.select(
-        *key_cols,
-        id_col,
+        "source",
+        "doc_id",
         "shard",
         "tokens",
         F.expr(f"stream_pos div {int(budget)}").cast("long").alias("bin_id"),
@@ -121,13 +119,13 @@ def _estimated_rows(df: DataFrame) -> int | None:
     return None
 
 
-def bin_stats(packed: DataFrame, key_cols: tuple[str, ...] = ("source",)) -> DataFrame:
+def bin_stats(packed: DataFrame) -> DataFrame:
     """Per-bin fill statistics: document count, token sum, and the
     first/last document ids — the packing QA surface (a bin whose
     token sum wildly exceeds its budget means pathological documents
     that should be split upstream)."""
     return (
-        packed.groupBy(*key_cols, "shard", "bin_id")
+        packed.groupBy("source", "shard", "bin_id")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("tokens").alias("bin_tokens"),

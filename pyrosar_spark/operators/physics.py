@@ -41,41 +41,36 @@ def broadening_factor(window_coefficient: Column) -> Column:
     return expr
 
 
-def s1_resolution(
-    df: DataFrame,
-    w_rg="w_rg", b_rg="b_rg", lb_rg="lb_rg",
-    w_az="w_az", b_az="b_az", lb_az="lb_az",
-    sp_az="sp_az", ti_az="ti_az",
-    geometry_col="image_geometry", incidence_col="incidence",
-    key_cols: list[str] | None = None,
-) -> DataFrame:
+def s1_resolution(df: DataFrame) -> DataFrame:
     """Per-scene (range, azimuth) resolution from sub-swath annotation
-    rows; exact medians across sub-swaths (``drivers.py:2196-2197``),
-    ground-range correction when ``image_geometry == 'GROUND_RANGE'``.
+    rows keyed by ``doc_id`` (columns ``w_rg``/``b_rg``/``lb_rg``,
+    ``w_az``/``b_az``/``lb_az``, ``sp_az``/``ti_az``, ``image_geometry``,
+    ``incidence``); exact medians across sub-swaths
+    (``drivers.py:2196-2197``), ground-range correction when
+    ``image_geometry == 'GROUND_RANGE'``.
     """
     from pyrosar_spark.operators.catalog_ops import median_of_array
 
-    keys = key_cols or ["doc_id"]
-    l_rg = F.col(b_rg) / F.col(lb_rg)
-    k_rg = broadening_factor(F.col(w_rg))
-    res_rg = 0.886 * C_LIGHT / (2 * F.col(b_rg)) * k_rg * l_rg
-    l_az = F.col(b_az) / F.col(lb_az)
-    k_az = broadening_factor(F.col(w_az))
-    v_sat = F.col(sp_az) / F.col(ti_az)
-    res_az = 0.886 * v_sat / F.col(b_az) * k_az * l_az
+    l_rg = F.col("b_rg") / F.col("lb_rg")
+    k_rg = broadening_factor(F.col("w_rg"))
+    res_rg = 0.886 * C_LIGHT / (2 * F.col("b_rg")) * k_rg * l_rg
+    l_az = F.col("b_az") / F.col("lb_az")
+    k_az = broadening_factor(F.col("w_az"))
+    v_sat = F.col("sp_az") / F.col("ti_az")
+    res_az = 0.886 * v_sat / F.col("b_az") * k_az * l_az
     per_swath = df.select(
-        *keys, geometry_col, incidence_col,
+        "doc_id", "image_geometry", "incidence",
         res_rg.alias("_res_rg"), res_az.alias("_res_az"),
     )
-    agg = per_swath.groupBy(*keys, geometry_col, incidence_col).agg(
+    agg = per_swath.groupBy("doc_id", "image_geometry", "incidence").agg(
         median_of_array(F.collect_list("_res_rg")).alias("_med_rg"),
         median_of_array(F.collect_list("_res_az")).alias("resolution_az"),
     )
     grd = F.when(
-        F.col(geometry_col) == "GROUND_RANGE",
-        F.col("_med_rg") / F.sin(F.radians(F.col(incidence_col))),
+        F.col("image_geometry") == "GROUND_RANGE",
+        F.col("_med_rg") / F.sin(F.radians(F.col("incidence"))),
     ).otherwise(F.col("_med_rg"))
-    return agg.select(*keys, grd.alias("resolution_rg"), "resolution_az")
+    return agg.select("doc_id", grd.alias("resolution_rg"), "resolution_az")
 
 
 # attributes copied from the inSAR master onto the TDM pair
@@ -87,22 +82,20 @@ TDM_MASTER_ATTRS = [
 ]
 
 
-def tdm_pairing(
-    tdm: DataFrame, catalog: DataFrame, master_col: str = "master_id",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tdm_pairing(tdm: DataFrame, catalog: DataFrame) -> DataFrame:
     """Copy the inSAR master's attributes onto each TDM pair row.
 
-    ``tdm`` rows reference their master scene by id; the catalog self-
-    join replaces the listed attributes with the master's values, as
-    ``TDM.scanMetadata`` copies ``meta[inSARmasterID]`` fields.
+    ``tdm`` rows reference their master scene's ``doc_id`` in
+    ``master_id``; the catalog self-join replaces the listed attributes
+    with the master's values, as ``TDM.scanMetadata`` copies
+    ``meta[inSARmasterID]`` fields.
     """
     master = catalog.select(
-        F.col(id_col).alias("_mid"),
+        F.col("doc_id").alias("_mid"),
         *[F.col(a).alias(f"_m_{a}") for a in TDM_MASTER_ATTRS],
     )
     joined = tdm.join(
-        F.broadcast(master), tdm[master_col] == master["_mid"], how="left"
+        F.broadcast(master), tdm["master_id"] == master["_mid"], how="left"
     )
     out = joined
     for a in TDM_MASTER_ATTRS:

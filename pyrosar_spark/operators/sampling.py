@@ -31,12 +31,11 @@ def quality_filter(
     pct: int = 25,
     by: str = "lang",
     score_col: Column | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Keep the best ``pct`` percent of rows per ``by`` group.
 
     One rank window per group (sort shuffle) — deterministic tiebreak
-    on ``id_col``, kept iff ``rn * 100 <= group_count * pct`` (pure
+    on ``doc_id``, kept iff ``rn * 100 <= group_count * pct`` (pure
     integer math; a float ``ceil(frac * cnt)`` can round differently
     across engines). Output: input columns + ``score``.
     """
@@ -47,7 +46,7 @@ def quality_filter(
 
         score_col = quality_score(F.col("text"))
     scored = df.withColumn("score", score_col)
-    w = W.partitionBy(by).orderBy(F.col("score").desc(), F.col(id_col))
+    w = W.partitionBy(by).orderBy(F.col("score").desc(), F.col("doc_id"))
     return (
         scored.select(
             "*",
@@ -63,18 +62,16 @@ def sample_token_budget(
     df: DataFrame,
     budgets: int | dict[str, int],
     by: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 1,
 ) -> DataFrame:
     """Deterministic per-group document sample up to a token budget.
 
-    Rows are ordered by the engine-portable md5-60 hash of ``id_col``
-    (uniform, stable — the sample is independent of storage order and
-    reproducible across runs and engines), then taken while the running
-    whitespace-token sum has not yet reached the group's budget; the
-    first document CROSSING the budget is still included, so a group
-    with enough data always yields ≥ budget tokens. ``budgets`` is one
+    Rows are ordered by the engine-portable md5-60 hash (seed 1) of
+    ``doc_id`` (uniform, stable — the sample is independent of storage
+    order and reproducible across runs and engines), then taken while
+    the running whitespace-token sum of ``text`` has not yet reached
+    the group's budget; the first document CROSSING the budget is still
+    included, so a group with enough data always yields ≥ budget
+    tokens. ``budgets`` is one
     int for every group or a ``{group: budget}`` dict (missing groups
     are dropped) — dict budgets join as a broadcast dim, never a
     shuffle.
@@ -85,15 +82,15 @@ def sample_token_budget(
     filter, THEN run this exact pass on the survivors: the window then
     sorts only ~budget worth of rows.
 
-    Output: (id_col, by, tokens, cum_tokens) for kept rows.
+    Output: (doc_id, by, tokens, cum_tokens) for kept rows.
     """
     from pyrosar_spark.operators.textstats import token_count_ws
 
     d = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(by),
-        token_count_ws(F.col(text_col)).cast("long").alias("tokens"),
-        portable_hash64(F.col(id_col).cast("string"), seed).alias("_h"),
+        token_count_ws(F.col("text")).cast("long").alias("tokens"),
+        portable_hash64(F.col("doc_id").cast("string"), 1).alias("_h"),
     )
     if isinstance(budgets, dict):
         spark = df.sparkSession
@@ -105,12 +102,12 @@ def sample_token_budget(
         d = d.withColumn("_budget", F.lit(int(budgets)).cast("long"))
     w = (
         W.partitionBy(by)
-        .orderBy("_h", id_col)
+        .orderBy("_h", "doc_id")
         .rowsBetween(W.unboundedPreceding, 0)
     )
     return (
         d.select(
-            id_col,
+            "doc_id",
             by,
             "tokens",
             F.sum("tokens").over(w).alias("cum_tokens"),
@@ -125,11 +122,10 @@ def sample_stratified(
     df: DataFrame,
     fractions: float | dict[str, float],
     by: str = "source",
-    id_col: str = "doc_id",
     seed: int = 1,
 ) -> DataFrame:
     """Deterministic stratified sample: keep a row iff the md5-60 hash
-    of its id lands under the group's fraction — the mixture-weighting
+    of its ``doc_id`` lands under the group's fraction — the mixture-weighting
     primitive ("keep 10% of web, 100% of code") that, unlike
     ``DataFrame.sample``, is reproducible across runs, partitionings,
     AND engines, so an oracle replays it exactly.
@@ -152,7 +148,7 @@ def sample_stratified(
             raise ValueError(f"fraction must be in [0, 1], got {frac}")
         return int(round(frac * 1_000_000))
 
-    h = portable_hash64(F.col(id_col).cast("string"), seed)
+    h = portable_hash64(F.col("doc_id").cast("string"), seed)
     d = df.withColumn("_h", F.pmod(h, F.lit(1_000_000)))
     if isinstance(fractions, dict):
         fdf = df.sparkSession.createDataFrame(

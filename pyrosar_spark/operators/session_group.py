@@ -28,9 +28,8 @@ def groupby_time(
     ts_col: str,
     gap_seconds: float,
     key_cols: list[str] | None = None,
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """Assign chained-gap session ids.
+    """Assign chained-gap session ids in a ``session_id`` column.
 
     ``ts_col`` is numeric seconds (use
     :func:`pyrosar_spark.functions.temporal.seconds_col` to derive it
@@ -57,7 +56,7 @@ def groupby_time(
     w2 = (
         W.partitionBy(*keys).orderBy(F.col(ts_col).asc()) if keys else W.orderBy(F.col(ts_col).asc())
     ).rowsBetween(W.unboundedPreceding, 0)
-    return flagged.withColumn(session_col, F.sum("_new").over(w2) + 1).drop("_new")
+    return flagged.withColumn("session_id", F.sum("_new").over(w2) + 1).drop("_new")
 
 
 def groupby_time_collect(

@@ -13,6 +13,9 @@
    variant using deterministic seed centroids (sampled rows), assign →
    probe nearest ``n_probe`` cells. Demonstrates the partition-pruned
    ANN layout for Iceberg (cluster by cell id).
+
+The LSH and IVF operators read ``vec_id`` and ``embedding`` columns;
+:func:`lsh_topk` draws its hyperplanes from seed 42.
 """
 
 from __future__ import annotations
@@ -73,10 +76,10 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     q_id_col: str = "vec_id",
-    q_vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (brute force), excluding
     each query itself (pairs with ``item_id == q_id`` are dropped).
+    Queries carry their vector in ``embedding``.
 
     The query side is broadcast (queries ≪ items); the cross product
     never shuffles the item side. Deterministic tie-break on item id.
@@ -90,7 +93,7 @@ def cosine_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(q_id_col).alias("q_id"), _as_double(F.col(q_vec_col)).alias("q_vec")
+            F.col(q_id_col).alias("q_id"), _as_double(F.col("embedding")).alias("q_vec")
         )
     )
     it = items.select(
@@ -144,9 +147,6 @@ def lsh_topk(
     n_bits: int = 8,
     n_tables: int = 2,
     dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH.
 
@@ -155,11 +155,11 @@ def lsh_topk(
     the bucket id is the Iceberg clustering key, so a probe reads only
     matching files (partition pruning instead of a full scan).
     """
-    it_b = _bucketed_tables(items, id_col, vec_col, n_bits, n_tables, dim, seed).select(
+    it_b = _bucketed_tables(items, "vec_id", "embedding", n_bits, n_tables, dim, 42).select(
         F.col("_id").alias("item_id"), F.col("_vec").alias("item_vec"),
         F.col("_bkts").alias("_ib"), "_table", "_bucket",
     )
-    q_b = _bucketed_tables(queries, id_col, vec_col, n_bits, n_tables, dim, seed).select(
+    q_b = _bucketed_tables(queries, "vec_id", "embedding", n_bits, n_tables, dim, 42).select(
         F.col("_id").alias("q_id"), F.col("_vec").alias("q_vec"),
         F.col("_bkts").alias("_qb_all"), "_table", "_bucket",
     )
@@ -234,8 +234,6 @@ def cosine_dup_pairs(
     n_tables: int = 2,
     dim: int = 64,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup-family member
@@ -257,7 +255,7 @@ def cosine_dup_pairs(
     count the drops with :func:`dropped_embedding_bucket_stats`.
     """
     clean = _drop_over_cap(
-        _bucketed_tables(items, id_col, vec_col, n_bits, n_tables, dim, seed),
+        _bucketed_tables(items, "vec_id", "embedding", n_bits, n_tables, dim, seed),
         ["_table", "_bucket"],
         max_bucket,
     )
@@ -283,9 +281,6 @@ def dropped_embedding_bucket_stats(
     n_bits: int = 6,
     n_tables: int = 2,
     dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Observability for the ``max_bucket`` recall trade on the
@@ -293,7 +288,7 @@ def dropped_embedding_bucket_stats(
     total membership, the same statistic as
     ``dedup.dropped_bucket_stats`` (``dedup._dropped_stats``)."""
     return _dropped_stats(
-        _bucketed_tables(items, id_col, vec_col, n_bits, n_tables, dim, seed),
+        _bucketed_tables(items, "vec_id", "embedding", n_bits, n_tables, dim, 42),
         ["_table", "_bucket"],
         max_bucket,
     )
@@ -305,8 +300,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style ANN: centroids = deterministic hash-sampled item
     vectors (min md5-portable hash of the id — a uniform pseudo-random
@@ -320,7 +313,7 @@ def ivf_topk(
     cents = [
         (int(r["item_id"]), [float(x) for x in r["item_vec"]])
         for r in items.select(
-            F.col(id_col).alias("item_id"), _as_double(F.col(vec_col)).alias("item_vec")
+            F.col("vec_id").alias("item_id"), _as_double(F.col("embedding")).alias("item_vec")
         )
         .orderBy(
             portable_hash64(F.col("item_id").cast("string"), 0).asc(),
@@ -347,8 +340,8 @@ def ivf_topk(
     it = (
         with_const(
             items.select(
-                F.col(id_col).alias("item_id"),
-                _as_double(F.col(vec_col)).alias("item_vec"),
+                F.col("vec_id").alias("item_id"),
+                _as_double(F.col("embedding")).alias("item_vec"),
             ),
             "_cents", cents, cents_t,
         )
@@ -358,7 +351,7 @@ def ivf_topk(
     q = F.broadcast(
         with_const(
             queries.select(
-                F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("q_vec")
+                F.col("vec_id").alias("q_id"), _as_double(F.col("embedding")).alias("q_vec")
             ),
             "_cents", cents, cents_t,
         )

@@ -450,30 +450,28 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colu
     return F.lit(2 * r) * F.asin(F.sqrt(a))
 
 
-def knn_scenes(
-    scenes: DataFrame,
-    k: int = 3,
-    cell_deg: float = CELL_DEG,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def knn_scenes(scenes: DataFrame, k: int = 3) -> DataFrame:
     """k nearest neighbor scenes by footprint-centroid distance.
 
-    Candidates come from a 3×3 cell-neighborhood self-join (each scene
-    is indexed into its centroid cell and probes the 9 surrounding
-    cells), so the shuffle is a cell-id equi-join, not a cross join.
-    Ties broken on neighbor id — fully deterministic (SURVEY §7 hard
-    part (e)). Scenes whose neighbors all fall outside the 3×3 ring
-    return fewer than k matches (documented trade-off of the ring
-    prefilter; widen ``cell_deg`` for sparser catalogs).
+    Candidates come from a 3×3 cell-neighborhood self-join on
+    ``CELL_DEG`` (1°) cells (each ``doc_id`` is indexed into its
+    centroid cell and probes the 9 surrounding cells), so the shuffle
+    is a cell-id equi-join, not a cross join. Ties broken on neighbor
+    id — fully deterministic (SURVEY §7 hard part (e)). The ring is the
+    trade-off: a neighbor closer than ``CELL_DEG`` on both axes is
+    always a candidate, one ``2 · CELL_DEG`` or more away on either axis
+    never is, so a scene in a sparse region returns fewer than k
+    matches; a larger cell would reach farther at the cost of more
+    candidates per probe everywhere.
     """
-    s = float(cell_deg)
+    s = CELL_DEG
     cent = scenes.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ((F.col("xmin") + F.col("xmax")) / 2).alias("cx"),
         ((F.col("ymin") + F.col("ymax")) / 2).alias("cy"),
     )
     home = cent.select(
-        id_col, "cx", "cy",
+        "doc_id", "cx", "cy",
         F.floor(F.col("cy") / s).cast("long").alias("_la"),
         F.floor(F.col("cx") / s).cast("long").alias("_lo"),
     )
@@ -507,13 +505,13 @@ def knn_scenes(
     )
     probe = (
         home.withColumn("_cell", F.explode(cells9))
-        .select(F.col(id_col).alias("q_id"), F.col("cx").alias("q_cx"),
+        .select(F.col("doc_id").alias("q_id"), F.col("cx").alias("q_cx"),
                 F.col("cy").alias("q_cy"), "_cell")
     )
     # index side: the home cell, row unclamped (the frozen scene_knn
     # oracle SQL encodes this formula and the probe row's clamp above)
     index = home.withColumn("_cell", _cell_id(F.col("_la"), F.col("_lo"), s)).select(
-        F.col(id_col).alias("n_id"), F.col("cx").alias("n_cx"), F.col("cy").alias("n_cy"), "_cell"
+        F.col("doc_id").alias("n_id"), F.col("cx").alias("n_cx"), F.col("cy").alias("n_cy"), "_cell"
     )
     cand = (
         probe.join(index, on="_cell")

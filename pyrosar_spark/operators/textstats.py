@@ -116,17 +116,11 @@ def fingerprint64(text: Column, window: int = 8) -> Column:
     return F.array_min(grams)
 
 
-def contamination(
-    docs: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_id_col: str = "eval_id",
-) -> DataFrame:
+def contamination(docs: DataFrame, eval_docs: DataFrame, n: int = 13) -> DataFrame:
     """Benchmark decontamination (training-pipeline op): flag training
-    documents sharing any exact ``n``-token gram with an evaluation
-    set, with the hit count and the offending eval ids.
+    documents (``doc_id``, ``text``) sharing any exact ``n``-token gram
+    with an evaluation set (``eval_id``, ``text``), with the hit count
+    and the offending eval ids.
 
     Shape for 100 TB: the eval side is tiny (benchmarks are kB-MB) —
     its distinct (eval id, gram hash) pairs are BROADCAST; the training
@@ -144,21 +138,21 @@ def contamination(
     reproduce the hits exactly.
     """
     ev_tk = bind(
-        eval_docs.select(F.col(eval_id_col).alias("_eid"), F.col(text_col)),
+        eval_docs.select(F.col("eval_id").alias("_eid"), F.col("text")),
         "_tk",
-        _norm_tokens(F.col(text_col)),
+        _norm_tokens(F.col("text")),
     )
     ev = F.broadcast(_gram_hashes(ev_tk, "_eid", n).select("_eid", "_h").distinct())
     tk = bind(
-        docs.select(F.col(id_col), F.col(text_col)),
+        docs.select(F.col("doc_id"), F.col("text")),
         "_tk",
-        _norm_tokens(F.col(text_col)),
+        _norm_tokens(F.col("text")),
     )
-    tr = _gram_hashes(tk, id_col, n)
+    tr = _gram_hashes(tk, "doc_id", n)
     return (
         tr.join(ev, on="_h")
-        .dropDuplicates([id_col, "_h", "_eid"])
-        .groupBy(id_col)
+        .dropDuplicates(["doc_id", "_h", "_eid"])
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_hits"),
             F.array_sort(F.collect_set("_eid")).alias("eval_ids"),
@@ -166,10 +160,8 @@ def contamination(
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Gopher-style per-document repetition quality signals
+def repetition_stats(df: DataFrame) -> DataFrame:
+    """Gopher-style per-``doc_id`` repetition quality signals of ``text``
     (Rae et al. 2021 §A1.1: documents dominated by one repeated
     n-gram are boilerplate):
 
@@ -201,8 +193,8 @@ def repetition_stats(
     """
     # barrier 1: tokenize once
     bound = df.select(
-        F.col(id_col),
-        F.explode(F.array(_norm_tokens(F.col(text_col)))).alias("_tk"),
+        F.col("doc_id"),
+        F.explode(F.array(_norm_tokens(F.col("text")))).alias("_tk"),
     )
     toks = F.col("_tk")
     # guard the <2-token case: slice with length 0 errors under ANSI;
@@ -217,7 +209,7 @@ def repetition_stats(
     ).when(F.size(toks) >= 0, F.array().cast("array<string>"))
     # barrier 2: build grams once (carry _tk through for n_tokens)
     bound = bound.select(
-        F.col(id_col), "_tk", F.explode(F.array(grams_expr)).alias("_gr")
+        F.col("doc_id"), "_tk", F.explode(F.array(grams_expr)).alias("_gr")
     )
     grams = F.col("_gr")
     n_tok = F.size(toks)
@@ -247,7 +239,7 @@ def repetition_stats(
         n_tok > 0, F.least(top_count * 2.0 / n_tok, F.lit(1.0))
     ).when(n_tok == 0, F.lit(0.0))
     return bound.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tokens"),
         F.round(dup_frac, 6).alias("dup_2gram_frac"),
         top_count.alias("top_2gram_count"),
@@ -255,14 +247,8 @@ def repetition_stats(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_df: bool = True,
-) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document (smooth idf:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
+    """Top-``k`` TF-IDF terms of ``text`` per ``doc_id`` (smooth idf:
     ``tf/n_tokens · (ln((N+1)/(df+1)) + 1)``), rank ties broken by
     term so the ordering is total and engine-portable.
 
@@ -278,12 +264,9 @@ def tfidf_top_terms(
        deduplicated pair set, orders of magnitude smaller than the
        token stream.
     3. The vocabulary-sized ``dfreq`` joins back with an explicit
-       ``broadcast()`` hint when the caller vouches the vocabulary
-       fits (``broadcast_df=True``, the default — natural-language
-       vocabularies are ~10⁷ even at web scale); pass False to let
-       AQE's runtime shuffle-stats decide (the safe setting for
-       adversarial key spaces like raw n-grams, where the
-       "vocabulary" is corpus-sized).
+       ``broadcast()`` hint: natural-language vocabularies are ~10⁷
+       even at web scale. An adversarial key space like raw n-grams,
+       where the "vocabulary" is corpus-sized, does not fit this plan.
     The corpus size N rides the plan as a broadcast one-row aggregate
     (no eager ``df.count()`` job — constructing the DataFrame stays
     side-effect-free and N costs nothing beyond the scan the tf stage
@@ -291,23 +274,21 @@ def tfidf_top_terms(
     partial-ranked inside partitions by AQE.
     """
     bound = df.select(
-        F.col(id_col),
-        F.explode(F.array(_norm_tokens(F.col(text_col)))).alias("_tk"),
+        F.col("doc_id"),
+        F.explode(F.array(_norm_tokens(F.col("text")))).alias("_tk"),
     )
     base = bound.select(
-        F.col(id_col), F.size("_tk").alias("_n"), F.explode("_tk").alias("term")
+        F.col("doc_id"), F.size("_tk").alias("_n"), F.explode("_tk").alias("term")
     )
-    tf = base.groupBy(id_col, "term").agg(
+    tf = base.groupBy("doc_id", "term").agg(
         F.count("*").alias("_c"), F.first("_n").alias("_n")
     )
     n_docs = F.broadcast(df.select(F.count("*").alias("_nd")))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("_df"))
-    if broadcast_df:
-        dfreq = F.broadcast(dfreq)
+    dfreq = F.broadcast(tf.groupBy("term").agg(F.count("*").alias("_df")))
     from pyspark.sql import Window
 
     scored = tf.join(dfreq, on="term").crossJoin(n_docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("term"),
         F.round(
             (F.col("_c").cast("double") / F.col("_n"))
@@ -315,9 +296,9 @@ def tfidf_top_terms(
             6,
         ).alias("tfidf"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tfidf")
+        .select("doc_id", "rank", "term", "tfidf")
     )

@@ -20,8 +20,6 @@ dimension → always broadcast.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -59,21 +57,14 @@ def hgt_seq(vmin: Column, vmax: Column) -> Column:
     return F.sequence(F.floor(vmin).cast("int"), F.floor(vmax).cast("int"), F.lit(1))
 
 
-def explode_lattice(
-    df: DataFrame,
-    xmin="xmin",
-    xmax="xmax",
-    ymin="ymin",
-    ymax="ymax",
-    step: int = 1,
-    mode: str = "intrange",
-) -> DataFrame:
-    """Explode each row into its overlapping tile origins
-    (``tile_lat``, ``tile_lon``). ``mode='hgt'`` uses getHGT bounds."""
+def explode_lattice(df: DataFrame, step: int = 1, mode: str = "intrange") -> DataFrame:
+    """Explode each row into the tile origins (``tile_lat``,
+    ``tile_lon``) its ``xmin``/``xmax``/``ymin``/``ymax`` bbox overlaps.
+    ``mode='hgt'`` uses getHGT bounds."""
     seq = hgt_seq if mode == "hgt" else lambda a, b: intrange_seq(a, b, step)
     return (
-        df.withColumn("tile_lat", F.explode(seq(F.col(ymin), F.col(ymax))))
-        .withColumn("tile_lon", F.explode(seq(F.col(xmin), F.col(xmax))))
+        df.withColumn("tile_lat", F.explode(seq(F.col("ymin"), F.col("ymax"))))
+        .withColumn("tile_lon", F.explode(seq(F.col("xmin"), F.col("xmax"))))
     )
 
 
@@ -156,18 +147,11 @@ def srtm3_index_seqs(
     return lat, lon
 
 
-def assign_tiles(
-    df: DataFrame,
-    dem_type: str = "SRTM 1Sec HGT",
-    xmin="xmin",
-    xmax="xmax",
-    ymin="ymin",
-    ymax="ymax",
-    name_col: str = "tile_id",
-) -> DataFrame:
-    """Per-row tile assignment: explode the bbox lattice for the given
-    grid and add the formatted tile name. Pure built-in ops."""
-    x0, x1, y0, y1 = (F.col(c) for c in (xmin, xmax, ymin, ymax))
+def assign_tiles(df: DataFrame, dem_type: str = "SRTM 1Sec HGT") -> DataFrame:
+    """Per-row tile assignment: explode the ``xmin``/``xmax``/``ymin``/
+    ``ymax`` bbox lattice for the given grid and add the formatted tile
+    name as ``tile_id``. Pure built-in ops."""
+    x0, x1, y0, y1 = (F.col(c) for c in ("xmin", "xmax", "ymin", "ymax"))
     if dem_type == "SRTM 3Sec":
         lat_seq, lon_seq = srtm3_index_seqs(x0, x1, y0, y1)
         out = df.withColumn("tile_lat", F.explode(lat_seq)).withColumn(
@@ -175,16 +159,17 @@ def assign_tiles(
         )
     else:
         step = DEM_STEPS[dem_type]
-        out = explode_lattice(df, xmin, xmax, ymin, ymax, step=step)
-    return out.withColumn(name_col, dem_tile_name(dem_type, F.col("tile_lat"), F.col("tile_lon")))
+        out = explode_lattice(df, step=step)
+    return out.withColumn("tile_id", dem_tile_name(dem_type, F.col("tile_lat"), F.col("tile_lon")))
 
 
-def assign_hgt(df: DataFrame, xmin="xmin", xmax="xmax", ymin="ymin", ymax="ymax") -> DataFrame:
+def assign_hgt(df: DataFrame) -> DataFrame:
     """``getHGT`` semantics (``drivers.py:535-558``): floor-inclusive
-    lattice, ``N51E011.hgt`` names."""
+    lattice of the ``xmin``/``xmax``/``ymin``/``ymax`` bbox,
+    ``N51E011.hgt`` names."""
     from pyrosar_spark.functions.naming import hgt_tile_name
 
-    out = explode_lattice(df, xmin, xmax, ymin, ymax, mode="hgt")
+    out = explode_lattice(df, mode="hgt")
     return out.withColumn("tile_id", hgt_tile_name(F.col("tile_lat"), F.col("tile_lon")))
 
 
@@ -202,18 +187,3 @@ def remote_ids(spark, extent: dict | None, dem_type: str) -> list[str]:
     )
     out = assign_tiles(df, dem_type)
     return sorted(r.tile_id for r in out.select("tile_id").distinct().collect())
-
-
-def intrange(extent: dict, step: int) -> tuple[range, range]:
-    """Plain-python mirror of ``auxdata.py:667-691`` for unit parity."""
-    lat = range(
-        math.floor(float(extent["ymin"]) / step) * step,
-        math.ceil(float(extent["ymax"]) / step) * step,
-        step,
-    )
-    lon = range(
-        math.floor(float(extent["xmin"]) / step) * step,
-        math.ceil(float(extent["xmax"]) / step) * step,
-        step,
-    )
-    return lat, lon

@@ -26,14 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_scenes(scenes: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_scenes(scenes: DataFrame, path: str) -> None:
     """Day-partitioned, (xmin, ymin)-sorted parquet layout (see the
-    module docstring)."""
+    module docstring), overwriting ``path``."""
     out = scenes.withColumn("start_day", F.substring("start", 1, 8))
     (
         out.repartition(F.col("start_day"), F.col("orbitNumber_rel"))
         .sortWithinPartitions("xmin", "ymin")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("start_day")
         .parquet(path)
     )

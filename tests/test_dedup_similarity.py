@@ -67,7 +67,7 @@ def test_simhash_near_dup(docs_df):
     sh = docs_df.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()
     vals = {r.doc_id: r.sh for r in sh}
     assert vals[1] == vals[4]  # identical text → identical simhash
-    pairs = simhash_pairs(docs_df, max_hamming=10, allow_partial_recall=True)
+    pairs = simhash_pairs(docs_df, max_hamming=3)
     got = {(r.a, r.b): r.hamming for r in pairs.collect()}
     assert got.get((1, 4)) == 0
     # recall contract: threshold beyond the pigeonhole bound is rejected

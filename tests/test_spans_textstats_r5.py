@@ -143,8 +143,7 @@ def test_tfidf_golden(spark):
 
 
 def test_tfidf_broadcast_plan(spark):
-    """The df-side join must be a broadcast join by default, and fall
-    back to a non-broadcast strategy when the caller opts out."""
+    """The df-side join is a broadcast join."""
     from pyrosar_spark.operators.textstats import tfidf_top_terms
 
     df = spark.range(50).select(
@@ -153,15 +152,6 @@ def test_tfidf_broadcast_plan(spark):
     )
     plan = tfidf_top_terms(df)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
-    # broadcast_df=False must drop the FORCED hint on the dfreq side;
-    # Spark may still choose broadcast from its own size estimate —
-    # that's the point: the decision moves to the planner/AQE. (The
-    # one-row corpus-count aggregate keeps its hint in both variants.)
-    analyzed = tfidf_top_terms(df, broadcast_df=False)._jdf.queryExecution().analyzed().toString()
-    analyzed_hinted = tfidf_top_terms(df)._jdf.queryExecution().analyzed().toString()
-    assert analyzed_hinted.count("ResolvedHint") == analyzed.count("ResolvedHint") + 1, (
-        analyzed_hinted.count("ResolvedHint"), analyzed.count("ResolvedHint")
-    )
 
 
 # ---------------------------------------------------------------------------

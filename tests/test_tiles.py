@@ -11,14 +11,16 @@ AOI_N = {"xmin": 11.5, "xmax": 11.9, "ymin": 51.1, "ymax": 51.5}
 AOI_S = {"xmin": -58.9, "xmax": -58.5, "ymin": -51.5, "ymax": -51.1}
 
 
-def test_intrange_goldens():
-    ext = {"xmin": 11.5, "xmax": 11.9, "ymin": 51, "ymax": 51.5}
-    lat, lon = tiles.intrange(ext, 1)
-    assert (list(lat), list(lon)) == ([51], [11])
-    lat, lon = tiles.intrange(ext, 5)
-    assert (list(lat), list(lon)) == ([50], [10])
-    lat, lon = tiles.intrange(ext, 15)
-    assert (list(lat), list(lon)) == ([45], [0])
+def test_intrange_goldens(spark):
+    ext = spark.createDataFrame(
+        [(11.5, 11.9, 51.0, 51.5)], "xmin double, xmax double, ymin double, ymax double"
+    )
+    for step, want in ((1, ([51], [11])), (5, ([50], [10])), (15, ([45], [0]))):
+        row = ext.select(
+            tiles.intrange_seq(F.col("ymin"), F.col("ymax"), step).alias("lat"),
+            tiles.intrange_seq(F.col("xmin"), F.col("xmax"), step).alias("lon"),
+        ).first()
+        assert (row.lat, row.lon) == want, step
 
 
 def test_remote_ids_goldens(spark):
