@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.dedup import (
     _common_hashes,
+    _input_width,
+    _join,
     _tokens,
     bind,
     portable_hash64,
@@ -88,6 +90,12 @@ def strip_boilerplate_chunks(
       4. survivors re-assemble per doc with one sort-free
          groupBy + sort_array (chunk_idx is bounded per doc).
 
+    The shuffles and the broadcast are for an input of more than one
+    task (:func:`~pyrosar_spark.operators.dedup._input_width`). A
+    one-task input stays one partition: the distinct, the count, the
+    anti join (:func:`~pyrosar_spark.operators.dedup._join`), the
+    reassembly and the final sort all run with no Exchange.
+
     Documents whose every chunk is boilerplate drop out entirely —
     the C4 behavior (an emptied document is not training data).
 
@@ -99,7 +107,8 @@ def strip_boilerplate_chunks(
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     if hash_mode != "md5":
         raise ValueError(f"hash_mode must be 'md5', got {hash_mode!r}")
-    d = bind(_tokens(df, "text", "doc_id"), "_ck", _chunks(F.col("_tk"), chunk_tokens))
+    width = _input_width(df)
+    d = bind(_tokens(df, "text", "doc_id", width), "_ck", _chunks(F.col("_tk"), chunk_tokens))
     pos = d.select(
         "_id",
         F.size("_ck").alias("_n"),
@@ -108,12 +117,12 @@ def strip_boilerplate_chunks(
     h = portable_hash64(F.col("_chunk"), 0)
     # r6: ``pos`` feeds BOTH the multiplicity aggregation and the anti
     # join — without materialization the tokenize+chunk+hash subtree
-    # runs twice, plus a second _spread Exchange. localCheckpoint
-    # computes it once per invocation (same fix as dup_ngram_spans);
-    # nothing survives the query. (A lazy persist here measured slower:
-    # both concurrent AQE stages computed the frame.)
+    # runs twice. localCheckpoint computes it once per invocation (same
+    # fix as dup_ngram_spans); nothing survives the query. (A lazy
+    # persist here measured slower: both concurrent AQE stages computed
+    # the frame.)
     pos = pos.withColumn("_h", h).localCheckpoint()
-    kept = pos.join(_common_hashes(pos, min_docs), "_h", "left_anti")
+    kept = _join(pos, _common_hashes(pos, min_docs), "_h", "left_anti", width == 1)
     return (
         kept.groupBy("_id", "_n")
         .agg(
@@ -149,7 +158,9 @@ def token_commonness(df: DataFrame, rare_max_count: int = 2) -> DataFrame:
     the vocab is broadcast so corpus tokens NEVER shuffle, which also
     sidesteps the classic stopword skew ("the" is a hot key a shuffle
     join would hash to one task). A vocabulary beyond executor memory
-    (≳10^8 distinct tokens) does not fit this plan.
+    (≳10^8 distinct tokens) does not fit this plan. A one-task input
+    (:func:`~pyrosar_spark.operators.dedup._input_width`) stays one
+    partition instead: the vocabulary joins in place with no Exchange.
 
     Input: ``doc_id``, ``text``. Output per document: (doc_id,
     n_tokens, n_rare [corpus count <= ``rare_max_count``], rare_frac,
@@ -161,18 +172,19 @@ def token_commonness(df: DataFrame, rare_max_count: int = 2) -> DataFrame:
     # r6: ``toks`` feeds both the vocabulary aggregation and the score
     # join — localCheckpoint pins the tokenize+explode to one
     # evaluation (same double-compute fix as dup_ngram_spans).
+    width = _input_width(df)
     toks = (
-        _tokens(df, "text", "doc_id")
+        _tokens(df, "text", "doc_id", width)
         .select("_id", F.explode("_tk").alias("_t"))
         .localCheckpoint()
     )
-    vocab = F.broadcast(toks.groupBy("_t").agg(F.count("*").alias("_cnt")))
+    vocab = toks.groupBy("_t").agg(F.count("*").alias("_cnt"))
     n_tok = F.count("*").cast("bigint")
     n_rare = F.sum(
         F.when(F.col("_cnt") <= rare_max_count, 1).otherwise(0)
     ).cast("bigint")
     return (
-        toks.join(vocab, "_t")
+        _join(toks, vocab, "_t", "inner", width == 1, broadcast=True)
         .groupBy("_id")
         .agg(
             n_tok.alias("n_tokens"),

@@ -257,9 +257,12 @@ def test_strip_boilerplate_exchange_budget(spark):
     exchange only when the boilerplate set outgrows the threshold),
     and at most one range exchange orders the output. collect_list
     appears ONLY in the reassembly aggregation, where it is bounded by
-    chunks-per-document, never by corpus size."""
+    chunks-per-document, never by corpus size. This is the plan of an
+    input wider than one task: checkpointed, the documents have no
+    input files, so ``_input_width`` sizes them at cores (a one-task
+    input runs with no Exchange, tests/test_width.py)."""
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    q = strip_boilerplate_chunks(d, chunk_tokens=4, min_docs=2)
+    q = strip_boilerplate_chunks(d.localCheckpoint(), chunk_tokens=4, min_docs=2)
     p = q._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange hashpartitioning") == 3, p
     assert p.count("Exchange rangepartitioning") <= 1

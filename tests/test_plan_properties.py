@@ -226,7 +226,7 @@ def test_dedup_clusters_round_plan_shape(spark):
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
     )
     labels = edges.selectExpr("src as v", "src as cluster_id").distinct()
-    p = plan(_cc_round(edges, labels.localCheckpoint()))
+    p = plan(_cc_round(edges, labels.localCheckpoint(), False))
     assert "CartesianProduct" not in p
     n_ex = p.count("Exchange hashpartitioning")
     assert n_ex == 3, f"expected 3 hash exchanges per round, got {n_ex}:\n{p}"
@@ -235,6 +235,30 @@ def test_dedup_clusters_round_plan_shape(spark):
     n_joins = sum(p.count(j) for j in
                   ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
     assert n_joins == 1, f"expected 1 join per round, got {n_joins}"
+
+
+def test_dedup_clusters_round_plan_shape_on_one_partition(spark):
+    """The same round over a one-partition graph (what dedup_clusters
+    runs for the pairs of a one-task corpus): one join, a shuffled hash
+    join over the two one-partition sides, and no Exchange at all."""
+    from pyrosar_spark.operators.dedup import _cc_round, _narrow, _one_partition
+
+    # a local relation, so both sides carry a size estimate: Spark joins
+    # one-partition sides in place only below spark.sql.maxSinglePartitionBytes
+    edges = spark.sql(
+        "SELECT * FROM VALUES (1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L) AS t(src, dst)"
+    ).coalesce(1)
+    labels = _narrow(
+        edges.selectExpr("src as v", "src as cluster_id").distinct().localCheckpoint(),
+        True,
+    )
+    assert _one_partition(edges) and _one_partition(labels)
+    p = plan(_cc_round(edges, labels, True))
+    assert "Exchange" not in p, p
+    assert "CartesianProduct" not in p
+    n_joins = sum(p.count(j) for j in
+                  ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
+    assert n_joins == 1 and "ShuffledHashJoin" in p, p
 
 
 def test_python_stages_are_arrow(spark):

@@ -119,7 +119,7 @@ def test_candidate_pairs_skips_dead_hot_guard(spark):
     )
     refs = df.where("doc_id < 2")
     builds = [  # (build(cap), its unbounded cap)
-        (lambda cap: _candidate_pairs(bands, cap), 1 << 40),
+        (lambda cap: _candidate_pairs(bands, cap, False), 1 << 40),
         (
             lambda cap: cosine_dup_pairs(emb, threshold=0.5, n_bits=2, dim=4, max_bucket=cap),
             1 << 40,

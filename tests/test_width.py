@@ -1,11 +1,14 @@
 """The width rule ahead of the text operators' expensive stages.
 
 ``_spread`` targets one partition per ~1 MiB of source bytes, capped at
-``defaultParallelism`` (``_input_width``): every extra Python task
-costs ~250 ms of worker CPU before it reads a row, so a sub-MiB corpus
-runs its Arrow and tokenize stages as one task. Frames with no input
-files keep the cores target, and the media kernels pass cores
-explicitly because their work is synthesized per pixel, not read.
+``defaultParallelism`` (``_input_width``): every extra task costs CPU
+before it reads a row, so a sub-MiB corpus runs as one task. A target
+of 1 is a one-partition plan (``coalesce(1)``, ``SinglePartition``), and
+the corpus operators keep it one partition to their output: no shuffle
+and no broadcast, each of which costs a job. Frames with no input files
+keep the cores target and their hash exchanges, and the media kernels
+pass cores explicitly because their work is synthesized per pixel, not
+read.
 """
 
 import os
@@ -15,19 +18,27 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyrosar_spark.operators.corpus import strip_boilerplate_chunks, token_commonness
 from pyrosar_spark.operators.dedup import (
     _BYTES_PER_PARTITION,
     _input_width,
+    _one_partition,
     _spread,
+    dedup_clusters,
     dup_ngram_spans,
     near_dup_pairs,
 )
 
 
 def _write_corpus(path: str, n_docs: int = 1000) -> str:
+    """A one-file corpus, ~100 KB at 1,000 docs: random texts over a
+    400-word vocabulary, every 20th a copy of its predecessor plus one
+    word (a near-duplicate pair)."""
     rng = np.random.default_rng(7)
     vocab = [f"w{i}" for i in range(400)]
     texts = [" ".join(rng.choice(vocab, int(rng.integers(10, 60)))) for _ in range(n_docs)]
+    for i in range(20, n_docs, 20):
+        texts[i] = texts[i - 1] + " dup"
     pq.write_table(
         pa.table({"doc_id": pa.array(range(n_docs), pa.int64()), "text": texts}), path
     )
@@ -55,30 +66,84 @@ def _sql_plans(spark, action) -> list[str]:
 
 
 def _repartition_width(df) -> int | None:
-    """Target of a top-level ``repartition(n)``, None when there is none."""
+    """Target of a top-level shuffling ``repartition(n)``, None when
+    there is none."""
     plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.nodeName() != "Repartition":
+    if plan.nodeName() != "Repartition" or not plan.shuffle():
         return None
     return plan.numPartitions()
 
 
-def test_text_operators_keep_a_small_corpus_on_one_task(spark, tmp_path):
-    """A 1,000-doc single-file corpus (~100 KB) is below 1 MiB: no
-    RoundRobin exchange anywhere in near_dup_pairs, dup_ngram_spans or
-    strip_boilerplate_chunks, checkpoint jobs included."""
-    from pyrosar_spark.operators.corpus import strip_boilerplate_chunks
+def _operators(docs):
+    """Builders of the corpus_dedup operators (plus token_commonness)
+    over ``docs``; dedup_clusters takes near_dup_pairs' output."""
+    return {
+        "near_dup_pairs": lambda: near_dup_pairs(docs, threshold=0.5),
+        "dedup_clusters": lambda: dedup_clusters(near_dup_pairs(docs, threshold=0.5)),
+        "dup_ngram_spans": lambda: dup_ngram_spans(docs),
+        "strip_boilerplate_chunks": lambda: strip_boilerplate_chunks(docs),
+        "token_commonness": lambda: token_commonness(docs),
+    }
 
+
+def test_text_operators_keep_a_small_corpus_on_one_task(spark, tmp_path):
+    """A 1,000-doc single-file corpus (~100 KB) is below 1 MiB, so each
+    operator runs as a one-partition plan: no Exchange of any kind (no
+    RoundRobin spread, no hash shuffle, no BroadcastExchange) in any of
+    its SQL executions, checkpoint and cache jobs included."""
     docs = spark.read.parquet(_write_corpus(str(tmp_path / "docs.parquet")))
     assert _input_width(docs) == 1
-    for build in (
-        lambda: near_dup_pairs(docs, threshold=0.5),
-        lambda: dup_ngram_spans(docs),
-        lambda: strip_boilerplate_chunks(docs),
-    ):
+    for name, build in _operators(docs).items():
         plans = _sql_plans(spark, lambda: build().collect())
-        assert plans
+        assert plans, name
         for p in plans:
-            assert "RoundRobinPartitioning" not in p, p
+            assert "Exchange" not in p, f"{name}:\n{p}"
+    pairs = near_dup_pairs(docs, threshold=0.5)
+    assert pairs.count() > 0 and _one_partition(pairs)
+
+
+def test_text_operators_keep_hash_exchanges_on_a_wide_input(spark, tmp_path):
+    """The same corpus checkpointed has no input files, so
+    ``_input_width`` sizes it at cores: each operator keeps its
+    shuffled plan, the hash exchanges of its aggregations and joins
+    (the counts of the final frames' plans, as before one-partition
+    plans existed)."""
+    docs = spark.read.parquet(_write_corpus(str(tmp_path / "docs.parquet"))).localCheckpoint()
+    assert _input_width(docs) == spark.sparkContext.defaultParallelism > 1
+    ops = _operators(docs)
+    hash_exchanges = {
+        "near_dup_pairs": 3,
+        "dup_ngram_spans": 3,
+        "strip_boilerplate_chunks": 3,
+        "token_commonness": 2,
+    }
+    for name, n in hash_exchanges.items():
+        p = ops[name]()._jdf.queryExecution().executedPlan().toString()
+        assert p.count("Exchange hashpartitioning") == n, f"{name}:\n{p}"
+    for name, build in ops.items():
+        plans = _sql_plans(spark, lambda: build().collect())
+        assert any("hashpartitioning" in p for p in plans), name
+
+
+def test_spread_keeps_a_one_task_input_one_partition(spark, tmp_path):
+    """A sub-MiB input, one file or several, spreads to one partition
+    with no shuffle: a narrow ``coalesce(1)`` whose plan reports
+    ``SinglePartition`` and holds no Exchange."""
+    one = _write_corpus(str(tmp_path / "one.parquet"))
+    several = tmp_path / "several"
+    several.mkdir()
+    for i in range(3):
+        _write_corpus(str(several / f"part{i}.parquet"), n_docs=100)
+    for path in (one, str(several)):
+        df = spark.read.parquet(path)
+        assert _input_width(df) == 1
+        spread = _spread(df)
+        plan = spread._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "Repartition" and plan.numPartitions() == 1
+        assert not plan.shuffle() and _repartition_width(spread) is None
+        assert _one_partition(spread)
+        p = spread._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in p and "RoundRobin" not in p, p
 
 
 def test_spread_width_follows_source_mib(spark, tmp_path):

@@ -10,7 +10,8 @@ against.
    ``dedup.simhash64_udf`` is compared against;
  - :func:`bmp_decoder` and :func:`bmp_resizer` are real 24-bpp BMP
    codecs that tests plug into ``media.decode_metadata(decoder=)`` and
-   ``media.resize_media(resizer=)``.
+   ``media.resize_media(resizer=)``;
+ - :func:`count_jobs` counts the Spark jobs an action runs.
 
 Spark ships the codecs to its Python workers, which cannot import this
 module, so it registers itself to be pickled by value.
@@ -20,6 +21,7 @@ from __future__ import annotations
 
 import struct
 import sys
+import uuid
 
 import numpy as np
 from pyspark import cloudpickle
@@ -136,3 +138,30 @@ def bmp_resizer(payload: bytes, max_side: int) -> tuple[int, int, int, int, byte
         40, ow, oh if h_signed > 0 else -oh, 1, 24, 0, orow * oh, 2835, 2835, 0, 0,
     )
     return w, h, ow, oh, header + body.tobytes()
+
+
+def count_jobs(spark, action, parquet: bool = True) -> int:
+    """The number of Spark jobs ``action()`` runs, read from the
+    ``statusTracker`` under a job group of its own. With
+    ``parquet=False``, jobs whose every stage is a ``parquet at ...``
+    stage are left out: Spark's schema inference for each
+    ``spark.read.parquet``, and parquet staging writes."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job ids reach the tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+
+    def parquet_only(job_id):
+        info = tracker.getJobInfo(job_id)
+        stages = [tracker.getStageInfo(s) for s in info.stageIds] if info else []
+        return bool(stages) and all(
+            s is not None and s.name.startswith("parquet at ") for s in stages
+        )
+
+    return sum(parquet or not parquet_only(j) for j in tracker.getJobIdsForGroup(group))
