@@ -28,6 +28,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 
+def _best_covering(
+    scenes: DataFrame, intervals: DataFrame, admit: Column, prefer: list[Column]
+) -> DataFrame:
+    """Each scene's best interval covering its ``start``: the scenes
+    (``doc_id``, ``start`` as ``_t``, ``sensor`` as ``_sensor``) left-join
+    the broadcast ``intervals`` on ``_start <= _t <= _stop`` and
+    ``admit``, then ``row_number`` by ``doc_id`` over ``prefer`` keeps
+    the first. A scene no interval covers keeps one all-NULL match."""
+    s = scenes.select("doc_id", F.col("start").alias("_t"), F.col("sensor").alias("_sensor"))
+    cand = s.join(
+        F.broadcast(intervals),
+        (F.col("_t") >= F.col("_start")) & (F.col("_t") <= F.col("_stop")) & admit,
+        how="left",
+    )
+    w = W.partitionBy("doc_id").orderBy(*prefer)
+    return cand.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") == 1)
+
+
 def osv_match(scenes: DataFrame, osv: DataFrame, osvtype: str | list[str] = "POE") -> DataFrame:
     """Best orbit file per scene (left join; NULL when no match): one
     whose interval covers the scene's ``start`` for its ``sensor``.
@@ -39,30 +57,21 @@ def osv_match(scenes: DataFrame, osv: DataFrame, osvtype: str | list[str] = "POE
         F.col("sensor").alias("_osv_sensor"),
         F.col("type").alias("osv_type"),
         F.col("publish").alias("osv_publish"),
-        F.col("start").alias("_osv_start"),
-        F.col("stop").alias("_osv_stop"),
+        F.col("start").alias("_start"),
+        F.col("stop").alias("_stop"),
         F.col("filename").alias("osv_filename"),
     )
-    s = scenes.select("doc_id", F.col("start").alias("_t"), F.col("sensor").alias("_sensor"))
-    cand = s.join(
-        F.broadcast(o),
-        (F.col("_t") >= F.col("_osv_start"))
-        & (F.col("_t") <= F.col("_osv_stop"))
-        & (F.col("_osv_sensor") == F.col("_sensor")),
-        how="left",
+    best = _best_covering(
+        scenes,
+        o,
+        F.col("_osv_sensor") == F.col("_sensor"),
+        [
+            F.when(F.col("osv_type") == "POE", 0).otherwise(1),
+            F.col("osv_publish").desc(),
+            F.col("osv_filename").asc(),
+        ],
     )
-    type_rank = F.when(F.col("osv_type") == "POE", 0).otherwise(1)
-    w = W.partitionBy("doc_id").orderBy(
-        F.col("osv_type").isNull().cast("int"),
-        type_rank,
-        F.col("osv_publish").desc(),
-        F.col("osv_filename").asc(),
-    )
-    return (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select("doc_id", "osv_filename", "osv_type", "osv_publish")
-    )
+    return best.select("doc_id", "osv_filename", "osv_type", "osv_publish")
 
 
 def res_prune(osv: DataFrame) -> DataFrame:
@@ -102,41 +111,27 @@ def ers_pass_lookup(scenes: DataFrame, passdb: DataFrame) -> DataFrame:
     Output: ``doc_id`` + ``phase``/``cycle``/``pass_sensor`` (NULL when
     neither table covers the scene).
     """
-    p = F.broadcast(
-        passdb.select(
-            F.col("sensor").alias("_p_sensor"),
-            F.col("phase").alias("phase"),
-            F.col("cycle").alias("cycle"),
-            F.col("start").alias("_p_start"),
-            F.col("stop").alias("_p_stop"),
-        )
+    p = passdb.select(
+        F.col("sensor").alias("_p_sensor"),
+        "phase",
+        "cycle",
+        F.col("start").alias("_start"),
+        F.col("stop").alias("_stop"),
     )
-    s = scenes.select(
-        "doc_id", F.col("start").alias("_t"), F.col("sensor").alias("_sensor")
-    )
-    cand = s.join(
+    best = _best_covering(
+        scenes,
         p,
-        (F.col("_t") >= F.col("_p_start"))
-        & (F.col("_t") <= F.col("_p_stop"))
-        & (
-            (F.col("_p_sensor") == F.col("_sensor"))
-            | ((F.col("_sensor") == "ERS1") & (F.col("_p_sensor") == "ERS2"))
-        ),
-        how="left",
+        (F.col("_p_sensor") == F.col("_sensor"))
+        | ((F.col("_sensor") == "ERS1") & (F.col("_p_sensor") == "ERS2")),
+        [
+            # own-sensor pass wins; the ERS2 fallback ranks second
+            (F.col("_p_sensor") != F.col("_sensor")).cast("int"),
+            F.col("_start").desc(),
+            F.col("phase").asc(),
+            F.col("cycle").asc(),
+        ],
     )
-    w = W.partitionBy("doc_id").orderBy(
-        F.col("_p_sensor").isNull().cast("int"),
-        # own-sensor pass wins; the ERS2 fallback ranks second
-        (F.col("_p_sensor") != F.col("_sensor")).cast("int"),
-        F.col("_p_start").desc(),
-        F.col("phase").asc(),
-        F.col("cycle").asc(),
-    )
-    return (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select("doc_id", "phase", "cycle", F.col("_p_sensor").alias("pass_sensor"))
-    )
+    return best.select("doc_id", "phase", "cycle", F.col("_p_sensor").alias("pass_sensor"))
 
 
 def salted_interval_join(

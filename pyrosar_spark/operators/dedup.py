@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyrosar_spark.operators.session_group import groupby_time
+
 # the one token definition: a maximal run of [a-z0-9] in lower-cased
 # text (the JVM form is _norm_tokens, the Python kernels findall it)
 TOKEN = "[a-z0-9]+"
@@ -591,7 +593,10 @@ def near_dup_pairs(
     The returned pairs are persisted too, with no action: the first
     action on them fills the cache, and a consumer such as
     :func:`dedup_clusters` then reads the verified pairs instead of
-    re-running the LSH candidate and verify stages.
+    re-running the LSH candidate and verify stages. Both are caches, not
+    checkpoints: a checkpoint keeps its plan's estimated size (~400 MB
+    for 1k docs), which pushes ``dedup_clusters``' one-partition join
+    over ``spark.sql.maxSinglePartitionBytes`` into two shuffles.
 
     Plan shape: an input of more than one task (:func:`_input_width`)
     hash-partitions the bands for the bucket aggregation and the
@@ -721,26 +726,29 @@ def simhash_pairs(
             f"n_blocks-1={n_blocks - 1}; raise n_blocks"
         )
     # spread before the Python stage by input bytes, same no-shrink
-    # policy as shingle_frame
-    sh = (
-        _spread(df)
+    # policy as shingle_frame; a one-task input stays one partition
+    width = _input_width(df)
+    one = width == 1
+    sh = _narrow(
+        _spread(df, width)
         .select(F.col(id_col).alias("_id"), F.col(text_col))
         .withColumn("_sh", simhash64_udf()(F.col(text_col)))
-        .select("_id", "_sh")
+        .select("_id", "_sh"),
+        one,
     )
-    width = 64 // n_blocks
+    bits = 64 // n_blocks
+    mask = (1 << bits) - 1
+
+    def block_of(col: Column, i: int) -> Column:
+        return F.shiftright(col, i * bits).bitwiseAND(F.lit(mask))
+
     blocks = sh.select(
         "_id",
         "_sh",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright(F.col("_sh"), i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("val"),
-                    )
+                    F.struct(F.lit(i).alias("blk"), block_of(F.col("_sh"), i).alias("val"))
                     for i in range(n_blocks)
                 ]
             )
@@ -759,18 +767,13 @@ def simhash_pairs(
     # and removes the pair-level dropDuplicates (a full Exchange + two
     # aggregates over the candidate table). The join guarantees at
     # least one shared block, so the when-chain always resolves.
-    mask = (1 << width) - 1
-
-    def block_of(col: Column, i: int) -> Column:
-        return F.shiftright(col, i * width).bitwiseAND(F.lit(mask))
-
     first_shared = F.lit(None).cast("int")
     for i in range(n_blocks - 1, -1, -1):
         first_shared = F.when(
             block_of(F.col("sh_a"), i) == block_of(F.col("sh_b"), i), F.lit(i)
         ).otherwise(first_shared)
     return (
-        left.join(right, on=["blk", "val"])
+        _join(left, right, ["blk", "val"], "inner", one)
         .where(F.col("a") < F.col("b"))
         .where(F.col("blk") == first_shared)
         .withColumn("hamming", hamming64(F.col("sh_a"), F.col("sh_b")))
@@ -916,8 +919,9 @@ def dup_ngram_spans(
          uniform key — the dup-hash side is usually small but unbounded,
          so no forced broadcast);
       4. positions sorted once per doc merge into maximal spans via the
-         gap-and-islands window (break when the gap exceeds n, i.e. the
-         covered token ranges neither overlap nor touch).
+         chained-gap islands of :func:`groupby_time` (break when the gap
+         exceeds n, i.e. the covered token ranges neither overlap nor
+         touch).
 
     Input: ``doc_id``, ``text``. Output: (doc_id, span_start, span_end,
     n_grams) — token-indexed [start, end] inclusive, 1-based, ordered by
@@ -930,8 +934,6 @@ def dup_ngram_spans(
     distinct, the count, the join-back (:func:`_join`), the window and
     the final sort all run with no Exchange.
     """
-    from pyspark.sql.window import Window as W
-
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if hash_mode != "md5":
@@ -951,21 +953,9 @@ def dup_ngram_spans(
     )
     dup_hashes = _common_hashes(grams, min_docs)
     pos = _join(grams, dup_hashes, "_h", "inner", width == 1).select("_id", "pos")
-    w = W.partitionBy("_id").orderBy("pos")
-    brk = (
-        F.when(F.lag("pos").over(w).isNull(), 1)
-        .when(F.col("pos") - F.lag("pos").over(w) > n, 1)
-        .otherwise(0)
-    )
-    islands = pos.select("_id", "pos", brk.alias("_brk")).select(
-        "_id",
-        "pos",
-        F.sum("_brk")
-        .over(w.rowsBetween(W.unboundedPreceding, 0))
-        .alias("_isl"),
-    )
     return (
-        islands.groupBy("_id", "_isl")
+        groupby_time(pos, "pos", n, key_cols=["_id"])
+        .groupBy("_id", "session_id")
         .agg(
             F.min("pos").cast("long").alias("span_start"),
             (F.max("pos") + (n - 1)).cast("long").alias("span_end"),

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.functions.naming import outname_base_col
 from pyrosar_spark.functions.temporal import parse_date_col
+from pyrosar_spark.operators.ingest import _META_FIELD_TYPES, footprint_bbox, span_text
 from pyrosar_spark.operators.xmlmeta import xml_path_tag, xml_tag, xml_tags_all
 
 
@@ -172,8 +173,6 @@ def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
         F.array(corner["last_far_long"], corner["last_far_lat"]),
         F.array(corner["first_far_long"], corner["first_far_lat"]),
     )
-    lons = F.transform(coords, lambda c: F.element_at(c, 1))
-    lats = F.transform(coords, lambda c: F.element_at(c, 2))
     return df.select(
         "*",
         sensor.alias("sensor"),
@@ -206,10 +205,7 @@ def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
         incidence.alias("incidence"),
         mdattr(xml, "Processing_system_identifier").alias("IPF_version"),
         coords.alias("coordinates"),
-        F.array_min(lons).alias("xmin"),
-        F.array_max(lons).alias("xmax"),
-        F.array_min(lats).alias("ymin"),
-        F.array_max(lats).alias("ymax"),
+        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
         outname_base_col(sensor, acquisition_mode, orbit, start).alias(
             "outname_base"
         ),
@@ -284,16 +280,11 @@ def parse_tsx(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     fields = _tsx_fields(xml)
     outname = fields.pop("_outname")
     coords = _grid_coords(xml, "gridPoint")
-    lons = F.transform(coords, lambda c: F.element_at(c, 1))
-    lats = F.transform(coords, lambda c: F.element_at(c, 2))
     return df.select(
         "*",
         *[c.alias(n) for n, c in fields.items()],
         coords.alias("coordinates"),
-        F.array_min(lons).alias("xmin"),
-        F.array_max(lons).alias("xmax"),
-        F.array_min(lats).alias("ymin"),
-        F.array_max(lats).alias("ymax"),
+        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
         outname.alias("outname_base"),
     )
 
@@ -333,8 +324,6 @@ def parse_tdm(
     master_id = xml_tag(xml, "inSARmasterID")
     coop = xml_tag(xml, "cooperativeMode")
     coords = _grid_coords(xml, "sceneCornerCoord")
-    lons = F.transform(coords, lambda c: F.element_at(c, 1))
-    lats = F.transform(coords, lambda c: F.element_at(c, 2))
     return df.select(
         "*",
         tdm_sensor.alias("sensor"),
@@ -356,10 +345,7 @@ def parse_tdm(
         # (drivers.py:2505-2519)
         *[c.alias(n) for n, c in master.items()],
         coords.alias("coordinates"),
-        F.array_min(lons).alias("xmin"),
-        F.array_max(lons).alias("xmax"),
-        F.array_min(lats).alias("ymin"),
-        F.array_max(lats).alias("ymax"),
+        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
         outname.alias("outname_base"),
     )
 
@@ -450,11 +436,6 @@ CORE_COLUMNS = [
 ]
 
 
-def _span_text(kind: str) -> Column:
-    metas = F.filter(F.col("spans"), lambda s: s.kind == F.lit(kind))
-    return F.when(F.size(metas) > 0, F.element_at(metas, 1).text)
-
-
 _CORE_TYPES = {
     "orbitNumber_abs": "int", "orbitNumber_rel": "int", "cycleNumber": "int",
     "frameNumber": "int", "samples": "int", "lines": "int",
@@ -510,18 +491,16 @@ def identify_spans(docs: DataFrame) -> DataFrame:
         "t_tdm": "scene_meta_tdm", "t_psr": "scene_meta_psr",
         "t_facter": "scene_meta_psr_facter",
     }
-    cur = docs.select(
-        "doc_id", *[_span_text(k).alias(a) for a, k in kinds.items()]
-    )
+    # every span text lifted behind one Generate barrier: each parser
+    # reads its text many times, and each read would otherwise inline
+    # the interpreted span filter again
+    texts = F.struct(*[span_text(F.col("spans"), k).alias(a) for a, k in kinds.items()])
+    cur = bind(docs, "_t", texts).select("doc_id", "_t.*")
     lift_cols = list(cur.columns)
 
     # JSON dialect inline (the docs_to_scenes parse pruned to the CORE
     # fields; one from_json behind a Generate barrier). Field names and
-    # types come from the SAME table ingest.docs_to_scenes parses from
-    # (round-4 review: a hand-copied schema string would silently drift
-    # if _META_FIELD_TYPES changes).
-    from pyrosar_spark.operators.ingest import _META_FIELD_TYPES
-
+    # types come from the SAME table ingest.docs_to_scenes parses from.
     json_needed = {
         "sensor", "acquisition_mode", "product", "orbit", "start", "stop",
         "orbitNumber_abs", "orbitNumber_rel", "cycleNumber", "frameNumber",
@@ -536,8 +515,6 @@ def identify_spans(docs: DataFrame) -> DataFrame:
         ),
     )
     m = F.col("_mj")
-    lons = F.transform(m["coordinates"], lambda c: F.element_at(c, 1))
-    lats = F.transform(m["coordinates"], lambda c: F.element_at(c, 2))
     json_fields = {
         **{c: m[c] for c in (
             "sensor", "acquisition_mode", "product", "orbit", "start", "stop",
@@ -555,8 +532,7 @@ def identify_spans(docs: DataFrame) -> DataFrame:
             ),
             F.array().cast("array<string>"),
         ),
-        "xmin": F.array_min(lons), "xmax": F.array_max(lons),
-        "ymin": F.array_min(lats), "ymax": F.array_max(lats),
+        **footprint_bbox(m["coordinates"]),
         "outname_base": outname_base_col(
             m["sensor"], m["acquisition_mode"], m["orbit"], m["start"]
         ),

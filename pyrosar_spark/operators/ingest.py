@@ -85,16 +85,31 @@ def ring_to_wkb_udf(ring: pd.Series) -> pd.Series:
     )
 
 
-def scene_meta_text(spans: Column) -> Column:
-    """Text of the first ``scene_meta`` span (NULL if none).
+def span_text(spans: Column, kind: str) -> Column:
+    """Text of the first span of ``kind`` (NULL if none, or if
+    ``spans`` is empty or NULL): the one span lookup of every metadata
+    parse (:func:`docs_to_scenes`,
+    :func:`~pyrosar_spark.operators.xmlmeta.xml_docs_to_scenes`,
+    :func:`~pyrosar_spark.operators.formats.identify_spans`).
 
-    ``try_element_at`` evaluates the span-filter lambda ONCE per row —
-    the previous ``when(size(metas) > 0, element_at(metas, 1))`` guard
-    embedded the interpreted filter HOF twice in the same projection
-    (both evaluated per row; guide §4.1 — HOFs run interpreted), for
-    the identical NULL-on-empty result (r6)."""
-    metas = F.filter(spans, lambda s: s.kind == F.lit("scene_meta"))
+    ``try_element_at`` evaluates the interpreted filter lambda once per
+    row; a ``size(metas) > 0`` guard in front of ``element_at`` would
+    evaluate it twice for the same NULL-on-empty result."""
+    metas = F.filter(spans, lambda s: s.kind == F.lit(kind))
     return F.try_element_at(metas, F.lit(1)).text
+
+
+def footprint_bbox(coords: Column) -> dict[str, Column]:
+    """``xmin``/``xmax``/``ymin``/``ymax`` (unaliased) of an
+    ``array<array<double>>`` of (lon, lat) points: the one
+    coordinates → bbox tail of the JSON, SAFE, DIMAP, TSX and TDM
+    parses."""
+    lons = F.transform(coords, lambda c: F.element_at(c, 1))
+    lats = F.transform(coords, lambda c: F.element_at(c, 2))
+    return {
+        "xmin": F.array_min(lons), "xmax": F.array_max(lons),
+        "ymin": F.array_min(lats), "ymax": F.array_max(lats),
+    }
 
 
 # meta-JSON field types in canonical order: the one schema of the scene_meta
@@ -184,7 +199,7 @@ def docs_to_scenes(
     # has a parseable scene_meta span" (identify_many drop semantics)
     needed = {"sensor"} | {f for c in want for f in _COLUMN_FIELDS[c]}
 
-    txt = scene_meta_text(F.col("spans"))
+    txt = span_text(F.col("spans"), "scene_meta")
     passthrough = ["_json_txt"] if meta_keys else []
     pre = (
         docs.select("doc_id", F.explode(F.array(txt)).alias("_meta_text"))
@@ -203,8 +218,6 @@ def docs_to_scenes(
         .where(F.col("m").isNotNull() & F.col("m.sensor").isNotNull())
     )
     field = lambda n: F.col(f"m.{n}")  # noqa: E731
-    lons = F.transform(field("coordinates"), lambda c: F.element_at(c, 1))
-    lats = F.transform(field("coordinates"), lambda c: F.element_at(c, 2))
     exprs: dict[str, Column] = {"doc_id": F.col("doc_id")}
     for name in ("sensor", "orbit", "orbitNumber_abs", "orbitNumber_rel",
                  "cycleNumber", "frameNumber", "acquisition_mode", "start",
@@ -225,10 +238,8 @@ def docs_to_scenes(
         ),
     )
     exprs["corners"] = corners.alias("corners")
-    exprs["xmin"] = F.array_min(lons).alias("xmin")
-    exprs["xmax"] = F.array_max(lons).alias("xmax")
-    exprs["ymin"] = F.array_min(lats).alias("ymin")
-    exprs["ymax"] = F.array_max(lats).alias("ymax")
+    for name, c in footprint_bbox(field("coordinates")).items():
+        exprs[name] = c.alias(name)
 
     meta_cols = []
     if meta_keys:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.functions.naming import outname_base_col
 from pyrosar_spark.functions.temporal import parse_date_col
+from pyrosar_spark.operators.ingest import footprint_bbox, span_text
 
 
 def _tag_pat(name: str, attr_pred: str = "") -> str:
@@ -105,8 +106,6 @@ def parse_safe_manifest(df: DataFrame, xml_col: str = "xml") -> DataFrame:
     the pass direction, bbox from the swapped footprint)."""
     xml = F.col(xml_col)
     coords = gml_coordinates(xml)
-    lons = F.transform(coords, lambda c: F.element_at(c, 1))
-    lats = F.transform(coords, lambda c: F.element_at(c, 2))
     start = parse_date_col(xml_tag(xml, "startTime"))
     sensor = xml_tag(xml, "missionId")
     # SM scenes report the concrete swath (S1..S6) as the acquisition
@@ -141,10 +140,7 @@ def parse_safe_manifest(df: DataFrame, xml_col: str = "xml") -> DataFrame:
             "polarizations"
         ),
         coords.alias("coordinates"),
-        F.array_min(lons).alias("xmin"),
-        F.array_max(lons).alias("xmax"),
-        F.array_min(lats).alias("ymin"),
-        F.array_max(lats).alias("ymax"),
+        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
         outname_base_col(sensor, mode, orbit, start).alias("outname_base"),
     )
 
@@ -152,8 +148,7 @@ def parse_safe_manifest(df: DataFrame, xml_col: str = "xml") -> DataFrame:
 def xml_docs_to_scenes(docs: DataFrame) -> DataFrame:
     """Documents whose spans carry ``scene_meta_xml`` manifests → the
     SAFE metadata frame (XML analog of ``docs_to_scenes``)."""
-    metas = F.filter(F.col("spans"), lambda s: s.kind == F.lit("scene_meta_xml"))
-    xml = F.when(F.size(metas) > 0, F.element_at(metas, 1).text)
+    xml = span_text(F.col("spans"), "scene_meta_xml")
     lifted = (
         docs.select("doc_id", F.explode(F.array(xml)).alias("_xml"))
         .where(F.col("_xml").isNotNull())

@@ -41,29 +41,20 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 spark = SparkSession.builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
+from bench import flagship_frame
 from pyrosar_spark.datagen import generate_documents
 from pyrosar_spark.operators.ingest import docs_to_scenes
-from pyrosar_spark.operators.select import select
-from pyrosar_spark.operators.tiles import assign_hgt
 import os
 
 if not os.path.exists(os.path.join({docs!r}, "_SUCCESS")):
     generate_documents(spark, {n_docs}, seed=42, n_partitions=256).write.mode(
         "overwrite").parquet({docs!r})
 
-# flagship (the BASELINE.json metric): interleaved-documents table →
-# span parse → AOI+date+pol select (bbox prefilter + exact refine on
-# DEFERRED geometry: hull only for bbox survivors) → HGT tile lattice →
-# tile counts. One fused job, plan built ONCE (a long-running cluster
-# amortizes Catalyst planning; measured 6.5 s cold / ~1.2 s warm on
-# this tree) and re-executed per rep.
-docs0 = spark.read.parquet({docs!r})
-sel0 = select(docs_to_scenes(docs0, with_geometry="defer", columns=["doc_id", "start", "stop", "vv", "corners", "xmin", "xmax", "ymin", "ymax"]),
-              mindate="20150101T000000", maxdate="20151231T235959",
-              polarizations=["VV"],
-              aoi_wkt="POLYGON((-180 -60, -60 -60, -60 60, -180 60, -180 -60))",
-              return_value=["doc_id", "xmin", "xmax", "ymin", "ymax"])
-pipeline_df = assign_hgt(sel0).groupBy("tile_id").count()
+# flagship (bench.flagship_frame, the BASELINE.json metric): one fused
+# job, plan built ONCE (a long-running cluster amortizes Catalyst
+# planning; measured 6.5 s cold / ~1.2 s warm on this tree) and
+# re-executed per rep.
+pipeline_df = flagship_frame(spark.read.parquet({docs!r}))
 
 def run_pipeline():
     pipeline_df.count()

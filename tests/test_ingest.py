@@ -126,8 +126,9 @@ def test_parser_kernels_produce_identical_rows(spark, docs):
     """The one span parse (pruned ``from_json``) over the generated corpus
     plus adversarial payloads. The parse is row-local, so the corpus rows
     are identical with and without the edge docs beside them, and each
-    edge doc gives its expected row: malformed JSON, a JSON null sensor
-    and a doc without a scene_meta span are dropped; missing keys and a
+    edge doc gives its expected row: malformed JSON, a JSON null sensor,
+    a doc without a scene_meta span and a doc with no spans are dropped;
+    of two scene_meta spans the first wins; missing keys and a
     non-numeric int read NULL; escapes and a '|' inside a value survive;
     array fields give exact flags, corners and bbox."""
     from pyrosar_spark.datagen import DOC_SCHEMA
@@ -147,6 +148,10 @@ def test_parser_kernels_produce_identical_rows(spark, docs):
                     '"coordinates":[[1.0,2.0],[3.0,4.0],[1.5,3.5]],'
                     '"start":"20200101T000000"}', "", 0)]),
         ("e_nometa", [("text", "filler only", "", 0)]),
+        # the first span of the kind wins; no spans at all is dropped
+        ("e_two", [("scene_meta", 'SC|{"sensor":"S1A"}', "", 0),
+                   ("scene_meta", 'SC|{"sensor":"S1B"}', "", 1)]),
+        ("e_empty", []),
     ]
     corpus = docs.unionByName(spark.createDataFrame(edge, DOC_SCHEMA))
     rows = {
@@ -159,8 +164,9 @@ def test_parser_kernels_produce_identical_rows(spark, docs):
     )
     assert sorted(tuple(r) for d, r in rows.items() if d not in edge_ids) == alone
     assert {d for d in rows if d in edge_ids} == {
-        "e_sparse", "e_badint", "e_esc", "e_arr"
+        "e_sparse", "e_badint", "e_esc", "e_arr", "e_two"
     }
+    assert rows["e_two"].sensor == "S1A"
     sparse = rows["e_sparse"].asDict()
     assert sparse["sensor"] == "S1A"
     assert all(

@@ -92,6 +92,20 @@ def test_safe_manifest_parse_golden(spark):
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
     assert xml_docs_to_scenes(no_xml).count() == 0
+    # the first span of the kind wins; a document with no spans at all
+    # is dropped
+    second = GOLDEN_MANIFEST.replace("S1A", "S1B")
+    edge = spark.createDataFrame(
+        [
+            ("two", [("scene_meta_xml", GOLDEN_MANIFEST, "", 0),
+                     ("scene_meta_xml", second, "", 1)]),
+            ("empty", []),
+        ],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    assert [(r.doc_id, r.sensor) for r in xml_docs_to_scenes(edge).collect()] == [
+        ("two", "S1A")
+    ]
 
 
 def test_fetch_payloads_from_store(spark, tmp_path):

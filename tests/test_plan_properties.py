@@ -17,6 +17,16 @@ def plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def span_filters(df) -> dict[str, int]:
+    """Occurrences of each span kind's ``filter`` lambda in the executed
+    plan, printed with no field list truncated."""
+    import re
+
+    p = df._jdf.queryExecution().executedPlan().treeString(False, False, 1 << 20, False, False)
+    kinds = re.findall(r"lambdafunction\(\(lambda \w+#\d+\.kind = (\w+)\)", p)
+    return {k: kinds.count(k) for k in set(kinds)}
+
+
 @pytest.fixture(scope="module")
 def catalog_parquet(spark, tmp_path_factory):
     """A scene catalog written to parquet — the storage shape whose
@@ -107,25 +117,36 @@ def test_no_cartesian_products_in_hot_paths(spark, catalog_parquet):
 def test_parse_is_bound_once_per_row(spark):
     """Exactly ONE from_json in the flagship parse plan (the Generate
     barrier pins it): CollapseProject inlining the Jackson parse into
-    every downstream reference was the round-1 anti-scaling bug."""
+    every downstream reference was the round-1 anti-scaling bug. The
+    span lookup's filter lambda runs once per row too, in the JSON and
+    the SAFE-XML parse (a size guard in front of it made two)."""
     from pyrosar_spark.datagen import generate_documents
     from pyrosar_spark.operators.ingest import docs_to_scenes
+    from pyrosar_spark.operators.xmlmeta import xml_docs_to_scenes
 
     docs = generate_documents(spark, 500, seed=5)
-    p = plan(docs_to_scenes(docs, with_geometry=False))
+    scenes = docs_to_scenes(docs, with_geometry=False)
+    p = plan(scenes)
     assert p.count("from_json") == 1, p.count("from_json")
+    assert span_filters(scenes) == {"scene_meta": 1}
+    assert span_filters(xml_docs_to_scenes(docs)) == {"scene_meta_xml": 1}
 
 
 def test_identify_spans_single_scan(spark, tmp_path):
     """The dialect cascade reads its input exactly once (round 4: the
-    union form scanned it 7x)."""
+    union form scanned it 7x), and lifts each dialect's span text once:
+    every span kind's filter lambda occurs once in the plan (twice each
+    before the texts were bound behind one Generate)."""
     from pyrosar_spark.datagen import generate_documents
     from pyrosar_spark.operators.formats import identify_spans
 
     path = str(tmp_path / "docs.parquet")
     generate_documents(spark, 500, seed=6).write.parquet(path)
-    p = plan(identify_spans(spark.read.parquet(path)))
-    assert p.count("FileScan") == 1
+    out = identify_spans(spark.read.parquet(path))
+    assert plan(out).count("FileScan") == 1
+    kinds = ["scene_meta", "scene_meta_xml", "scene_meta_dimap", "scene_meta_tsx",
+             "scene_meta_tdm", "scene_meta_psr", "scene_meta_psr_facter"]
+    assert span_filters(out) == dict.fromkeys(kinds, 1)
 
 
 def test_symmetric_edges_single_scan(spark, tmp_path):

@@ -27,6 +27,7 @@ from pyrosar_spark.operators.dedup import (
     dedup_clusters,
     dup_ngram_spans,
     near_dup_pairs,
+    simhash_pairs,
 )
 
 
@@ -90,10 +91,12 @@ def test_text_operators_keep_a_small_corpus_on_one_task(spark, tmp_path):
     """A 1,000-doc single-file corpus (~100 KB) is below 1 MiB, so each
     operator runs as a one-partition plan: no Exchange of any kind (no
     RoundRobin spread, no hash shuffle, no BroadcastExchange) in any of
-    its SQL executions, checkpoint and cache jobs included."""
+    its SQL executions, checkpoint and cache jobs included. This holds
+    for ``simhash_pairs`` too, which a wide input may broadcast."""
     docs = spark.read.parquet(_write_corpus(str(tmp_path / "docs.parquet")))
     assert _input_width(docs) == 1
-    for name, build in _operators(docs).items():
+    ops = {**_operators(docs), "simhash_pairs": lambda: simhash_pairs(docs)}
+    for name, build in ops.items():
         plans = _sql_plans(spark, lambda: build().collect())
         assert plans, name
         for p in plans:
