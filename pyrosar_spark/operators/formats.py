@@ -1,13 +1,19 @@
 """Remaining S4 format-metadata dialects: BEAM_DIMAP, TSX, TDM and
 EORC_PSR — the last of the reference's ~8 metadata dialects (VERDICT
-r2 #1), funneling into the same catalog schema as the JSON / SAFE-XML /
-CEOS / ESA-k=v parsers.
+r2 #1) — and :func:`identify_spans`, which funnels them with the JSON
+and SAFE-XML dialects into one catalog schema (the CEOS and ESA k=v
+record parsers in ``binparse``/``catalog_ops`` are not part of it).
 
-Reference semantics (field-for-field; see each parser's docstring):
+Reference semantics (field-for-field; see each dialect's docstring):
  - BEAM_DIMAP   ``pyroSAR/drivers.py:814-942``  (``BEAM_DIMAP.scanMetadata``)
  - TSX          ``pyroSAR/drivers.py:2354-2392`` (``TSX.scanMetadata``)
  - TDM          ``pyroSAR/drivers.py:2455-2525`` (``TDM.scanMetadata``)
  - EORC_PSR     ``pyroSAR/drivers.py:1519-1586`` (``EORC_PSR.scanMetadata``)
+
+Each dialect is one ``*_fields`` dict of field expressions (the
+reference's ``scanMetadata`` dict) ending in the shared
+:func:`~pyrosar_spark.operators.ingest.scene_fields` tail; ``parse_*``
+projects it onto a frame.
 
 Spark shape: each dialect's annotation text is a span payload (kinds
 ``scene_meta_dimap`` / ``scene_meta_tsx`` / ``scene_meta_tdm`` /
@@ -23,9 +29,11 @@ every lookup stays a column expression over one row.
 
 Deliberate deviations (documented, not silent):
  - DIMAP's last-resort incidence fallback (reading the
-   ``tie_point_grids/incident_angle.img`` raster with GDAL,
-   ``drivers.py:911-918``) is out of scope — no raster store in the
-   data model; the element-based fallbacks are implemented.
+   ``tie_point_grids/incident_angle.img`` raster, ``drivers.py:911-918``)
+   is not part of the XML parse: the element-based fallbacks are, and
+   :func:`pyrosar_spark.operators.envi.fill_incidence_from_rasters`
+   completes the cascade for the rows they leave NULL (query
+   ``dimap_incidence``).
  - DIMAP polarizations are sorted (the reference's ``list(set(...))``
    has no defined order — a set-to-list roundtrip; sorting makes the
    column deterministic for oracles).
@@ -36,9 +44,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyrosar_spark.functions.naming import outname_base_col
 from pyrosar_spark.functions.temporal import parse_date_col
-from pyrosar_spark.operators.ingest import _META_FIELD_TYPES, footprint_bbox, span_text
+from pyrosar_spark.operators.ingest import (
+    _META_FIELD_TYPES, POL_FLAGS, json_fields, scene_fields, span_text,
+)
 from pyrosar_spark.operators.xmlmeta import xml_path_tag, xml_tag, xml_tags_all
 
 
@@ -101,15 +110,14 @@ def _mean(arr: Column) -> Column:
     ) / F.size(arr)
 
 
-def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """BEAM_DIMAP ``.dim`` XML → catalog columns, field-for-field with
+def dimap_fields(xml: Column) -> dict[str, Column]:
+    """BEAM_DIMAP ``.dim`` XML → catalog fields, field-for-field with
     ``BEAM_DIMAP.scanMetadata`` (drivers.py:814-942): mission map,
     S1-vs-ENVISAT/ERS mode+product branch, PASS→orbit letter, distinct
     non-composite polarizations, spacing/looks/raster dims, ABS/REL
     orbit + cycle/frame fallback chains, SWATH, srgr_flag→geometry,
     raster start/stop recased+parsed, incidence fallback cascade, and
     the first/last×near/far corner ring in the reference's order."""
-    xml = F.col(xml_col)
     mission = mdattr(xml, "MISSION")
     sensor = F.element_at(
         F.create_map(
@@ -130,7 +138,6 @@ def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
             envisat_mode,
         )
     )
-    orbit = F.substring(mdattr(xml, "PASS"), 1, 1)
     pols = F.array_sort(
         F.array_distinct(
             F.filter(
@@ -139,8 +146,6 @@ def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
             )
         )
     )
-    start = _dimap_date(xml_tag(xml, "PRODUCT_SCENE_RASTER_START_TIME"))
-    stop = _dimap_date(xml_tag(xml, "PRODUCT_SCENE_RASTER_STOP_TIME"))
     # incidence cascade (drivers.py:897-918): (near+far)/2, else the
     # mean of the per-swath incidenceAngleMidSwath elements
     inc_nf = (
@@ -173,43 +178,44 @@ def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
         F.array(corner["last_far_long"], corner["last_far_lat"]),
         F.array(corner["first_far_long"], corner["first_far_lat"]),
     )
-    return df.select(
-        "*",
-        sensor.alias("sensor"),
-        acquisition_mode.alias("acquisition_mode"),
-        product.alias("product"),
-        orbit.alias("orbit"),
-        start.alias("start"),
-        stop.alias("stop"),
-        mdattr(xml, "ABS_ORBIT").cast("int").alias("orbitNumber_abs"),
-        mdattr(xml, "REL_ORBIT").cast("int").alias("orbitNumber_rel"),
+    fields = {
+        "sensor": sensor,
+        "acquisition_mode": acquisition_mode,
+        "product": product,
+        "orbit": F.substring(mdattr(xml, "PASS"), 1, 1),
+        "start": _dimap_date(xml_tag(xml, "PRODUCT_SCENE_RASTER_START_TIME")),
+        "stop": _dimap_date(xml_tag(xml, "PRODUCT_SCENE_RASTER_STOP_TIME")),
+        "orbitNumber_abs": mdattr(xml, "ABS_ORBIT").cast("int"),
+        "orbitNumber_rel": mdattr(xml, "REL_ORBIT").cast("int"),
         # fallback chains (drivers.py:879-881)
-        F.coalesce(mdattr(xml, "orbit_cycle"), mdattr(xml, "CYCLE"))
-        .cast("int")
-        .alias("cycleNumber"),
-        F.coalesce(mdattr(xml, "data_take_id"), mdattr(xml, "ABS_ORBIT"))
-        .cast("int")
-        .alias("frameNumber"),
-        xml_tag(xml, "BAND_RASTER_WIDTH").cast("int").alias("samples"),
-        xml_tag(xml, "BAND_RASTER_HEIGHT").cast("int").alias("lines"),
-        xml_tag(xml, "NBANDS").cast("int").alias("bands"),
-        pols.alias("polarizations"),
-        F.round(mdattr(xml, "range_spacing").cast("double"), 6).alias("spacing_rg"),
-        F.round(mdattr(xml, "azimuth_spacing").cast("double"), 6).alias("spacing_az"),
-        mdattr(xml, "range_looks").cast("double").alias("looks_rg"),
-        mdattr(xml, "azimuth_looks").cast("double").alias("looks_az"),
-        mdattr(xml, "SWATH").alias("swath"),
-        F.when(mdattr(xml, "srgr_flag").cast("int") == 1, "GROUND_RANGE")
-        .otherwise("SLANT_RANGE")
-        .alias("image_geometry"),
-        incidence.alias("incidence"),
-        mdattr(xml, "Processing_system_identifier").alias("IPF_version"),
-        coords.alias("coordinates"),
-        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
-        outname_base_col(sensor, acquisition_mode, orbit, start).alias(
-            "outname_base"
-        ),
-    )
+        "cycleNumber": F.coalesce(
+            mdattr(xml, "orbit_cycle"), mdattr(xml, "CYCLE")
+        ).cast("int"),
+        "frameNumber": F.coalesce(
+            mdattr(xml, "data_take_id"), mdattr(xml, "ABS_ORBIT")
+        ).cast("int"),
+        "samples": xml_tag(xml, "BAND_RASTER_WIDTH").cast("int"),
+        "lines": xml_tag(xml, "BAND_RASTER_HEIGHT").cast("int"),
+        "bands": xml_tag(xml, "NBANDS").cast("int"),
+        "polarizations": pols,
+        "spacing_rg": F.round(mdattr(xml, "range_spacing").cast("double"), 6),
+        "spacing_az": F.round(mdattr(xml, "azimuth_spacing").cast("double"), 6),
+        "looks_rg": mdattr(xml, "range_looks").cast("double"),
+        "looks_az": mdattr(xml, "azimuth_looks").cast("double"),
+        "swath": mdattr(xml, "SWATH"),
+        "image_geometry": F.when(
+            mdattr(xml, "srgr_flag").cast("int") == 1, "GROUND_RANGE"
+        ).otherwise("SLANT_RANGE"),
+        "incidence": incidence,
+        "IPF_version": mdattr(xml, "Processing_system_identifier"),
+    }
+    return scene_fields(fields, coords)
+
+
+def parse_dimap(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+    """``df`` plus the :func:`dimap_fields` of its ``.dim`` text."""
+    fields = dimap_fields(F.col(xml_col))
+    return df.select("*", *[c.alias(n) for n, c in fields.items()])
 
 
 # ---------------------------------------------------------------------------
@@ -239,25 +245,23 @@ def _grid_coords(xml: Column, block: str) -> Column:
     )
 
 
-def _tsx_fields(xml: Column) -> dict[str, Column]:
-    """The TSX.scanMetadata field expressions (drivers.py:2354-2392) —
-    shared verbatim by the TDM master-scene lift (drivers.py:2505-2519).
-    """
-    sensor = F.regexp_replace(xml_path_tag(xml, "generalHeader", "mission"), "-", "")
-    mode = xml_tag(xml, "imagingMode")
-    orbit = F.substring(xml_tag(xml, "orbitDirection"), 1, 1)
-    start = parse_date_col(xml_path_tag(xml, "start", "timeUTC"))
+def _tsx_acquisition(xml: Column) -> dict[str, Column]:
+    """The TSX.scanMetadata field expressions (drivers.py:2354-2392)
+    other than the footprint — shared verbatim by the TDM master-scene
+    lift (drivers.py:2505-2519)."""
     return {
-        "sensor": sensor,
+        "sensor": F.regexp_replace(
+            xml_path_tag(xml, "generalHeader", "mission"), "-", ""
+        ),
         "product": xml_tag(xml, "productVariant"),
-        "orbit": orbit,
+        "orbit": F.substring(xml_tag(xml, "orbitDirection"), 1, 1),
         "polarizations": xml_tags_all(xml, "polLayer"),
         "orbitNumber_abs": xml_tag(xml, "absOrbit").cast("int"),
         "orbitNumber_rel": xml_tag(xml, "relOrbit").cast("int"),
         "cycleNumber": xml_tag(xml, "orbitCycle").cast("int"),
         "frameNumber": xml_tag(xml, "uniqueDataTakeID").cast("int"),
-        "acquisition_mode": mode,
-        "start": start,
+        "acquisition_mode": xml_tag(xml, "imagingMode"),
+        "start": parse_date_col(xml_path_tag(xml, "start", "timeUTC")),
         "stop": parse_date_col(xml_path_tag(xml, "stop", "timeUTC")),
         # reference order: (columnSpacing, rowSpacing) (drivers.py:2375-2377)
         "spacing_rg": xml_tag(xml, "columnSpacing").cast("double"),
@@ -269,24 +273,19 @@ def _tsx_fields(xml: Column) -> dict[str, Column]:
         "incidence": xml_path_tag(xml, "sceneCenterCoord", "incidenceAngle").cast(
             "double"
         ),
-        "_outname": outname_base_col(sensor, mode, orbit, start),
     }
 
 
-def parse_tsx(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+def tsx_fields(xml: Column) -> dict[str, Column]:
     """TSX/TanDEM-X annotation XML (+ inlined GEOREF gridPoint grid) →
-    catalog columns (``TSX.scanMetadata``, drivers.py:2354-2392)."""
-    xml = F.col(xml_col)
-    fields = _tsx_fields(xml)
-    outname = fields.pop("_outname")
-    coords = _grid_coords(xml, "gridPoint")
-    return df.select(
-        "*",
-        *[c.alias(n) for n, c in fields.items()],
-        coords.alias("coordinates"),
-        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
-        outname.alias("outname_base"),
-    )
+    catalog fields (``TSX.scanMetadata``, drivers.py:2354-2392)."""
+    return scene_fields(_tsx_acquisition(xml), _grid_coords(xml, "gridPoint"))
+
+
+def parse_tsx(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+    """``df`` plus the :func:`tsx_fields` of its annotation text."""
+    fields = tsx_fields(F.col(xml_col))
+    return df.select("*", *[c.alias(n) for n, c in fields.items()])
 
 
 # ---------------------------------------------------------------------------
@@ -294,60 +293,56 @@ def parse_tsx(df: DataFrame, xml_col: str = "xml") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def parse_tdm(
-    df: DataFrame, tdm_col: str = "xml", master_col: str = "master_xml"
-) -> DataFrame:
+def tdm_fields(xml: Column, master_xml: Column) -> dict[str, Column]:
     """TanDEM-X CoSSC annotation + the inSAR-master TSX annotation →
-    catalog columns (``TDM.scanMetadata``, drivers.py:2455-2525).
+    catalog fields (``TDM.scanMetadata``, drivers.py:2455-2525).
 
     The reference opens the two component TSX scenes named in
     ``productComponents`` and lifts every acquisition field from the
     ``inSARmasterID`` one (drivers.py:2495-2519); here the master
     annotation is the document's ``scene_meta_tsx`` span
-    (``master_col``) and the lift is the same TSX field expressions
+    (``master_xml``) and the lift is the same TSX field expressions
     evaluated over it."""
-    xml = F.col(tdm_col)
-    master = _tsx_fields(F.col(master_col))
-    master.pop("_outname")
+    master = _tsx_acquisition(master_xml)
     # the reference lifts acquisition fields but keeps the TDM mission
     # id as sensor and the CoSSC product type (drivers.py:2489-2492)
-    master.pop("sensor")
-    master.pop("product")
-    tdm_sensor = F.regexp_replace(
-        xml_path_tag(xml, "commonAcquisitionInfo", "missionID"), "-", ""
-    )
-    outname = outname_base_col(
-        tdm_sensor, master["acquisition_mode"], master["orbit"], master["start"]
-    )
+    del master["sensor"], master["product"]
     sat1 = xml_path_tag(xml, "commonAcquisitionInfo", "satelliteIDsat1")
     sat2 = xml_path_tag(xml, "commonAcquisitionInfo", "satelliteIDsat2")
     master_id = xml_tag(xml, "inSARmasterID")
     coop = xml_tag(xml, "cooperativeMode")
-    coords = _grid_coords(xml, "sceneCornerCoord")
-    return df.select(
-        "*",
-        tdm_sensor.alias("sensor"),
-        xml_tag(xml, "productType").alias("product"),
-        sat1.alias("SAT1"),
-        sat2.alias("SAT2"),
-        master_id.alias("inSARmasterID"),
-        F.regexp_replace(
+    fields = {
+        "sensor": F.regexp_replace(
+            xml_path_tag(xml, "commonAcquisitionInfo", "missionID"), "-", ""
+        ),
+        "product": xml_tag(xml, "productType"),
+        "SAT1": sat1,
+        "SAT2": sat2,
+        "inSARmasterID": master_id,
+        "inSARmaster": F.regexp_replace(
             F.when(master_id == "SAT1", sat1).otherwise(sat2), "-", ""
-        ).alias("inSARmaster"),
-        xml_tag(xml, "acquisitionItemID").cast("int").alias("acquisitionItemID"),
-        xml_tag(xml, "effectiveBaseline").cast("double").alias("effectiveBaseline"),
-        xml_tag(xml, "heightOfAmbiguity").cast("double").alias("heightOfAmbiguity"),
-        xml_tag(xml, "distanceActivePos").cast("double").alias("distanceActivePos"),
-        xml_tag(xml, "distanceTracks").cast("double").alias("distanceTracks"),
-        coop.alias("cooperativeMode"),
-        (F.lower(coop) == "bistatic").alias("bistatic"),
+        ),
+        "acquisitionItemID": xml_tag(xml, "acquisitionItemID").cast("int"),
+        "effectiveBaseline": xml_tag(xml, "effectiveBaseline").cast("double"),
+        "heightOfAmbiguity": xml_tag(xml, "heightOfAmbiguity").cast("double"),
+        "distanceActivePos": xml_tag(xml, "distanceActivePos").cast("double"),
+        "distanceTracks": xml_tag(xml, "distanceTracks").cast("double"),
+        "cooperativeMode": coop,
+        "bistatic": F.lower(coop) == "bistatic",
         # every acquisition field lifted from the inSAR master
         # (drivers.py:2505-2519)
-        *[c.alias(n) for n, c in master.items()],
-        coords.alias("coordinates"),
-        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
-        outname.alias("outname_base"),
-    )
+        **master,
+    }
+    return scene_fields(fields, _grid_coords(xml, "sceneCornerCoord"))
+
+
+def parse_tdm(
+    df: DataFrame, tdm_col: str = "xml", master_col: str = "master_xml"
+) -> DataFrame:
+    """``df`` plus the :func:`tdm_fields` of its TDM and master TSX
+    annotation texts."""
+    fields = tdm_fields(F.col(tdm_col), F.col(master_col))
+    return df.select("*", *[c.alias(n) for n, c in fields.items()])
 
 
 # ---------------------------------------------------------------------------
@@ -365,10 +360,8 @@ def _line(arr: Column, idx0: int) -> Column:
     return F.when(out != "", out)
 
 
-def parse_psr_text(
-    df: DataFrame, hdr_col: str = "hdr", facter_col: str = "facter"
-) -> DataFrame:
-    """ALOS-2 EORC_PSR summary text headers → catalog columns
+def psr_fields(hdr_text: Column, facter_text: Column) -> dict[str, Column]:
+    """ALOS-2 EORC_PSR summary text headers → catalog fields
     (``EORC_PSR.scanMetadata``, drivers.py:1519-1586): fields live at
     fixed LINE indices of the space-stripped header file, with raster
     dims + incidence coming from the ``facter_m.dat`` summary.
@@ -382,45 +375,48 @@ def parse_psr_text(
     (drivers.py:1566-1571; the reference's arithmetic implies the
     numeric cast of the cycle line). frameNumber is empty in the
     reference → NULL here."""
-    hdr = F.split(F.regexp_replace(F.col(hdr_col), " ", ""), "\n")
-    fac = F.split(F.regexp_replace(F.col(facter_col), " ", ""), "\n")
-    sensor = _line(hdr, 2)
-    mode = _line(hdr, 12)
-    orbit = _line(hdr, 9)
+    hdr = F.split(F.regexp_replace(hdr_text, " ", ""), "\n")
+    fac = F.split(F.regexp_replace(facter_text, " ", ""), "\n")
     start = _line(hdr, 6)
     cycle = _line(hdr, 5).cast("int")
     rel = _line(hdr, 7).cast("int")
-    lats = [_line(hdr, i).cast("double") for i in (33, 35, 37, 39)]
-    lons = [_line(hdr, i).cast("double") for i in (34, 36, 38, 40)]
-    coords = F.array(*[F.array(lo, la) for lo, la in zip(lons, lats)])
-    return df.select(
-        "*",
-        sensor.alias("sensor"),
-        mode.alias("acquisition_mode"),
-        _line(hdr, 3).alias("product"),
-        orbit.alias("orbit"),
-        start.alias("start"),
-        start.alias("stop"),
-        (F.lit(PSR_ORBITS_PER_CYCLE) * (cycle - 1) + rel)
-        .cast("int")
-        .alias("orbitNumber_abs"),
-        rel.alias("orbitNumber_rel"),
-        cycle.alias("cycleNumber"),
-        F.lit(None).cast("int").alias("frameNumber"),
-        _line(fac, 50).cast("double").cast("int").alias("samples"),
-        _line(fac, 51).cast("double").cast("int").alias("lines"),
-        _line(fac, 119).cast("double").alias("incidence"),
-        _line(hdr, 51).cast("double").alias("spacing_rg"),
-        _line(hdr, 52).cast("double").alias("spacing_az"),
-        _line(hdr, 64).cast("double").alias("k_dB"),
-        _line(hdr, 73).alias("proc_facility"),
-        coords.alias("coordinates"),
-        F.least(*lons).alias("xmin"),
-        F.greatest(*lons).alias("xmax"),
-        F.least(*lats).alias("ymin"),
-        F.greatest(*lats).alias("ymax"),
-        outname_base_col(sensor, mode, orbit, start).alias("outname_base"),
+    fields = {
+        "sensor": _line(hdr, 2),
+        "acquisition_mode": _line(hdr, 12),
+        "product": _line(hdr, 3),
+        "orbit": _line(hdr, 9),
+        "start": start,
+        "stop": start,
+        "orbitNumber_abs": (F.lit(PSR_ORBITS_PER_CYCLE) * (cycle - 1) + rel).cast(
+            "int"
+        ),
+        "orbitNumber_rel": rel,
+        "cycleNumber": cycle,
+        "frameNumber": F.lit(None).cast("int"),
+        "samples": _line(fac, 50).cast("double").cast("int"),
+        "lines": _line(fac, 51).cast("double").cast("int"),
+        "incidence": _line(fac, 119).cast("double"),
+        "spacing_rg": _line(hdr, 51).cast("double"),
+        "spacing_az": _line(hdr, 52).cast("double"),
+        "k_dB": _line(hdr, 64).cast("double"),
+        "proc_facility": _line(hdr, 73),
+    }
+    coords = F.array(
+        *[
+            F.array(_line(hdr, lat + 1).cast("double"), _line(hdr, lat).cast("double"))
+            for lat in (33, 35, 37, 39)
+        ]
     )
+    return scene_fields(fields, coords)
+
+
+def parse_psr_text(
+    df: DataFrame, hdr_col: str = "hdr", facter_col: str = "facter"
+) -> DataFrame:
+    """``df`` plus the :func:`psr_fields` of its header and facter
+    texts."""
+    fields = psr_fields(F.col(hdr_col), F.col(facter_col))
+    return df.select("*", *[c.alias(n) for n, c in fields.items()])
 
 
 # ---------------------------------------------------------------------------
@@ -444,25 +440,6 @@ _CORE_TYPES = {
 }
 
 
-def _packed(df: DataFrame, parse_fn, name: str, present: Column) -> DataFrame:
-    """Run one dialect parser over its (mostly-NULL) text column and
-    pack its outputs into a single nullable struct with the shared CORE
-    shape — NULL unless the span is present AND the parser produced a
-    sensor. The parser's raw output columns are dropped immediately, so
-    successive dialects never collide on names."""
-    parsed = parse_fn(df)
-    new_cols = set(parsed.columns) - set(df.columns)
-    fields = [
-        (F.col(c) if c in new_cols else F.lit(None))
-        .cast(_CORE_TYPES.get(c, "string"))
-        .alias(c)
-        for c in CORE_COLUMNS
-        if c != "doc_id"
-    ]
-    struct = F.when(present & F.col("sensor").isNotNull(), F.struct(*fields))
-    return parsed.select(*df.columns, struct.alias(name))
-
-
 def identify_spans(docs: DataFrame) -> DataFrame:
     """``identify_many`` across every metadata dialect — SINGLE PASS
     (round 4): one projection lifts every dialect's span text out of
@@ -483,7 +460,7 @@ def identify_spans(docs: DataFrame) -> DataFrame:
     dropped. The coalesced struct is bound behind a Generate barrier
     so the whole cascade evaluates once per row."""
     from pyrosar_spark.operators.dedup import bind
-    from pyrosar_spark.operators.xmlmeta import parse_safe_manifest
+    from pyrosar_spark.operators.xmlmeta import safe_fields
 
     kinds = {
         "t_json": "scene_meta", "t_safe": "scene_meta_xml",
@@ -496,74 +473,50 @@ def identify_spans(docs: DataFrame) -> DataFrame:
     # the interpreted span filter again
     texts = F.struct(*[span_text(F.col("spans"), k).alias(a) for a, k in kinds.items()])
     cur = bind(docs, "_t", texts).select("doc_id", "_t.*")
-    lift_cols = list(cur.columns)
-
-    # JSON dialect inline (the docs_to_scenes parse pruned to the CORE
-    # fields; one from_json behind a Generate barrier). Field names and
-    # types come from the SAME table ingest.docs_to_scenes parses from.
-    json_needed = {
-        "sensor", "acquisition_mode", "product", "orbit", "start", "stop",
-        "orbitNumber_abs", "orbitNumber_rel", "cycleNumber", "frameNumber",
-        "samples", "lines", "polarizations", "coordinates",
-    }
-    schema = ", ".join(f"{n} {t}" for n, t in _META_FIELD_TYPES if n in json_needed)
+    # the JSON dialect parses its CORE fields once, behind a Generate
+    # barrier, from the same field table docs_to_scenes parses from
+    json_schema = ", ".join(
+        f"{n} {t}" for n, t in _META_FIELD_TYPES if n in CORE_COLUMNS
+    )
     cur = bind(
         cur,
         "_mj",
-        F.from_json(
-            F.expr("substring(t_json, instr(t_json, '|') + 1)"), schema
-        ),
+        F.from_json(F.expr("substring(t_json, instr(t_json, '|') + 1)"), json_schema),
     )
     m = F.col("_mj")
-    json_fields = {
-        **{c: m[c] for c in (
-            "sensor", "acquisition_mode", "product", "orbit", "start", "stop",
-            "orbitNumber_abs", "orbitNumber_rel", "cycleNumber", "frameNumber",
-            "samples", "lines", "coordinates",
-        )},
-        # fixed-order known-pol normalization (matches the catalog's
-        # denormalized flag order); a document with NO polarizations
-        # field must yield [], not the NULL array_intersect propagates
-        # (ADVICE r4)
-        "polarizations": F.coalesce(
-            F.array_intersect(
-                F.array(*[F.lit(p) for p in ("HH", "VV", "HV", "VH")]),
-                m["polarizations"],
-            ),
-            F.array().cast("array<string>"),
-        ),
-        **footprint_bbox(m["coordinates"]),
-        "outname_base": outname_base_col(
-            m["sensor"], m["acquisition_mode"], m["orbit"], m["start"]
-        ),
-    }
-    json_struct = F.when(
-        F.col("t_json").isNotNull() & m["sensor"].isNotNull(),
-        F.struct(
-            *[
-                json_fields[c].cast(_CORE_TYPES.get(c, "string")).alias(c)
-                for c in CORE_COLUMNS
-                if c != "doc_id"
-            ]
-        ),
-    )
-    cur = cur.select(*lift_cols, json_struct.alias("_p_json"))
-
     dialects = [
-        ("_p_safe", lambda d: parse_safe_manifest(d, "t_safe"), "t_safe"),
-        ("_p_dimap", lambda d: parse_dimap(d, "t_dimap"), "t_dimap"),
-        ("_p_tdm", lambda d: parse_tdm(d, "t_tdm", "t_tsx"), "t_tdm"),
-        ("_p_tsx", lambda d: parse_tsx(d, "t_tsx"), "t_tsx"),
-        ("_p_psr", lambda d: parse_psr_text(d, "t_psr", "t_facter"), "t_psr"),
+        ("t_json", {
+            **json_fields(m),
+            # known pols in the catalog's flag order; a document with NO
+            # polarizations field must yield [], not the NULL
+            # array_intersect propagates (ADVICE r4)
+            "polarizations": F.coalesce(
+                F.array_intersect(
+                    F.array(*[F.lit(p.upper()) for p in POL_FLAGS]),
+                    m["polarizations"],
+                ),
+                F.array().cast("array<string>"),
+            ),
+        }),
+        ("t_safe", safe_fields(F.col("t_safe"))),
+        ("t_dimap", dimap_fields(F.col("t_dimap"))),
+        ("t_tdm", tdm_fields(F.col("t_tdm"), F.col("t_tsx"))),
+        ("t_tsx", tsx_fields(F.col("t_tsx"))),
+        ("t_psr", psr_fields(F.col("t_psr"), F.col("t_facter"))),
     ]
-    for name, fn, text in dialects:
-        cur = _packed(cur, fn, name, F.col(text).isNotNull())
-
-    out = bind(
-        cur,
-        "_m",
-        F.coalesce(
-            "_p_json", "_p_safe", "_p_dimap", "_p_tdm", "_p_tsx", "_p_psr"
-        ),
-    )
+    # one CORE struct per dialect: NULL unless its span is present and
+    # it produced a sensor
+    packed = [
+        F.when(
+            F.col(text).isNotNull() & f["sensor"].isNotNull(),
+            F.struct(
+                *[
+                    f.get(c, F.lit(None)).cast(_CORE_TYPES.get(c, "string")).alias(c)
+                    for c in CORE_COLUMNS[1:]
+                ]
+            ),
+        )
+        for text, f in dialects
+    ]
+    out = bind(cur, "_m", F.coalesce(*packed))
     return out.where(F.col("_m").isNotNull()).select("doc_id", "_m.*")

@@ -57,10 +57,11 @@ def tie_points_from_records(recs: DataFrame) -> DataFrame:
     map-side. Complements :func:`geolocation_grid`, which interpolates
     a synthetic lattice when no binary payload exists."""
     from pyrosar_spark.operators.binparse import geo_ads_udf
+    from pyrosar_spark.operators.dedup import bind
 
-    parsed = recs.select(
-        F.col("doc_id"), F.explode(F.array(geo_ads_udf()(F.col("rec")))).alias("g")
-    ).where(F.col("g").isNotNull() & F.col("g.swath").isNotNull())
+    parsed = bind(recs, "g", geo_ads_udf()(F.col("rec"))).where(
+        F.col("g").isNotNull() & F.col("g.swath").isNotNull()
+    )
     return parsed.select(
         "doc_id",
         F.col("g.line_num").alias("line_num"),

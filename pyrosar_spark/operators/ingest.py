@@ -89,7 +89,6 @@ def span_text(spans: Column, kind: str) -> Column:
     """Text of the first span of ``kind`` (NULL if none, or if
     ``spans`` is empty or NULL): the one span lookup of every metadata
     parse (:func:`docs_to_scenes`,
-    :func:`~pyrosar_spark.operators.xmlmeta.xml_docs_to_scenes`,
     :func:`~pyrosar_spark.operators.formats.identify_spans`).
 
     ``try_element_at`` evaluates the interpreted filter lambda once per
@@ -101,14 +100,29 @@ def span_text(spans: Column, kind: str) -> Column:
 
 def footprint_bbox(coords: Column) -> dict[str, Column]:
     """``xmin``/``xmax``/``ymin``/``ymax`` (unaliased) of an
-    ``array<array<double>>`` of (lon, lat) points: the one
-    coordinates → bbox tail of the JSON, SAFE, DIMAP, TSX and TDM
-    parses."""
+    ``array<array<double>>`` of (lon, lat) points. NULL coordinates are
+    skipped, like ``least``/``greatest`` skip them."""
     lons = F.transform(coords, lambda c: F.element_at(c, 1))
     lats = F.transform(coords, lambda c: F.element_at(c, 2))
     return {
         "xmin": F.array_min(lons), "xmax": F.array_max(lons),
         "ymin": F.array_min(lats), "ymax": F.array_max(lats),
+    }
+
+
+def scene_fields(fields: dict[str, Column], coords: Column) -> dict[str, Column]:
+    """A metadata dialect's fields (its ``scanMetadata`` dict, unaliased,
+    in output order) plus the tail every dialect shares, as the
+    reference's ``ID`` base class derives it (``drivers.py:247-285,
+    584-608``): ``coordinates``, their bbox and ``outname_base``."""
+    return {
+        **fields,
+        "coordinates": coords,
+        **footprint_bbox(coords),
+        "outname_base": outname_base_col(
+            fields["sensor"], fields["acquisition_mode"], fields["orbit"],
+            fields["start"],
+        ),
     }
 
 
@@ -141,6 +155,16 @@ _COLUMN_FIELDS: dict[str, tuple[str, ...]] = {
     "corners": ("coordinates",), "xmin": ("coordinates",), "xmax": ("coordinates",),
     "ymin": ("coordinates",), "ymax": ("coordinates",), "ring": ("coordinates",),
 }
+
+
+def json_fields(m: Column) -> dict[str, Column]:
+    """The JSON dialect's fields (unaliased) from the parsed
+    ``scene_meta`` struct ``m``: every catalog column that is one JSON
+    field as it parses, plus the shared :func:`scene_fields` tail over
+    ``coordinates``. A field outside ``m``'s pruned schema fails only
+    if it is selected."""
+    scalars = {c: m[c] for c, f in _COLUMN_FIELDS.items() if f == (c,)}
+    return scene_fields(scalars, m["coordinates"])
 
 
 def docs_to_scenes(
@@ -217,29 +241,17 @@ def docs_to_scenes(
         )
         .where(F.col("m").isNotNull() & F.col("m.sensor").isNotNull())
     )
-    field = lambda n: F.col(f"m.{n}")  # noqa: E731
-    exprs: dict[str, Column] = {"doc_id": F.col("doc_id")}
-    for name in ("sensor", "orbit", "orbitNumber_abs", "orbitNumber_rel",
-                 "cycleNumber", "frameNumber", "acquisition_mode", "start",
-                 "stop", "product", "samples", "lines", "scene"):
-        exprs[name] = field(name).alias(name)
-    exprs["outname_base"] = outname_base_col(
-        field("sensor"), field("acquisition_mode"), field("orbit"),
-        field("start"),
-    ).alias("outname_base")
+    m = F.col("m")
+    exprs: dict[str, Column] = {"doc_id": F.col("doc_id"), **json_fields(m)}
     for p in POL_FLAGS:
-        exprs[p] = (
-            F.array_contains(field("polarizations"), p.upper()).cast("int").alias(p)
-        )
+        exprs[p] = F.array_contains(m["polarizations"], p.upper()).cast("int")
     corners = F.transform(
-        field("coordinates"),
+        m["coordinates"],
         lambda c: F.struct(
             F.element_at(c, 1).alias("lon"), F.element_at(c, 2).alias("lat")
         ),
     )
-    exprs["corners"] = corners.alias("corners")
-    for name, c in footprint_bbox(field("coordinates")).items():
-        exprs[name] = c.alias(name)
+    exprs["corners"] = corners
 
     meta_cols = []
     if meta_keys:
@@ -256,7 +268,7 @@ def docs_to_scenes(
         [corners.alias("_corners")] if with_geometry is True and "ring" in want else []
     )
     out = parsed.select(
-        *[exprs[c] for c in want if c != "ring"], *meta_cols, *geom_cols
+        *[exprs[c].alias(c) for c in want if c != "ring"], *meta_cols, *geom_cols
     )
     cols = [c for c in want] + (["meta"] if meta_keys else [])
     if with_geometry == "defer" or "ring" not in want:

@@ -192,10 +192,7 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     ``size(NULL)`` is -1 and would report a nonsense token count.
     """
     # barrier 1: tokenize once
-    bound = df.select(
-        F.col("doc_id"),
-        F.explode(F.array(_norm_tokens(F.col("text")))).alias("_tk"),
-    )
+    bound = bind(df, "_tk", _norm_tokens(F.col("text")))
     toks = F.col("_tk")
     # guard the <2-token case: slice with length 0 errors under ANSI;
     # branch to [] instead (also covers NULL via the outer when)
@@ -208,9 +205,7 @@ def repetition_stats(df: DataFrame) -> DataFrame:
         ),
     ).when(F.size(toks) >= 0, F.array().cast("array<string>"))
     # barrier 2: build grams once (carry _tk through for n_tokens)
-    bound = bound.select(
-        F.col("doc_id"), "_tk", F.explode(F.array(grams_expr)).alias("_gr")
-    )
+    bound = bind(bound, "_gr", grams_expr)
     grams = F.col("_gr")
     n_tok = F.size(toks)
     n_gram = F.size(grams)
@@ -273,10 +268,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     already pays). The final per-doc top-k is a window over (doc),
     partial-ranked inside partitions by AQE.
     """
-    bound = df.select(
-        F.col("doc_id"),
-        F.explode(F.array(_norm_tokens(F.col("text")))).alias("_tk"),
-    )
+    bound = bind(df, "_tk", _norm_tokens(F.col("text")))
     base = bound.select(
         F.col("doc_id"), F.size("_tk").alias("_n"), F.explode("_tk").alias("term")
     )

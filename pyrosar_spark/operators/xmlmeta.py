@@ -23,9 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyrosar_spark.functions.naming import outname_base_col
 from pyrosar_spark.functions.temporal import parse_date_col
-from pyrosar_spark.operators.ingest import footprint_bbox, span_text
+from pyrosar_spark.operators.ingest import scene_fields
 
 
 def _tag_pat(name: str, attr_pred: str = "") -> str:
@@ -99,24 +98,16 @@ def gml_coordinates(xml: Column) -> Column:
     )
 
 
-def parse_safe_manifest(df: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """manifest.safe text column → reference SAFE metadata columns
+def safe_fields(xml: Column) -> dict[str, Column]:
+    """SAFE manifest text → the reference SAFE metadata fields
     (``drivers.py:2205-2294`` field-for-field; timestamps normalized to
     the catalog's ``YYYYmmddTHHMMSS`` stamps, orbit letter derived from
     the pass direction, bbox from the swapped footprint)."""
-    xml = F.col(xml_col)
-    coords = gml_coordinates(xml)
-    start = parse_date_col(xml_tag(xml, "startTime"))
-    sensor = xml_tag(xml, "missionId")
     # SM scenes report the concrete swath (S1..S6) as the acquisition
     # mode (drivers.py:2221-2223); real manifests attribute the orbit
     # numbers with type="start"/"stop" — prefer the start-typed form,
     # fall back to an attribute-free tag (drivers.py:2232-2234)
     raw_mode = xml_tag(xml, "mode")
-    mode = F.when(
-        raw_mode == "SM", F.coalesce(xml_tag(xml, "swath"), raw_mode)
-    ).otherwise(raw_mode)
-    orbit = F.when(xml_tag(xml, "pass") == "ASCENDING", "A").otherwise("D")
     orbit_abs = F.coalesce(
         xml_tag_attr(xml, "orbitNumber", "type", "start"),
         xml_tag(xml, "orbitNumber"),
@@ -125,32 +116,26 @@ def parse_safe_manifest(df: DataFrame, xml_col: str = "xml") -> DataFrame:
         xml_tag_attr(xml, "relativeOrbitNumber", "type", "start"),
         xml_tag(xml, "relativeOrbitNumber"),
     )
-    return df.select(
-        "*",
-        sensor.alias("sensor"),
-        mode.alias("acquisition_mode"),
-        xml_tag(xml, "productType").alias("product"),
-        orbit.alias("orbit"),
-        start.alias("start"),
-        parse_date_col(xml_tag(xml, "stopTime")).alias("stop"),
-        orbit_abs.cast("int").alias("orbitNumber_abs"),
-        orbit_rel.cast("int").alias("orbitNumber_rel"),
-        xml_tag(xml, "cycleNumber").cast("int").alias("cycleNumber"),
-        F.array_sort(xml_tags_all(xml, "transmitterReceiverPolarisation")).alias(
-            "polarizations"
+    fields = {
+        "sensor": xml_tag(xml, "missionId"),
+        "acquisition_mode": F.when(
+            raw_mode == "SM", F.coalesce(xml_tag(xml, "swath"), raw_mode)
+        ).otherwise(raw_mode),
+        "product": xml_tag(xml, "productType"),
+        "orbit": F.when(xml_tag(xml, "pass") == "ASCENDING", "A").otherwise("D"),
+        "start": parse_date_col(xml_tag(xml, "startTime")),
+        "stop": parse_date_col(xml_tag(xml, "stopTime")),
+        "orbitNumber_abs": orbit_abs.cast("int"),
+        "orbitNumber_rel": orbit_rel.cast("int"),
+        "cycleNumber": xml_tag(xml, "cycleNumber").cast("int"),
+        "polarizations": F.array_sort(
+            xml_tags_all(xml, "transmitterReceiverPolarisation")
         ),
-        coords.alias("coordinates"),
-        *[c.alias(n) for n, c in footprint_bbox(coords).items()],
-        outname_base_col(sensor, mode, orbit, start).alias("outname_base"),
-    )
+    }
+    return scene_fields(fields, gml_coordinates(xml))
 
 
-def xml_docs_to_scenes(docs: DataFrame) -> DataFrame:
-    """Documents whose spans carry ``scene_meta_xml`` manifests → the
-    SAFE metadata frame (XML analog of ``docs_to_scenes``)."""
-    xml = span_text(F.col("spans"), "scene_meta_xml")
-    lifted = (
-        docs.select("doc_id", F.explode(F.array(xml)).alias("_xml"))
-        .where(F.col("_xml").isNotNull())
-    )
-    return parse_safe_manifest(lifted, "_xml").drop("_xml")
+def parse_safe_manifest(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+    """``df`` plus the :func:`safe_fields` of its manifest.safe text."""
+    fields = safe_fields(F.col(xml_col))
+    return df.select("*", *[c.alias(n) for n, c in fields.items()])

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.asof import osv_match, overlap_filter, res_prune, salted_interval_join
 from pyrosar_spark.operators.session_group import groupby_time_collect, groupby_attribute
+from tests.testlib import plan_text
 
 OSV_ROWS = [
     # sensor, type, publish, start, stop, filename
@@ -195,5 +196,5 @@ def test_salted_interval_join_plan_is_equi_join(spark):
     df = salted_interval_join(
         events, ivals, "t", slot_seconds=3600, ts_fmt=None, n_salt=4, salt_col="eid"
     )
-    p = df._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(df)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p

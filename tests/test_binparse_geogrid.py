@@ -9,6 +9,7 @@ from pyrosar_spark.operators.binparse import (
     extract_fields,
 )
 from pyrosar_spark.operators.geogrid import geolocation_grid, incidence_stats
+from tests.testlib import plan_text
 
 
 def _record() -> bytes:
@@ -37,7 +38,7 @@ def test_extract_be_int(spark):
     )
     specs = [FieldSpec("rec_len", 0, 4, "be_int"), FieldSpec("w", 1, 2, "be_int")]
     out = extract_fields(df, "rec", specs)
-    assert "Python" not in out._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan_text(out)
     rows = {r.i: (r.rec_len, r.w) for r in out.collect()}
     assert rows == {0: (77, 0), 1: (None, 258), 2: (None, None)}
     with pytest.raises(ValueError, match="unknown kind"):

@@ -4,6 +4,7 @@
 from pyspark.sql import functions as F
 
 from pyrosar_spark.operators import catalog_ops as ops
+from tests.testlib import plan_text
 
 
 def test_select_duplicates(spark):
@@ -102,7 +103,7 @@ def test_stored_catalog_pruning(spark, scenes, tmp_path):
     write_scenes(scenes, path)
     cat = read_scenes(spark, path)
     q = select(cat, sensor="S1A", mindate="20150601T000000", maxdate="20150701T000000")
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(q)
     assert "PushedFilters: [" in plan and "IsNotNull(sensor)" in plan
     # partition pruning on start_day derived from the start predicate is
     # not automatic (start_day is a physical column) — documents current

@@ -20,6 +20,7 @@ from pyrosar_spark.operators.corpus import (
     token_commonness,
 )
 from pyrosar_spark.operators.sampling import sample_stratified
+from tests.testlib import plan_text
 
 
 def _docs(spark, rows):
@@ -89,7 +90,7 @@ def test_token_commonness_validation_and_broadcast_plan(spark):
     d = _docs(spark, [(1, "a b", "s")])
     with pytest.raises(ValueError, match="rare_max_count"):
         token_commonness(d, rare_max_count=0)
-    plan = token_commonness(d)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(token_commonness(d))
     assert "BroadcastHashJoin" in plan
 
 
@@ -121,7 +122,7 @@ def test_stratified_sample_scalar_fraction_and_column_order(spark):
     with pytest.raises(ValueError, match="fraction"):
         sample_stratified(d, 1.5)
     # zero-shuffle promise: scalar-fraction path has no Exchange at all
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(out)
     assert "Exchange" not in plan
 
 
@@ -263,7 +264,7 @@ def test_strip_boilerplate_exchange_budget(spark):
     input runs with no Exchange, tests/test_width.py)."""
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     q = strip_boilerplate_chunks(d.localCheckpoint(), chunk_tokens=4, min_docs=2)
-    p = q._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(q)
     assert p.count("Exchange hashpartitioning") == 3, p
     assert p.count("Exchange rangepartitioning") <= 1
     assert "BroadcastExchange" in p

@@ -266,6 +266,17 @@ def test_parse_psr_text(spark):
     # psr2 reference corner golden (tests/test_drivers.py:43)
     assert r["xmin"] == -62.9005207 and r["xmax"] == -62.1629744
     assert r["ymin"] == -11.4233051 and r["ymax"] == -10.6783401
+    # a blank corner line: the bbox skips that coordinate, as the
+    # least/greatest over the three remaining corners did
+    blank = spark.createDataFrame(
+        [("d", PSR_HDR.replace("-11.4233051", ""), PSR_FACTER)],
+        "doc_id string, hdr string, facter string",
+    )
+    b = parse_psr_text(blank, "hdr", "facter").collect()[0]
+    assert b["coordinates"][3] == [-62.6585706, None]
+    lats = [-10.6783401, -10.8278276, -11.2738201]
+    assert (b["ymin"], b["ymax"]) == (min(lats), max(lats))
+    assert (b["xmin"], b["xmax"]) == (-62.9005207, -62.1629744)
 
 
 def test_identify_spans_mixed_corpus(spark):
@@ -316,6 +327,11 @@ PSR_COORDS = [[-62.1629744, -10.6783401], [-62.9005207, -10.8278276],
 
 # one row per document with a recognized dialect, in CORE_COLUMNS order
 IDENTIFY_ROWS = sorted([
+    ("safe_doc", "S1A", "IW", "GRD", "A", "20150222T170750",
+     "20150222T170815", 4739, 117, 43, None, None, None, ["VH", "VV"],
+     [[12.0268, 50.688881], [11.653832, 52.183979], [8.017178, 51.788181],
+      [8.505644, 50.295261]],
+     8.017178, 12.0268, 50.295261, 52.183979, "S1A__IW___A_20150222T170750"),
     ("dimap_doc", "S1A", "IW", "GRD", "A", "20150222T170750",
      "20150222T170815", 4739, 117, 43, 24003, 25368, 16685, ["VH", "VV"],
      [[8.505644, 50.295261], [8.017178, 51.788181], [11.653832, 52.183979],
@@ -346,12 +362,15 @@ def test_identify_spans_expected_rows(spark):
     implements the reference cascade's FIRST-match-wins on a
     multi-dialect document."""
     from pyrosar_spark.datagen import golden_documents
+    from test_media_xml import GOLDEN_MANIFEST
+
     from pyrosar_spark.operators.formats import CORE_COLUMNS, identify_spans
 
     def doc(doc_id, spans):
         return (doc_id, [(k, t, "", i) for i, (k, t) in enumerate(spans)])
 
     rows = [
+        doc("safe_doc", [("scene_meta_xml", GOLDEN_MANIFEST)]),
         doc("dimap_doc", [("scene_meta_dimap", DIMAP_S1)]),
         doc("tsx_doc", [("scene_meta_tsx", TSX_XML)]),
         doc("tdm_doc", [("scene_meta_tdm", TDM_XML), ("scene_meta_tsx", TSX_XML)]),

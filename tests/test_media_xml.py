@@ -5,8 +5,8 @@ import struct
 
 from pyspark.sql import functions as F
 
+from pyrosar_spark.operators.formats import identify_spans
 from pyrosar_spark.operators.media import decode_metadata
-from pyrosar_spark.operators.xmlmeta import xml_docs_to_scenes
 from tests.testlib import bmp_decoder
 
 
@@ -64,13 +64,16 @@ GOLDEN_MANIFEST = """<?xml version="1.0" encoding="UTF-8"?>
 
 def test_safe_manifest_parse_golden(spark):
     """Field-for-field parity with the reference SAFE scan on the
-    golden_s1 scene (FIXTURES.md §2): lat,lon swap, pass → orbit
-    letter, stamp normalization, outname_base."""
-    docs = spark.createDataFrame(
-        [("golden_s1", [("scene_meta_xml", GOLDEN_MANIFEST, "", 0)])],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    golden_s1 scene (FIXTURES.md §2) through the identify funnel: lat,lon
+    swap, pass → orbit letter, stamp normalization, outname_base."""
+    schema = (
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
     )
-    row = xml_docs_to_scenes(docs).first()
+    docs = spark.createDataFrame(
+        [("golden_s1", [("scene_meta_xml", GOLDEN_MANIFEST, "", 0)])], schema
+    )
+    row = identify_spans(docs).first()
     assert row.sensor == "S1A"
     assert row.acquisition_mode == "IW"
     assert row.product == "GRD"
@@ -86,12 +89,10 @@ def test_safe_manifest_parse_golden(spark):
     assert abs(row.xmin - 8.017178) < 1e-12
     assert abs(row.ymax - 52.183979) < 1e-12
     assert row.outname_base == "S1A__IW___A_20150222T170750"
-    # a document with no XML span is dropped, like identify_many failures
-    no_xml = spark.createDataFrame(
-        [("d2", [("text", "filler", "", 0)])],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-    assert xml_docs_to_scenes(no_xml).count() == 0
+    # a document with no metadata span is dropped, like identify_many
+    # failures
+    no_xml = spark.createDataFrame([("d2", [("text", "filler", "", 0)])], schema)
+    assert identify_spans(no_xml).count() == 0
     # the first span of the kind wins; a document with no spans at all
     # is dropped
     second = GOLDEN_MANIFEST.replace("S1A", "S1B")
@@ -101,9 +102,9 @@ def test_safe_manifest_parse_golden(spark):
                      ("scene_meta_xml", second, "", 1)]),
             ("empty", []),
         ],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+        schema,
     )
-    assert [(r.doc_id, r.sensor) for r in xml_docs_to_scenes(edge).collect()] == [
+    assert [(r.doc_id, r.sensor) for r in identify_spans(edge).collect()] == [
         ("two", "S1A")
     ]
 

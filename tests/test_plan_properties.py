@@ -12,9 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-
-def plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.testlib import plan_text
 
 
 def span_filters(df) -> dict[str, int]:
@@ -22,8 +20,7 @@ def span_filters(df) -> dict[str, int]:
     plan, printed with no field list truncated."""
     import re
 
-    p = df._jdf.queryExecution().executedPlan().treeString(False, False, 1 << 20, False, False)
-    kinds = re.findall(r"lambdafunction\(\(lambda \w+#\d+\.kind = (\w+)\)", p)
+    kinds = re.findall(r"lambdafunction\(\(lambda \w+#\d+\.kind = (\w+)\)", plan_text(df))
     return {k: kinds.count(k) for k in set(kinds)}
 
 
@@ -53,7 +50,7 @@ def test_select_predicates_reach_the_scan(spark, catalog_parquet):
         polarizations=["VV"],
         return_value=["doc_id", "start"],
     )
-    p = plan(out)
+    p = plan_text(out)
     assert "PushedFilters:" in p
     pushed = p.split("PushedFilters:")[1].split("]")[0]
     for field in ("sensor", "start", "stop", "vv"):
@@ -75,7 +72,7 @@ def test_docs_scan_prunes_to_spans(spark, tmp_path):
     docs = spark.read.parquet(path)
     out = docs_to_scenes(docs, with_geometry="defer",
                          columns=["doc_id", "start", "stop"])
-    p = plan(out)
+    p = plan_text(out)
     read_schema = p.split("ReadSchema:")[1].splitlines()[0]
     assert "spans" in read_schema and "doc_id" in read_schema
     assert "payload" not in read_schema
@@ -107,9 +104,9 @@ def test_no_cartesian_products_in_hot_paths(spark, catalog_parquet):
         ),
     }
     for name, df in hot.items():
-        assert "CartesianProduct" not in plan(df), name
+        assert "CartesianProduct" not in plan_text(df), name
     topk = cosine_topk(emb, emb.limit(2), k=3, vec_col="embedding")
-    p = plan(topk)
+    p = plan_text(topk)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p  # the intended broadcast shape
 
@@ -118,18 +115,16 @@ def test_parse_is_bound_once_per_row(spark):
     """Exactly ONE from_json in the flagship parse plan (the Generate
     barrier pins it): CollapseProject inlining the Jackson parse into
     every downstream reference was the round-1 anti-scaling bug. The
-    span lookup's filter lambda runs once per row too, in the JSON and
-    the SAFE-XML parse (a size guard in front of it made two)."""
+    span lookup's filter lambda runs once per row too (a size guard in
+    front of it made two)."""
     from pyrosar_spark.datagen import generate_documents
     from pyrosar_spark.operators.ingest import docs_to_scenes
-    from pyrosar_spark.operators.xmlmeta import xml_docs_to_scenes
 
     docs = generate_documents(spark, 500, seed=5)
     scenes = docs_to_scenes(docs, with_geometry=False)
-    p = plan(scenes)
+    p = plan_text(scenes)
     assert p.count("from_json") == 1, p.count("from_json")
     assert span_filters(scenes) == {"scene_meta": 1}
-    assert span_filters(xml_docs_to_scenes(docs)) == {"scene_meta_xml": 1}
 
 
 def test_identify_spans_single_scan(spark, tmp_path):
@@ -143,7 +138,7 @@ def test_identify_spans_single_scan(spark, tmp_path):
     path = str(tmp_path / "docs.parquet")
     generate_documents(spark, 500, seed=6).write.parquet(path)
     out = identify_spans(spark.read.parquet(path))
-    assert plan(out).count("FileScan") == 1
+    assert plan_text(out).count("FileScan") == 1
     kinds = ["scene_meta", "scene_meta_xml", "scene_meta_dimap", "scene_meta_tsx",
              "scene_meta_tdm", "scene_meta_psr", "scene_meta_psr_facter"]
     assert span_filters(out) == dict.fromkeys(kinds, 1)
@@ -157,7 +152,7 @@ def test_symmetric_edges_single_scan(spark, tmp_path):
 
     path = str(tmp_path / "pairs.parquet")
     spark.createDataFrame([(1, 2), (2, 3)], "a long, b long").write.parquet(path)
-    p = plan(_symmetric_edges(spark.read.parquet(path)))
+    p = plan_text(_symmetric_edges(spark.read.parquet(path)))
     assert p.count("FileScan") == 1, p
 
 
@@ -210,7 +205,7 @@ def test_contamination_broadcasts_eval_and_never_shuffles_corpus(spark):
     ev = spark.createDataFrame(
         [(1, "a b c d e f g h i j k l m")], "eval_id long, text string"
     )
-    p = plan(contamination(docs, ev, n=13))
+    p = plan_text(contamination(docs, ev, n=13))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
     n_ex = p.count("Exchange hashpartitioning")
@@ -229,7 +224,7 @@ def test_pack_documents_single_shuffle_on_key_and_shard(spark):
         [(i, f"src{i % 3}", "a b c") for i in range(100)],
         "doc_id long, source string, text string",
     )
-    p = plan(pack_documents(df, budget=5))
+    p = plan_text(pack_documents(df, budget=5))
     n_ex = p.count("Exchange hashpartitioning")
     assert n_ex == 1, f"expected exactly 1 shuffle, got {n_ex}"
     wspec = next(ln for ln in p.splitlines() if "windowspecdefinition" in ln)
@@ -247,7 +242,7 @@ def test_dedup_clusters_round_plan_shape(spark):
         [(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long"
     )
     labels = edges.selectExpr("src as v", "src as cluster_id").distinct()
-    p = plan(_cc_round(edges, labels.localCheckpoint(), False))
+    p = plan_text(_cc_round(edges, labels.localCheckpoint(), False))
     assert "CartesianProduct" not in p
     n_ex = p.count("Exchange hashpartitioning")
     assert n_ex == 3, f"expected 3 hash exchanges per round, got {n_ex}:\n{p}"
@@ -274,7 +269,7 @@ def test_dedup_clusters_round_plan_shape_on_one_partition(spark):
         True,
     )
     assert _one_partition(edges) and _one_partition(labels)
-    p = plan(_cc_round(edges, labels, True))
+    p = plan_text(_cc_round(edges, labels, True))
     assert "Exchange" not in p, p
     assert "CartesianProduct" not in p
     n_joins = sum(p.count(j) for j in
@@ -295,13 +290,13 @@ def test_python_stages_are_arrow(spark):
 
     scenes = docs_to_scenes(generate_documents(spark, 500, seed=7))
     sel = select(scenes, aoi_wkt="POLYGON((0 0, 20 0, 20 20, 0 20, 0 0))")
-    p = plan(sel)
+    p = plan_text(sel)
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p  # convex AOI: pure JVM refine
     concave = select(
         scenes, aoi_wkt="POLYGON((0 0, 20 0, 20 20, 10 4, 0 20, 0 0))"
     )
-    p2 = plan(concave)
+    p2 = plan_text(concave)
     assert "BatchEvalPython" not in p2
     assert "ArrowEvalPython" in p2  # the Arrow fallback refine
 
@@ -313,7 +308,7 @@ def test_span_roundtrip_plan_shape(spark):
     from pyrosar_spark.datagen import generate_documents
     from pyrosar_spark.operators.spans import roundtrip_digest
 
-    p = plan(roundtrip_digest(generate_documents(spark, 200, seed=5)))
+    p = plan_text(roundtrip_digest(generate_documents(spark, 200, seed=5)))
     n_ex = p.count("Exchange")
     assert n_ex == 2, f"expected 2 exchanges (scatter + regroup), got {n_ex}:\n{p}"
     assert "EvalPython" not in p and "InPandas" not in p
@@ -335,7 +330,7 @@ def test_dimap_incidence_decode_gated_by_semijoin(spark):
         [(1, "h", bytearray(b"")), (2, "h", bytearray(b""))],
         "doc_id long, hdr string, payload binary",
     )
-    p = plan(fill_incidence_from_rasters(parsed, rasters))
+    p = plan_text(fill_incidence_from_rasters(parsed, rasters))
     assert "MapInPandas" in p, p
     assert "LeftSemi" in p, p
     assert "BatchEvalPython" not in p
@@ -370,7 +365,7 @@ def test_media_pipeline_stages_are_narrow_arrow(spark, tmp_path):
         sample_frames(media, stride=5),
         resize_media(media, max_side=64),
     ):
-        p = plan(stage)
+        p = plan_text(stage)
         assert "Exchange" not in p, f"media stage shuffles payload bytes:\n{p}"
         assert "MapInPandas" in p and "BatchEvalPython" not in p
         assert "junk" not in p.split("ReadSchema:")[-1]

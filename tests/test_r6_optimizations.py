@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from pyrosar_spark.session import get_spark
+from tests.testlib import plan_text
 
 
 @pytest.fixture(scope="module")
@@ -104,9 +105,6 @@ def test_candidate_pairs_skips_dead_hot_guard(spark):
     )
     from pyrosar_spark.operators.similarity import cosine_dup_pairs
 
-    def executed(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
     df = spark.createDataFrame(
         [(i, f"some shared text plus token{i}") for i in range(8)],
         "doc_id long, text string",
@@ -132,7 +130,7 @@ def test_candidate_pairs_skips_dead_hot_guard(spark):
             # read before the next build: cross_near_dup_pairs releases
             # the shingle cache of the call before it
             q = build(cap)
-            assert ("LeftAnti" in executed(q)) == (cap == 1000), cap
+            assert ("LeftAnti" in plan_text(q)) == (cap == 1000), cap
             got[cap] = sorted(map(tuple, q.collect()))
         assert got[unbounded] and got[unbounded] == got[1000]
     release_shingle_cache()

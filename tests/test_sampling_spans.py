@@ -16,10 +16,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.dedup import dup_ngram_spans
 from pyrosar_spark.operators.sampling import quality_filter, sample_token_budget
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.testlib import plan_text
 
 
 @pytest.fixture(scope="module")
@@ -114,7 +111,7 @@ def test_dup_ngram_spans_min_docs_three(spark):
 
 def test_dup_ngram_spans_no_cartesian(spark):
     texts = {1: "a b c d", 2: "a b c e"}
-    p = _plan(dup_ngram_spans(_spans_df(spark, texts), n=3))
+    p = plan_text(dup_ngram_spans(_spans_df(spark, texts), n=3))
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
 
@@ -251,7 +248,7 @@ def test_sample_token_budget_int_budget_and_plan(spark, doctable):
     assert len(srcs) == 20  # a scalar budget applies to every group
     for r in rows:
         assert r["cum_tokens"] - r["tokens"] < 200
-    p = _plan(sample_token_budget(doctable, {"src0": 100}))
+    p = plan_text(sample_token_budget(doctable, {"src0": 100}))
     assert "BroadcastHashJoin" in p, "dict budgets must join as a broadcast dim"
     assert "CartesianProduct" not in p
 
@@ -266,7 +263,7 @@ def test_dup_ngram_spans_exchange_budget(spark, doctable):
     exchange for the final ordering: 3 + ≤1. More would mean a
     distinct/count phase stopped being partial-aggregatable."""
     q = dup_ngram_spans(doctable, n=6, min_docs=2)
-    p = _plan(q)
+    p = plan_text(q)
     assert p.count("Exchange hashpartitioning") == 3, p
     assert p.count("Exchange rangepartitioning") <= 1
     # and the viral-gram guard: no collect_list/collect_set anywhere
@@ -326,7 +323,7 @@ def test_cross_near_dup_corpus_side_broadcast_only(spark, doctable):
 
     refs = doctable.limit(3)
     q = cross_near_dup_pairs(doctable, refs, threshold=0.1)
-    p = _plan(q)
+    p = plan_text(q)
     assert "SortMergeJoin" not in p
     assert p.count("BroadcastHashJoin") >= 2
 

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.select import select
 from tests.test_geom import S1_GOLDEN_WKT
-from tests.testlib import wkb_to_ring
+from tests.testlib import plan_text, wkb_to_ring
 
 S1_BBOX_WKT = "POLYGON((8.017178 50.295261, 12.0268 50.295261, 12.0268 52.183979, 8.017178 52.183979, 8.017178 50.295261))"
 DISJOINT_WKT = "POLYGON((12.5 53, 13 53, 13 54, 12.5 54, 12.5 53))"
@@ -160,7 +160,7 @@ def test_filter_pushdown_reaches_parquet_scan(spark, tmp_path, scenes):
             aoi_wkt="POLYGON((0 40, 20 40, 20 60, 0 60, 0 40))",
             return_value=["doc_id", "xmin", "xmax", "ymin", "ymax"],
         )
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = plan_text(out)
     finally:
         spark.conf.unset("spark.sql.maxMetadataStringLength")
     assert "PushedFilters:" in plan

@@ -14,6 +14,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tests.testlib import plan_text
+
 
 # ---------------------------------------------------------------------------
 # spans
@@ -113,7 +115,7 @@ def test_repetition_no_shuffle(textdf):
     """Per-doc stats must not shuffle: no Exchange in the plan."""
     from pyrosar_spark.operators.textstats import repetition_stats
 
-    plan = repetition_stats(textdf)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(repetition_stats(textdf))
     assert "Exchange" not in plan, plan
 
 
@@ -150,7 +152,7 @@ def test_tfidf_broadcast_plan(spark):
         F.col("id").alias("doc_id"),
         F.concat(F.lit("tok"), (F.col("id") % 7).cast("string"), F.lit(" common")).alias("text"),
     )
-    plan = tfidf_top_terms(df)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(tfidf_top_terms(df))
     assert "BroadcastHashJoin" in plan, plan
 
 

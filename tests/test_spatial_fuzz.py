@@ -27,7 +27,7 @@ import pytest
 from pyrosar_spark import geom
 from pyrosar_spark.operators.select import select
 from pyrosar_spark.operators.spatial import aoi_frame, spatial_join
-from tests.testlib import bbox_ring
+from tests.testlib import bbox_ring, plan_text
 
 # ---------------------------------------------------------------- oracle
 
@@ -269,17 +269,11 @@ def test_jvm_convex_refine_is_python_free(spark, fuzz_world):
     hull UDF too."""
     scenes, cases, sdf, expected = fuzz_world
     wkt = geom.ring_to_wkt(bbox_ring(-20.0, -20.0, 20.0, 20.0))
-    p = (
-        select(sdf, aoi_wkt=wkt, return_value=["doc_id"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    p = plan_text(select(sdf, aoi_wkt=wkt, return_value=["doc_id"]))
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
     # concave AOI falls back to the Arrow kernel
     concave = "POLYGON((0 0, 10 0, 10 10, 5 2, 0 10, 0 0))"
-    p2 = (
-        select(sdf, aoi_wkt=concave, return_value=["doc_id"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    p2 = plan_text(select(sdf, aoi_wkt=concave, return_value=["doc_id"]))
     assert "ArrowEvalPython" in p2
 
 

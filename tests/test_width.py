@@ -29,6 +29,7 @@ from pyrosar_spark.operators.dedup import (
     near_dup_pairs,
     simhash_pairs,
 )
+from tests.testlib import plan_text
 
 
 def _write_corpus(path: str, n_docs: int = 1000) -> str:
@@ -121,7 +122,7 @@ def test_text_operators_keep_hash_exchanges_on_a_wide_input(spark, tmp_path):
         "token_commonness": 2,
     }
     for name, n in hash_exchanges.items():
-        p = ops[name]()._jdf.queryExecution().executedPlan().toString()
+        p = plan_text(ops[name]())
         assert p.count("Exchange hashpartitioning") == n, f"{name}:\n{p}"
     for name, build in ops.items():
         plans = _sql_plans(spark, lambda: build().collect())
@@ -145,7 +146,7 @@ def test_spread_keeps_a_one_task_input_one_partition(spark, tmp_path):
         assert plan.nodeName() == "Repartition" and plan.numPartitions() == 1
         assert not plan.shuffle() and _repartition_width(spread) is None
         assert _one_partition(spread)
-        p = spread._jdf.queryExecution().executedPlan().toString()
+        p = plan_text(spread)
         assert "Exchange" not in p and "RoundRobin" not in p, p
 
 
@@ -204,5 +205,5 @@ def test_border_noise_spreads_a_single_file_chip_table_to_cores(spark, tmp_path)
     chips = spark.read.parquet(path)
     assert _input_width(chips) == 1
     dp = spark.sparkContext.defaultParallelism
-    p = remove_border_noise(chips)._jdf.queryExecution().executedPlan().toString()
+    p = plan_text(remove_border_noise(chips))
     assert f"RoundRobinPartitioning({dp})" in p, p

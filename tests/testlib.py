@@ -11,7 +11,8 @@ against.
  - :func:`bmp_decoder` and :func:`bmp_resizer` are real 24-bpp BMP
    codecs that tests plug into ``media.decode_metadata(decoder=)`` and
    ``media.resize_media(resizer=)``;
- - :func:`count_jobs` counts the Spark jobs an action runs.
+ - :func:`count_jobs` counts the Spark jobs an action runs;
+ - :func:`plan_text` prints an executed plan with no field list cut.
 
 Spark ships the codecs to its Python workers, which cannot import this
 module, so it registers itself to be pickled by value.
@@ -165,3 +166,12 @@ def count_jobs(spark, action, parquet: bool = True) -> int:
         )
 
     return sum(parquet or not parquet_only(j) for j in tracker.getJobIdsForGroup(group))
+
+
+def plan_text(df) -> str:
+    """The executed plan of ``df`` with no field list truncated:
+    ``toString()`` cuts each list at ``spark.sql.debug.maxToStringFields``
+    (``... N more fields``), so a count over it can miss expressions."""
+    return df._jdf.queryExecution().executedPlan().treeString(
+        False, False, 1 << 20, False, False
+    )
