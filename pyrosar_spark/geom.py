@@ -2,12 +2,13 @@
 
 These back the vectorized pandas/Arrow UDFs: convex-hull footprint
 construction (reference: ``pyroSAR/drivers.py:287-342`` — multipoint →
-convex hull → counter-clockwise exterior ring), WKB/WKT encoding
-(``pyroSAR/archive.py:469-475`` stores ``SRID=4326;`` + WKT), and
-polygon-intersection tests standing in for SpatiaLite's
-``st_intersects`` (``pyroSAR/archive.py:1070``).
+convex hull → counter-clockwise exterior ring) and WKB/WKT encoding
+(``pyroSAR/archive.py:469-475`` stores ``SRID=4326;`` + WKT). The
+polygon-intersection test standing in for SpatiaLite's
+``st_intersects`` (``pyroSAR/archive.py:1070``) is not here: it runs
+JVM-side, in :mod:`pyrosar_spark.operators.spatial`.
 
-All batch entry points are vectorized over many polygons at once so a
+The batch entry point is vectorized over many polygons at once so a
 single Arrow batch (tens of thousands of footprints) is processed with
 a handful of numpy ops — no per-row Python in the hot path.
 """
@@ -97,132 +98,18 @@ def ring_to_wkt(ring: np.ndarray) -> str:
 
 
 def wkt_to_ring(wkt: str) -> np.ndarray:
+    """The one ring of a single-feature WKT polygon. The reference takes
+    exactly one feature (``archive.py:1060-1061``), so MULTI* and
+    GEOMETRYCOLLECTION raise its more-than-one-feature error. A polygon
+    with an interior ring is one feature there, but a ring has no
+    holes, so it raises rather than lose the hole."""
+    if wkt.lstrip().upper().startswith(("MULTI", "GEOMETRYCOLLECTION")):
+        raise RuntimeError("'vectorobject' contains more than one feature.")
+    if "),(" in "".join(wkt.split()):
+        raise RuntimeError("AOI polygons with interior rings are not supported")
     inner = wkt[wkt.index("((") + 2 : wkt.rindex("))")]
     pts = [tuple(map(float, p.split())) for p in inner.split(",")]
     return np.asarray(pts, dtype=np.float64)
-
-
-# --------------------------------------------------------------------------
-# point-in-polygon / polygon-polygon intersect, batched
-# --------------------------------------------------------------------------
-
-
-def points_in_ring(pts: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Crossing-number containment of many points vs one ring.
-
-    Boundary points may report either side; callers that need OGC
-    "intersects" semantics combine this with the edge test below.
-    """
-    pts = np.asarray(pts, dtype=np.float64).reshape(-1, 2)
-    vx, vy = ring[:-1, 0], ring[:-1, 1]
-    wx, wy = ring[1:, 0], ring[1:, 1]
-    px = pts[:, 0][:, None]
-    py = pts[:, 1][:, None]
-    cond = (vy[None, :] > py) != (wy[None, :] > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = vx[None, :] + (py - vy[None, :]) / (wy[None, :] - vy[None, :]) * (
-            wx[None, :] - vx[None, :]
-        )
-    crossing = cond & (px < xint)
-    return (crossing.sum(axis=1) % 2).astype(bool)
-
-
-def _orient(ax, ay, bx, by, cx, cy):
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-def _on_segment(ax, ay, bx, by, px, py):
-    return (
-        (np.minimum(ax, bx) <= px)
-        & (px <= np.maximum(ax, bx))
-        & (np.minimum(ay, by) <= py)
-        & (py <= np.maximum(ay, by))
-    )
-
-
-def segments_intersect_batch(seg_a: np.ndarray, seg_b: np.ndarray) -> np.ndarray:
-    """(N,2,2) × (M,2,2) → bool (N,M); includes touching/collinear overlap."""
-    a1 = seg_a[:, 0, :][:, None, :]
-    a2 = seg_a[:, 1, :][:, None, :]
-    b1 = seg_b[None, :, 0, :]
-    b2 = seg_b[None, :, 1, :]
-    d1 = _orient(b1[..., 0], b1[..., 1], b2[..., 0], b2[..., 1], a1[..., 0], a1[..., 1])
-    d2 = _orient(b1[..., 0], b1[..., 1], b2[..., 0], b2[..., 1], a2[..., 0], a2[..., 1])
-    d3 = _orient(a1[..., 0], a1[..., 1], a2[..., 0], a2[..., 1], b1[..., 0], b1[..., 1])
-    d4 = _orient(a1[..., 0], a1[..., 1], a2[..., 0], a2[..., 1], b2[..., 0], b2[..., 1])
-    proper = (
-        (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0)))
-        & (((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0)))
-    )
-    touch = (
-        ((d1 == 0) & _on_segment(b1[..., 0], b1[..., 1], b2[..., 0], b2[..., 1], a1[..., 0], a1[..., 1]))
-        | ((d2 == 0) & _on_segment(b1[..., 0], b1[..., 1], b2[..., 0], b2[..., 1], a2[..., 0], a2[..., 1]))
-        | ((d3 == 0) & _on_segment(a1[..., 0], a1[..., 1], a2[..., 0], a2[..., 1], b1[..., 0], b1[..., 1]))
-        | ((d4 == 0) & _on_segment(a1[..., 0], a1[..., 1], a2[..., 0], a2[..., 1], b2[..., 0], b2[..., 1]))
-    )
-    return proper | touch
-
-
-class FlatRings:
-    """A batch of polygons flattened for vectorized tests.
-
-    Built once per Arrow batch: rings concatenated into one (V,2)
-    vertex array with per-polygon offsets, so edge tests and
-    containment reduce to broadcast numpy ops + ``reduceat``.
-    """
-
-    def __init__(self, rings: list[np.ndarray]):
-        self.n = len(rings)
-        counts = np.fromiter((len(r) for r in rings), dtype=np.int64, count=self.n)
-        self.offsets = np.concatenate([[0], np.cumsum(counts)])
-        self.verts = (
-            np.concatenate(rings, axis=0)
-            if self.n
-            else np.empty((0, 2), dtype=np.float64)
-        )
-        # edge list: consecutive vertex pairs within each ring
-        keep = np.ones(len(self.verts), dtype=bool)
-        if self.n:
-            keep[self.offsets[1:] - 1] = False  # last vertex of each ring starts no edge
-        idx = np.nonzero(keep)[0]
-        self.edge_start = self.verts[idx]
-        self.edge_end = self.verts[idx + 1]
-        self.edge_poly = np.searchsorted(self.offsets, idx, side="right") - 1
-        # first vertex of each polygon
-        self.first_vertex = (
-            self.verts[self.offsets[:-1]] if self.n else np.empty((0, 2))
-        )
-
-    def intersects(self, ring: np.ndarray) -> np.ndarray:
-        """bool (n,): does each polygon intersect ``ring``?"""
-        if self.n == 0:
-            return np.zeros(0, dtype=bool)
-        out = np.zeros(self.n, dtype=bool)
-        # 1. any edge pair intersects
-        if len(self.edge_start):
-            segs_a = np.stack([self.edge_start, self.edge_end], axis=1)
-            segs_b = np.stack([ring[:-1], ring[1:]], axis=1)
-            hit = segments_intersect_batch(segs_a, segs_b).any(axis=1)
-            np.logical_or.at(out, self.edge_poly, hit)
-        # 2. polygon fully inside ring
-        out |= points_in_ring(self.first_vertex, ring)
-        # 3. ring fully inside polygon: crossing count of ring[0] vs each poly
-        out |= self._contains_point(ring[0])
-        return out
-
-    def _contains_point(self, p: np.ndarray) -> np.ndarray:
-        if len(self.edge_start) == 0:
-            return np.zeros(self.n, dtype=bool)
-        vx, vy = self.edge_start[:, 0], self.edge_start[:, 1]
-        wx, wy = self.edge_end[:, 0], self.edge_end[:, 1]
-        px, py = float(p[0]), float(p[1])
-        cond = (vy > py) != (wy > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = vx + (py - vy) / (wy - vy) * (wx - vx)
-        crossing = (cond & (px < xint)).astype(np.int64)
-        counts = np.zeros(self.n, dtype=np.int64)
-        np.add.at(counts, self.edge_poly, crossing)
-        return (counts % 2).astype(bool)
 
 
 # --------------------------------------------------------------------------
@@ -233,16 +120,6 @@ class FlatRings:
 
 def flat_to_ring(flat) -> np.ndarray:
     return np.asarray(flat, dtype=np.float64).reshape(-1, 2)
-
-
-def rings_from_flat_batch(flats) -> list[np.ndarray]:
-    """Series/list of flat rings → list of (P,2) arrays, one concatenate."""
-    items = [np.asarray(f, dtype=np.float64) for f in flats]
-    return [a.reshape(-1, 2) for a in items]
-
-
-def flat_batch_intersects(flats, aoi_ring: np.ndarray) -> np.ndarray:
-    return FlatRings(rings_from_flat_batch(flats)).intersects(aoi_ring)
 
 
 # --------------------------------------------------------------------------

@@ -425,10 +425,7 @@ def band_keys(sig: Column, n_hashes: int, n_bands: int) -> Column:
             F.struct(
                 F.lit(b).alias("band"),
                 F.array_join(
-                    F.transform(
-                        F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
+                    F.slice(sig, b * rows_per_band + 1, rows_per_band).cast("array<string>"),
                     "_",
                 ).alias("key"),
             )

@@ -16,10 +16,10 @@ Semantic parity points (SURVEY §2.2):
 
 Every non-spatial predicate is a plain Catalyst filter → pushed into
 the parquet/Iceberg scan. The spatial predicate (P8/J1) is a
-bbox-prefilter (JVM) + exact polygon test: for a convex AOI the
-compiled JVM separating-axis test of :func:`spatial.sat_refine`, for
-any other AOI one Arrow UDF. The many-AOI variant lives in
-:mod:`pyrosar_spark.operators.spatial`.
+bbox-prefilter (JVM) + exact polygon test, also JVM: for a convex AOI
+the compiled separating-axis test of :func:`spatial.sat_refine`, for
+any other AOI :func:`spatial.rings_intersect_jvm`, the refine of the
+many-AOI :func:`spatial.spatial_join`.
 """
 
 from __future__ import annotations
@@ -27,11 +27,8 @@ from __future__ import annotations
 import logging
 import re
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyrosar_spark import geom
 from pyrosar_spark.operators.ingest import ring_to_wkb_udf, ring_to_wkt_udf
@@ -41,21 +38,6 @@ log = logging.getLogger(__name__)
 VIRTUAL_RETURNS = {"mindate": "start", "maxdate": "stop"}
 GEOM_RETURNS = ("geometry_wkt", "geometry_wkb")
 _STAMP_RE = re.compile("[0-9]{8}T[0-9]{6}")
-
-
-def _aoi_intersects_udf(aoi_ring: np.ndarray):
-    """Exact st_intersects(scene_footprint, AOI) over flat-ring batches."""
-    ring = np.asarray(aoi_ring, dtype=np.float64)
-
-    @F.pandas_udf(T.BooleanType())
-    def intersects(flat: pd.Series) -> pd.Series:
-        mask = flat.notna()
-        out = np.zeros(len(flat), dtype=bool)
-        if mask.any():
-            out[mask.to_numpy()] = geom.flat_batch_intersects(list(flat[mask]), ring)
-        return pd.Series(out)
-
-    return intersects
 
 
 def select(
@@ -80,11 +62,13 @@ def select(
     (``archive.py:1092-1095``).
 
     The AOI's shape picks the exact-intersects kernel after the bbox
-    prefilter: a CONVEX AOI is evaluated with pure JVM column
-    expressions over the raw corner points — no hull UDF, no Python
-    workers (an ArrowEvalPython stage demands ~2× the parallelism level
-    in cores, the worst in-box scaling term measured: BENCH/BASELINE.md
-    round 5); a concave or degenerate AOI takes the Arrow kernel.
+    prefilter; both are JVM column expressions, with no Python workers
+    (an ArrowEvalPython stage demands ~2× the parallelism level in
+    cores, the worst in-box scaling term measured: BENCH/BASELINE.md
+    round 5). A CONVEX AOI takes the separating-axis test over the raw
+    corner points, so not even the hull runs; a concave or degenerate
+    AOI takes :func:`spatial.rings_intersect_jvm` over the footprint
+    ring.
     """
     valid_cols = set(scenes.columns)
     df = scenes
@@ -185,33 +169,23 @@ def select(
             df = df.where(F.col(pol.lower()) == 1)
 
     # P8/J1 spatial: bbox prefilter (JVM, prunable) + exact refine
-    # (JVM SAT; Arrow for a non-convex AOI). On a deferred-geometry
-    # catalog (no ring column) the ring is derived from corners HERE —
-    # after every JVM filter — so the Python stage only sees bbox
-    # survivors.
-    def ring_col() -> Column:
+    # (JVM SAT for a convex AOI, the JVM ring test otherwise). On a
+    # deferred-geometry catalog (no ring column) the ring is the hull of
+    # the corners, bound HERE — after every JVM filter, so the one
+    # Python stage only sees their survivors — as one column that the
+    # refine and the geometry projections share. A plain Project, which
+    # Catalyst may inline into each use: behind a Generate barrier the
+    # hull ran once, but the extra Arrow stage made a deferred convex
+    # select with WKT/WKB slower (20k docs, 4 cores: 1.9 s vs 1.3 s).
+    def with_ring(df: DataFrame) -> DataFrame:
         if "ring" in df.columns:
-            return F.col("ring")
+            return df
         from pyrosar_spark.operators.ingest import ring_from_corners_udf
 
-        return ring_from_corners_udf(F.col("corners"))
+        return df.withColumn("ring", ring_from_corners_udf(F.col("corners")))
 
     if aoi_wkt:
-        # reference parity (archive.py:1060-1061): select takes exactly
-        # ONE feature — the reference counts *features*, so MULTI*/
-        # GEOMETRYCOLLECTION raise its more-than-one-feature error. A
-        # single POLYGON with an interior ring is ONE feature there (the
-        # hole is honored by ogr); this engine's ring model has no holes,
-        # so that case gets a distinct unsupported error instead of
-        # silently evaluating against the exterior ring only (ADVICE r3;
-        # spatial_join is the sanctioned many-AOI path).
-        head = aoi_wkt.lstrip().upper()
-        if head.startswith(("MULTI", "GEOMETRYCOLLECTION")):
-            raise RuntimeError("'vectorobject' contains more than one feature.")
-        if "),(" in re.sub(r"\s", "", aoi_wkt):
-            raise RuntimeError(
-                "AOI polygons with interior rings are not supported"
-            )
+        # one feature, no interior ring (geom.wkt_to_ring raises)
         ring = geom.wkt_to_ring(aoi_wkt)
         axmin, aymin = ring.min(axis=0)
         axmax, aymax = ring.max(axis=0)
@@ -225,6 +199,7 @@ def select(
             aoi_ring_is_convex,
             corner_points,
             ring_points,
+            rings_intersect_jvm,
             sat_refine,
         )
 
@@ -249,7 +224,14 @@ def select(
                 df = df.where(cond)
             df = df.select(*cols)
         else:
-            df = df.where(_aoi_intersects_udf(ring)(ring_col()))
+            # the AOI ring as one literal array column, bound once
+            aoi = F.lit([float(v) for v in ring.reshape(-1)])
+            df = (
+                with_ring(df)
+                .withColumn("_aoi_ring", aoi)
+                .where(rings_intersect_jvm("ring", "_aoi_ring"))
+                .drop("_aoi_ring")
+            )
 
     # P11 processdir anti-filter (``archive.py:1092-1095``): the
     # reference tests ``outname_base in filename`` per file. A contains
@@ -271,14 +253,16 @@ def select(
         df = df.join(done, on="outname_base", how="left_anti")
 
     # P10 projection
+    if any(v in GEOM_RETURNS for v in return_values):
+        df = with_ring(df)
     proj = []
     for v in return_values:
         if v in VIRTUAL_RETURNS:
             proj.append(F.col(VIRTUAL_RETURNS[v]).alias(v))
         elif v == "geometry_wkt":
-            proj.append(ring_to_wkt_udf(ring_col()).alias("geometry_wkt"))
+            proj.append(ring_to_wkt_udf(F.col("ring")).alias("geometry_wkt"))
         elif v == "geometry_wkb":
-            proj.append(ring_to_wkb_udf(ring_col()).alias("geometry_wkb"))
+            proj.append(ring_to_wkb_udf(F.col("ring")).alias("geometry_wkb"))
         else:
             proj.append(F.col(v))
     return df.select(*proj)

@@ -13,8 +13,9 @@ the engine uses the classic two-stage distributed spatial join:
  2. **refine**: exact polygon-polygon intersect on the candidate pairs
     as JVM column expressions (:func:`rings_intersect_jvm`).
 
-A single convex AOI (``select``) is refined by the separating-axis
-test of :func:`sat_refine` instead.
+``select`` refines its one AOI with the same kernel, unless the AOI
+is convex: then the separating-axis test of :func:`sat_refine`, which
+needs no hull, decides.
 
 Grid resolution trades replication (rows × cells/bbox) against
 candidate precision; 1° matches SAR scene footprints (~2-4 cells).
@@ -169,7 +170,7 @@ def aoi_frame(spark, aoi_wkts: list[tuple[str, str]]) -> DataFrame:
 # footprint is the convex hull of its points, and two convex sets are
 # disjoint iff a STRICT separating line exists through an edge of one of
 # them (separating-axis theorem; see :func:`sat_refine`). Touch counts as
-# intersecting, matching the Arrow kernel.
+# intersecting, matching :func:`rings_intersect_jvm`.
 #
 # The unrolled geometry predicates below are rendered as SQL TEXT and
 # handed to Catalyst as strings, not composed from Column objects.
@@ -213,7 +214,7 @@ def _orient_sql(ax, ay, bx, by, cx, cy) -> str:
 def aoi_ring_is_convex(ring: np.ndarray) -> bool:
     """Driver-side: is the (closed) AOI ring convex with nonzero area?
     (Degenerate line/point rings return False, so ``select`` refines
-    them with the Arrow kernel instead of :func:`sat_refine`.)"""
+    them with :func:`rings_intersect_jvm` instead of :func:`sat_refine`.)"""
     r = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
     if len(r) < 4:  # point / segment rings
         return False
@@ -365,43 +366,49 @@ def sat_refine(points, aoi_ring: np.ndarray) -> tuple[list[str], list[str]]:
     ]
 
 
+def _edge_ids(flat: str) -> str:
+    """SQL text of the 1-based edge indices of a flat ring, empty when
+    the ring has no edge: Spark's ``sequence(1, 0)`` is ``[1, 0]``, so
+    an unguarded loop over a one-vertex ring would read past its end."""
+    n = f"(cast(size({flat})/2 as int) - 1)"
+    return f"IF({n} >= 1, sequence(1, {n}), array())"
+
+
 def _point_in_flat_ring_sql(px: str, py: str, flat: str) -> str:
     """Crossing-number containment of one point (SQL snippets) vs a
-    closed flat ring column — arbitrary simple polygons, pure JVM.
-    Mirrors ``geom.points_in_ring`` (boundary may report either side;
-    callers pair this with the edge test, like the Arrow kernel does).
-    The guarded division is IEEE-safe: when the first conjunct is false
-    the edge never counts, and double/0 yields ±Inf/NaN, never an error
-    (ANSI mode only guards integral/decimal division)."""
+    closed flat ring column — arbitrary simple polygons, pure JVM
+    (boundary may report either side; :func:`rings_intersect_jvm`
+    pairs this with the edge test). A ring with no edge contains no
+    point. The crossing test ahead of the ``AND`` keeps the division
+    off horizontal edges, where it would raise ``DIVIDE_BY_ZERO``."""
     ex = lambda i: f"element_at({flat}, ({i})*2-1)"  # noqa: E731
     ey = lambda i: f"element_at({flat}, ({i})*2)"  # noqa: E731
     vx, vy, wx, wy = ex("i"), ey("i"), ex("i+1"), ey("i+1")
     xint = f"({vx} + (({py}) - {vy}) / ({wy} - {vy}) * ({wx} - {vx}))"
     crossing = f"((({vy} > ({py})) != ({wy} > ({py}))) AND (({px}) < {xint}))"
-    n_edges = f"(cast(size({flat})/2 as int) - 1)"
-    return (f"((size(filter(sequence(1, {n_edges}), i -> {crossing})) % 2) = 1)")
+    return f"((size(filter({_edge_ids(flat)}, i -> {crossing})) % 2) = 1)"
 
 
 def rings_intersect_jvm(ring_a: str, ring_b: str) -> Column:
     """Exact st_intersects of two closed flat-ring column NAMES as pure
     JVM column expressions (round 5): edge-pair intersection (proper +
     touching/collinear) OR either polygon's first vertex inside the
-    other. Same decomposition as ``geom.FlatRings.intersects`` — valid
-    for arbitrary simple polygons, touch counts as intersecting.
+    other — valid for arbitrary simple polygons, touch counts as
+    intersecting. A ring with no edge (one vertex) pairs no edge, so
+    the first-vertex tests decide.
 
-    Replaces the ArrowEvalPython refine in :func:`spatial_join`: a
-    Python stage runs a worker process per task thread (~2× the level
-    in core demand — the worst in-box scaling term, BENCH/BASELINE.md),
-    while this path evaluates JVM-side only on cell-join candidates.
-    Rendered as ONE SQL string — composing it from Column objects cost
-    ~1 s of py4j driver time per query build (module note above)."""
+    The engine's one general refine: :func:`spatial_join` runs it on
+    the cell-join candidates, ``select`` on the bbox survivors of a
+    non-convex AOI. No Python stage: one runs a worker process per task
+    thread (~2× the level in core demand — the worst in-box scaling
+    term, BENCH/BASELINE.md). Rendered as ONE SQL string — composing it
+    from Column objects cost ~1 s of py4j driver time per query build
+    (module note above)."""
     a, b = f"`{ring_a}`", f"`{ring_b}`"
     ax = lambda i: f"element_at({a}, ({i})*2-1)"  # noqa: E731
     ay = lambda i: f"element_at({a}, ({i})*2)"  # noqa: E731
     bx = lambda j: f"element_at({b}, ({j})*2-1)"  # noqa: E731
     by = lambda j: f"element_at({b}, ({j})*2)"  # noqa: E731
-    na = f"(cast(size({a})/2 as int) - 1)"
-    nb = f"(cast(size({b})/2 as int) - 1)"
 
     p1x, p1y, p2x, p2y = ax("i"), ay("i"), ax("i+1"), ay("i+1")
     q1x, q1y, q2x, q2y = bx("j"), by("j"), bx("j+1"), by("j+1")
@@ -427,8 +434,8 @@ def rings_intersect_jvm(ring_a: str, ring_b: str) -> Column:
         f" OR ({d4} = 0.0D AND {on_seg(p1x, p1y, p2x, p2y, q2x, q2y)}))"
     )
     edges_cross = (
-        f"exists(sequence(1, {na}),"
-        f" i -> exists(sequence(1, {nb}), j -> ({proper} OR {touch})))"
+        f"exists({_edge_ids(a)},"
+        f" i -> exists({_edge_ids(b)}, j -> ({proper} OR {touch})))"
     )
     a_in_b = _point_in_flat_ring_sql(ax("1"), ay("1"), b)
     b_in_a = _point_in_flat_ring_sql(bx("1"), by("1"), a)

@@ -277,28 +277,35 @@ def test_dedup_clusters_round_plan_shape_on_one_partition(spark):
     assert n_joins == 1 and "ShuffledHashJoin" in p, p
 
 
-def test_python_stages_are_arrow(spark):
+def test_python_stages_are_arrow(spark, tmp_path):
     """Any Python in a hot plan is Arrow-batched (ArrowEvalPython /
     FlatMapGroupsInPandas / MapInPandas) — never row-at-a-time
-    BatchEvalPython. Round 5: a CONVEX AOI select is now Python-FREE
-    (JVM sign/segment refine — a Python stage demands ~2× the level in
-    cores, the worst in-box scaling term); the Arrow kernel remains the
-    concave-AOI fallback and must still be Arrow, not BatchEval."""
+    BatchEvalPython. Round 5: a CONVEX AOI select is Python-FREE (JVM
+    sign/segment refine — a Python stage demands ~2× the level in
+    cores, the worst in-box scaling term). A concave AOI is refined in
+    the JVM too: over a stored catalog with ``ring`` no Python runs,
+    and over a deferred-geometry catalog exactly one UDF, the hull."""
     from pyrosar_spark.datagen import generate_documents
     from pyrosar_spark.operators.ingest import docs_to_scenes
     from pyrosar_spark.operators.select import select
 
-    scenes = docs_to_scenes(generate_documents(spark, 500, seed=7))
+    docs = generate_documents(spark, 500, seed=7)
+    scenes = docs_to_scenes(docs)
     sel = select(scenes, aoi_wkt="POLYGON((0 0, 20 0, 20 20, 0 20, 0 0))")
     p = plan_text(sel)
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p  # convex AOI: pure JVM refine
-    concave = select(
-        scenes, aoi_wkt="POLYGON((0 0, 20 0, 20 20, 10 4, 0 20, 0 0))"
-    )
-    p2 = plan_text(concave)
-    assert "BatchEvalPython" not in p2
-    assert "ArrowEvalPython" in p2  # the Arrow fallback refine
+    concave = "POLYGON((0 0, 20 0, 20 20, 10 4, 0 20, 0 0))"
+    path = str(tmp_path / "catalog.parquet")
+    scenes.write.parquet(path)
+    p2 = plan_text(select(spark.read.parquet(path), aoi_wkt=concave))
+    assert "BatchEvalPython" not in p2 and "ArrowEvalPython" not in p2
+    deferred = docs_to_scenes(docs, with_geometry="defer")
+    p3 = plan_text(select(deferred, aoi_wkt=concave))
+    evals = [line for line in p3.splitlines() if "EvalPython" in line]
+    assert len(evals) == 1, evals
+    assert "ArrowEvalPython [ring_from_corners_udf(" in evals[0]
+    assert evals[0].count("pythonUDF") == 1, evals[0]
 
 
 def test_span_roundtrip_plan_shape(spark):

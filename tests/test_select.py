@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.select import select
 from tests.test_geom import S1_GOLDEN_WKT
-from tests.testlib import plan_text, wkb_to_ring
+from tests.testlib import oracle_intersects, plan_text, wkb_to_ring
 
 S1_BBOX_WKT = "POLYGON((8.017178 50.295261, 12.0268 50.295261, 12.0268 52.183979, 8.017178 52.183979, 8.017178 50.295261))"
 DISJOINT_WKT = "POLYGON((12.5 53, 13 53, 13 54, 12.5 54, 12.5 53))"
@@ -102,18 +102,20 @@ def test_select_pushdown_plan(golden_scenes):
 def test_deferred_geometry_equivalence(docs):
     """with_geometry='defer' (hull only on bbox survivors — the scale
     shape) must match the full-geometry catalog row-for-row, including
-    exact WKT output."""
+    exact WKT output, for a convex AOI (SAT refine) and a concave one
+    (JVM ring test over the hull of the corners)."""
     from pyrosar_spark.operators.ingest import docs_to_scenes
 
-    aoi = "POLYGON((-180 -60, -60 -60, -60 60, -180 60, -180 -60))"
     full = docs_to_scenes(docs)
     deferred = docs_to_scenes(docs, with_geometry="defer")
     assert "ring" not in deferred.columns
-    a = {r.doc_id: r.geometry_wkt
-         for r in select(full, aoi_wkt=aoi, return_value=["doc_id", "geometry_wkt"]).collect()}
-    b = {r.doc_id: r.geometry_wkt
-         for r in select(deferred, aoi_wkt=aoi, return_value=["doc_id", "geometry_wkt"]).collect()}
-    assert a == b and len(a) > 0
+    for aoi in ("POLYGON((-180 -60, -60 -60, -60 60, -180 60, -180 -60))",
+                "POLYGON((-180 -60, -60 -60, -60 60, -120 0, -180 60, -180 -60))"):
+        a = {r.doc_id: r.geometry_wkt for r in select(
+            full, aoi_wkt=aoi, return_value=["doc_id", "geometry_wkt"]).collect()}
+        b = {r.doc_id: r.geometry_wkt for r in select(
+            deferred, aoi_wkt=aoi, return_value=["doc_id", "geometry_wkt"]).collect()}
+        assert a == b and len(a) > 0
 
 
 def test_flagship_stage_compiles(spark, docs):
@@ -121,7 +123,7 @@ def test_flagship_stage_compiles(spark, docs):
     by date, VV and a convex AOI -> HGT tile lattice -> per-tile count)
     runs whole-stage-codegen compiled: the session has codegen fallback
     off, so a method Janino cannot compile raises here. The tiles match
-    those of the scenes the numpy kernel keeps over the hull rings."""
+    those of the scenes the scalar oracle keeps over the hull rings."""
     from pyrosar_spark import geom
     from pyrosar_spark.operators.ingest import docs_to_scenes
     from pyrosar_spark.operators.tiles import assign_hgt
@@ -138,7 +140,7 @@ def test_flagship_stage_compiles(spark, docs):
     sel = select(docs_to_scenes(docs, with_geometry="defer"), aoi_wkt=aoi,
                  return_value=bbox, **when)
     rows = select(docs_to_scenes(docs), return_value=bbox + ["ring"], **when).collect()
-    keep = geom.flat_batch_intersects([r.ring for r in rows], geom.wkt_to_ring(aoi))
+    keep = [oracle_intersects(r.ring, geom.wkt_to_ring(aoi)) for r in rows]
     ref = spark.createDataFrame([r[:5] for r, k in zip(rows, keep) if k], sel.schema)
     got = tile_counts(sel)
     assert got and got == tile_counts(ref)

@@ -1,5 +1,6 @@
 """Two-stage cell-grid spatial join + kNN (SURVEY J1/J10)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pyrosar_spark.operators.select import select
@@ -29,6 +30,17 @@ def test_spatial_join_matches_select(spark, scenes):
     assert ("a_s1", "golden_s1") in got
     assert ("a_psr2", "golden_psr2") in got
     assert not any(a == "a_none" for a, _ in got)
+
+
+def test_aoi_frame_rejects_multi_feature_and_holes(spark):
+    """The AOI side of ``spatial_join`` validates WKT like ``select``:
+    one feature, no interior ring, each with its own error."""
+    multi = "MULTIPOLYGON(((0 0, 1 0, 1 1, 0 0)), ((2 2, 3 2, 3 3, 2 2)))"
+    with pytest.raises(RuntimeError, match="more than one feature"):
+        aoi_frame(spark, [("m", multi)])
+    holed = "POLYGON((0 0, 10 0, 10 10, 0 0), (2 2, 3 2, 3 3, 2 2))"
+    with pytest.raises(RuntimeError, match="interior rings"):
+        aoi_frame(spark, [("h", holed)])
 
 
 def test_knn_deterministic_and_ranked(spark, scenes):

@@ -2,19 +2,18 @@
 ``select(aoi_wkt=...)`` and J1 ``spatial_join`` vs an INDEPENDENT
 scalar polygon-intersect oracle.
 
-No shapely and no DuckDB spatial extension exist in this sandbox, so
-the oracle is a from-scratch per-pair implementation in this file —
+No shapely and no DuckDB spatial extension are available, so the
+oracle is the from-scratch per-pair ``testlib.oracle_intersects`` —
 scalar orientation/segment tests and ray-casting containment, sharing
-no code with the vectorized ``pyrosar_spark.geom`` kernels it checks.
-Both sides consume numerically identical inputs (the AOI ring is
-round-tripped through the same WKT string; scene rings are the same
-float arrays), so any disagreement is an algorithm bug, not float
-noise.
+no code with the JVM kernels it checks. Both sides consume numerically
+identical inputs (the AOI ring is round-tripped through the same WKT
+string; scene rings are the same float arrays), so any disagreement is
+an algorithm bug, not float noise.
 
 Case mix per the round-4 verdict: seeded random convex AOIs + scenes,
 antimeridian-adjacent AOIs, polar-adjacent AOIs, degenerate
 (zero-width / zero-area) boxes, exact shared-edge contact, and full
-containment both ways.
+containment both ways, and a one-vertex (point) AOI.
 """
 
 from __future__ import annotations
@@ -27,69 +26,7 @@ import pytest
 from pyrosar_spark import geom
 from pyrosar_spark.operators.select import select
 from pyrosar_spark.operators.spatial import aoi_frame, spatial_join
-from tests.testlib import bbox_ring, plan_text
-
-# ---------------------------------------------------------------- oracle
-
-
-def _orient(a, b, c):
-    return (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
-
-
-def _on_seg(a, b, p):
-    return (
-        min(a[0], b[0]) <= p[0] <= max(a[0], b[0])
-        and min(a[1], b[1]) <= p[1] <= max(a[1], b[1])
-    )
-
-
-def _segments_intersect(p1, p2, q1, q2):
-    d1 = _orient(q1, q2, p1)
-    d2 = _orient(q1, q2, p2)
-    d3 = _orient(p1, p2, q1)
-    d4 = _orient(p1, p2, q2)
-    if ((d1 > 0 and d2 < 0) or (d1 < 0 and d2 > 0)) and (
-        (d3 > 0 and d4 < 0) or (d3 < 0 and d4 > 0)
-    ):
-        return True
-    if d1 == 0 and _on_seg(q1, q2, p1):
-        return True
-    if d2 == 0 and _on_seg(q1, q2, p2):
-        return True
-    if d3 == 0 and _on_seg(p1, p2, q1):
-        return True
-    if d4 == 0 and _on_seg(p1, p2, q2):
-        return True
-    return False
-
-
-def _point_in_ring(p, ring):
-    inside = False
-    for i in range(len(ring) - 1):
-        (vx, vy), (wx, wy) = ring[i], ring[i + 1]
-        if (vy > p[1]) != (wy > p[1]):
-            xint = vx + (p[1] - vy) / (wy - vy) * (wx - vx)
-            if p[0] < xint:
-                inside = not inside
-    return inside
-
-
-def _oracle_intersects(ra, rb) -> bool:
-    """Touching counts; either fully inside the other counts."""
-    ra = [tuple(p) for p in np.asarray(ra, dtype=np.float64).reshape(-1, 2)]
-    rb = [tuple(p) for p in np.asarray(rb, dtype=np.float64).reshape(-1, 2)]
-    for i in range(len(ra) - 1):
-        for j in range(len(rb) - 1):
-            if _segments_intersect(ra[i], ra[i + 1], rb[j], rb[j + 1]):
-                return True
-    # no edge crossings → strictly inside or strictly outside; test
-    # EVERY vertex (stronger than the engine's first-vertex shortcut)
-    if any(_point_in_ring(p, rb) for p in ra[:-1]):
-        return True
-    if any(_point_in_ring(p, ra) for p in rb[:-1]):
-        return True
-    return False
-
+from tests.testlib import bbox_ring, oracle_intersects, plan_text
 
 # ------------------------------------------------------------ generators
 
@@ -198,6 +135,8 @@ def _aoi_cases(rng, scenes):
         np.array([[cx, cy], [cx, cy], [cx, cy]]))))
     # the whole globe: its cover reaches lon 180 and lat 90
     cases.append(("globe", geom.ring_to_wkt(bbox_ring(-180.0, -90.0, 180.0, 90.0))))
+    # one vertex, no edge: the point inside scene 0
+    cases.append(("one_point", geom.ring_to_wkt(np.array([[cx, cy]]))))
     return cases
 
 
@@ -211,7 +150,7 @@ def fuzz_world(spark):
         (s[0], aid)
         for aid, wkt in cases
         for s in scenes
-        if _joinable(s) and _oracle_intersects(np.asarray(s[5]), geom.wkt_to_ring(wkt))
+        if _joinable(s) and oracle_intersects(np.asarray(s[5]), geom.wkt_to_ring(wkt))
     }
     return scenes, cases, sdf, expected
 
@@ -239,7 +178,7 @@ def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world):
     )
     # sanity: the adversarial cases produce hits (the fuzz isn't vacuous)
     hit_aois = {a for _, a in got}
-    assert {"tiny_inside", "huge_around", "shared_edge", "globe"} <= hit_aois
+    assert {"tiny_inside", "huge_around", "shared_edge", "globe", "one_point"} <= hit_aois
     edge = {"full_lon", "dateline_w", "pole_n", "pole_s"}
     assert {(s, "globe") for s in edge} <= got
     assert not any(s == "null_bbox" for s, _ in got)
@@ -248,7 +187,8 @@ def test_spatial_join_fuzz_vs_scalar_oracle(spark, fuzz_world):
 
 def test_select_aoi_fuzz_vs_scalar_oracle(spark, fuzz_world):
     """``select`` against the oracle: convex AOIs take the JVM SAT over
-    raw points, the concave star and degenerate AOIs the Arrow kernel."""
+    raw points, the concave star, degenerate and one-point AOIs
+    :func:`rings_intersect_jvm`."""
     scenes, cases, sdf, expected = fuzz_world
     # P8 path: one select() per AOI — run the targeted cases + a sample
     # of the random ones (each select is a separate Spark action)
@@ -263,18 +203,21 @@ def test_select_aoi_fuzz_vs_scalar_oracle(spark, fuzz_world):
 
 
 def test_jvm_convex_refine_is_python_free(spark, fuzz_world):
-    """The plan property the round-5 scaling work depends on: a convex
-    AOI select contains NO Python stage at all (no ArrowEvalPython /
-    BatchEvalPython), and the corners-based flagship shape skips the
-    hull UDF too."""
+    """The plan property the round-5 scaling work depends on: over a
+    frame that carries ``ring``, a select contains NO Python stage at
+    all (no ArrowEvalPython / BatchEvalPython) for any AOI shape: a
+    convex AOI takes the SAT, a concave, zero-area line or one-point
+    AOI the JVM ring test."""
     scenes, cases, sdf, expected = fuzz_world
-    wkt = geom.ring_to_wkt(bbox_ring(-20.0, -20.0, 20.0, 20.0))
-    p = plan_text(select(sdf, aoi_wkt=wkt, return_value=["doc_id"]))
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    # concave AOI falls back to the Arrow kernel
-    concave = "POLYGON((0 0, 10 0, 10 10, 5 2, 0 10, 0 0))"
-    p2 = plan_text(select(sdf, aoi_wkt=concave, return_value=["doc_id"]))
-    assert "ArrowEvalPython" in p2
+    shapes = dict(cases)
+    for wkt in (
+        geom.ring_to_wkt(bbox_ring(-20.0, -20.0, 20.0, 20.0)),
+        "POLYGON((0 0, 10 0, 10 10, 5 2, 0 10, 0 0))",
+        shapes["deg_line"],
+        shapes["one_point"],
+    ):
+        p = plan_text(select(sdf, aoi_wkt=wkt, return_value=["doc_id"]))
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, wkt
 
 
 def _knn_inline(scenes, k=3, s=1.0):

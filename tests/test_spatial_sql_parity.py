@@ -1,8 +1,8 @@
-"""The SQL-text SAT renderer (``spatial.sat_refine``) against the numpy
-kernel it replaces in ``select``.
+"""The SQL-text SAT renderer (``spatial.sat_refine``) against the scalar
+intersects oracle.
 
 Each row's expected answer is the size guard (1 <= point count <= max)
-AND ``geom.flat_batch_intersects`` of the convex hull of its points, over
+AND ``testlib.oracle_intersects`` of the convex hull of its points, over
 real-shaped corners, closed rings and an edge-case battery (NULL array,
 empty, undersized, oversized, degenerate points). The AOIs are a
 lopsided quad, a thin triangle and an axis-aligned rect, so the
@@ -23,7 +23,7 @@ import pytest
 
 from pyrosar_spark import geom
 from pyrosar_spark.operators.spatial import corner_points, ring_points, sat_refine
-from tests.testlib import bbox_ring
+from tests.testlib import bbox_ring, oracle_intersects
 
 # a lopsided convex quad and a thin triangle, both with negative
 # coordinates so the minus-minus comment trap is exercised, and a rect
@@ -96,7 +96,7 @@ def _expected(pts: np.ndarray | None, max_pts: int, aoi: np.ndarray) -> bool:
     if pts is None or not 1 <= len(pts) <= max_pts:
         return False
     hull = geom.convex_hull_ring(pts)
-    return bool(geom.flat_batch_intersects([hull.ravel()], aoi)[0])
+    return oracle_intersects(hull, aoi)
 
 
 @pytest.mark.parametrize("aoi", [AOI_QUAD, AOI_TRI, AOI_RECT], ids=["quad", "tri", "rect"])

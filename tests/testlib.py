@@ -5,6 +5,9 @@ engine output, or is an independent reference an operator is compared
 against.
 
  - :func:`bbox_ring` builds axis-aligned test rings;
+ - :func:`oracle_intersects` is the scalar polygon-intersects reference
+   every exact spatial refine (``spatial.sat_refine``,
+   ``spatial.rings_intersect_jvm``) is compared against;
  - :func:`wkb_to_ring` decodes the engine's WKB footprints;
  - :func:`simhash64` is the higher-order-function SimHash that
    ``dedup.simhash64_udf`` is compared against;
@@ -42,6 +45,70 @@ def bbox_ring(xmin: float, ymin: float, xmax: float, ymax: float) -> np.ndarray:
         [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax], [xmin, ymin]],
         dtype=np.float64,
     )
+
+
+def _orient(a, b, c):
+    return (b[0] - a[0]) * (c[1] - a[1]) - (b[1] - a[1]) * (c[0] - a[0])
+
+
+def _on_seg(a, b, p):
+    return (
+        min(a[0], b[0]) <= p[0] <= max(a[0], b[0])
+        and min(a[1], b[1]) <= p[1] <= max(a[1], b[1])
+    )
+
+
+def _segments_intersect(p1, p2, q1, q2):
+    d1 = _orient(q1, q2, p1)
+    d2 = _orient(q1, q2, p2)
+    d3 = _orient(p1, p2, q1)
+    d4 = _orient(p1, p2, q2)
+    if ((d1 > 0 and d2 < 0) or (d1 < 0 and d2 > 0)) and (
+        (d3 > 0 and d4 < 0) or (d3 < 0 and d4 > 0)
+    ):
+        return True
+    if d1 == 0 and _on_seg(q1, q2, p1):
+        return True
+    if d2 == 0 and _on_seg(q1, q2, p2):
+        return True
+    if d3 == 0 and _on_seg(p1, p2, q1):
+        return True
+    if d4 == 0 and _on_seg(p1, p2, q2):
+        return True
+    return False
+
+
+def _point_in_ring(p, ring):
+    inside = False
+    for i in range(len(ring) - 1):
+        (vx, vy), (wx, wy) = ring[i], ring[i + 1]
+        if (vy > p[1]) != (wy > p[1]):
+            xint = vx + (p[1] - vy) / (wy - vy) * (wx - vx)
+            if p[0] < xint:
+                inside = not inside
+    return inside
+
+
+def oracle_intersects(ra, rb) -> bool:
+    """Do two closed rings (flat or (k, 2)) intersect? Touching counts;
+    either fully inside the other counts. A one-vertex ring is a point.
+
+    Scalar per pair, with orientation/segment tests and ray-casting
+    containment of its own: it shares no code with the engine's
+    kernels, so a disagreement is a kernel bug, not a shared one."""
+    ra = [tuple(p) for p in np.asarray(ra, dtype=np.float64).reshape(-1, 2)]
+    rb = [tuple(p) for p in np.asarray(rb, dtype=np.float64).reshape(-1, 2)]
+    for i in range(len(ra) - 1):
+        for j in range(len(rb) - 1):
+            if _segments_intersect(ra[i], ra[i + 1], rb[j], rb[j + 1]):
+                return True
+    # no edge crossings → strictly inside or strictly outside; test
+    # EVERY vertex (stronger than the engine's first-vertex shortcut)
+    if any(_point_in_ring(p, rb) for p in ra):
+        return True
+    if any(_point_in_ring(p, ra) for p in rb):
+        return True
+    return False
 
 
 def wkb_to_ring(buf: bytes) -> np.ndarray:
